@@ -2,18 +2,14 @@
 FROZEN bench.py (which must not change — the driver times the
 round-start copy).
 
-Modes:
-  python bench_extra.py explain [query ...]   -> .explain("formatted")
-      for each bench query's DataFrame, written to plans/r08/ (the
-      bench functions call .count(); here we rebuild the same frames
-      and explain them instead).
-  python bench_extra.py time [query ...]      -> noop-sink timing per
-      query (guide §1.4), BENCH_EXTRA_REPEAT reps (default 3),
-      printed as one JSON line per query.
-  python bench_extra.py stages                -> stage-by-stage wall
-      clock of curate_multimodal (the dominant bench line), each
-      stage materialized with count()/noop so the cascade's cost
-      attribution is visible.
+Usage:
+  python bench_extra.py [time [query ...]]    -> wall-clock timing per
+      query (guide §1.4), min of BENCH_EXTRA_REPEAT reps (default 3),
+      printed as one JSON line.
+
+Plans: `python tools/dump_plans.py <tag> [name ...]`. Per-stage time of
+the curate cascade: `python perfbench/run.py --trace 1`, which times
+the pipeline's own stages.
 
 Uses the same fixtures, env contract and session as bench.py.
 """
@@ -29,10 +25,6 @@ os.environ.setdefault("NUMPY_MADVISE_HUGEPAGE", "0")
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import bench as B  # the frozen harness: reuse fixtures + warmup
-
-
-def noop(df):
-    df.write.format("noop").mode("overwrite").save()
 
 
 def get_session():
@@ -97,113 +89,9 @@ def main():
             "total": round(sum(times.values()), 3),
             "cpu_canary_sec": canary,
         }))
-    elif mode == "stages":
-        stages_curate_multimodal(spark, imgs)
     else:
         raise SystemExit(f"unknown mode {mode}")
     spark.stop()
-
-
-def stages_curate_multimodal(spark, imgs):
-    """Time each stage of the curate_multimodal cascade in isolation
-    by materializing successive prefixes (count actions), reporting
-    the deltas. Build mirrors bench.py q_curate_multimodal."""
-    from pyspark.sql import functions as F
-
-    from segment_rtree_spark import pipelines as P
-    from segment_rtree_spark.operators.dedup import (
-        _fold_labels,
-        crossmodal_group_labels,
-        label_map,
-    )
-    from segment_rtree_spark.operators.embed import embedding_neardup_pairs
-
-    layer = B.build_layer()
-    corpus = imgs.withColumn(
-        "caption", F.expr("concat('cap ', pmod(xxhash64(image_id), 30000))")
-    ).withColumn(
-        "embedding",
-        F.expr(
-            "transform(sequence(0, 15), d -> cast(pmod("
-            "xxhash64(image_id, d), 1000) as double) / 500.0 - 1.0)"
-        ),
-    )
-    t = {}
-
-    def mark(name, t0):
-        t[name] = round(time.time() - t0, 3)
-        print(f"{name}: {t[name]}s", flush=True)
-
-    id_col, caption, phash = "image_id", "caption", "phash"
-    cols = [
-        F.col(id_col), F.col(caption), F.col(phash), F.col("lat"), F.col("lng"),
-        F.coalesce(F.md5(F.col("bytes")), F.col(id_col)).alias("_content"),
-        F.col("embedding"),
-    ]
-    keep = [id_col, caption, phash, "_content", "embedding"]
-    narrow = corpus.select(*cols)
-
-    t0 = time.time()
-    ok = P._survivors_multimodal(
-        narrow, layer, 2, "broadcast", keep, id_col, caption, "lng", "lat"
-    ).localCheckpoint()
-    mark("survivors(pip+agg+filter+ckpt)", t0)
-
-    rep_cols = [c for c in ok.columns if c != "_content"]
-    t0 = time.time()
-    s1 = (
-        ok.groupBy("_content")
-        .agg(
-            F.min_by(F.struct(*rep_cols), F.col(id_col)).alias("_rep"),
-            F.count(F.lit(1)).alias("n_exact"),
-        )
-        .select("_rep.*", "n_exact")
-    ).localCheckpoint()
-    mark("s1 exact collapse", t0)
-
-    t0 = time.time()
-    s1x = crossmodal_group_labels(
-        s1, id_col=id_col, phash=phash, caption=caption,
-        max_hamming=8, n_bands=4, hot_threshold=4096,
-    ).localCheckpoint()
-    mark("crossmodal_group_labels", t0)
-
-    rep2 = [c for c in s1.columns if c != "n_exact"]
-    t0 = time.time()
-    s2 = (
-        s1x.groupBy("_xlabel")
-        .agg(
-            F.min_by(F.struct(*rep2), F.col(id_col)).alias("_rep"),
-            F.sum("n_exact").alias("_csize"),
-        )
-        .select("_rep.*", "_csize")
-    ).localCheckpoint()
-    mark("s2 crossmodal collapse", t0)
-
-    t0 = time.time()
-    pairs = embedding_neardup_pairs(
-        s2.filter(F.col("embedding").isNotNull()).select(id_col, "embedding"),
-        threshold=0.95, id_col=id_col, vec="embedding",
-        n_bits=None, n_probe=1, max_bucket="auto", refine="kernel",
-    ).localCheckpoint()
-    mark("embedding_neardup_pairs", t0)
-
-    t0 = time.time()
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    mapping, bc = label_map(edges)
-    final = (
-        _fold_labels(s2, F.col(id_col), mapping, bc)
-        .groupBy("label")
-        .agg(
-            F.min_by(F.struct(caption, "n_regions"), F.col(id_col)).alias("_rep"),
-            F.sum("_csize").alias("cluster_size"),
-        )
-        .select(F.col("label").alias(id_col), "_rep.*", "cluster_size")
-    )
-    n = final.count()
-    mark("label fold+final agg", t0)
-    print(json.dumps({"stages": t, "rows": n,
-                      "total": round(sum(t.values()), 3)}))
 
 
 if __name__ == "__main__":

@@ -114,7 +114,6 @@ class CheckpointJob:
 
         all_keys = [r[0] for r in df.select(key_col).distinct().collect()]
         todo = sorted(set(all_keys) - self.completed_keys())
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
         done = 0
         batches = [
@@ -130,8 +129,15 @@ class CheckpointJob:
                 for r in sub.groupBy(key_col).count().collect()
             }
             out = transform(sub)
-            # atomic per-key replace: dynamic partition overwrite
-            out.write.mode("overwrite").partitionBy(key_col).parquet(self.output_dir)
+            # atomic per-key replace: dynamic partition overwrite, set on
+            # this writer only (a session-wide setting would turn every
+            # later overwrite in the session into a partial replace)
+            (
+                out.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy(key_col)
+                .parquet(self.output_dir)
+            )
             try:
                 n_out = {
                     r[0]: r[1]

@@ -623,11 +623,6 @@ def _encode_prog_scans(samp, grids, glists, nzlists, dcl, acl,
     return out
 
 
-def _category(v: int) -> int:
-    return int(v).bit_length() if v > 0 else int(-v).bit_length()
-# (the decoder-side EXTEND (T.81 F.2.2.1) is inlined in decode_block)
-
-
 # -- color -------------------------------------------------------------
 
 def _rgb_to_ycbcr(px: np.ndarray) -> np.ndarray:

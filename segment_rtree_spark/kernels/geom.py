@@ -254,19 +254,3 @@ def clip_segments(xmin, ymin, xmax, ymax, sx, sy, ex, ey):
     cx1 = np.where(hit, np.where(both_in, ex, sx + t1 * x_delta), np.nan)
     cy1 = np.where(hit, np.where(both_in, ey, sy + t1 * y_delta), np.nan)
     return hit, cx0, cy0, cx1, cy1
-
-
-def find_side(px, py, xmin, ymin, xmax, ymax):
-    """Which rect side a coord lies on; corner precedence Top > Right >
-    Bottom > Left; -1 when not on the border (reference
-    src/rectangle.rs:180-192 — kept for overlay-style future ops).
-    Codes: 0=Top, 1=Right, 2=Bottom, 3=Left.
-    """
-    px = np.asarray(px, dtype=np.float64)
-    py = np.asarray(py, dtype=np.float64)
-    out = np.full(np.broadcast(px, py).shape, -1, dtype=np.int8)
-    out[np.broadcast_to(px == xmin, out.shape)] = 3
-    out[np.broadcast_to(py == ymin, out.shape)] = 2
-    out[np.broadcast_to(px == xmax, out.shape)] = 1
-    out[np.broadcast_to(py == ymax, out.shape)] = 0
-    return out

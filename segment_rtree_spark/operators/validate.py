@@ -1,57 +1,20 @@
 """DataFrame-level geometry validation.
 
 Turns the reference's ValidationError exceptions (src/errors.rs:5-47)
-into DATA: a nullable error struct column per ring / per polygon, so a
-10^12-row ingest keeps flowing and invalid geometries are routed, not
-thrown. Ring rows: (polygon_id, part_id, xs, ys).
+into DATA: a nullable error struct per polygon, so a 10^12-row
+ingest keeps flowing and invalid geometries are routed, not thrown. Ring rows: (polygon_id, part_id, xs, ys).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 ERROR_SCHEMA = (
     "error_code string, first_index int, second_index int, "
     "err_x double, err_y double, err_x2 double, err_y2 double"
 )
-
-
-def validate_rings(rings: DataFrame) -> DataFrame:
-    """Per-ring validity (ring predicate + linestring checks).
-
-    Adds the error struct columns (nulls = valid). Kernel: one
-    applyInPandas-free mapInPandas pass; each ring validates against
-    its own packed tree (validity.validate_ring).
-    """
-    from ..kernels.validity import validate_ring
-
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in rings.schema.fields
-    ) + ", " + ERROR_SCHEMA
-
-    def kernel(batches):
-        for pdf in batches:
-            errs = []
-            for xs, ys in zip(pdf["xs"], pdf["ys"]):
-                issue = validate_ring(np.asarray(xs), np.asarray(ys))
-                errs.append(issue)
-            out = pdf.copy()
-            out["error_code"] = [e.code if e else None for e in errs]
-            out["first_index"] = pd.array(
-                [e.first_index if e else None for e in errs], dtype="Int32"
-            )
-            out["second_index"] = pd.array(
-                [e.second_index if e else None for e in errs], dtype="Int32"
-            )
-            out["err_x"] = [e.x if e else None for e in errs]
-            out["err_y"] = [e.y if e else None for e in errs]
-            out["err_x2"] = [e.x2 if e else None for e in errs]
-            out["err_y2"] = [e.y2 if e else None for e in errs]
-            yield out
-
-    return rings.mapInPandas(kernel, out_schema)
 
 
 def validate_polygons(rings: DataFrame) -> DataFrame:

@@ -74,16 +74,7 @@ def curate_images(images: DataFrame, layer: PolygonLayer,
     # few dozen bytes/row instead of the full payload (at the scan,
     # parquet column pruning makes this free).
     narrow = images.select(id_col, caption, phash, y, x)
-    if how == "auto":
-        import pickle
-
-        from .frame import BROADCAST_LIMIT_BYTES
-
-        how = (
-            "broadcast"
-            if len(pickle.dumps(layer)) <= BROADCAST_LIMIT_BYTES
-            else "partitioned"
-        )
+    how = _resolve_how(how, layer)
     # caption+phash ride THROUGH the PIP kernel (keep=), and on the
     # broadcast path the containment count is computed in-kernel
     # (pip_count_broadcast), so the survivor stage shuffles NOTHING —
@@ -104,6 +95,23 @@ def curate_images(images: DataFrame, layer: PolygonLayer,
     return _collapse_by_phash(
         ok, id_col, caption, phash, max_hamming, n_bands,
         hot_threshold, max_bucket, drop_observation,
+    )
+
+
+def _resolve_how(how: str, layer: PolygonLayer) -> str:
+    """The PIP strategy for `how`: 'auto' picks 'broadcast' when the
+    pickled layer fits BROADCAST_LIMIT_BYTES, else 'partitioned'; any
+    other value passes through."""
+    if how != "auto":
+        return how
+    import pickle
+
+    from .frame import BROADCAST_LIMIT_BYTES
+
+    return (
+        "broadcast"
+        if len(pickle.dumps(layer)) <= BROADCAST_LIMIT_BYTES
+        else "partitioned"
     )
 
 
@@ -186,25 +194,50 @@ def curate_images_checkpointed(images: DataFrame, layer: PolygonLayer,
     is NOT filled (observation.get would block), so read it only when
     the curated frame is returned.
     """
+    return _resumable(
+        images.select(id_col, caption, phash, y, x), layer,
+        [id_col, caption, phash], min_caption_tokens,
+        lambda ok: _collapse_by_phash(
+            ok, id_col, caption, phash, max_hamming, n_bands,
+            hot_threshold, max_bucket, drop_observation,
+        ),
+        root, job_id, res, keys_per_batch, max_batches, id_col, caption, x, y,
+    )
+
+
+def _resumable(narrow: DataFrame, layer: PolygonLayer, keep: list,
+               min_caption_tokens: int, cluster, root: str, job_id: str,
+               res: int, keys_per_batch: int, max_batches: int | None,
+               id_col: str, caption: str, x: str, y: str):
+    """The one resumable path every *_checkpointed curation form runs.
+
+    `narrow` is the form's narrow projection (geotag included) and
+    `keep` the columns the survivor stage carries through the PIP
+    kernel. Stage 1 (survivors: broadcast PIP -> n_regions -> caption
+    filter) runs under a CheckpointJob keyed by the res-`res`
+    quadtree cell; stage 2 is `cluster`, the form's global dedup stage,
+    applied to the survivor set read back from the checkpoint once
+    every key has a progress row.
+
+    Returns (n_keys_processed, cluster(survivors) | None): None while
+    stage 1 is incomplete."""
     from .checkpoint import CheckpointJob
     from .operators.tile_ops import assign_tiles
 
-    spark = images.sparkSession
-    narrow = assign_tiles(
-        images.select(id_col, caption, phash, y, x), res=res, y=y, x=x
-    )
+    spark = narrow.sparkSession
+    tiled = assign_tiles(narrow, res=res, y=y, x=x)
     job = CheckpointJob(spark, job_id, root)
 
     def survivors(batch: DataFrame) -> DataFrame:
-        # same zero-shuffle shape as curate_images: payload rides the
-        # kernel and the containment count is computed in-kernel (cell
-        # kept — it is the checkpoint partition key)
+        # same zero-shuffle shape as the one-shot forms: payload rides
+        # the kernel and the containment count is computed in-kernel
+        # (cell kept — it is the checkpoint partition key)
         return _survivors_multimodal(
-            batch, layer, min_caption_tokens, "broadcast",
-            [id_col, caption, phash, "cell"], id_col, caption, x, y,
+            batch, layer, min_caption_tokens, "broadcast", keep + ["cell"],
+            id_col, caption, x, y,
         )
 
-    done = job.run(narrow, "cell", survivors,
+    done = job.run(tiled, "cell", survivors,
                    keys_per_batch=keys_per_batch, max_batches=max_batches)
     # run() already computed the remaining key set — re-deriving it via
     # progress_remaining() would repeat the same distinct+collect pass
@@ -217,18 +250,16 @@ def curate_images_checkpointed(images: DataFrame, layer: PolygonLayer,
     except AnalysisException:
         # every key produced zero survivors: the output dir holds no
         # parquet files, so the read cannot infer a schema — the
-        # correct result is an EMPTY curated frame, not an error
-        # (schema from the transform's plan; no action runs). ONLY
+        # correct survivor set is EMPTY, not an error, and `cluster`
+        # turns it into an empty curated frame (schema from the
+        # transform's plan; no action runs). ONLY
         # AnalysisException means "nothing to read" — permissions,
         # corrupt footers, and transient FS failures propagate instead
         # of masquerading as an empty result
         ok = spark.createDataFrame(
-            [], survivors(narrow.limit(0)).schema
+            [], survivors(tiled.limit(0)).schema
         ).drop("cell")
-    return done, _collapse_by_phash(
-        ok, id_col, caption, phash, max_hamming, n_bands,
-        hot_threshold, max_bucket, drop_observation,
-    )
+    return done, cluster(ok)
 
 
 # -- multimodal curation (exact -> crossmodal -> optional embedding) ------
@@ -385,6 +416,23 @@ def _survivors_multimodal(narrow: DataFrame, layer: PolygonLayer,
     )
 
 
+def _multimodal_narrow(images: DataFrame, embedding: str | None,
+                       id_col: str, caption: str, phash: str,
+                       content: str, x: str, y: str):
+    """The multimodal forms' narrow projection and PIP keep list: the
+    content md5 is computed HERE, map-side at the scan, so the pixel
+    payload never shuffles; NULL content hashes to the row's own id."""
+    cols = [
+        F.col(id_col), F.col(caption), F.col(phash), F.col(y), F.col(x),
+        F.coalesce(F.md5(F.col(content)), F.col(id_col)).alias("_content"),
+    ]
+    keep = [id_col, caption, phash, "_content"]
+    if embedding is not None:
+        cols.append(F.col(embedding))
+        keep.append(embedding)
+    return images.select(*cols), keep
+
+
 def curate_multimodal(images: DataFrame, layer: PolygonLayer,
                       min_caption_tokens: int = 2,
                       max_hamming: int = 8,
@@ -429,25 +477,10 @@ def curate_multimodal(images: DataFrame, layer: PolygonLayer,
     join; `embed_max_bucket` / `embed_drop_observation` to the
     embedding bucket join — one pipeline call exposes every stage's
     drop counts (filled eagerly at build; zeros when unarmed)."""
-    cols = [
-        F.col(id_col), F.col(caption), F.col(phash), F.col(y), F.col(x),
-        F.coalesce(F.md5(F.col(content)), F.col(id_col)).alias("_content"),
-    ]
-    keep = [id_col, caption, phash, "_content"]
-    if embedding is not None:
-        cols.append(F.col(embedding))
-        keep.append(embedding)
-    narrow = images.select(*cols)
-    if how == "auto":
-        import pickle
-
-        from .frame import BROADCAST_LIMIT_BYTES
-
-        how = (
-            "broadcast"
-            if len(pickle.dumps(layer)) <= BROADCAST_LIMIT_BYTES
-            else "partitioned"
-        )
+    narrow, keep = _multimodal_narrow(
+        images, embedding, id_col, caption, phash, content, x, y
+    )
+    how = _resolve_how(how, layer)
     ok = _survivors_multimodal(
         narrow, layer, min_caption_tokens, how, keep, id_col, caption, x, y
     )
@@ -504,43 +537,18 @@ def curate_multimodal_checkpointed(images: DataFrame, layer: PolygonLayer,
     curate_multimodal() exactly when complete. Drop observations are
     only filled on the completing invocation (see
     curate_images_checkpointed)."""
-    from .checkpoint import CheckpointJob
-    from .operators.tile_ops import assign_tiles
-
-    spark = images.sparkSession
-    cols = [
-        F.col(id_col), F.col(caption), F.col(phash), F.col(y), F.col(x),
-        F.coalesce(F.md5(F.col(content)), F.col(id_col)).alias("_content"),
-    ]
-    keep = [id_col, caption, phash, "_content", "cell"]
-    if embedding is not None:
-        cols.append(F.col(embedding))
-        keep.append(embedding)
-    narrow = assign_tiles(images.select(*cols), res=res, y=y, x=x)
-    job = CheckpointJob(spark, job_id, root)
-
-    def survivors(batch: DataFrame) -> DataFrame:
-        return _survivors_multimodal(
-            batch, layer, min_caption_tokens, "broadcast", keep,
-            id_col, caption, x, y,
-        )
-
-    done = job.run(narrow, "cell", survivors,
-                   keys_per_batch=keys_per_batch, max_batches=max_batches)
-    if job.remaining_keys:
-        return done, None
-    try:
-        ok = job.output().drop("cell")
-    except AnalysisException:
-        # zero survivors everywhere: empty frame with the right schema
-        ok = spark.createDataFrame(
-            [], survivors(narrow.limit(0)).schema
-        ).drop("cell")
-    return done, _multimodal_cluster(
-        ok, max_hamming, n_bands, hot_threshold, max_bucket,
-        drop_observation, embedding, embed_threshold, embed_n_bits,
-        embed_n_probe, embed_refine, embed_bit_exact, embed_max_bucket,
-        embed_drop_observation, True, id_col, caption, phash,
+    narrow, keep = _multimodal_narrow(
+        images, embedding, id_col, caption, phash, content, x, y
+    )
+    return _resumable(
+        narrow, layer, keep, min_caption_tokens,
+        lambda ok: _multimodal_cluster(
+            ok, max_hamming, n_bands, hot_threshold, max_bucket,
+            drop_observation, embedding, embed_threshold, embed_n_bits,
+            embed_n_probe, embed_refine, embed_bit_exact, embed_max_bucket,
+            embed_drop_observation, True, id_col, caption, phash,
+        ),
+        root, job_id, res, keys_per_batch, max_batches, id_col, caption, x, y,
     )
 
 
@@ -586,16 +594,7 @@ def curate_images_against(new_images: DataFrame, corpus: DataFrame,
     contract)."""
     narrow = new_images.select(id_col, caption, phash, y, x)
     keep = [id_col, caption, phash]
-    if how == "auto":
-        import pickle
-
-        from .frame import BROADCAST_LIMIT_BYTES
-
-        how = (
-            "broadcast"
-            if len(pickle.dumps(layer)) <= BROADCAST_LIMIT_BYTES
-            else "partitioned"
-        )
+    how = _resolve_how(how, layer)
     ok = _survivors_multimodal(
         narrow, layer, min_caption_tokens, how, keep, id_col, caption, x, y
     )
@@ -603,6 +602,21 @@ def curate_images_against(new_images: DataFrame, corpus: DataFrame,
         # ok feeds the against-join, the anti join, the internal
         # components AND the representative rejoin
         ok = ok.localCheckpoint()
+    return _against_cluster(
+        ok, corpus, materialize, max_hamming, n_bands, hot_threshold,
+        max_bucket, drop_observation, id_col, caption, phash,
+    )
+
+
+def _against_cluster(ok: DataFrame, corpus: DataFrame, materialize: bool,
+                     max_hamming: int, n_bands: int, hot_threshold: int,
+                     max_bucket: int | None, drop_observation,
+                     id_col: str, caption: str, phash: str) -> DataFrame:
+    """The incremental forms' cluster stage: drop every survivor that
+    near-dups the kept corpus (phash_neardup_against + one anti join
+    on the matched new ids), then collapse the fresh remainder to one
+    representative per cluster. Only the corpus band join observes
+    drops."""
     from .operators.dedup import phash_neardup_against
 
     matches = phash_neardup_against(
@@ -646,44 +660,15 @@ def curate_images_against_checkpointed(new_images: DataFrame,
     like curate_images_checkpointed; the corpus anti-join + internal
     dedup run once stage 1 completes. Returns (n_keys_processed,
     DataFrame | None); matches curate_images_against() when complete."""
-    from .checkpoint import CheckpointJob
-    from .operators.dedup import phash_neardup_against
-    from .operators.tile_ops import assign_tiles
-
-    spark = new_images.sparkSession
-    narrow = assign_tiles(
-        new_images.select(id_col, caption, phash, y, x), res=res, y=y, x=x
-    )
-    keep = [id_col, caption, phash, "cell"]
-    job = CheckpointJob(spark, job_id, root)
-
-    def survivors(batch: DataFrame) -> DataFrame:
-        return _survivors_multimodal(
-            batch, layer, min_caption_tokens, "broadcast", keep,
-            id_col, caption, x, y,
-        )
-
-    done = job.run(narrow, "cell", survivors,
-                   keys_per_batch=keys_per_batch, max_batches=max_batches)
-    if job.remaining_keys:
-        return done, None
-    try:
-        ok = job.output().drop("cell")
-    except AnalysisException:
-        ok = spark.createDataFrame(
-            [], survivors(narrow.limit(0)).schema
-        ).drop("cell")
-    ok = ok.localCheckpoint(eager=False)
-    matches = phash_neardup_against(
-        ok, corpus.select(id_col, phash), max_hamming=max_hamming,
-        id_col=id_col, phash=phash, n_bands=n_bands,
-        max_bucket=max_bucket, hot_threshold=hot_threshold,
-        drop_observation=drop_observation,
-    )
-    fresh = ok.join(
-        matches.select(F.col("new_id").alias(id_col)), id_col, "left_anti"
-    ).localCheckpoint(eager=False)
-    return done, _collapse_by_phash(
-        fresh, id_col, caption, phash, max_hamming, n_bands,
-        hot_threshold, max_bucket,
+    return _resumable(
+        new_images.select(id_col, caption, phash, y, x), layer,
+        [id_col, caption, phash], min_caption_tokens,
+        # the parquet read-back feeds the corpus join, the anti join
+        # and the collapse: pin it once, lazily
+        lambda ok: _against_cluster(
+            ok.localCheckpoint(eager=False), corpus, True, max_hamming,
+            n_bands, hot_threshold, max_bucket, drop_observation,
+            id_col, caption, phash,
+        ),
+        root, job_id, res, keys_per_batch, max_batches, id_col, caption, x, y,
     )

@@ -45,6 +45,27 @@ def test_kill_resume_equals_oneshot(spark, data, tmp_path):
     assert resumable.run(data, "key", transform) == 0
 
 
+def test_run_keeps_session_overwrite_mode(spark, data, tmp_path):
+    """run() sets dynamic partition overwrite on its own writer only: the
+    session setting is unchanged, so a later overwrite in the same session
+    still replaces the whole table."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        CheckpointJob(spark, "job3", str(tmp_path / "d")).run(data, "key", transform)
+        assert spark.conf.get(key) == "static"
+
+        path = str(tmp_path / "later")
+        data.write.mode("overwrite").partitionBy("key").parquet(path)
+        data.filter(F.col("key") == 0).write.mode("overwrite").partitionBy(
+            "key"
+        ).parquet(path)
+        assert spark.read.parquet(path).select("key").distinct().count() == 1
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_metrics_lineage(spark, data, tmp_path):
     job = CheckpointJob(spark, "job2", str(tmp_path / "c"))
     job.run(data, "key", transform, keys_per_batch=3)

@@ -2,6 +2,7 @@
 stage's value-level correctness is oracled via the curate_images
 registry query)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -46,6 +47,19 @@ def test_curate_images_partitioned_equals_broadcast(spark):
     assert a == b
 
 
+def _assert_resume_complete(spark, job_id, root, done1, done2, n_rows, rerun):
+    """Every key has exactly one progress row, and a third call runs no
+    key and returns the same number of rows."""
+    from segment_rtree_spark.checkpoint import CheckpointJob
+
+    prog = CheckpointJob(spark, job_id, root).progress().toPandas()
+    assert prog["partition_key"].is_unique
+    assert done2 == len(prog) - done1
+    done3, final3 = rerun()
+    assert done3 == 0
+    assert final3.count() == n_rows
+
+
 def test_curate_checkpointed_kill_resume_matches_oneshot(spark, tmp_path):
     """Durable-checkpoint curation: a job killed after one batch and
     resumed must produce exactly the one-shot curate_images result,
@@ -81,36 +95,39 @@ def test_curate_checkpointed_kill_resume_matches_oneshot(spark, tmp_path):
     b = oneshot[cols].sort_values(cols).reset_index(drop=True)
     assert a.equals(b)
 
-    # lineage: every key has exactly one progress row (no double work)
-    from segment_rtree_spark.checkpoint import CheckpointJob
-
-    prog = CheckpointJob(spark, "curate", root).progress().toPandas()
-    assert prog["partition_key"].is_unique
-    assert done2 == len(prog) - done1
-
+    # lineage: every key has exactly one progress row (no double work);
     # idempotent third call: nothing left to do, result unchanged
-    done3, final3 = curate_images_checkpointed(
-        imgs, layer, root, max_hamming=1, n_bands=2,
+    _assert_resume_complete(
+        spark, "curate", root, done1, done2, len(got),
+        lambda: curate_images_checkpointed(
+            imgs, layer, root, max_hamming=1, n_bands=2,
+        ),
     )
-    assert done3 == 0
-    assert final3.count() == len(got)
 
 
-def test_curate_checkpointed_all_empty(spark, tmp_path):
+@pytest.mark.parametrize("form", ["images", "multimodal", "against"])
+def test_curate_checkpointed_all_empty(spark, tmp_path, form):
     """Every key producing zero survivors must yield an EMPTY curated
-    frame, not an unreadable output dir (ADVICE r3)."""
-    from pyspark.sql import functions as F
-
-    from segment_rtree_spark.pipelines import curate_images_checkpointed
+    frame, not an unreadable output dir (ADVICE r3) — through each
+    checkpointed form's own cluster stage."""
+    from segment_rtree_spark import pipelines as P
     from segment_rtree_spark.plans.entry_queries import entry_layer
-    from segment_rtree_spark.synth import images_df_arith
 
-    imgs = images_df_arith(spark, 60, skew_frac=0.1).withColumn(
-        "caption", F.lit("x")
-    )
-    done, curated = curate_images_checkpointed(
-        imgs, entry_layer(), str(tmp_path / "job"), min_caption_tokens=99
-    )
+    imgs = _mm_corpus(spark, 60).withColumn("caption", F.lit("x"))
+    layer, root = entry_layer(), str(tmp_path / "job")
+    if form == "images":
+        done, curated = P.curate_images_checkpointed(
+            imgs, layer, root, min_caption_tokens=99
+        )
+    elif form == "multimodal":
+        done, curated = P.curate_multimodal_checkpointed(
+            imgs, layer, root, min_caption_tokens=99,
+            embedding="embedding", content="content",
+        )
+    else:
+        done, curated = P.curate_images_against_checkpointed(
+            imgs, imgs, layer, root, min_caption_tokens=99
+        )
     assert curated is not None
     assert curated.count() == 0
     assert {"image_id", "caption", "n_regions", "cluster_size"} <= set(curated.columns)
@@ -247,6 +264,10 @@ def test_curate_multimodal_checkpointed_kill_resume(spark, tmp_path):
     a = got[cols].sort_values(cols).reset_index(drop=True)
     b = oneshot[cols].sort_values(cols).reset_index(drop=True)
     assert a.equals(b)
+    _assert_resume_complete(
+        spark, "curate_mm", root, done1, done2, len(got),
+        lambda: curate_multimodal_checkpointed(imgs, layer, root, **kw),
+    )
     imgs.unpersist()
 
 
@@ -382,4 +403,10 @@ def test_curate_against_checkpointed_kill_resume(spark, tmp_path):
     a = got[cols].sort_values(cols).reset_index(drop=True)
     b = oneshot[cols].sort_values(cols).reset_index(drop=True)
     assert a.equals(b)
+    _assert_resume_complete(
+        spark, "curate_against", root, done1, done2, len(got),
+        lambda: curate_images_against_checkpointed(
+            new, corpus, layer, root, **kw
+        ),
+    )
     new.unpersist(); corpus.unpersist()
