@@ -168,10 +168,9 @@ def _lsh_exploded(docs: DataFrame, id_col: str, text: str, rows_per_band: int,
     10^12 docs that multiplies the dominant cost by the band count.
 
     materialize=True checkpoints the signature frame before banding.
-    The downstream self-join consumes the exploded frame THREE times
-    (hot-bucket sizing pass + both join sides; the capped path sizes
-    once + joins twice) and Spark cannot share a subtree across the
-    two sides of a self-join, so without materialization the dominant
+    The band join consumes the exploded frame up to THREE times (cap
+    sizing, tiling sizing, the join) and Spark cannot share a subtree
+    across those jobs, so without materialization the dominant
     tokenize->md5->groupBy signature aggregation runs 3x (measured:
     0.56s of the 2.4s sf0.1 query, x3). The checkpoint is one narrow
     row per doc (id + k small ints) — the shape every production LSH
@@ -180,7 +179,7 @@ def _lsh_exploded(docs: DataFrame, id_col: str, text: str, rows_per_band: int,
 
     with_keys=True additionally carries the band ordinal `bi` and the
     FULL key array `keys` on every row, enabling first-collision-band
-    pair emission downstream (see lsh_pairs)."""
+    pair emission downstream (see _first_band_pred)."""
     sig = minhash_signatures(docs, id_col, text)
     if materialize:
         sig = sig.localCheckpoint(eager=False)
@@ -214,13 +213,10 @@ def _first_band_xor_pred(xor, band_col, n_bands: int):
     fingerprints are equal by the join-band's key equality, so raw
     band equality is folded-key equality for every band). A pair is
     emitted only from its FIRST shared band: all earlier bands must
-    differ. This replaces the with_keys machinery for the phash
-    family — the keys array (n_bands longs + array header per
-    EXPLODED row) existed only to evaluate this predicate after the
-    join, and both signatures already ride the join for the hamming
-    verify; deriving the bands from the xor deletes those bytes from
-    the band-join shuffle and turns the filter into codegen'd integer
-    ops on one long."""
+    differ. Both signatures already ride the join for the hamming
+    verify, so unlike the minhash family (_lsh_exploded with_keys)
+    no key array rides the band-join shuffle and the filter is
+    codegen'd integer ops on one long."""
     width = _band_width(n_bands)
     mask = (1 << width) - 1
     pred = F.lit(True)
@@ -250,8 +246,7 @@ def _first_band_pred(n_bands: int) -> str:
 
 
 def _tiled_self_join(exploded: DataFrame, id_col: str,
-                     hot_threshold: int | None = 4096,
-                     materialize: bool = False) -> DataFrame:
+                     hot_threshold: int | None = 4096) -> DataFrame:
     """Skew-proof intra-bucket self-join: (a, b) rows sharing
     (band, bkey), with HOT buckets tiled into sub-tasks.
 
@@ -281,33 +276,17 @@ def _tiled_self_join(exploded: DataFrame, id_col: str,
     cold row with the g/s/tile machinery and lost 30-50% on
     hot-bucket-free workloads; the one extra sizing job is the
     cheaper insurance premium).
-
-    materialize=True checkpoints the input first, for callers whose
-    upstream subtree is expensive (the minhash signature aggregation):
-    the sizing pass is a SEPARATE job, so exchange reuse cannot span
-    it and the upstream would otherwise run once for sizing and again
-    for the join. Callers with cheap banding over already-persisted
-    inputs (phash) skip the checkpoint — re-deriving two narrow
-    projections costs less than writing one to the block manager.
     """
-    if materialize:
-        exploded = exploded.localCheckpoint(eager=False)
-    if hot_threshold is None:
-        # caller ASSERTS no hot buckets (e.g. it just distinct-collapsed
-        # the join key upstream and knows the distinct count is below
-        # any threshold): skip the sizing job, plain equi-join
-        a = exploded.alias("a")
-        b = exploded.alias("b")
-        return a.join(b, ["band", "bkey"]).filter(
-            F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-        )
     spark = exploded.sparkSession
     hot = (
         exploded.groupBy("band", "bkey")
         .agg(F.count(F.lit(1)).alias("bucket_n"))
         .filter(F.col("bucket_n") > hot_threshold)
     )
-    hot_rows = hot.limit(100_001).collect()
+    # hot_threshold=None: the caller ASSERTS no hot buckets (e.g. it
+    # just distinct-collapsed the join key upstream and knows the
+    # distinct count is below any threshold) — skip the sizing job
+    hot_rows = [] if hot_threshold is None else hot.limit(100_001).collect()
     if len(hot_rows) > 100_000:
         raise ValueError(
             f"more than 100k buckets exceed hot_threshold={hot_threshold}: "
@@ -315,11 +294,9 @@ def _tiled_self_join(exploded: DataFrame, id_col: str,
             "or drop mega-buckets with max_bucket"
         )
     if not hot_rows:
-        a = exploded.alias("a")
-        b = exploded.alias("b")
-        return a.join(b, ["band", "bkey"]).filter(
-            F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-        )
+        return exploded.alias("a").join(
+            exploded.alias("b"), ["band", "bkey"]
+        ).filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
     ex = (
         exploded.join(
             F.broadcast(spark.createDataFrame(hot_rows, schema=hot.schema)),
@@ -356,8 +333,7 @@ def _tiled_self_join(exploded: DataFrame, id_col: str,
 
 
 def _tiled_join(a_ex: DataFrame, b_ex: DataFrame, a_id: str, b_id: str,
-                hot_threshold: int = 4096,
-                materialize: bool = False) -> DataFrame:
+                hot_threshold: int = 4096) -> DataFrame:
     """Two-sided skew-proof band join: rows of a_ex and b_ex sharing
     (band, bkey), with HOT buckets tiled into bounded sub-tasks — the
     new-vs-corpus generalization of _tiled_self_join.
@@ -377,16 +353,9 @@ def _tiled_join(a_ex: DataFrame, b_ex: DataFrame, a_id: str, b_id: str,
     sizing collect, then pick the physical plan) as the self-join,
     same bounded-collect contract (> 100k hot keys = loud error).
 
-    Streaming callers CANNOT use this (the sizing pass is an action
-    over both sides); they keep the plain stream-static join with the
-    corpus-side _cap_buckets guard instead.
-
-    materialize=True checkpoints both inputs first (for callers whose
-    banding subtree is expensive and consumed by both the sizing pass
-    and the join)."""
-    if materialize:
-        a_ex = a_ex.localCheckpoint(eager=False)
-        b_ex = b_ex.localCheckpoint(eager=False)
+    Streaming probes CANNOT use this (the sizing pass is an action
+    over both sides); _band_join plans them as the plain stream-static
+    join with the corpus-side _cap_buckets guard instead."""
     spark = a_ex.sparkSession
     sa = a_ex.groupBy("band", "bkey").agg(F.count(F.lit(1)).alias("a_n"))
     sb = b_ex.groupBy("band", "bkey").agg(F.count(F.lit(1)).alias("b_n"))
@@ -454,9 +423,7 @@ def _band_width(n_bands: int) -> int:
 
 def _banded_explode(rows: DataFrame, id_col: str, sig: str, n_bands: int,
                     partition_col: str | None = None,
-                    with_keys: bool = False,
-                    carry: tuple[str, ...] = (),
-                    rename: dict[str, str] | None = None) -> DataFrame:
+                    carry: tuple[str, ...] = ()) -> DataFrame:
     """The shared banding core for every 64-bit-signature modality
     (phash, full-width simhash, the crossmodal caption fold): one row
     per (input row, band) with the band's bucket key — the
@@ -477,13 +444,9 @@ def _banded_explode(rows: DataFrame, id_col: str, sig: str, n_bands: int,
     fingerprint) folds into every band key — (fp << width) | band_key
     stays inside a signed 64-bit long — so rows can only ever pair
     within equal values and hot signature buckets are SPLIT by the
-    fold before any skew guard sizes them. `with_keys` additionally
-    carries the band ordinal `bi` and the FULL key array `keys`,
-    enabling first-collision-band pair emission downstream (see
-    _first_band_pred). `carry` columns ride the explode (n_bands x
-    replication — the stream-safe way to verify them later without a
-    join-back); `rename` maps output column names (the two-sided join
-    wants side-prefixed names)."""
+    fold before any skew guard sizes them. `carry` columns ride the
+    explode (n_bands x replication — the stream-safe way to verify
+    them later without a join-back)."""
     width = _band_width(n_bands)
     mask = (1 << width) - 1
     cols = [id_col, sig]
@@ -499,27 +462,15 @@ def _banded_explode(rows: DataFrame, id_col: str, sig: str, n_bands: int,
         keys = [
             F.shiftleft(F.col(partition_col), width).bitwiseOR(k) for k in keys
         ]
-    entries = []
-    for b in range(n_bands):
-        fields = [F.lit(b).alias("band"), keys[b].alias("bkey")]
-        if with_keys:
-            fields += [F.lit(b).alias("bi"), F.array(*keys).alias("keys")]
-        entries.append(F.struct(*fields))
-    rename = rename or {}
-    out = [
-        F.col(id_col).alias(rename.get(id_col, id_col)),
-        F.col(sig).alias(rename.get(sig, sig)),
-        F.col("e.band").alias("band"),
-        F.col("e.bkey").alias("bkey"),
+    entries = [
+        F.struct(F.lit(b).alias("band"), keys[b].alias("bkey"))
+        for b in range(n_bands)
     ]
-    if with_keys:
-        out += [F.col("e.bi").alias("bi"), F.col("e.keys").alias("keys")]
-    out += [F.col(c).alias(rename.get(c, c)) for c in carry if c != sig and c != id_col]
+    carried = [c for c in carry if c != sig and c != id_col]
     return rows.select(
-        F.col(id_col), F.col(sig),
-        *[c for c in carry if c != sig and c != id_col],
+        F.col(id_col), F.col(sig), *carried,
         F.explode(F.array(*entries)).alias("e"),
-    ).select(*out)
+    ).select(id_col, sig, "e.band", "e.bkey", *carried)
 
 
 def phash_band_stats(images: DataFrame, id_col: str = "image_id",
@@ -598,6 +549,70 @@ def _observe_zero_drops(observation, spark) -> None:
     ).collect()
 
 
+def _band_join(a: DataFrame, b: DataFrame | None, id_col: str,
+               first_band, finish, max_bucket: int | None = None,
+               drop_observation=None, hot_threshold: int | None = 4096,
+               materialize: bool = False) -> DataFrame:
+    """The one banded-join driver every near-dup pair operator calls:
+    exploded (id_col, band, bkey, ...) frames in, finished pairs out.
+    The skew-and-dedup policy lives here once:
+
+      * b=None is the self join (_tiled_self_join, `a.` < `b.` ids);
+        otherwise `a` probes the corpus `b` through _tiled_join, or —
+        when `a` is a STREAMING frame — through the plain stream-static
+        equi-join (tiling's sizing pass is an action a stream cannot
+        run; the corpus-side cap is that path's skew guard).
+      * _cap_buckets runs on the corpus side (the only side of a self
+        join) with `drop_observation`, so the observation always
+        fills: exact counts under a cap, zeros unarmed. A batch probe
+        side is capped too, unobserved.
+      * Uncapped joins keep only a pair's FIRST colliding band
+        (`first_band`, a Column over the `a.`/`b.` sides) — a streaming
+        filter instead of a distinct() over O(pairs x bands) rows. A
+        cap breaks that rule (a pair's first shared band may be a
+        dropped bucket), so capped joins apply distinct() after
+        `finish` instead — except on a stream, where distinct() is a
+        stateful aggregation append mode cannot host: there a pair
+        emits once per SURVIVING shared band (consumers keying on
+        new_id are unaffected).
+
+    `finish` maps the joined frame to the output columns (verify
+    filters + select). `materialize` checkpoints a batch `a` before
+    any sizing pass: the cap and tiling sizing passes are SEPARATE
+    jobs, so exchange reuse cannot span them and an expensive
+    upstream (the minhash signature kernel) would otherwise run once
+    per job. Cheap banding over already-persisted inputs (phash)
+    skips it — re-deriving two narrow projections costs less than
+    writing one to the block manager."""
+    streaming = a.isStreaming
+    if materialize and not streaming:
+        a = a.localCheckpoint(eager=False)
+    capped = max_bucket is not None
+    if b is None:
+        joined = _tiled_self_join(
+            _cap_buckets(a, max_bucket, drop_observation), id_col, hot_threshold
+        )
+    else:
+        b = _cap_buckets(b, max_bucket, drop_observation)
+        if streaming:
+            joined = a.alias("a").join(b.alias("b"), ["band", "bkey"])
+        else:
+            joined = _tiled_join(
+                _cap_buckets(a, max_bucket), b, id_col, id_col, hot_threshold
+            )
+    if not capped:
+        joined = joined.filter(first_band)
+    out = finish(joined)
+    return out.distinct() if capped and not streaming else out
+
+
+def _id_pair(id_col: str, left: str, right: str):
+    """`finish` for the set-similarity joins: the two sides' ids."""
+    return lambda j: j.select(
+        F.col(f"a.{id_col}").alias(left), F.col(f"b.{id_col}").alias(right)
+    )
+
+
 def lsh_pairs(docs: DataFrame, id_col: str = "doc_id", text: str = "text",
               rows_per_band: int = 4, max_bucket: int | None = None,
               drop_observation=None) -> DataFrame:
@@ -613,40 +628,28 @@ def lsh_pairs(docs: DataFrame, id_col: str = "doc_id", text: str = "text",
     whose self-join is O(n^2) in a single task. Buckets larger than
     the cap are dropped BEFORE the join (their members are exact or
     near-exact dups better handled by exact_dups); the dropped buckets
-    stay visible via lsh_bucket_stats with the same cap.
+    stay visible via lsh_bucket_stats with the same cap, and in-band
+    via `drop_observation` (filled at build — zeros when unarmed).
+    Surviving buckets still tile: a bucket AT the cap (e.g. 32768) is
+    n^2/2 ~ 5*10^8 pairs in one task under a plain join — the cap
+    bounds memory blowup, the tiling bounds task runtime.
 
     Dedup of multi-band collisions: without a cap, a pair is emitted
-    from its FIRST colliding band only (streaming filter at the join —
-    measured 3x cheaper than distinct() on duplicate-heavy corpora,
-    where the distinct shuffles O(pairs x bands) rows). With a cap the
-    first-band rule breaks (the first colliding bucket may have been
-    dropped while a later one survived), so that path keeps distinct().
+    from its FIRST colliding band only (measured 3x cheaper than
+    distinct() on duplicate-heavy corpora); with a cap, distinct()
+    (see _band_join).
     """
-    if max_bucket is not None:
-        exploded = _cap_buckets(
-            _lsh_exploded(docs, id_col, text, rows_per_band, materialize=True),
-            max_bucket, drop_observation,
-        )
-        # still tiled: a surviving bucket AT the cap (e.g. 32768) is
-        # n^2/2 ~ 5*10^8 pairs in one task under a plain join — the cap
-        # bounds memory blowup, the tiling bounds task runtime
-        return (
-            _tiled_self_join(exploded, id_col)
-            .select(
-                F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
-            )
-            .distinct()
-        )
-    exploded = _lsh_exploded(docs, id_col, text, rows_per_band, with_keys=True)
+    capped = max_bucket is not None
     n_bands = (len(MINHASH_PARAMS) + rows_per_band - 1) // rows_per_band
-    return (
-        # materialize: the signature aggregation above is the dominant
-        # cost and would otherwise run once for sizing + once for the join
-        _tiled_self_join(exploded, id_col, materialize=True)
-        .filter(F.expr(_first_band_pred(n_bands)))
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
-        )
+    # the capped path checkpoints the narrow signatures (cap sizing,
+    # tiling sizing and the join all re-band them); the uncapped path
+    # checkpoints the keyed exploded frame (sizing + join)
+    return _band_join(
+        _lsh_exploded(docs, id_col, text, rows_per_band,
+                      with_keys=not capped, materialize=capped),
+        None, id_col, F.expr(_first_band_pred(n_bands)),
+        _id_pair(id_col, "doc_a", "doc_b"), max_bucket, drop_observation,
+        materialize=not capped,
     )
 
 
@@ -664,15 +667,11 @@ def lsh_pairs_against(new_docs: DataFrame, corpus: DataFrame,
     corpus self-join. Cost scales with |batch| x collision rate, not
     |corpus|^2.
 
-    Both sides' signature frames are checkpointed (the signature
-    aggregation is the dominant cost; in production the CORPUS side is
-    a persisted table — here the checkpoint stands in for it, and the
-    operator's join shape is identical either way). Multi-band
-    collisions are deduped by the first-colliding-band predicate
-    (streaming filter at the join, no distinct shuffle); with
-    `max_bucket`, over-cap buckets are dropped WHOLE on both sides
-    before the join (the _cap_buckets skew discipline) and the
-    first-band rule yields to distinct().
+    The corpus signatures and a batch new side's banded rows are
+    checkpointed (the signature aggregation is the dominant cost; in
+    production the CORPUS side is a persisted table — here the
+    checkpoint stands in for it, and the operator's join shape is
+    identical either way).
 
     Skew: a hot band key (a stopword-heavy or boilerplate signature
     shared by many docs on both sides) would put |new-bucket| x
@@ -681,16 +680,14 @@ def lsh_pairs_against(new_docs: DataFrame, corpus: DataFrame,
     buckets into bounded sub-tasks (`hot_threshold` = per-task pair
     budget sqrt). `max_bucket` additionally drops over-cap buckets
     whole on both sides (their members are exact/near-exact dups
-    better handled by exact_dups).
+    better handled by exact_dups) and the first-band rule yields to
+    distinct() (see _band_join).
 
     `new_docs` may be a STREAMING DataFrame (readStream source): the
     operator then skips the stream-side checkpoint and the tiling
     sizing pass (both are actions) and plans a stream-static band
     join — the corpus side still caps via max_bucket, which is the
-    available skew guard on that path. With max_bucket on a stream,
-    a matching pair emits once per SURVIVING shared band (the
-    first-band dedup rule needs bucket-survival knowledge a stream
-    filter cannot have); consumers keying on new_id are unaffected.
+    available skew guard on that path.
 
     A pair is emitted only for ids on opposite sides; a doc present in
     both frames matches itself (hash-identical signatures) — filter
@@ -700,42 +697,53 @@ def lsh_pairs_against(new_docs: DataFrame, corpus: DataFrame,
     side's capped drops: filled eagerly at operator build, so
     observation.get has dropped_buckets / dropped_rows as soon as the
     call returns (see _cap_buckets)."""
-    streaming = new_docs.isStreaming
+    capped = max_bucket is not None
     n_bands = (len(MINHASH_PARAMS) + rows_per_band - 1) // rows_per_band
-    out = lambda j: j.select(  # noqa: E731
-        F.col(f"a.{id_col}").alias("new_id"),
-        F.col(f"b.{id_col}").alias("corpus_id"),
+    return _band_join(
+        _lsh_exploded(new_docs, id_col, text, rows_per_band,
+                      with_keys=not capped),
+        _lsh_exploded(corpus, id_col, text, rows_per_band,
+                      with_keys=not capped, materialize=True),
+        id_col, F.expr(_first_band_pred(n_bands)),
+        _id_pair(id_col, "new_id", "corpus_id"), max_bucket,
+        drop_observation, hot_threshold, materialize=True,
     )
-    if max_bucket is not None:
-        a = _lsh_exploded(
-            new_docs, id_col, text, rows_per_band, materialize=not streaming
+
+
+def _hamming_pairs(a: DataFrame, b: DataFrame | None, id_col: str,
+                   sig: str, n_bands: int, max_hamming: int,
+                   names: tuple[str, str], verify_col: str | None,
+                   max_bucket: int | None, drop_observation,
+                   hot_threshold: int | None) -> DataFrame:
+    """The 64-bit-signature band join (phash, simhash, the crossmodal
+    fold): _band_join with the XOR first-band rule, the exact
+    bit_count verify and, with `verify_col`, exact equality of the
+    two sides' carried values. Output (names..., hamming[,
+    verify_col])."""
+    xor = F.col(f"a.{sig}").bitwiseXOR(F.col(f"b.{sig}"))
+
+    def finish(joined):
+        out = joined.withColumn("hamming", F.bit_count(xor)).filter(
+            F.col("hamming") <= max_hamming
         )
-        b = _cap_buckets(
-            _lsh_exploded(corpus, id_col, text, rows_per_band, materialize=True),
-            max_bucket, drop_observation,  # CORPUS-side drops observed
-        )
-        if streaming:
-            # corpus-side cap only (a stream-side _cap_buckets would
-            # need a stream aggregation); per-surviving-band emission
-            # (see docstring): distinct() is a stateful aggregation
-            # append mode cannot host
-            return out(a.alias("a").join(b.alias("b"), ["band", "bkey"]))
-        a = _cap_buckets(a, max_bucket)
-        return out(
-            _tiled_join(a, b, id_col, id_col, hot_threshold)
-        ).distinct()
-    a = _lsh_exploded(
-        new_docs, id_col, text, rows_per_band, with_keys=True,
-        materialize=not streaming,
+        sel = [
+            F.col(f"a.{id_col}").alias(names[0]),
+            F.col(f"b.{id_col}").alias(names[1]),
+            F.col("hamming"),
+        ]
+        if verify_col is not None:
+            # the folded fingerprint admitted the candidate, the
+            # carried value decides
+            out = out.filter(
+                F.col(f"a.{verify_col}") == F.col(f"b.{verify_col}")
+            )
+            sel.append(F.col(f"a.{verify_col}").alias(verify_col))
+        return out.select(*sel)
+
+    return _band_join(
+        a, b, id_col, _first_band_xor_pred(xor, F.col("band"), n_bands),
+        finish, max_bucket, drop_observation, hot_threshold,
     )
-    b = _lsh_exploded(
-        corpus, id_col, text, rows_per_band, with_keys=True, materialize=True
-    )
-    if streaming:
-        joined = a.alias("a").join(b.alias("b"), ["band", "bkey"])
-    else:
-        joined = _tiled_join(a, b, id_col, id_col, hot_threshold)
-    return out(joined.filter(F.expr(_first_band_pred(n_bands))))
 
 
 def phash_neardup_against(new_images: DataFrame, corpus: DataFrame,
@@ -766,17 +774,14 @@ def phash_neardup_against(new_images: DataFrame, corpus: DataFrame,
     `new_images` may be a STREAMING DataFrame (this is what
     streaming_neardup_matches passes): the sizing action is
     impossible there, so the plan stays a stream-static equi-join
-    with the corpus-side max_bucket cap as the skew guard. With
-    max_bucket on a stream, a matching pair emits once per SURVIVING
-    shared band (the first-band dedup rule needs bucket-survival
-    knowledge a stream filter cannot have); consumers keying on
-    new_id are unaffected.
+    with the corpus-side max_bucket cap as the skew guard (see
+    _band_join for the capped-stream emission rule).
 
     `drop_observation` (a pyspark Observation) surfaces the corpus
     side's capped drops: filled eagerly at operator build (the corpus
     side is static even under a streaming new_images frame, so the
     one sizing job is always legal), observation.get is ready as soon
-    as the call returns — see _cap_buckets.
+    as the call returns — zeros when unarmed; see _cap_buckets.
 
     `partition_col` folds a non-negative < 2^31 long column into every
     band bucket key on BOTH sides (pairs only within equal values —
@@ -788,54 +793,16 @@ def phash_neardup_against(new_images: DataFrame, corpus: DataFrame,
     new_images is streaming — carry-through is the stream-safe
     verify. Together these give crossmodal_neardup_against its joint
     caption+image semantics."""
-    def banded(images, side):
-        carry = (verify_col,) if verify_col is not None else ()
-        return _banded_explode(
-            images, id_col, phash, n_bands, partition_col=partition_col,
-            carry=carry,
-            rename={id_col: f"{side}_id", phash: f"ph_{side}",
-                    **({verify_col: f"vc_{side}"} if verify_col else {})},
-        )
+    carry = (verify_col,) if verify_col is not None else ()
 
-    streaming = new_images.isStreaming
-    a = banded(new_images, "new")
-    b = banded(corpus, "corpus")
-    if max_bucket is not None:
-        b = _cap_buckets(b, max_bucket, drop_observation)  # corpus side
-    xor = F.col("ph_new").bitwiseXOR(F.col("ph_corpus"))
+    def banded(images):
+        return _banded_explode(images, id_col, phash, n_bands,
+                               partition_col=partition_col, carry=carry)
 
-    def verify(joined):
-        out = joined.withColumn("hamming", F.bit_count(xor)).filter(
-            F.col("hamming") <= max_hamming
-        )
-        if verify_col is not None:
-            # exact equality on the carried values: the folded
-            # fingerprint admitted the candidate, the value decides
-            out = out.filter(F.col("vc_new") == F.col("vc_corpus"))
-            return out.select(
-                "new_id", "corpus_id", "hamming",
-                F.col("vc_new").alias(verify_col),
-            )
-        return out.select("new_id", "corpus_id", "hamming")
-
-    first_band = lambda j: j.filter(  # noqa: E731
-        _first_band_xor_pred(xor, F.col("band"), n_bands)
-    )
-    if streaming:
-        joined = a.alias("a").join(b.alias("b"), ["band", "bkey"])
-        if max_bucket is None:
-            joined = first_band(joined)
-        # else: per-surviving-band emission (see docstring)
-        return verify(joined)
-    if max_bucket is not None:
-        # the capped path dedups with distinct() instead of the
-        # first-band rule (a pair's first shared band may be dropped)
-        a = _cap_buckets(a, max_bucket)
-        return verify(
-            _tiled_join(a, b, "new_id", "corpus_id", hot_threshold)
-        ).distinct()
-    return verify(
-        first_band(_tiled_join(a, b, "new_id", "corpus_id", hot_threshold))
+    return _hamming_pairs(
+        banded(new_images), banded(corpus), id_col, phash, n_bands,
+        max_hamming, ("new_id", "corpus_id"), verify_col, max_bucket,
+        drop_observation, hot_threshold,
     )
 
 
@@ -1087,21 +1054,22 @@ def label_propagate(nodes: DataFrame, edges: DataFrame,
 def phash_components(images: DataFrame, id_col: str = "image_id",
                      phash: str = "phash", max_hamming: int = 8,
                      max_iter: int = 50, n_bands: int = 4,
-                     rep_join: str = "window",
                      hot_threshold: int | None = 4096,
                      max_bucket: int | None = None,
                      drop_observation=None) -> DataFrame:
     """Image near-duplicate clusters: (image_id, component) with
     component = the minimum image id in the cluster.
 
-    The 10^12-image shape, in two levels:
+    The 10^12-image shape, in two levels (phash_group_labels):
       1. byte-identical perceptual hashes collapse FIRST (distinct on
          the 64-bit phash) — a million identical crops become ONE node
          below, so degenerate corpora cannot re-create the quadratic
          bucket problem;
       2. the band join + exact Hamming verify runs over DISTINCT hash
          values only, and min-label propagation clusters the values;
-         each image then inherits the min image id of its cluster.
+         each image then inherits the min image id of its cluster —
+         one min over a window partitioned by the group key. NULL
+         hashes are singleton clusters.
 
     Unlike `lsh_components` (bucket connectivity IS the doc-dedup
     semantic), image clusters propagate only through VERIFIED pairs
@@ -1114,66 +1082,15 @@ def phash_components(images: DataFrame, id_col: str = "image_id",
     the cap actually acts here. Unarmed (the default) the observation
     fills with zeros eagerly.
     """
-    all_ph = images.select(F.col(phash).alias("ph"), F.col(id_col))
-    # NULL hashes (upstream decode/hash failures) can't band-join and
-    # would vanish through the inner joins below; they are singleton
-    # clusters by definition and rejoin the output at the end.
-    null_ph = all_ph.filter(F.col("ph").isNull()).select(
-        id_col, F.col(id_col).alias("component")
-    )
-    ph = all_ph.filter(F.col("ph").isNotNull())
-    # one materialization feeds every consumer: the band-join sizing
-    # pass, both pair-join sides, and the component node list — without
-    # it the distinct shuffle re-runs in each branch (and in each of
-    # the sizing/join JOBS, which exchange reuse cannot span)
-    distinct_ph = ph.select("ph").distinct().localCheckpoint(eager=False)
-    pairs = phash_neardup_pairs(
-        distinct_ph.withColumn("pid", F.col("ph")),
-        max_hamming=max_hamming, id_col="pid", phash="ph", n_bands=n_bands,
-        hot_threshold=hot_threshold, max_bucket=max_bucket,
-        drop_observation=drop_observation,
-    )
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    mapping, bc = label_map(edges, max_iter)
-    # rep_join picks the representative-assignment physical shape:
-    #   'window' (default): one shuffle on the cluster label, min via
-    #     window — fewest stages, but a giant cluster's rows all pass
-    #     through ONE task (rows are narrow, so tolerable far past the
-    #     band-join skew point);
-    #   'broadcast': groupBy partial-agg shrinks each cluster to one
-    #     (label, min-id) row map-side, the min table broadcasts
-    #     back — NO task ever holds a whole cluster, the shape for
-    #     corpora whose largest cluster is itself web-scale. The
-    #     broadcast is one narrow row PER CLUSTER: fine up to ~10^7
-    #     clusters; a mostly-unique corpus (cluster count ~ N) should
-    #     keep the window default, whose per-task rows are bounded by
-    #     the LARGEST cluster instead. The labelled frame checkpoints
-    #     because both the agg and the rejoin consume it.
-    # The hash->label fold left-joins the SPARSE edge-touched mapping
-    # at image cardinality (coalesce to the hash itself for untouched
-    # nodes) — the earlier form materialized a per-distinct-hash
-    # component frame via label_propagate and shuffle-joined the
-    # image rows against it; the sparse fold is map-side whenever the
-    # edge set fit the driver union-find path.
-    labelled = _fold_labels(
-        ph, F.col("ph"), mapping, bc
-    ).select(id_col, "label")
-    if rep_join == "broadcast":
-        labelled = labelled.localCheckpoint(eager=False)
-        mins = labelled.groupBy("label").agg(F.min(id_col).alias("component"))
-        return (
-            labelled.join(F.broadcast(mins), "label")
-            .select(id_col, "component")
-            .union(null_ph)
-        )
-    if rep_join != "window":
-        raise ValueError(f"rep_join must be 'window' or 'broadcast', got {rep_join!r}")
     from pyspark.sql import Window
 
-    w = Window.partitionBy("label")
-    return (
-        labelled.select(id_col, F.min(id_col).over(w).alias("component"))
-        .union(null_ph)
+    lab = phash_group_labels(
+        images.select(id_col, phash), id_col, phash, max_hamming, max_iter,
+        n_bands, hot_threshold, max_bucket, drop_observation,
+    )
+    return lab.select(
+        id_col,
+        F.min(id_col).over(Window.partitionBy("_plabel")).alias("component"),
     )
 
 
@@ -1356,49 +1273,13 @@ def phash_neardup_pairs(images: DataFrame, max_hamming: int = 8,
     the streaming *_against path proved the carried shape first and
     the batch path now matches it).
     """
-    capped = max_bucket is not None
     carry = (verify_col,) if verify_col is not None else ()
-    # no key arrays anywhere: the first-collision-band dedup (uncapped
-    # path) derives band equality from the two signatures' XOR after
-    # the join (_first_band_xor_pred) — the capped path dedups with
-    # distinct() instead (a pair's first shared band may be a dropped
-    # bucket)
-    ex = _banded_explode(
-        images, id_col, phash, n_bands, partition_col=partition_col,
-        carry=carry,
+    return _hamming_pairs(
+        _banded_explode(images, id_col, phash, n_bands,
+                        partition_col=partition_col, carry=carry),
+        None, id_col, phash, n_bands, max_hamming, ("id_a", "id_b"),
+        verify_col, max_bucket, drop_observation, hot_threshold,
     )
-    if capped:
-        ex = _cap_buckets(ex, max_bucket, drop_observation)
-    elif drop_observation is not None:
-        _observe_zero_drops(drop_observation, images.sparkSession)
-    joined = (
-        # hot_threshold=None skips the adaptive sizing job (see
-        # _tiled_self_join) — for callers that distinct-collapsed the
-        # hash upstream and counted the survivors
-        _tiled_self_join(ex, id_col, hot_threshold)
-    )
-    xor = F.col(f"a.{phash}").bitwiseXOR(F.col(f"b.{phash}"))
-    if not capped:
-        joined = joined.filter(
-            _first_band_xor_pred(xor, F.col("band"), n_bands)
-        )
-    out = joined.withColumn("hamming", F.bit_count(xor)).filter(
-        F.col("hamming") <= max_hamming
-    )
-    sel = [
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
-        F.col("hamming"),
-    ]
-    if verify_col is not None:
-        # exact equality on the carried values: the folded fingerprint
-        # admitted the candidate, the value decides
-        out = out.filter(
-            F.col(f"a.{verify_col}") == F.col(f"b.{verify_col}")
-        )
-        sel.append(F.col(f"a.{verify_col}").alias(verify_col))
-    out = out.select(*sel)
-    return out.distinct() if capped else out
 
 
 def crossmodal_neardup_pairs(images: DataFrame, max_hamming: int = 8,
@@ -1500,18 +1381,17 @@ def phash_group_labels(images: DataFrame, id_col: str = "image_id",
                        drop_observation=None,
                        out: str = "_plabel") -> DataFrame:
     """images + one GROUP-KEY column `out` identifying each row's
-    phash near-dup cluster — the same partition of rows
-    phash_components labels, minus the per-image component
-    materialization: `out` is a struct group key (solo = own id for
-    NULL-hash singleton rows, lab = the min reachable hash value
-    otherwise), valid for aggregation but NOT an image id.
+    phash near-dup cluster — phash_components is this plus one
+    min(id) window over `out`: `out` is a struct group key (solo = own
+    id for NULL-hash singleton rows, lab = the min reachable hash
+    value otherwise), valid for aggregation but NOT an image id.
 
     The curation pipelines' collapse primitive (see
     crossmodal_group_labels for the rationale): their next step is a
     groupBy + min_by that recovers the representative row and the
     cluster size anyway, so phash_components' window at image
-    cardinality plus the component rejoin would compute a per-row
-    answer only to immediately re-aggregate it. Same two-level shape:
+    cardinality would compute a per-row answer only to immediately
+    re-aggregate it. Same two-level shape:
     distinct hashes are the join nodes, the sparse label fold
     attaches the cluster key map-side whenever the edge set fit the
     driver union-find path."""
@@ -1543,8 +1423,7 @@ def _crossmodal_node_edges(nodes: DataFrame, max_hamming: int,
                            max_bucket: int | None,
                            drop_observation) -> DataFrame:
     """Verified crossmodal edges over a DISTINCT (nid, cap, ph) node
-    frame — the internal pair generator crossmodal_components /
-    crossmodal_group_labels share.
+    frame — crossmodal_group_labels' internal pair generator.
 
     The node key nid = cap || '|' || ph embeds the caption, so exact
     caption equality can be checked on the PAIR STREAM from the two
@@ -1590,18 +1469,17 @@ def crossmodal_group_labels(images: DataFrame, id_col: str = "image_id",
                             drop_observation=None,
                             out: str = "_xlabel") -> DataFrame:
     """images + one GROUP-KEY column `out` identifying each row's
-    joint caption+image near-dup cluster — the same partition of rows
-    crossmodal_components labels, minus the representative-id
-    materialization: `out` is a struct group key (solo = own id for
-    NULL-caption/phash singleton rows, lab = the min reachable node
-    key otherwise), valid for aggregation but NOT an image id.
+    joint caption+image near-dup cluster — crossmodal_components is
+    this plus one min(id) window over `out`: `out` is a struct group
+    key (solo = own id for NULL-caption/phash singleton rows, lab =
+    the min reachable node key otherwise), valid for aggregation but
+    NOT an image id.
 
     This is the collapse primitive the composed curation needs: its
     next step is a groupBy + min_by that recovers the representative
-    row anyway, so materializing (image_id, component) first — a
-    window at image cardinality plus a corpus-wide rejoin inside
-    crossmodal_components — would compute a per-row answer only to
-    immediately re-aggregate it. The sparse label fold (label_map)
+    row anyway, so materializing (image_id, component) first — the
+    window at image cardinality crossmodal_components adds — would
+    compute a per-row answer only to immediately re-aggregate it. The sparse label fold (label_map)
     attaches the cluster key map-side whenever the edge set fit the
     driver union-find path, so the whole crossmodal collapse costs
     one distinct, one band join, and the caller's one groupBy."""
@@ -1642,7 +1520,7 @@ def crossmodal_group_labels(images: DataFrame, id_col: str = "image_id",
 def crossmodal_components(images: DataFrame, id_col: str = "image_id",
                           phash: str = "phash", caption: str = "caption",
                           max_hamming: int = 8, max_iter: int = 50,
-                          n_bands: int = 4, rep_join: str = "window",
+                          n_bands: int = 4,
                           hot_threshold: int | None = 4096,
                           max_bucket: int | None = None,
                           drop_observation=None) -> DataFrame:
@@ -1654,64 +1532,25 @@ def crossmodal_components(images: DataFrame, id_col: str = "image_id",
     and image modalities.
 
     Same two-level 10^12 shape as phash_components, with the node
-    collapsed one level further: byte-identical (caption, phash) PAIRS
-    dedup first (a million exact re-posts of one captioned image
-    become ONE node), then the caption-folded band join + min-label
-    propagation run over distinct nodes only, and each image inherits
-    its cluster's min id. Because edges never cross captions (the fold
-    makes cross-caption candidates impossible), every cluster lives
-    inside one caption group by construction. The node key is
-    caption || '|' || phash — injective (the phash suffix contains no
-    separator, so the LAST '|' always splits unambiguously) and
-    orderable, which is all min-label propagation needs; cluster
-    OUTPUT labels are image ids, never node keys. NULL phash or NULL
-    caption rows are singleton clusters (they cannot band-join) and
-    rejoin the output at the end.
+    collapsed one level further (crossmodal_group_labels):
+    byte-identical (caption, phash) PAIRS dedup first (a million exact
+    re-posts of one captioned image become ONE node), then the
+    caption-folded band join + min-label propagation run over distinct
+    nodes only, and each image inherits its cluster's min id — one min
+    over a window partitioned by the group key. Because edges never
+    cross captions (the fold makes cross-caption candidates
+    impossible), every cluster lives inside one caption group by
+    construction. NULL phash or NULL caption rows are singleton
+    clusters (they cannot band-join).
     """
-    all_rows = images.select(
-        F.col(id_col), F.col(phash).alias("ph"), F.col(caption).alias("cap")
-    )
-    null_rows = all_rows.filter(
-        F.col("ph").isNull() | F.col("cap").isNull()
-    ).select(id_col, F.col(id_col).alias("component"))
-    rows = all_rows.filter(F.col("ph").isNotNull() & F.col("cap").isNotNull())
-    # one materialization feeds the sizing pass, both join sides and
-    # the node list (see phash_components)
-    nodes = (
-        rows.select("cap", "ph").distinct()
-        .select(
-            F.concat_ws("|", "cap", F.col("ph").cast("string")).alias("nid"),
-            "cap", "ph",
-        )
-        .localCheckpoint(eager=False)
-    )
-    edges = _crossmodal_node_edges(
-        nodes, max_hamming, n_bands, hot_threshold, max_bucket,
-        drop_observation,
-    )
-    mapping, bc = label_map(edges, max_iter)
-    # sparse fold at row cardinality (see phash_components): untouched
-    # node keys coalesce to themselves, no per-node component frame
-    labelled = _fold_labels(
-        rows.withColumn(
-            "nid", F.concat_ws("|", "cap", F.col("ph").cast("string"))
-        ),
-        F.col("nid"), mapping, bc,
-    ).select(id_col, "label")
-    if rep_join == "broadcast":
-        labelled = labelled.localCheckpoint(eager=False)
-        mins = labelled.groupBy("label").agg(F.min(id_col).alias("component"))
-        return (
-            labelled.join(F.broadcast(mins), "label")
-            .select(id_col, "component")
-            .union(null_rows)
-        )
-    if rep_join != "window":
-        raise ValueError(f"rep_join must be 'window' or 'broadcast', got {rep_join!r}")
     from pyspark.sql import Window
 
-    w = Window.partitionBy("label")
-    return (
-        labelled.select(id_col, F.min(id_col).over(w).alias("component"))
-        .union(null_rows)
+    lab = crossmodal_group_labels(
+        images.select(id_col, phash, caption), id_col, phash, caption,
+        max_hamming, max_iter, n_bands, hot_threshold, max_bucket,
+        drop_observation,
+    )
+    return lab.select(
+        id_col,
+        F.min(id_col).over(Window.partitionBy("_xlabel")).alias("component"),
     )

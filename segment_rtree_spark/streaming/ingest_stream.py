@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation
 
 from ..operators.dedup import (
     crossmodal_neardup_against,
@@ -59,25 +59,31 @@ def _auto_cap(corpus: DataFrame) -> int:
     return max(1024, int(0.01 * corpus.count()))
 
 
-def _warn_drops(stats: DataFrame, cap: int, tag: str) -> None:
-    """Eager build-time visibility for the stream-side cap: the corpus
-    is static, so ONE extra job at query build prices exactly what the
-    armed guard will silently drop for the stream's whole lifetime —
-    logged loudly instead of discoverable only via a separate stats
-    run. Streaming queries can't surface Observation metrics through
-    observation.get, hence the eager count here."""
-    row = stats.filter(F.col("bucket_n") > cap).agg(
-        F.count(F.lit(1)).alias("b"), F.coalesce(F.sum("bucket_n"), F.lit(0)).alias("r")
-    ).first()
-    if row["b"]:
+def _logged_drops(build, cap: int | None, warn: bool, tag: str,
+                  buckets: str = "band bucket(s)",
+                  rows: str = "corpus rows") -> DataFrame:
+    """Build the match query as build(drop_observation) and log what
+    the armed corpus-side cap will silently drop for the stream's
+    whole lifetime. The operator fills the observation EAGERLY at
+    query build (dedup._cap_buckets / embed._bucketed_vectors — the
+    cap's own sizing job over the static corpus; for minhash and
+    embeddings it also materializes the corpus checkpoint the stream
+    reuses), so the price is known before the first micro-batch
+    without a second stats pass over the corpus. warn=False (or no cap) passes no
+    observation and skips the job."""
+    obs = Observation() if warn and cap is not None else None
+    out = build(obs)
+    if obs is not None and obs.get["dropped_buckets"]:
         log.warning(
-            "%s: corpus-side skew cap max_bucket=%d drops %d band bucket(s) "
-            "(%d corpus rows) from the stream join — matches against those "
-            "rows will NOT be reported (their members are exact-dup-shaped; "
-            "handle via exact dedup). Pass max_bucket=None to opt out, or "
+            "%s: corpus-side skew cap max_bucket=%d drops %d %s (%d %s) "
+            "from the stream join — matches against those rows will NOT "
+            "be reported (their members are exact-dup-shaped; handle via "
+            "exact dedup). Pass max_bucket=None to opt out, or "
             "warn_drops=False to skip this check.",
-            tag, cap, row["b"], row["r"],
+            tag, cap, obs.get["dropped_buckets"], buckets,
+            obs.get["dropped_rows"], rows,
         )
+    return out
 
 
 def streaming_neardup_matches(
@@ -117,21 +123,13 @@ def streaming_neardup_matches(
     """
     if max_bucket == "auto":
         max_bucket = _auto_cap(corpus)
-    if warn_drops and max_bucket is not None:
-        from ..operators.dedup import phash_band_stats
-
-        _warn_drops(
-            phash_band_stats(corpus, id_col, phash, n_bands),
-            max_bucket, "streaming_neardup_matches",
-        )
-    return phash_neardup_against(
-        stream_images,
-        corpus,
-        max_hamming=max_hamming,
-        id_col=id_col,
-        phash=phash,
-        n_bands=n_bands,
-        max_bucket=max_bucket,
+    return _logged_drops(
+        lambda obs: phash_neardup_against(
+            stream_images, corpus, max_hamming=max_hamming, id_col=id_col,
+            phash=phash, n_bands=n_bands, max_bucket=max_bucket,
+            drop_observation=obs,
+        ),
+        max_bucket, warn_drops, "streaming_neardup_matches",
     )
 
 
@@ -163,28 +161,15 @@ def streaming_crossmodal_matches(
     """
     if max_bucket == "auto":
         max_bucket = _auto_cap(corpus)
-    if warn_drops and max_bucket is not None:
-        from ..operators.dedup import phash_band_stats
-        from ..operators.text import with_fingerprint
-
-        # stats over the caption-split keys the join actually uses:
-        # fold the fingerprint exactly as the operator will
-        fp = with_fingerprint(
-            corpus.select(id_col, phash, caption), text=caption, out="_fp"
-        )
-        _warn_drops(
-            phash_band_stats(fp, id_col, phash, n_bands, partition_col="_fp"),
-            max_bucket, "streaming_crossmodal_matches",
-        )
-    return crossmodal_neardup_against(
-        stream_images,
-        corpus,
-        max_hamming=max_hamming,
-        id_col=id_col,
-        phash=phash,
-        caption=caption,
-        n_bands=n_bands,
-        max_bucket=max_bucket,
+    # the operator's observation counts the caption-split buckets the
+    # join actually uses
+    return _logged_drops(
+        lambda obs: crossmodal_neardup_against(
+            stream_images, corpus, max_hamming=max_hamming, id_col=id_col,
+            phash=phash, caption=caption, n_bands=n_bands,
+            max_bucket=max_bucket, drop_observation=obs,
+        ),
+        max_bucket, warn_drops, "streaming_crossmodal_matches",
     )
 
 
@@ -257,23 +242,13 @@ def streaming_text_matches(
     """
     if max_bucket == "auto":
         max_bucket = _auto_cap(corpus)
-    if warn_drops and max_bucket is not None:
-        # prices one extra minhash pass over the static corpus at
-        # query build — a one-time cost against a forever stream;
-        # warn_drops=False skips it
-        from ..operators.dedup import lsh_bucket_stats
-
-        _warn_drops(
-            lsh_bucket_stats(corpus, id_col, text, rows_per_band),
-            max_bucket, "streaming_text_matches",
-        )
-    return lsh_pairs_against(
-        stream_docs,
-        corpus,
-        id_col=id_col,
-        text=text,
-        rows_per_band=rows_per_band,
-        max_bucket=max_bucket,
+    return _logged_drops(
+        lambda obs: lsh_pairs_against(
+            stream_docs, corpus, id_col=id_col, text=text,
+            rows_per_band=rows_per_band, max_bucket=max_bucket,
+            drop_observation=obs,
+        ),
+        max_bucket, warn_drops, "streaming_text_matches",
     )
 
 
@@ -304,37 +279,18 @@ def streaming_embed_matches(
     the same build-time drop warning as the other wrappers
     (warn_drops=False skips the one-job check; max_bucket=None opts
     out of the guard)."""
-    from ..operators.embed import (
-        TARGET_BUCKET,
-        ann_bucket_stats,
-        auto_n_bits,
-        embedding_neardup_against,
-    )
+    from ..operators.embed import TARGET_BUCKET, embedding_neardup_against
 
     tb = TARGET_BUCKET if target_bucket is None else target_bucket
     cap = 32 * tb if max_bucket == "auto" else max_bucket
-    bits = n_bits if n_bits is not None else auto_n_bits(corpus.count(), tb)
-    if warn_drops and cap is not None:
-        row = (
-            ann_bucket_stats(corpus, bits, id_col, vec, max_bucket=cap)
-            .filter(F.col("truncated"))
-            .agg(F.count(F.lit(1)).alias("b"),
-                 F.coalesce(F.sum("bucket_n"), F.lit(0)).alias("r"))
-            .first()
-        )
-        if row["b"]:
-            log.warning(
-                "streaming_embed_matches: corpus-side skew cap max_bucket=%d "
-                "drops %d bucket(s) (%d corpus vectors) from the stream join "
-                "— matches against those vectors will NOT be reported (they "
-                "are near-identical piles; handle via exact dedup). Pass "
-                "max_bucket=None to opt out, or warn_drops=False to skip "
-                "this check.",
-                cap, row["b"], row["r"],
-            )
-    return embedding_neardup_against(
-        stream_vecs, corpus, threshold=threshold, id_col=id_col, vec=vec,
-        n_bits=bits, target_bucket=tb, n_probe=n_probe, max_bucket=cap,
+    return _logged_drops(
+        lambda obs: embedding_neardup_against(
+            stream_vecs, corpus, threshold=threshold, id_col=id_col,
+            vec=vec, n_bits=n_bits, target_bucket=tb, n_probe=n_probe,
+            max_bucket=cap, drop_observation=obs,
+        ),
+        cap, warn_drops, "streaming_embed_matches",
+        buckets="bucket(s)", rows="corpus vectors",
     )
 
 

@@ -403,22 +403,6 @@ def test_ngram_auto_df_guard(spark):
     assert ngram_jaccard_pairs(small, threshold=0.01).count() == 50 * 49 // 2
 
 
-def test_phash_components_rep_join_broadcast(spark):
-    """rep_join='broadcast' == the window default, and its plan really
-    broadcasts the per-cluster min table (no single-task window over a
-    giant cluster)."""
-    from segment_rtree_spark.operators.dedup import phash_components
-    from segment_rtree_spark.synth import images_df_arith
-
-    imgs = images_df_arith(spark, 300).select("image_id", "phash")
-    w = sorted(map(tuple, phash_components(imgs, max_hamming=16).collect()))
-    b = phash_components(imgs, max_hamming=16, rep_join="broadcast")
-    assert sorted(map(tuple, b.collect())) == w
-    jvm = spark.sparkContext._jvm
-    plan = jvm.PythonSQLUtils.explainString(b._jdf.queryExecution(), "formatted")
-    assert "BroadcastHashJoin" in plan
-
-
 def test_tiled_join_random_parity(spark):
     """Randomized bucket structures: the tiled two-sided join equals
     the plain equi-join pair set for every hot/cold mix (tiny
@@ -522,6 +506,37 @@ def test_drop_observation_counts_capped_corpus_buckets(spark):
         new, cold, max_hamming=16, max_bucket=10, drop_observation=obs2
     ).collect()
     assert obs2.get == {"dropped_buckets": 0, "dropped_rows": 0}
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["lsh_pairs", "lsh_pairs_against", "phash_neardup_against",
+     "crossmodal_neardup_against"],
+)
+def test_unarmed_drop_observation_reads_zeros(spark, op):
+    """With max_bucket=None every pair operator still fills its
+    drop_observation (zeros, at build), so observation.get never
+    blocks on a metric no cap will ever fire."""
+    from pyspark.sql import Observation
+
+    from segment_rtree_spark.operators import dedup as D
+
+    docs = spark.createDataFrame(
+        [(i, f"doc {i % 3} tokens") for i in range(6)], "doc_id long, text string"
+    )
+    imgs = spark.createDataFrame(
+        [(f"i{i}", i * 3, f"cap {i % 2}") for i in range(6)],
+        "image_id string, phash long, caption string",
+    )
+    obs = Observation(f"unarmed_{op}")
+    fn = getattr(D, op)
+    if op == "lsh_pairs":
+        fn(docs, max_bucket=None, drop_observation=obs)
+    elif op == "lsh_pairs_against":
+        fn(docs, docs, max_bucket=None, drop_observation=obs)
+    else:
+        fn(imgs, imgs, max_bucket=None, drop_observation=obs)
+    assert obs.get == {"dropped_buckets": 0, "dropped_rows": 0}
 
 
 def test_phash_band_stats_matches_bruteforce(spark):
@@ -687,39 +702,36 @@ def test_crossmodal_components_bruteforce(spark):
         rows, "image_id string, caption string, phash long"
     )
 
-    for rep_join in ("window", "broadcast"):
-        got = {
-            (r["image_id"], r["component"])
-            for r in crossmodal_components(
-                df, max_hamming=8, rep_join=rep_join
-            ).collect()
-        }
+    got = {
+        (r["image_id"], r["component"])
+        for r in crossmodal_components(df, max_hamming=8).collect()
+    }
 
-        # brute force
-        parent = {}
+    # brute force
+    parent = {}
 
-        def find(x):
-            while parent.setdefault(x, x) != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
 
-        valid = [(i, c, p) for i, c, p in rows if c is not None and p is not None]
-        for a in range(len(valid)):
-            for b in range(a + 1, len(valid)):
-                ia, ca, pa = valid[a]
-                ib, cb, pb = valid[b]
-                if ca == cb and bin(pa ^ pb).count("1") <= 8:
-                    parent[find(ia)] = find(ib)
-        comp = {}
-        for i, _, _ in valid:
-            comp.setdefault(find(i), []).append(i)
-        want = {
-            (i, min(members))
-            for members in comp.values()
-            for i in members
-        }
-        want |= {("iNULL1", "iNULL1"), ("iNULL2", "iNULL2")}
-        assert got == want
-        # the seeded corpus must actually exercise multi-row clusters
-        assert len({c for _, c in want}) < len(want)
+    valid = [(i, c, p) for i, c, p in rows if c is not None and p is not None]
+    for a in range(len(valid)):
+        for b in range(a + 1, len(valid)):
+            ia, ca, pa = valid[a]
+            ib, cb, pb = valid[b]
+            if ca == cb and bin(pa ^ pb).count("1") <= 8:
+                parent[find(ia)] = find(ib)
+    comp = {}
+    for i, _, _ in valid:
+        comp.setdefault(find(i), []).append(i)
+    want = {
+        (i, min(members))
+        for members in comp.values()
+        for i in members
+    }
+    want |= {("iNULL1", "iNULL1"), ("iNULL2", "iNULL2")}
+    assert got == want
+    # the seeded corpus must actually exercise multi-row clusters
+    assert len({c for _, c in want}) < len(want)

@@ -140,7 +140,7 @@ def test_curate_drop_observation_surfaces_capped_buckets(spark):
     (the AQE empty-relation-prune gotcha, see _cap_buckets)."""
     from pyspark.sql import Observation
 
-    from segment_rtree_spark.pipelines import curate_images
+    from segment_rtree_spark.pipelines import curate_images, curate_images_against
     from segment_rtree_spark.plans.entry_queries import entry_layer
     from segment_rtree_spark.synth import HOT_CELL_LAT, HOT_CELL_LNG
 
@@ -167,10 +167,16 @@ def test_curate_drop_observation_surfaces_capped_buckets(spark):
     assert len(got) == n and all(r["cluster_size"] == 1 for r in got)
 
     # unarmed default: zeros fill at BUILD, before any action on the
-    # curated frame, so observation.get cannot block
+    # curated frame, so observation.get cannot block — for the
+    # incremental form's corpus band join too
     obs2 = Observation("no_cap")
     curate_images(imgs, layer, max_hamming=1, n_bands=2, drop_observation=obs2)
     assert obs2.get == {"dropped_buckets": 0, "dropped_rows": 0}
+    obs3 = Observation("no_cap_against")
+    curate_images_against(
+        imgs, imgs, layer, max_hamming=1, n_bands=2, drop_observation=obs3
+    )
+    assert obs3.get == {"dropped_buckets": 0, "dropped_rows": 0}
 
 
 def test_curate_checkpointed_threads_drop_observation(spark, tmp_path):

@@ -2,6 +2,7 @@
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from segment_rtree_spark.streaming.tile_stream import (
@@ -467,37 +468,60 @@ def test_streaming_default_cap_drops_degenerate_corpus_bucket(spark, tmp_path):
     assert len(hot_pairs) == 1100  # the fan-out the default now prevents
 
 
-def test_streaming_cap_warns_at_query_build(spark, caplog):
+@pytest.mark.parametrize("modality", ["phash", "text"])
+def test_streaming_cap_warns_at_query_build(spark, caplog, modality):
     """Arming the guard silently is not enough: building a streaming
     match query over a corpus whose buckets exceed the cap logs a
-    warning pricing exactly what will be dropped (eager one-job check
-    on the static corpus; warn_drops=False opts out)."""
+    warning pricing exactly what will be dropped (the operator's own
+    drop observation, filled at build over the static corpus;
+    warn_drops=False opts out). 1100 identical corpus rows fill every
+    band bucket past the 1024 auto cap: 4 phash bands, 2 minhash
+    bands."""
     import logging
 
-    from segment_rtree_spark.streaming.ingest_stream import streaming_neardup_matches
+    from segment_rtree_spark.streaming.ingest_stream import (
+        streaming_neardup_matches,
+        streaming_text_matches,
+    )
 
-    hot = spark.range(1100).select(
-        F.concat(F.lit("hot"), F.col("id")).alias("image_id"),
-        F.lit(0x123456789ABCDEF0).alias("phash"),
-    )
-    corpus = hot.cache()
     # a dummy "stream": rate source, mapped to the expected columns
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-        .select(F.col("value").cast("string").alias("image_id"),
-                F.col("value").alias("phash"))
-    )
+    rate = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+    if modality == "phash":
+        hot = spark.range(1100).select(
+            F.concat(F.lit("hot"), F.col("id")).alias("image_id"),
+            F.lit(0x123456789ABCDEF0).alias("phash"),
+        )
+        corpus = hot.cache()
+        stream = rate.select(F.col("value").cast("string").alias("image_id"),
+                             F.col("value").alias("phash"))
+
+        def build(**kw):
+            return streaming_neardup_matches(stream, corpus, max_hamming=16, **kw)
+
+        buckets, rows = "4 band bucket(s)", "4400 corpus rows"
+    else:
+        corpus = spark.range(1100).select(
+            F.col("id").alias("doc_id"),
+            F.lit("the same short document every single time").alias("text"),
+        ).cache()
+        stream = rate.select(F.col("value").alias("doc_id"),
+                             F.col("value").cast("string").alias("text"))
+
+        def build(**kw):
+            return streaming_text_matches(stream, corpus, **kw)
+
+        buckets, rows = "2 band bucket(s)", "2200 corpus rows"
     with caplog.at_level(logging.WARNING,
                          logger="segment_rtree_spark.streaming.ingest_stream"):
-        streaming_neardup_matches(stream, corpus, max_hamming=16)
+        build()
     warned = [r for r in caplog.records if "skew cap" in r.getMessage()]
-    assert warned and "4 band bucket(s)" in warned[0].getMessage()
-    assert "4400 corpus rows" in warned[0].getMessage()
+    assert warned and buckets in warned[0].getMessage()
+    assert rows in warned[0].getMessage()
 
     caplog.clear()
     with caplog.at_level(logging.WARNING,
                          logger="segment_rtree_spark.streaming.ingest_stream"):
-        streaming_neardup_matches(stream, corpus, max_hamming=16, warn_drops=False)
+        build(warn_drops=False)
     assert not [r for r in caplog.records if "skew cap" in r.getMessage()]
 
 
