@@ -234,6 +234,17 @@ class RingArena:
     def _node_idx(self, ring, lvl, off):
         return self.tree_off[ring] + self.li_flat[self.li_off[ring] + lvl] + off
 
+    def _children(self, ring, lvl, off):
+        """Child nodes of (ring, lvl, off) nodes that fit their level's
+        capacity: (parent index, ring, lvl - 1, child offset) arrays."""
+        d = self.degree
+        src = np.repeat(np.arange(len(ring), dtype=np.int64), d)
+        co = (off[:, None] * d + np.arange(d, dtype=np.int64)).ravel()
+        cr, clv = ring[src], lvl[src] - 1
+        base = self.li_off[cr] + clv
+        valid = co < self.li_flat[base + 1] - self.li_flat[base]
+        return src[valid], cr[valid], clv[valid], co[valid]
+
     def query_pairs(self, px, py, pair_pt, pair_ring) -> np.ndarray:
         """3-valued PIP for candidate pairs, all at once.
 
@@ -310,16 +321,9 @@ class RingArena:
                     break
 
             # expand children passing check_point_rect
-            cl = lvl - 1
-            cp = np.repeat(pid, d)
-            cr = np.repeat(ring, d)
-            clv = np.repeat(cl, d)
-            co = (off[:, None] * d + np.arange(d, dtype=np.int64)).ravel()
-            li0 = self.li_flat[self.li_off[cr] + clv]
-            li1 = self.li_flat[self.li_off[cr] + clv + 1]
-            valid = co < (li1 - li0)
-            cp, cr, clv, co = cp[valid], cr[valid], clv[valid], co[valid]
-            cidx = self.tree_off[cr] + self.li_flat[self.li_off[cr] + clv] + co
+            src, cr, clv, co = self._children(ring, lvl, off)
+            cp = pid[src]
+            cidx = self._node_idx(cr, clv, co)
             cx = px[pair_pt[cp]]
             cy = py[pair_pt[cp]]
             keep = (
@@ -332,3 +336,36 @@ class RingArena:
         out[(wn != 0) & ~boundary] = INTERIOR
         out[boundary] = BOUNDARY
         return out
+
+    def query_rect_pairs(self, qxmin, qymin, qxmax, qymax, pair_q, pair_ring):
+        """Closed-rect segment query for candidate (rect, ring) pairs,
+        all at once — the rect twin of query_pairs.
+
+        One level-synchronous descent keeps every node whose envelope
+        meets its pair's rect (touching counts, as in
+        PackedSegTree.query_rect). Returns (rect, ring, leaf) int64
+        arrays: segment coords[leaf] -> coords[leaf + 1] of `ring` has an
+        envelope meeting rect `rect`.
+        """
+        q = np.asarray(pair_q, np.int64)
+        ring = np.asarray(pair_ring, np.int64)
+        lvl = self.height[ring]
+        off = np.zeros(len(q), np.int64)
+        out_q, out_r, out_o = [q[:0]], [ring[:0]], [off[:0]]
+
+        while len(q) > 0:
+            idx = self._node_idx(ring, lvl, off)
+            # NaN padding slots fail every comparison
+            keep = (
+                (self.txmin[idx] <= qxmax[q]) & (self.txmax[idx] >= qxmin[q])
+                & (self.tymin[idx] <= qymax[q]) & (self.tymax[idx] >= qymin[q])
+            )
+            leaf = keep & (lvl == 0)
+            out_q.append(q[leaf])
+            out_r.append(ring[leaf])
+            out_o.append(off[leaf])
+            keep &= ~leaf
+            src, ring, lvl, off = self._children(ring[keep], lvl[keep], off[keep])
+            q = q[keep][src]
+
+        return np.concatenate(out_q), np.concatenate(out_r), np.concatenate(out_o)

@@ -18,11 +18,17 @@ from __future__ import annotations
 import numpy as np
 
 from .kernels.hilbert import HilbertScaler
-from .kernels.pip import PreparedPolygon, PreparedRing, points_in_polygon
+from .kernels.pip import PreparedPolygon
 from .kernels.segtree import PackedSegTree
-from .tiles import polyfill
 
 __all__ = ["PolygonLayer"]
+
+
+def _ragged_arange(cnt):
+    """0..cnt[i]-1 for each i, concatenated: the within-group index of a
+    np.repeat(..., cnt) expansion."""
+    starts = np.cumsum(cnt) - cnt
+    return np.arange(int(cnt.sum()), dtype=np.int64) - np.repeat(starts, cnt)
 
 
 class PolygonLayer:
@@ -113,9 +119,22 @@ class PolygonLayer:
 
         Returns (point_idx, polygon_id, relation int8) arrays for pairs
         with relation != exterior (unless emit_exterior). Candidate
-        pruning via the envelope index, then ONE arena descent for all
-        shell pairs and one for all hole pairs — kernel cost scales
-        with pair count, not polygon count.
+        pruning via the envelope index, then the pair relation
+        (`_relations`) — kernel cost scales with pair count, not
+        polygon count.
+        """
+        px = np.asarray(px, dtype=np.float64)
+        py = np.asarray(py, dtype=np.float64)
+        q, pos = self.candidates(px, py)
+        if len(q) == 0:
+            return (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.int8))
+        rel = self._relations(px, py, q, pos)
+        keep = slice(None) if emit_exterior else rel != 0
+        return q[keep], self.ids[pos[keep]], rel[keep]
+
+    def _relations(self, px, py, q, pos):
+        """int8 relation of each (point q, layer position pos) pair: ONE
+        arena descent for all shell pairs and one for all hole pairs.
 
         Hole combination is order-free (any hole Interior -> Exterior,
         else any hole Boundary -> Boundary), equivalent to the
@@ -124,12 +143,6 @@ class PolygonLayer:
         touch point, where both say Boundary).
         """
         from .kernels.pip import BOUNDARY, EXTERIOR, INTERIOR
-
-        px = np.asarray(px, dtype=np.float64)
-        py = np.asarray(py, dtype=np.float64)
-        q, pos = self.candidates(px, py)
-        if len(q) == 0:
-            return (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.int8))
 
         rel = self.arena.query_pairs(px, py, q, self.shell_ring[pos])
 
@@ -140,30 +153,107 @@ class PolygonLayer:
             cnt = n_holes[sel]
             rep = np.repeat(sel, cnt)
             # ragged gather of each polygon's hole-ring indices
-            starts = self.hole_off[pos[sel]]
-            within = np.arange(int(cnt.sum()), dtype=np.int64) - np.repeat(
-                np.concatenate([[0], np.cumsum(cnt)[:-1]]), cnt
-            )
-            hrings = self.hole_ring_idx[np.repeat(starts, cnt) + within]
+            hrings = self.hole_ring_idx[np.repeat(self.hole_off[pos[sel]], cnt) + _ragged_arange(cnt)]
             hrel = self.arena.query_pairs(px, py, q[rep], hrings)
             hmax = np.zeros(len(q), np.int8)
             np.maximum.at(hmax, rep, hrel)
             rel = np.where(hmax == INTERIOR, EXTERIOR, np.where(hmax == BOUNDARY, BOUNDARY, rel)).astype(np.int8)
-
-        keep = slice(None) if emit_exterior else rel != 0
-        return q[keep], self.ids[pos[keep]], rel[keep]
+        return rel
 
     def cover_cells(self, res: int):
         """(polygon_id, cell) cover rows at resolution res — the equi-join
-        side of the partitioned PIP path."""
-        pids, cells = [], []
-        for pid, poly in zip(self.ids, self.polygons):
-            cs = polyfill(poly, res)
-            pids.append(np.full(len(cs), pid, np.int64))
-            cells.append(cs)
-        if not pids:
-            return np.empty(0, np.int64), np.empty(0, np.int64)
-        return np.concatenate(pids), np.concatenate(cells)
+        side of the partitioned PIP path. Every polygon's cells come
+        from the one layer-wide BFS (`_cover`), sorted by layer
+        position, then cell."""
+        pos, cells = self._cover(res)
+        return self.ids[pos], cells
+
+    def _cover(self, res: int, mode: str = "intersect"):
+        """(layer position, cell) pairs of the polyfill cover at res.
+
+        ONE level-synchronous BFS from the res-0 world cell over every
+        (polygon, cell) frontier pair of the layer at once, the quadtree
+        analog of the reference's tree descent (contained node -> emit
+        whole subtree, cf. the clip descent in reference
+        src/algorithms/clip.rs:81-107). Per level:
+
+          * cell envelope disjoint from the polygon envelope -> prune;
+          * a ring segment of the polygon clips the cell (closed-rect
+            arena descent + Liang-Barsky refine) -> "crossed";
+          * the polygon boundary does not cross the cell and the cell
+            center is not exterior -> the whole cell (and all its
+            descendants) is inside: emit its descendants at target res
+            without further tests;
+          * at target res: keep if crossed or center not exterior
+            (mode='intersect'), or only the uncrossed ones
+            (mode='contained');
+          * else crossed cells split into 4 children.
+
+        Returns int64 (position, cell) arrays sorted by position, then
+        cell; a pair occurs once (each cell has one ancestor chain).
+        """
+        from .kernels.geom import clip_segments, rect_intersects
+        from .kernels.pip import EXTERIOR
+        from .tiles import cell_bounds, cell_children
+
+        a = self.arena
+        pos = np.arange(len(self), dtype=np.int64)
+        cell = np.zeros(len(self), np.int64)  # the res-0 world cell
+        out_pos, out_cell = [pos[:0]], [cell[:0]]
+
+        for r in range(res + 1):
+            lngmin, latmin, lngmax, latmax = cell_bounds(cell)
+            # envelope prune (lng ~ x, lat ~ y)
+            alive = rect_intersects(
+                lngmin, latmin, lngmax, latmax,
+                self.xmin[pos], self.ymin[pos], self.xmax[pos], self.ymax[pos],
+            )
+            pos, cell = pos[alive], cell[alive]
+            if len(pos) == 0:
+                break
+            lngmin, latmin, lngmax, latmax = (v[alive] for v in (lngmin, latmin, lngmax, latmax))
+
+            # boundary-crossing pairs: every ring of the pair's polygon
+            # (shell, then its holes: consecutive arena rings)
+            pair = np.arange(len(pos), dtype=np.int64)
+            n_rings = 1 + self.hole_off[pos + 1] - self.hole_off[pos]
+            ring = np.repeat(self.shell_ring[pos], n_rings) + _ragged_arange(n_rings)
+            k, ring, leaf = a.query_rect_pairs(
+                lngmin, latmin, lngmax, latmax, np.repeat(pair, n_rings), ring
+            )
+            c = a.coord_off[ring] + leaf
+            hit, *_ = clip_segments(
+                lngmin[k], latmin[k], lngmax[k], latmax[k],
+                a.cxs[c], a.cys[c], a.cxs[c + 1], a.cys[c + 1],
+            )
+            crossed = np.zeros(len(pos), bool)
+            crossed[k[hit]] = True
+
+            cx = (lngmin + lngmax) / 2.0
+            cy = (latmin + latmax) / 2.0
+            center_in = self._relations(cx, cy, pair, pos) != EXTERIOR
+            interior = ~crossed & center_in
+
+            if r == res:
+                keep = interior if mode == "contained" else crossed | center_in
+                out_pos.append(pos[keep])
+                out_cell.append(cell[keep])
+                break
+
+            # fully-interior cells expand without further testing
+            if interior.any():
+                sub = cell[interior]
+                for _ in range(res - r):
+                    sub = cell_children(sub).ravel()
+                out_pos.append(np.repeat(pos[interior], 4 ** (res - r)))
+                out_cell.append(sub)
+
+            pos = np.repeat(pos[crossed], 4)
+            cell = cell_children(cell[crossed]).ravel()
+
+        pos, cell = np.concatenate(out_pos), np.concatenate(out_cell)
+        order = np.lexsort((cell, pos))
+        return pos[order], cell[order]
 
     def by_id(self, pid: int) -> PreparedPolygon:
         # lazy id->position map: per-pair lookups (overlap join, cover

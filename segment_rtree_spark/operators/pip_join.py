@@ -201,15 +201,23 @@ def pip_join_partitioned(
         touch BEFORE the wide shuffle (the partition-pruning analog).
         Auto-on while the cell list is broadcastable (<= ~2M cells);
         a larger layer should pre-partition/bucket instead.
-      * salting: hot cells come from a 2% sample (a full pre-agg at
-        10^12 rows would cost as much as the join; a missed hot cell
-        only affects balance, never correctness). The hot set joins
-        back as a BROADCAST frame — never as a literal plan array, so
-        thousands of hot cells cannot bloat the plan.
-      * the cogroup shuffle is pinned to an explicit partition count:
-        AQE's byte-oriented coalescing would squeeze this tiny-byte /
+      * salting: hot cells come from a 1-in-50 row-hash probe (a full
+        pre-agg at 10^12 rows would cost as much as the join; a missed
+        hot cell only affects balance, never correctness). The probe
+        hashes the salted column, so the hot set is the same at any
+        partitioning or core count. Many hot cells join back as a
+        BROADCAST frame — never as a literal plan array, so thousands
+        of hot cells cannot bloat the plan.
+      * the cogroup shuffle is pinned to an explicit partition count,
+        by default defaultParallelism: one wave of tasks. AQE's
+        byte-oriented coalescing would squeeze this tiny-byte /
         heavy-CPU Python stage onto a handful of workers (measured 8
-        of 32 cores busy) and let one hot cell pin a whole task.
+        of 32 cores busy) and let one hot cell pin a whole task. More
+        partitions than slots only add waves of the fixed per-task
+        cost of an Arrow cogroup, which outweighs the refine itself.
+      * the cover is one vectorized BFS over the whole layer
+        (PolygonLayer.cover_cells), cheap enough to rebuild per call
+        and per candidate `res`.
     """
     keep = list(keep) if keep is not None else [c for c in points.columns]
     schema = _result_schema(points, keep)
@@ -247,6 +255,25 @@ def pip_join_partitioned(
     )
 
 
+_HOT_MOD = 50  # the hot-cell probe reads 1 row in 50
+
+
+def _hot_cells(pts: DataFrame, col: str, salt_threshold: int):
+    """Cells whose estimated point count exceeds salt_threshold, as a
+    one-column pandas frame. The estimate counts a row-hash subset
+    (pmod(xxhash64(col, 'hot'), 50) = 0): the same rows at any
+    partitioning or core count, unlike a seeded .sample()."""
+    probe = F.pmod(F.xxhash64(F.col(col), F.lit("hot")), F.lit(_HOT_MOD)) == 0
+    return (
+        pts.filter(probe)
+        .groupBy("cell")
+        .count()
+        .filter(F.col("count") > salt_threshold / _HOT_MOD)
+        .select("cell")
+        .toPandas()
+    )
+
+
 def _pip_cogroup(
     points: DataFrame,
     cover: DataFrame,
@@ -274,19 +301,10 @@ def _pip_cogroup(
 
     group_keys = ["cell"]
     if salt_threshold is not None:
-        frac = 0.02
-        hot = (
-            pts.sample(frac, seed=7)
-            .groupBy("cell")
-            .count()
-            .filter(F.col("count") > salt_threshold * frac)
-            .select("cell")
-        )
-        hot_pdf = hot.toPandas()
+        salt_col = (keep[:1] or [x])[0]
+        hot_pdf = _hot_cells(pts, salt_col, salt_threshold)
         if len(hot_pdf):
-            salt_expr = F.pmod(
-                F.xxhash64(*[F.col(c) for c in keep[:1] or [x]]), F.lit(n_salt)
-            )
+            salt_expr = F.pmod(F.xxhash64(F.col(salt_col)), F.lit(n_salt))
             salt_seq = F.sequence(F.lit(0), F.lit(n_salt - 1))
             if len(hot_pdf) <= 64:
                 # a handful of hot cells: a literal isin beats two
@@ -327,7 +345,7 @@ def _pip_cogroup(
                 )
             group_keys = ["cell", "salt"]
 
-    num_partitions = num_partitions or max(32, spark.sparkContext.defaultParallelism)
+    num_partitions = num_partitions or spark.sparkContext.defaultParallelism
     pts = pts.repartition(num_partitions, *group_keys)
     cover = cover.repartition(num_partitions, *group_keys)
 
@@ -415,7 +433,7 @@ def cover_from_rings(rings: DataFrame, res: int) -> DataFrame:
     (polygon_id, cell, pack) cover rows, BFS-refined per polygon inside
     applyInPandas. No PolygonLayer ever exists on the driver, so the
     partitioned PIP path works for layers of any cardinality — the
-    10^6-polygon case the driver-side cover_cells loop can't serve."""
+    10^6-polygon case a driver-side PolygonLayer can't serve."""
     from ..tiles import polyfill as _polyfill
 
     def gen(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -157,80 +157,18 @@ def cell_prefix(cell, prefix_bits: int = 12):
 def polyfill(polygon, res: int, mode: str = "intersect") -> np.ndarray:
     """Cells at `res` that intersect (or are contained in) a polygon.
 
-    BFS refinement from res 0, the quadtree analog of the reference's
-    tree descent (contained node -> emit whole subtree, cf. the clip
-    descent in reference src/algorithms/clip.rs:81-107):
-
-      * cell envelope disjoint from polygon envelope -> prune;
-      * polygon boundary does not cross the cell and the cell center is
-        interior -> the whole cell (and all its descendants) intersects:
-        emit its descendants at target res without further tests;
-      * at target res: keep if boundary crosses it or center inside;
-      * else split into 4 children.
-
     `polygon` is a kernels.pip.PreparedPolygon. mode='intersect' emits
     every cell touching the polygon; mode='contained' only cells fully
-    inside. Returns sorted unique int64 cell ids.
+    inside. Runs the one layer-wide cover BFS (PolygonLayer._cover:
+    envelope prune, boundary-crossed cells split, cells with an interior
+    center and no crossing emit their whole subtree) on a one-polygon
+    layer, so every cover in the engine comes from the same code.
+    Returns sorted unique int64 cell ids.
     """
-    from .kernels.pip import points_in_polygon, EXTERIOR
-    from .kernels.geom import rect_intersects
+    from .layer import PolygonLayer
 
-    rings = [polygon.shell] + list(polygon.holes)
-    exmin, eymin, exmax, eymax = polygon.envelope()
-
-    frontier = np.array([0], dtype=np.int64)  # the res-0 world cell
-    out = []
-
-    for r in range(0, res + 1):
-        if len(frontier) == 0:
-            break
-        lngmin, latmin, lngmax, latmax = cell_bounds(frontier)
-        # envelope prune (lng ~ x, lat ~ y)
-        alive = rect_intersects(lngmin, latmin, lngmax, latmax, exmin, eymin, exmax, eymax)
-        frontier = frontier[alive]
-        if len(frontier) == 0:
-            break
-        lngmin, latmin, lngmax, latmax = (a[alive] for a in (lngmin, latmin, lngmax, latmax))
-
-        # does any ring segment's envelope overlap each cell, with a true
-        # Liang-Barsky refine? -> boundary-crossing cells
-        crossed = np.zeros(len(frontier), dtype=bool)
-        for ring in rings:
-            q, s = ring.tree.query_rect(lngmin, latmin, lngmax, latmax)
-            if len(q) == 0:
-                continue
-            from .kernels.geom import clip_segments
-
-            hit, *_ = clip_segments(
-                lngmin[q], latmin[q], lngmax[q], latmax[q],
-                ring.xs[s], ring.ys[s], ring.xs[s + 1], ring.ys[s + 1],
-            )
-            np.logical_or.at(crossed, q[hit], True)
-
-        cx = (lngmin + lngmax) / 2.0
-        cy = (latmin + latmax) / 2.0
-        center_in = points_in_polygon(cy * 0 + cx, cy, polygon) != EXTERIOR
-
-        interior = ~crossed & center_in  # fully inside -> all descendants count
-        touching = crossed | center_in
-
-        if r == res:
-            keep = interior if mode == "contained" else touching
-            out.append(frontier[keep])
-            break
-
-        # fully-interior cells expand without further testing
-        if interior.any():
-            sub = frontier[interior]
-            for _ in range(res - r):
-                sub = cell_children(sub).ravel()
-            out.append(sub)
-
-        frontier = cell_children(frontier[crossed]).ravel()
-
-    if not out:
-        return np.empty(0, dtype=np.int64)
-    return np.unique(np.concatenate(out))
+    layer = PolygonLayer([0], [polygon], hilbert_sort=False, degree=polygon.shell.tree.degree)
+    return layer._cover(res, mode)[1]
 
 
 # ----------------------------------------------------------------------

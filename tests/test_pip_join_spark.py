@@ -77,6 +77,24 @@ def test_partitioned_salted_matches(spark, layer, points):
     assert base == salted
 
 
+def test_hot_cells_independent_of_partitioning(spark, points):
+    """The salting probe picks rows by hash of the salted column, so the
+    hot-cell isin set is the same for the input in 1 or 7 partitions (a
+    seeded .sample() picks different rows per partitioning)."""
+    from pyspark.sql import functions as F
+
+    from segment_rtree_spark.operators.pip_join import _hot_cells
+    from segment_rtree_spark.tiles import cell_of_sql
+
+    def hot(n):
+        pts = points.repartition(n).withColumn("cell", F.expr(cell_of_sql("lat", "lng", 5)))
+        return set(_hot_cells(pts, "image_id", 50)["cell"].tolist())
+
+    one = hot(1)
+    assert len(one) > 1
+    assert one == hot(7)
+
+
 def test_partitioned_rings_matches_broadcast_corpus(spark, points):
     """Verdict item: partitioned PIP from a RINGS DataFrame (polyfill
     cover built executor-side, no PolygonLayer on the driver) equals

@@ -6,6 +6,8 @@ reaching the parquet scan, single-pass banding. A regression here is a
 silent 10-100x at scale even when every row still comes out right.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -132,6 +134,25 @@ def test_partitioned_pip_pins_partitions(spark):
     p = plan_str(df)
     assert "REPARTITION_BY_NUM" in p or "hashpartitioning(cell" in p
     assert "FlatMapCoGroupsInPandas" in p or "FlatMapCoGroupsIn" in p
+    assert set(re.findall(r"hashpartitioning\(cell#\d+L, (\d+)\)", p)) == {"48"}
+
+
+def test_partitioned_pip_default_one_wave(spark):
+    """With num_partitions unset, both cogroup sides are pinned to
+    hashpartitioning(cell, defaultParallelism): one wave of tasks, no
+    extra waves of fixed per-task Arrow cogroup cost."""
+    from segment_rtree_spark.operators.pip_join import pip_join_partitioned
+    from segment_rtree_spark.plans.entry_queries import entry_layer
+
+    pts = spark.range(1000).select(
+        F.col("id").alias("point_id"),
+        (F.col("id") % 360 - 180.0).cast("double").alias("lng"),
+        (F.col("id") % 180 - 90.0).cast("double").alias("lat"),
+    )
+    p = plan_str(pip_join_partitioned(pts, entry_layer(), keep=["point_id"], res=5))
+    n = re.findall(r"hashpartitioning\(cell#\d+L, (\d+)\)", p)
+    assert len(n) >= 2  # point side and cover side
+    assert set(n) == {str(spark.sparkContext.defaultParallelism)}
 
 
 def test_validate_images_prefilter_pushed(spark):

@@ -186,3 +186,90 @@ def test_segtree_query_rect_matches_brute(seed, n):
         hit = (ex0 <= qx1[k]) & (ex1 >= qx0[k]) & (ey0 <= qy1[k]) & (ey1 >= qy0[k])
         want |= {(k, int(i)) for i in np.nonzero(hit)[0]}
     assert got == want
+
+
+def star_polygon_rows(rng, pid: int):
+    """Ring rows of one star polygon with 0-2 star holes, snapped to a
+    1/32-degree grid (so vertices can sit exactly on cell edges). Shell
+    vertices keep radius >= 0.8R at near-even angles, so the shell
+    stays outside 0.65R; holes sit 0.3R off-center with radius <= 0.25R,
+    on opposite sides: valid by construction."""
+
+    def star(cx, cy, rmin, rmax, n):
+        ang = 2 * np.pi * (np.arange(n) + rng.uniform(-0.3, 0.3, n)) / n
+        r = rng.uniform(rmin, rmax, n)
+        xs = np.round((cx + r * np.cos(ang)) * 32) / 32
+        ys = np.round((cy + r * np.sin(ang)) * 32) / 32
+        return np.append(xs, xs[0]), np.append(ys, ys[0])
+
+    R = rng.uniform(2.0, 30.0)
+    cx, cy = rng.uniform(-150, 150), rng.uniform(-55, 55)
+    rows = [(pid, 0, *star(cx, cy, 0.8 * R, R, int(rng.integers(8, 40))))]
+    phi = rng.uniform(0, 2 * np.pi)
+    for part in range(1, int(rng.integers(0, 3)) + 1):
+        a = phi + np.pi * (part - 1)
+        hx, hy = cx + 0.3 * R * np.cos(a), cy + 0.3 * R * np.sin(a)
+        rows.append((pid, part, *star(hx, hy, 0.1 * R, 0.25 * R, int(rng.integers(8, 20)))))
+    return rows
+
+
+def brute_cover(rows, res: int, mode: str):
+    """(polygon_id, cell) pairs by enumerating all 4^res cells: a cell
+    is crossed if any ring segment clips it; kept when crossed or its
+    center is not exterior (intersect), or when not crossed and its
+    center is inside (contained). Holes: any hole Interior -> Exterior,
+    else any hole Boundary -> Boundary."""
+    from segment_rtree_spark.kernels.geom import clip_segments
+    from segment_rtree_spark.tiles import cell_bounds, cell_of
+
+    n = 1 << res
+    iy, ix = np.divmod(np.arange(n * n), n)
+    cells = cell_of((iy + 0.5) / n * 180.0 - 90.0, (ix + 0.5) / n * 360.0 - 180.0, res)
+    x0, y0, x1, y1 = cell_bounds(cells)
+    cx, cy = (x0 + x1) / 2.0, (y0 + y1) / 2.0
+    polys: dict = {}
+    for pid, part, xs, ys in rows:
+        polys.setdefault(pid, []).append((part, xs, ys))
+    out = set()
+    for pid, parts in polys.items():
+        crossed = np.zeros(len(cells), bool)
+        rels = []
+        for _, xs, ys in sorted(parts, key=lambda t: t[0]):
+            for i in range(len(xs) - 1):
+                crossed |= clip_segments(x0, y0, x1, y1, xs[i], ys[i], xs[i + 1], ys[i + 1])[0]
+            rels.append(brute_relation(cx, cy, xs, ys))
+        rel = rels[0].copy()
+        if len(rels) > 1:
+            hmax = np.max(rels[1:], axis=0)
+            inside = rel == INTERIOR
+            rel[inside & (hmax == BOUNDARY)] = BOUNDARY
+            rel[inside & (hmax == INTERIOR)] = EXTERIOR
+        center_in = rel != EXTERIOR
+        keep = (~crossed & center_in) if mode == "contained" else (crossed | center_in)
+        out |= {(pid, int(c)) for c in cells[keep]}
+    return out
+
+
+@settings(max_examples=30, deadline=None)
+@given(seed=st.integers(0, 10_000), res=st.integers(3, 7), degree=st.sampled_from([2, 4, 16]))
+def test_layer_cover_matches_brute_force(seed, res, degree):
+    """The one layer-wide cover BFS (cover_cells, polyfill) equals the
+    brute-force definition of the cover, in both modes, on seeded
+    multi-polygon layers of star polygons with holes."""
+    from segment_rtree_spark.layer import PolygonLayer
+    from segment_rtree_spark.tiles import polyfill
+
+    rng = np.random.default_rng(seed)
+    rows = [r for pid in range(int(rng.integers(1, 5))) for r in star_polygon_rows(rng, pid)]
+    layer = PolygonLayer.from_ring_rows(rows, degree=degree)
+
+    pids, cells = layer.cover_cells(res)
+    assert set(zip(pids.tolist(), cells.tolist())) == brute_cover(rows, res, "intersect")
+    assert len(set(zip(pids.tolist(), cells.tolist()))) == len(cells)
+
+    contained = {
+        (int(pid), int(c))
+        for pid, poly in zip(layer.ids, layer.polygons)
+        for c in polyfill(poly, res, "contained")
+    }
+    assert contained == brute_cover(rows, res, "contained")
