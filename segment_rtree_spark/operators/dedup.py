@@ -400,11 +400,7 @@ def lsh_bucket_stats(docs: DataFrame, id_col: str = "doc_id", text: str = "text"
     """Per-bucket size monitor for the LSH join: (band, bkey, bucket_n,
     truncated). The visible counter for skew audits — run it alongside
     a capped lsh_pairs to see exactly which mega-buckets were dropped."""
-    stats = _lsh_exploded(docs, id_col, text, rows_per_band).groupBy("band", "bkey").agg(
-        F.count(F.lit(1)).alias("bucket_n")
-    )
-    cap = F.lit(max_bucket) if max_bucket is not None else F.lit(None).cast("int")
-    return stats.withColumn("truncated", cap.isNotNull() & (F.col("bucket_n") > cap))
+    return _bucket_stats(_lsh_exploded(docs, id_col, text, rows_per_band), max_bucket)
 
 
 def _band_width(n_bands: int) -> int:
@@ -484,22 +480,38 @@ def phash_band_stats(images: DataFrame, id_col: str = "image_id",
     mega-buckets a max_bucket cap drops. `partition_col` folds into
     the keys exactly as the join operators do (same _banded_explode),
     so the stats count the buckets the capped join will actually see."""
-    stats = (
+    return _bucket_stats(
         _banded_explode(images, id_col, phash, n_bands,
-                        partition_col=partition_col)
-        .groupBy("band", "bkey")
-        .agg(F.count(F.lit(1)).alias("bucket_n"))
+                        partition_col=partition_col),
+        max_bucket,
     )
+
+
+def _bucket_sizes(exploded: DataFrame, keys: tuple[str, ...]) -> DataFrame:
+    """(keys..., bucket_n): the one sizing pass behind both the cap
+    and its monitors, so a guard and its stats cannot disagree."""
+    return exploded.groupBy(*keys).agg(F.count(F.lit(1)).alias("bucket_n"))
+
+
+def _bucket_stats(exploded: DataFrame, max_bucket: int | None,
+                  keys: tuple[str, ...] = ("band", "bkey")) -> DataFrame:
+    """Per-bucket size monitor (keys..., bucket_n, truncated) behind
+    lsh_bucket_stats, phash_band_stats and embed.ann_bucket_stats:
+    `truncated` flags exactly the buckets _cap_buckets drops."""
     cap = F.lit(max_bucket) if max_bucket is not None else F.lit(None).cast("int")
-    return stats.withColumn("truncated", cap.isNotNull() & (F.col("bucket_n") > cap))
+    return _bucket_sizes(exploded, keys).withColumn(
+        "truncated", cap.isNotNull() & (F.col("bucket_n") > cap)
+    )
 
 
 def _cap_buckets(exploded: DataFrame, max_bucket: int | None,
-                 observation=None) -> DataFrame:
-    """The shared skew guard for every band-bucket join: drop whole
-    buckets larger than the cap BEFORE any join over them (their
+                 observation=None,
+                 keys: tuple[str, ...] = ("band", "bkey")) -> DataFrame:
+    """The shared skew guard for every bucket join (the band joins key
+    on (band, bkey), the embedding joins on the LSH `bucket`): drop
+    whole buckets larger than the cap BEFORE any join over them (their
     members are exact/near-exact dups better handled by exact_dups;
-    the dropped buckets stay visible via lsh_bucket_stats).
+    the dropped buckets stay visible via the _bucket_stats monitors).
 
     Physical shape: broadcast ANTI-join against the OVER-cap keys —
     over-cap buckets number at most rows/max_bucket (tiny by
@@ -522,11 +534,7 @@ def _cap_buckets(exploded: DataFrame, max_bucket: int | None,
         if observation is not None:
             _observe_zero_drops(observation, exploded.sparkSession)
         return exploded
-    over = (
-        exploded.groupBy("band", "bkey")
-        .agg(F.count(F.lit(1)).alias("bucket_n"))
-        .filter(F.col("bucket_n") > max_bucket)
-    )
+    over = _bucket_sizes(exploded, keys).filter(F.col("bucket_n") > max_bucket)
     if observation is not None:
         # bounded collect: over-cap buckets number at most
         # rows/max_bucket by definition
@@ -535,8 +543,8 @@ def _cap_buckets(exploded: DataFrame, max_bucket: int | None,
             F.count(F.lit(1)).alias("dropped_buckets"),
             F.coalesce(F.sum("bucket_n"), F.lit(0)).alias("dropped_rows"),
         ).collect()
-    over = over.select("band", "bkey")
-    return exploded.join(F.broadcast(over), ["band", "bkey"], "left_anti")
+    over = over.select(*keys)
+    return exploded.join(F.broadcast(over), list(keys), "left_anti")
 
 
 def _observe_zero_drops(observation, spark) -> None:

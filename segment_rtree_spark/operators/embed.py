@@ -1,17 +1,28 @@
-"""Embedding similarity search: brute-force cosine top-k + LSH ANN.
+"""Embedding similarity search: brute-force cosine top-k, LSH and IVF ANN.
 
 * cosine_topk — the exactness baseline: broadcast the (small) query
   set, fold the dot product with F.aggregate/zip_with (sequential
   fold -> bit-exact vs the DuckDB list_reduce oracle), window top-k.
   At scale the target side stays partitioned; only queries broadcast.
 
-* lsh_buckets — the scale path: sign-random-projection buckets from
-  deterministic splitmix64-mixed hyperplanes, computed in a NumPy
-  kernel whose accumulation order matches the SQL fold (sequential
-  over dims) so the oracle reproduces buckets exactly. ANN search =
-  equi join on bucket, refine with exact cosine — refine='expr' is
-  the bit-exact cross-engine reference, refine='kernel' the
-  production per-bucket BLAS path.
+* The ANN family is one bucketing step plus one refine per mode.
+  - Bucketing: lsh_buckets (sign-random-projection buckets from
+    deterministic splitmix64-mixed hyperplanes; bit_exact matches
+    the SQL fold so the oracles reproduce buckets exactly), or an
+    IVF list (kmeans_fit codebook; ivf_topk_fixed's closed-form
+    centroids for the oracle). `max_bucket` drops over-cap buckets
+    whole through dedup._cap_buckets, the skew guard the band joins
+    share; 'auto' = 32 x target_bucket (_bucket_cap).
+  - Modes: top-k (ann_topk, ivf_topk, ivf_topk_fixed), self-pairs
+    above a threshold (embedding_neardup_pairs) and new-vs-corpus
+    pairs (embedding_neardup_against, also on a stream).
+  - Each mode refines one of two ways. refine='kernel', the
+    production path, is _kernel_refine: a cogrouped Arrow kernel
+    scoring each bucket with one chunked BLAS score matrix, plus the
+    mode's emit rule (_topk_emit, _hits_emit). refine='expr', the
+    bit-exact cross-engine reference, is _fold_scores: the bucket
+    equi-join scored by sequential Catalyst folds. Top-k modes rank
+    through one window (_ranked).
 """
 
 from __future__ import annotations
@@ -19,6 +30,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
+
+from .dedup import _bucket_stats, _cap_buckets
 
 __all__ = [
     "cosine_topk",
@@ -154,12 +167,7 @@ def cosine_topk(
         .filter(F.col("query_id") != F.col(id_col))  # exclude self BEFORE ranking
         .withColumn("score", dot / (nq * nt))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col(id_col).asc())
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "score", "rank")
-    )
+    return _ranked(joined, id_col, k).select("query_id", id_col, "score", "rank")
 
 
 def lsh_buckets(
@@ -251,6 +259,19 @@ def lsh_buckets(
     return vectors.select(id_col, vec).mapInArrow(kernel, schema)
 
 
+def _bucket_cap(max_bucket: int | str | None, target_bucket: int) -> int | None:
+    """Resolve max_bucket='auto' to 32 x target_bucket: with auto
+    n_bits the MEAN bucket holds ~target_bucket vectors, so a bucket
+    32x over the mean is a degenerate pile of near-identical vectors
+    whose O(n^2) refine belongs to exact dedup."""
+    return 32 * target_bucket if max_bucket == "auto" else max_bucket
+
+
+def _check_refine(refine: str) -> None:
+    if refine not in ("kernel", "expr"):
+        raise ValueError(f"refine must be 'expr' or 'kernel', got {refine!r}")
+
+
 def ann_bucket_stats(
     vectors: DataFrame,
     n_bits: int = N_BITS,
@@ -267,15 +288,10 @@ def ann_bucket_stats(
     max_bucket='auto' (= 32 * target_bucket) and bit_exact the
     operators default to, so the monitor and the guard always agree
     on both the cap and the bucket arithmetic."""
-    if max_bucket == "auto":
-        max_bucket = 32 * target_bucket
-    stats = lsh_buckets(
-        vectors, n_bits, id_col, vec, bit_exact=bit_exact
-    ).groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("bucket_n")
+    return _bucket_stats(
+        lsh_buckets(vectors, n_bits, id_col, vec, bit_exact=bit_exact),
+        _bucket_cap(max_bucket, target_bucket), ("bucket",),
     )
-    cap = F.lit(max_bucket) if max_bucket is not None else F.lit(None).cast("int")
-    return stats.withColumn("truncated", cap.isNotNull() & (F.col("bucket_n") > cap))
 
 
 def _bucketed_vectors(
@@ -284,59 +300,31 @@ def _bucketed_vectors(
     drop_observation=None,
 ) -> DataFrame:
     """(id, v, bucket) with over-cap buckets dropped WHOLE before any
-    join over them (the dedup._cap_buckets discipline): a degenerate
-    bucket of near-identical vectors would otherwise self-join O(n^2)
-    in one task. Its members are exact/near-exact dups better handled
-    by exact dedup; the dropped buckets stay visible via
-    ann_bucket_stats with the same cap.
+    join over them (dedup._cap_buckets keyed on `bucket`): a
+    degenerate bucket of near-identical vectors would otherwise
+    self-join O(n^2) in one task. Its members are exact/near-exact
+    dups better handled by exact dedup; the dropped buckets stay
+    visible via ann_bucket_stats with the same cap, and in-band via
+    `drop_observation` (filled eagerly at build).
 
     The bucket kernel passes the embedding through (keep_vec), so
     bucketing is one map-side pass — no shuffle join back to the
-    vector table just to re-attach the embedding column. The bucketed
-    frame is checkpointed: both self-join sides (and the cap's sizing
-    aggregate) consume it, and Python-kernel stages are not
+    vector table just to re-attach the embedding column. A batch
+    bucketed frame is checkpointed: both join sides (and the cap's
+    sizing aggregate) consume it, and Python-kernel stages are not
     exchange-reusable, so the kernel would otherwise run once per
     consumer — materializing the bucketed vectors IS the classic
-    'build the ANN index once' step."""
+    'build the ANN index once' step. A STREAMING frame can neither
+    checkpoint nor size itself: it returns uncapped."""
     v = lsh_buckets(
         vectors, n_bits, id_col, vec, bit_exact=bit_exact, keep_vec=True
-    ).select(
-        F.col(id_col), F.col(vec).alias("v"), "bucket"
-    ).localCheckpoint(eager=False)
-    if max_bucket is None and drop_observation is not None:
-        from .dedup import _observe_zero_drops
-
-        _observe_zero_drops(drop_observation, vectors.sparkSession)
-    if max_bucket is not None:
-        # drop via broadcast ANTI-join against the OVER-cap keys only:
-        # over-cap buckets number at most N/max_bucket (tiny by
-        # definition), so the cap costs one partial-agg pass + a
-        # map-side anti join — never a shuffle of the wide vector
-        # frame keyed by bucket (the inner-join-on-sizes formulation
-        # measured ~2 s of the 4 s ann bench at 100k just re-attaching
-        # a filter verdict)
-        over = (
-            v.groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("bucket_n"))
-            .filter(F.col("bucket_n") > max_bucket)
-        )
-        if drop_observation is not None:
-            # filled EAGERLY at operator build (one tiny job, which
-            # also materializes the bucketed checkpoint the main query
-            # reuses): drop_observation.get is ready before any action
-            # on the result. Lazy in-plan metrics are not an option —
-            # AQE reads observed metrics from the FINAL plan and its
-            # empty-relation propagation prunes the CollectMetrics
-            # node exactly when every vector was dropped (see
-            # dedup._cap_buckets).
-            drop_observation_df = over.observe(
-                drop_observation,
-                F.count(F.lit(1)).alias("dropped_buckets"),
-                F.coalesce(F.sum("bucket_n"), F.lit(0)).alias("dropped_rows"),
-            )
-            drop_observation_df.collect()
-        v = v.join(F.broadcast(over.select("bucket")), "bucket", "left_anti")
-    return v
+    ).select(F.col(id_col), F.col(vec).alias("v"), "bucket")
+    if v.isStreaming:
+        return v
+    return _cap_buckets(
+        v.localCheckpoint(eager=False), max_bucket, drop_observation,
+        ("bucket",),
+    )
 
 
 def _probe_flips(n_bits: int, n_probe: int) -> list[int]:
@@ -422,14 +410,6 @@ def _probed_self(v: DataFrame, n_bits: int, n_probe: int) -> DataFrame:
     )
 
 
-def _pa_empty(names: list, types: list):
-    """Typed empty Arrow table (cogrouped kernels must return the
-    declared schema even for one-sided groups)."""
-    import pyarrow as pa
-
-    return pa.table({n: pa.array([], type=t) for n, t in zip(names, types)})
-
-
 def _pa_id_type(id_dtype: str):
     import pyarrow as pa
 
@@ -439,74 +419,106 @@ def _pa_id_type(id_dtype: str):
     }[id_dtype]
 
 
-def _bucket_topk_kernel_bidir(id_col: str, id_dtype: str, k: int):
-    """Bidirectional per-bucket BLAS top-k for the HALVED self-probe
-    explosion (_probed_self, n_probe=1): with one-sided radius-1
-    probing a bucket's visitors cover only the flips where the
-    bucket's bit is 0, so the kernel emits BOTH directions of every
-    meeting — row-wise (each probe row's top-k over the bucket's
-    targets, exactly the classic kernel) and column-wise (each
-    TARGET's top-k over the bucket's VISITOR rows, recovering the
-    candidates whose one-sided probe landed here instead of being
-    probed from the target's side). Every ordered (query, candidate)
-    pair within bucket-Hamming <= 1 is emitted exactly once across
-    the two directions (visitors are never own-bucket rows, own-
-    bucket pairs emit from each member's own probe row), and both
-    directions prune with the SAME total order as the global merge
-    (-score, then id), so the merged top-k is identical to the
-    two-sided explosion's — while the probe side of the exchange
-    shrinks from (n_bits+1) x N to (n_bits/2+1) x N expected rows,
-    which is the bulk of the cogroup's shuffle and Arrow volume."""
+def _kernel_refine(q: DataFrame, t: DataFrame, key: str, id_col: str,
+                   names: tuple[str, str], emit,
+                   by_id: bool = False) -> DataFrame:
+    """The production refine of every embedding mode: cogroup the probe
+    side `q` with the target side `t` on `key` (LSH bucket or IVF list)
+    and score each group with BLAS in one Arrow kernel. The kernel
+    reshapes the vector columns from their contiguous list buffers
+    (_list_matrix, never one np.asarray per row), then scores
+    S = Q @ T.T / norms in query-row chunks of at most
+    REFINE_CHUNK_ELEMS float64s (256 MB), so a degenerate mega-bucket
+    at the cap boundary never allocates |Q| x |T| in one go.
+
+    `emit(tids, chunks)` is the mode's emit rule: `chunks` yields
+    (query ids, `_own` flags or None, S) per chunk, and emit yields
+    (names[0], names[1], score) array triples. `by_id` pre-sorts the
+    targets by id (stable), so position order is id order — the top-k
+    tie rule. Only top-k sorts: a different matrix layout can move a
+    score by one ulp (see _probed_self), so each mode keeps the layout
+    its outputs are pinned with."""
     import pyarrow as pa
 
+    # fresh exprIds on the target side: a cogroup of two frames
+    # sharing a lineage is an ambiguous self-join to the analyzer
+    t = t.select(*[F.col(c).alias(c) for c in t.columns])
+    id_dtype = dict(t.dtypes)[id_col]
     idt = _pa_id_type(id_dtype)
-    empty = _pa_empty(["query_id", id_col, "score"],
-                      [idt, idt, pa.float64()])
+    fields = list(zip((*names, "score"), (idt, idt, pa.float64())))
 
     def kernel(qtab, ttab):
-        max_elems = REFINE_CHUNK_ELEMS
-        if qtab.num_rows == 0 or ttab.num_rows == 0:
-            return empty
-        t_order = np.argsort(_col_np(ttab.column(id_col)), kind="stable")
-        tids = _col_np(ttab.column(id_col))[t_order]
-        T = _list_matrix(ttab.column("v"))[t_order]
-        Q = _list_matrix(qtab.column("v"))
-        qids = _col_np(qtab.column(id_col))
-        qown = _col_np(qtab.column("_own")).astype(bool)
-        tn = np.linalg.norm(T, axis=1)[None, :]
-        qn = np.linalg.norm(Q, axis=1)
+        parts = []
+        if qtab.num_rows and ttab.num_rows:
+            tids = _col_np(ttab.column(id_col))
+            T = _list_matrix(ttab.column("v"))
+            if by_id:
+                order = np.argsort(tids, kind="stable")
+                tids, T = tids[order], T[order]
+            Q = _list_matrix(qtab.column("v"))
+            qids = _col_np(qtab.column(id_col))
+            qown = (_col_np(qtab.column("_own")).astype(bool)
+                    if "_own" in qtab.column_names else None)
+            qn = np.linalg.norm(Q, axis=1)
+            tn = np.linalg.norm(T, axis=1)[None, :]
+            step = max(1, REFINE_CHUNK_ELEMS // len(tids))
+            parts = list(emit(tids, (
+                (qids[s:s + step], None if qown is None else qown[s:s + step],
+                 (Q[s:s + step] @ T.T) / (qn[s:s + step, None] * tn))
+                for s in range(0, len(qids), step)
+            )))
+        cols = [np.concatenate(c) for c in zip(*parts)] if parts else [[]] * 3
+        return pa.table({n: pa.array(c, type=ty) for (n, ty), c in zip(fields, cols)})
+
+    schema = f"{names[0]} {id_dtype}, {names[1]} {id_dtype}, score double"
+    return q.groupBy(key).cogroup(t.groupBy(key)).applyInArrow(kernel, schema)
+
+
+def _topk_emit(k: int):
+    """Top-k emit rule (targets sorted by id): each query row's top-k
+    over the group's targets, plus a column pass for the HALVED
+    self-probe explosion (_probed_self, n_probe=1). There a bucket's
+    visitors cover only the flips where the bucket's bit is 0, so the
+    column pass emits each TARGET's top-k over the group's VISITOR
+    rows (`_own` false), recovering the candidates whose one-sided
+    probe landed here instead of being probed from the target's side.
+    Every ordered (query, candidate) pair within bucket-Hamming <= 1
+    is emitted exactly once across the two passes (own-bucket pairs
+    emit from each member's own row), and both prune with the SAME
+    total order as the rank window (-score, then id), so the merged
+    top-k equals the two-sided explosion's. With every row `_own`
+    (two-sided probes, IVF lists) the column pass never runs. Emits k
+    rows per (query, group) instead of the group size, before the
+    shuffle."""
+
+    def emit(tids, chunks):
         kk = min(k, len(tids))
-        out_q, out_t, out_s = [], [], []
         # column-wise candidates accumulate across row chunks and
         # reduce at the end (k per column per chunk, tiny)
         col_v, col_s = [], []
-        step = max(1, max_elems // max(1, len(tids)))
-        for s in range(0, len(qids), step):
-            e = min(len(qids), s + step)
-            S = (Q[s:e] @ T.T) / (qn[s:e, None] * tn)
-            S[qids[s:e, None] == tids[None, :]] = -np.inf  # exclude self
-            # row-wise: top-k per probe row (targets pre-sorted by id,
-            # stable argsort -> (-score, id) order, the merge's order)
+        for q, own, S in chunks:
+            S[q[:, None] == tids[None, :]] = -np.inf  # exclude self
+            # O(nt) argpartition to the kk winners, then order just
+            # those by (-score, id): re-sorting the partition indices
+            # ascending makes positions == ascending target id, so the
+            # stable score argsort breaks ties by lowest id like the
+            # rank window. (A tie ACROSS the partition boundary can
+            # admit either member — the near-tie freedom the
+            # refine='kernel' contract already grants.)
             part = np.sort(np.argpartition(-S, kk - 1, axis=1)[:, :kk], axis=1)
             ps = np.take_along_axis(S, part, axis=1)
             idx = np.take_along_axis(
                 part, np.argsort(-ps, axis=1, kind="stable"), axis=1
             )
             scores = np.take_along_axis(S, idx, axis=1).ravel()
-            keep = np.isfinite(scores)
-            out_q.append(np.repeat(qids[s:e], kk)[keep])
-            out_t.append(tids[idx].ravel()[keep])
-            out_s.append(scores[keep])
-            # column-wise: per TARGET top-k over this chunk's visitor
-            # rows (own rows excluded — their pairs emit row-wise)
-            vis = ~qown[s:e]
-            nv = int(vis.sum())
-            if nv:
+            keep = np.isfinite(scores)  # drop self rows that slipped in
+            yield np.repeat(q, kk)[keep], tids[idx].ravel()[keep], scores[keep]
+            vis = ~own
+            if vis.any():
                 Sv = S[vis]
-                vids = qids[s:e][vis]
-                kv = min(k, nv)
+                kv = min(k, len(Sv))
                 cpart = np.argpartition(-Sv, kv - 1, axis=0)[:kv]
-                col_v.append(vids[cpart])        # [kv, n_t]
+                col_v.append(q[vis][cpart])        # [kv, n_t]
                 col_s.append(np.take_along_axis(Sv, cpart, axis=0))
         if col_v:
             CV = np.concatenate(col_v, axis=0)   # [sum kv, n_t]
@@ -519,87 +531,69 @@ def _bucket_topk_kernel_bidir(id_col: str, id_dtype: str, k: int):
             cv = np.take_along_axis(CV, order, axis=0).ravel(order="F")
             cq = np.repeat(tids[None, :], kc, axis=0).ravel(order="F")
             keep = np.isfinite(cs)
-            out_q.append(cq[keep])
-            out_t.append(cv[keep])
-            out_s.append(cs[keep])
-        return pa.table({
-            "query_id": pa.array(np.concatenate(out_q), type=idt),
-            id_col: pa.array(np.concatenate(out_t), type=idt),
-            "score": pa.array(np.concatenate(out_s)),
-        })
+            yield cq[keep], cv[keep], cs[keep]
 
-    schema = f"query_id {id_dtype}, {id_col} {id_dtype}, score double"
-    return kernel, schema
+    return emit
 
 
-def _bucket_topk_kernel(id_col: str, id_dtype: str, k: int):
-    """Per-bucket BLAS refine for ann_topk: one cogrouped kernel per
-    bucket computes the FULL query x target cosine matrix with one
-    matmul, then keeps each query's local top-k (stable argsort over
-    targets pre-sorted by id, so score ties break by lowest id exactly
-    like the window rank downstream). Emits k rows per (query, probe
-    bucket) instead of bucket_n — the candidate stream shrinks from
-    N x probes x bucket_n to N x probes x k BEFORE the shuffle, and
-    the scoring runs at BLAS speed instead of one interpreted Catalyst
-    fold per candidate (the refine='expr' path's cost). Arrow-native
-    (applyInArrow): the vector columns arrive as contiguous list
-    buffers and reshape in one view (_list_matrix) instead of one
-    np.asarray per row through pandas object arrays."""
-    import pyarrow as pa
+def _hits_emit(threshold: float, self_pairs: bool):
+    """Threshold emit rule: every cell with cosine >= threshold.
+    Against mode emits each hit directed (new, corpus). Self-pairs
+    mode dedupes own-bucket meetings, which occur in BOTH directions,
+    by id order (exactly one survives — relying on distinct() instead
+    fails when the two directions' BLAS chunk layouts differ by an
+    ulp); a probe meeting occurs exactly once with bucket-bit-decided
+    sides, so it is kept and its pair order CANONICALIZED (min id
+    first)."""
 
-    idt = _pa_id_type(id_dtype)
-    empty = _pa_empty(["query_id", id_col, "score"],
-                      [idt, idt, pa.float64()])
+    def emit(tids, chunks):
+        for q, own, S in chunks:
+            # score mask FIRST, ids only at surviving cells: string
+            # ids make a broadcast id matrix object-dtype (b^2
+            # interpreted compares per bucket — measured +7 s over a
+            # 146k corpus); above-threshold hits number ~0 per bucket
+            qi, ti = np.nonzero(S >= threshold)
+            qs, ts = q[qi], tids[ti]
+            if self_pairs:
+                keep = np.where(own[qi], qs < ts, qs != ts)
+                qi, ti, qs, ts = qi[keep], ti[keep], qs[keep], ts[keep]
+                lo = qs < ts
+                qs, ts = np.where(lo, qs, ts), np.where(lo, ts, qs)
+            yield qs, ts, S[qi, ti]
 
-    def kernel(qtab, ttab):
-        max_elems = REFINE_CHUNK_ELEMS
-        if qtab.num_rows == 0 or ttab.num_rows == 0:
-            return empty
-        t_order = np.argsort(_col_np(ttab.column(id_col)), kind="stable")
-        tids = _col_np(ttab.column(id_col))[t_order]
-        T = _list_matrix(ttab.column("v"))[t_order]
-        Q = _list_matrix(qtab.column("v"))
-        qids = _col_np(qtab.column(id_col))
-        tn = np.linalg.norm(T, axis=1)[None, :]
-        qn = np.linalg.norm(Q, axis=1)
-        kk = min(k, len(tids))
-        outs = []
-        # chunk the query side so the score matrix never exceeds
-        # ~max_elems float64s (256 MB): a degenerate mega-bucket at
-        # the cap boundary would otherwise allocate |Q| x |T| in one go
-        step = max(1, max_elems // max(1, len(tids)))
-        for s in range(0, len(qids), step):
-            e = min(len(qids), s + step)
-            S = (Q[s:e] @ T.T) / (qn[s:e, None] * tn)
-            S[qids[s:e, None] == tids[None, :]] = -np.inf  # exclude self
-            # O(nt) argpartition to the kk winners, then order just
-            # those by (-score, id): re-sorting the partition indices
-            # ascending makes positions == ascending target id (tids
-            # are pre-sorted), so the stable score argsort breaks ties
-            # by lowest id like the rank window. (A tie ACROSS the
-            # partition boundary can admit either member — same class
-            # of near-tie freedom the refine='kernel' contract already
-            # grants.)
-            part = np.sort(np.argpartition(-S, kk - 1, axis=1)[:, :kk], axis=1)
-            ps = np.take_along_axis(S, part, axis=1)
-            idx = np.take_along_axis(
-                part, np.argsort(-ps, axis=1, kind="stable"), axis=1
-            )
-            scores = np.take_along_axis(S, idx, axis=1).ravel()
-            keep = np.isfinite(scores)  # drop self rows that slipped in
-            outs.append((
-                np.repeat(qids[s:e], kk)[keep],
-                tids[idx].ravel()[keep],
-                scores[keep],
-            ))
-        return pa.table({
-            "query_id": pa.array(np.concatenate([o[0] for o in outs]), type=idt),
-            id_col: pa.array(np.concatenate([o[1] for o in outs]), type=idt),
-            "score": pa.array(np.concatenate([o[2] for o in outs])),
-        })
+    return emit
 
-    schema = f"query_id {id_dtype}, {id_col} {id_dtype}, score double"
-    return kernel, schema
+
+def _fold_scores(a: DataFrame, b: DataFrame, key: str, pair,
+                 keep=None) -> DataFrame:
+    """The expr refine of every embedding mode: equi-join `a` (alias
+    `a`) with `b` (alias `b`) on `key`, keep the `keep` rows, and
+    project the two `pair` columns plus the sequential-fold cosine
+    `score` — bit-identical to the DuckDB list_reduce oracles."""
+    dot = F.expr(_dot_expr("a.v", "b.v"))
+    na = F.sqrt(F.expr(_dot_expr("a.v", "a.v")))
+    nb = F.sqrt(F.expr(_dot_expr("b.v", "b.v")))
+    j = a.alias("a").join(b.alias("b"), key)
+    if keep is not None:
+        j = j.filter(keep)
+    return j.select(*pair, (dot / (na * nb)).alias("score"))
+
+
+def _ranked(scored: DataFrame, id_col: str, k: int) -> DataFrame:
+    """The top-k rank window over (query_id, id_col, score): ties break
+    by lowest id."""
+    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col(id_col).asc())
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _fold_topk(a: DataFrame, b: DataFrame, key: str, id_col: str,
+               k: int) -> DataFrame:
+    """Expr top-k: fold scores of every a x b meeting but self, ranked."""
+    qa, tb = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
+    return _ranked(
+        _fold_scores(a, b, key, (qa.alias("query_id"), tb.alias(id_col)), qa != tb),
+        id_col, k,
+    )
 
 
 def ann_topk(
@@ -630,76 +624,43 @@ def ann_topk(
     per-bucket refine stays O(target_bucket^2) at any N; multi-probe
     (n_probe bit flips on the query side) keeps recall as n_bits
     grows; max_bucket drops degenerate mega-buckets whole (visible via
-    ann_bucket_stats). Default max_bucket='auto' = 32 * target_bucket:
-    with auto n_bits the MEAN bucket holds ~target_bucket vectors, so
-    a bucket 32x over the mean is a degenerate pile of near-identical
-    vectors whose O(n^2) refine belongs to exact dedup — the guard is
-    armed by default (opt out with max_bucket=None), and only such
-    degenerate piles are affected.
+    ann_bucket_stats). Default max_bucket='auto' = 32 * target_bucket
+    (_bucket_cap): the guard is armed by default (opt out with
+    max_bucket=None), and only degenerate piles of near-identical
+    vectors are affected.
 
     refine='kernel' (default) is the PRODUCTION path: a cogrouped
     per-bucket Arrow kernel scores each bucket with one BLAS matmul
     and emits only each query's bucket-local top-k (candidate stream
     N x probes x k instead of N x probes x bucket_n), then a window
-    merges the per-bucket winners. refine='expr' scores candidates
-    with sequential Catalyst folds — bit-identical to the DuckDB
-    oracle, the cross-engine reference the oracle registry pins
-    (~75x slower at 100k vectors; never the production choice). Same
-    candidate set and tie rules either way; kernel scores may differ
-    from the fold path in final ulps (matmul reassociation), so
-    near-exact score ties can rank differently — the standard ANN
-    trade, not a correctness surface. `bit_exact` (default False)
-    selects the bucket-assignment arithmetic the same way — the
-    oracle registry pins True alongside refine='expr'."""
-    if max_bucket == "auto":
-        max_bucket = 32 * target_bucket
+    merges the per-bucket winners. At radius 1 the probe explosion is
+    HALVED (_probed_self: only rows with the flip bit SET probe across
+    it, and the kernel's column pass emits the reverse direction), so
+    the probe side of the cogroup exchange shrinks ~45% with an
+    identical merged result. refine='expr' scores candidates with
+    sequential Catalyst folds — bit-identical to the DuckDB oracle,
+    the cross-engine reference the oracle registry pins (~75x slower
+    at 100k vectors; never the production choice). Same candidate set
+    and tie rules either way; kernel scores may differ from the fold
+    path in final ulps (matmul reassociation), so near-exact score
+    ties can rank differently — the standard ANN trade, not a
+    correctness surface. `bit_exact` (default False) selects the
+    bucket-assignment arithmetic the same way — the oracle registry
+    pins True alongside refine='expr'."""
+    _check_refine(refine)
     if n_bits is None:
         n_bits = auto_n_bits(vectors.count(), target_bucket)
     v = _bucketed_vectors(
-        vectors, n_bits, id_col, vec, max_bucket, bit_exact, drop_observation
+        vectors, n_bits, id_col, vec, _bucket_cap(max_bucket, target_bucket),
+        bit_exact, drop_observation,
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col(id_col).asc())
-    if refine == "kernel":
-        id_dtype = dict(vectors.select(id_col).dtypes)[id_col]
-        # HALVED probe explosion (_probed_self): at radius 1 only rows
-        # with the flip bit SET probe across it, and the bidirectional
-        # kernel emits the reverse direction column-wise — the probe
-        # side of the cogroup exchange (the dominant shuffle: every
-        # probe row carries the full vector) shrinks ~45% with an
-        # identical merged result. Radius 0/2 fall back to the full
-        # two-sided explosion inside _probed_self (all rows _own), in
-        # which case the column-wise pass is a no-op.
-        a = _probed_self(v, n_bits, n_probe)
-        kernel, schema = _bucket_topk_kernel_bidir(id_col, id_dtype, k)
-        # fresh exprIds on the target side (self-cogroup ambiguity)
-        t = v.select(*[F.col(c).alias(c) for c in v.columns])
-        scored = (
-            a.groupBy("bucket")
-            .cogroup(t.groupBy("bucket"))
-            .applyInArrow(kernel, schema)
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
-    a = _probed(v, n_bits, n_probe)
-    if refine != "expr":
-        raise ValueError(f"refine must be 'expr' or 'kernel', got {refine!r}")
-    a = a.alias("a")
-    t = v.alias("b")
-    dot = F.expr(_dot_expr("a.v", "b.v"))
-    na = F.sqrt(F.expr(_dot_expr("a.v", "a.v")))
-    nb = F.sqrt(F.expr(_dot_expr("b.v", "b.v")))
-    joined = (
-        a.join(t, "bucket")
-        .filter(F.col(f"a.{id_col}") != F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("query_id"),
-            F.col(f"b.{id_col}").alias(id_col),
-            (dot / (na * nb)).alias("score"),
-        )
+    if refine == "expr":
+        return _fold_topk(_probed(v, n_bits, n_probe), v, "bucket", id_col, k)
+    scored = _kernel_refine(
+        _probed_self(v, n_bits, n_probe), v, "bucket", id_col,
+        ("query_id", id_col), _topk_emit(k), by_id=True,
     )
-    return joined.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _ranked(scored, id_col, k)
 
 
 def embedding_neardup_pairs(
@@ -731,113 +692,30 @@ def embedding_neardup_pairs(
     (see ann_topk) — same pair set; scores differ from the fold path
     only in final ulps, so a pair whose cosine sits EXACTLY on the
     threshold could flip. refine='expr' + bit_exact=True is the
-    cross-engine reference the oracle registry pins."""
-    if max_bucket == "auto":
-        max_bucket = 32 * target_bucket
+    cross-engine reference the oracle registry pins. Both paths dedupe
+    own-bucket meetings by id order and canonicalize probe meetings
+    (see _probed_self); the fold score is side-symmetric at the bit
+    level even under bit_exact (a_i*b_i == b_i*a_i exactly in IEEE,
+    same summation order)."""
+    _check_refine(refine)
     if n_bits is None:
         n_bits = auto_n_bits(vectors.count(), target_bucket)
     v = _bucketed_vectors(
-        vectors, n_bits, id_col, vec, max_bucket, bit_exact, drop_observation
+        vectors, n_bits, id_col, vec, _bucket_cap(max_bucket, target_bucket),
+        bit_exact, drop_observation,
     )
+    a = _probed_self(v, n_bits, n_probe)
     if refine == "kernel":
-        id_dtype = dict(vectors.select(id_col).dtypes)[id_col]
-        import pyarrow as pa
-
-        idt = _pa_id_type(id_dtype)
-        empty = _pa_empty(["id_a", "id_b", "score"],
-                          [idt, idt, pa.float64()])
-
-        # Arrow-native (applyInArrow): vector columns reshape from the
-        # contiguous list buffers (_list_matrix) instead of paying one
-        # np.asarray per row via pandas object arrays — on the probe
-        # side that loop ran once per exploded row
-        def kernel(qtab, ttab):
-            max_elems = REFINE_CHUNK_ELEMS
-            if qtab.num_rows == 0 or ttab.num_rows == 0:
-                return empty
-            Q = _list_matrix(qtab.column("v"))
-            T = _list_matrix(ttab.column("v"))
-            qids = _col_np(qtab.column(id_col))
-            qown = _col_np(qtab.column("_own")).astype(bool)
-            tids = _col_np(ttab.column(id_col))
-            qn = np.linalg.norm(Q, axis=1)
-            tn = np.linalg.norm(T, axis=1)[None, :]
-            outs = []
-            # chunked like the top-k kernel: score-matrix memory bound
-            step = max(1, max_elems // max(1, len(tids)))
-            for s in range(0, len(qids), step):
-                e = min(len(qids), s + step)
-                S = (Q[s:e] @ T.T) / (qn[s:e, None] * tn)
-                # score mask FIRST, ids only at surviving cells:
-                # string ids make the broadcast id matrix object-dtype
-                # (b^2 interpreted compares per bucket — measured +7 s
-                # over the whole 146k corpus); above-threshold hits
-                # number ~0 per bucket, so touching ids there is free.
-                # Own-bucket meetings occur in BOTH directions: keep
-                # qid < tid there (exactly one survives — relying on
-                # distinct() instead fails when the two directions'
-                # BLAS chunk layouts differ by an ulp). A probe
-                # meeting occurs exactly once with bucket-bit-decided
-                # sides, so it is kept unconditionally and the pair
-                # order CANONICALIZED (min id first) at emit.
-                qi, ti = np.nonzero(S >= threshold)
-                if len(qi):
-                    qsel, tsel = qids[s:e][qi], tids[ti]
-                    keep = np.where(qown[s:e][qi], qsel < tsel, qsel != tsel)
-                    qi, ti = qi[keep], ti[keep]
-                qsel, tsel = qids[s:e][qi], tids[ti]
-                a_first = qsel < tsel
-                outs.append((
-                    np.where(a_first, qsel, tsel),
-                    np.where(a_first, tsel, qsel),
-                    S[qi, ti],
-                ))
-            return pa.table({
-                "id_a": pa.array(
-                    np.concatenate([o[0] for o in outs]), type=idt
-                ),
-                "id_b": pa.array(
-                    np.concatenate([o[1] for o in outs]), type=idt
-                ),
-                "score": pa.array(np.concatenate([o[2] for o in outs])),
-            })
-
-        schema = f"id_a {id_dtype}, id_b {id_dtype}, score double"
-        # fresh exprIds on the target side: a cogroup of two frames
-        # sharing a lineage is an ambiguous self-join to the analyzer
-        t = v.select(*[F.col(c).alias(c) for c in v.columns])
-        return (
-            _probed_self(v, n_bits, n_probe)
-            .groupBy("bucket")
-            .cogroup(t.groupBy("bucket"))
-            .applyInArrow(kernel, schema)
-            .distinct()
-        )
-    if refine != "expr":
-        raise ValueError(f"refine must be 'expr' or 'kernel', got {refine!r}")
-    a = _probed_self(v, n_bits, n_probe).alias("a")
-    t = v.alias("b")
-    dot = F.expr(_dot_expr("a.v", "b.v"))
-    na = F.sqrt(F.expr(_dot_expr("a.v", "a.v")))
-    nb = F.sqrt(F.expr(_dot_expr("b.v", "b.v")))
-    # own-bucket meetings dedupe by id order, probe meetings are
-    # unique and keep both orders (the side assignment is bucket-
-    # decided, see _probed_self); least/greatest canonicalizes at
-    # emit. The fold score is side-symmetric at the bit level even
-    # under bit_exact (a_i*b_i == b_i*a_i exactly in IEEE, same
-    # summation order).
+        return _kernel_refine(
+            a, v, "bucket", id_col, ("id_a", "id_b"),
+            _hits_emit(threshold, self_pairs=True),
+        ).distinct()
+    qa, tb = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
     return (
-        a.join(t, "bucket")
-        .filter(
-            F.when(
-                F.col("a._own"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ).otherwise(F.col(f"a.{id_col}") != F.col(f"b.{id_col}"))
-        )
-        .select(
-            F.least(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("id_a"),
-            F.greatest(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("id_b"),
-            (dot / (na * nb)).alias("score"),
+        _fold_scores(
+            a, v, "bucket",
+            (F.least(qa, tb).alias("id_a"), F.greatest(qa, tb).alias("id_b")),
+            F.when(F.col("a._own"), qa < tb).otherwise(qa != tb),
         )
         .filter(F.col("score") >= threshold)
         .distinct()
@@ -869,101 +747,41 @@ def embedding_neardup_against(
     Corpus-scaling controls mirror embedding_neardup_pairs: n_bits
     auto-scales with the CORPUS count (the static side — also the only
     side a streaming caller can count), multi-probe protects recall,
-    max_bucket='auto' (32 x target_bucket) drops degenerate corpus
-    piles by default (opt out with None; drops visible via
-    `drop_observation`, filled eagerly at build).
+    max_bucket='auto' (32 x target_bucket) drops degenerate piles by
+    default on both sides of a batch call (opt out with None; corpus
+    drops visible via `drop_observation`, filled eagerly at build).
 
     `new_vecs` may be a STREAMING DataFrame: the plan then stays a
     stream-static bucket equi-join with expr-fold refine (a cogrouped
-    kernel needs applyInPandas, which stream-static cannot host) and
-    only the corpus side caps — the streaming ingest filter
-    `streaming_embed_matches` wraps exactly this.
+    kernel cannot run stream-static) and only the corpus side caps —
+    the streaming ingest filter `streaming_embed_matches` wraps
+    exactly this.
 
     A pair is emitted only for ids on opposite sides; a vector present
     in both frames matches itself (identical signs) — filter ids
     upstream if re-ingestion is possible."""
+    _check_refine(refine)
     streaming = new_vecs.isStreaming
-    if max_bucket == "auto":
-        max_bucket = 32 * target_bucket
     if n_bits is None:
         n_bits = auto_n_bits(corpus.count(), target_bucket)
+    cap = _bucket_cap(max_bucket, target_bucket)
     b = _bucketed_vectors(
-        corpus, n_bits, id_col, vec, max_bucket, bit_exact, drop_observation
+        corpus, n_bits, id_col, vec, cap, bit_exact, drop_observation
     )
-    a = lsh_buckets(
-        new_vecs, n_bits, id_col, vec, bit_exact=bit_exact, keep_vec=True
-    ).select(F.col(id_col), F.col(vec).alias("v"), "bucket")
-    if not streaming:
-        a = a.localCheckpoint(eager=False)
-        if max_bucket is not None:
-            # both sides capped in batch mode (the _cap_buckets
-            # discipline); the stream side cannot size itself
-            over = (
-                a.groupBy("bucket")
-                .agg(F.count(F.lit(1)).alias("bucket_n"))
-                .filter(F.col("bucket_n") > max_bucket)
-                .select("bucket")
-            )
-            a = a.join(F.broadcast(over), "bucket", "left_anti")
-    a = _probed(a, n_bits, n_probe)
+    a = _probed(
+        _bucketed_vectors(new_vecs, n_bits, id_col, vec, cap, bit_exact),
+        n_bits, n_probe,
+    )
     if refine == "kernel" and not streaming:
-        id_dtype = dict(corpus.select(id_col).dtypes)[id_col]
-        import pyarrow as pa
-
-        idt = _pa_id_type(id_dtype)
-        empty = _pa_empty(["new_id", "corpus_id", "score"],
-                          [idt, idt, pa.float64()])
-
-        # Arrow-native (applyInArrow; see embedding_neardup_pairs)
-        def kernel(qtab, ttab):
-            if qtab.num_rows == 0 or ttab.num_rows == 0:
-                return empty
-            Q = _list_matrix(qtab.column("v"))
-            T = _list_matrix(ttab.column("v"))
-            qids = _col_np(qtab.column(id_col))
-            tids = _col_np(ttab.column(id_col))
-            qn = np.linalg.norm(Q, axis=1)
-            tn = np.linalg.norm(T, axis=1)[None, :]
-            outs = []
-            step = max(1, REFINE_CHUNK_ELEMS // max(1, len(tids)))
-            for s in range(0, len(qids), step):
-                e = min(len(qids), s + step)
-                S = (Q[s:e] @ T.T) / (qn[s:e, None] * tn)
-                qi, ti = np.nonzero(S >= threshold)
-                outs.append((qids[s:e][qi], tids[ti], S[qi, ti]))
-            return pa.table({
-                "new_id": pa.array(
-                    np.concatenate([o[0] for o in outs]), type=idt
-                ),
-                "corpus_id": pa.array(
-                    np.concatenate([o[1] for o in outs]), type=idt
-                ),
-                "score": pa.array(np.concatenate([o[2] for o in outs])),
-            })
-
-        schema = f"new_id {id_dtype}, corpus_id {id_dtype}, score double"
-        t = b.select(*[F.col(c).alias(c) for c in b.columns])
-        return (
-            a.groupBy("bucket")
-            .cogroup(t.groupBy("bucket"))
-            .applyInArrow(kernel, schema)
-            .distinct()
-        )
-    if refine != "expr" and not streaming:
-        raise ValueError(f"refine must be 'expr' or 'kernel', got {refine!r}")
-    aj, bj = a.alias("a"), b.alias("b")
-    dot = F.expr(_dot_expr("a.v", "b.v"))
-    na = F.sqrt(F.expr(_dot_expr("a.v", "a.v")))
-    nb_ = F.sqrt(F.expr(_dot_expr("b.v", "b.v")))
-    out = (
-        aj.join(bj, "bucket")
-        .select(
-            F.col(f"a.{id_col}").alias("new_id"),
-            F.col(f"b.{id_col}").alias("corpus_id"),
-            (dot / (na * nb_)).alias("score"),
-        )
-        .filter(F.col("score") >= threshold)
-    )
+        return _kernel_refine(
+            a, b, "bucket", id_col, ("new_id", "corpus_id"),
+            _hits_emit(threshold, self_pairs=False),
+        ).distinct()
+    out = _fold_scores(
+        a, b, "bucket",
+        (F.col(f"a.{id_col}").alias("new_id"),
+         F.col(f"b.{id_col}").alias("corpus_id")),
+    ).filter(F.col("score") >= threshold)
     # multi-probe can meet a pair once per probe on the batch path;
     # a stream cannot host the distinct (stateful agg in append mode)
     # — consumers keying on new_id are unaffected (same contract as
@@ -1008,39 +826,7 @@ def ivf_topk_fixed(
     darr = "array(" + ",".join(d_exprs) + ")"
     assign = f"cast(array_position({darr}, array_min({darr})) - 1 as bigint)"
     v = v0.withColumn("list", F.expr(assign))
-
-    a, t = v.alias("a"), v.alias("b")
-    dot = F.expr(_dot_expr("a.v", "b.v"))
-    na = F.sqrt(F.expr(_dot_expr("a.v", "a.v")))
-    nb = F.sqrt(F.expr(_dot_expr("b.v", "b.v")))
-    joined = (
-        a.join(t, "list")
-        .filter(F.col(f"a.{id_col}") != F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("query_id"),
-            F.col(f"b.{id_col}").alias(id_col),
-            (dot / (na * nb)).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col(id_col).asc())
-    return joined.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def ivf_centroids(vectors_pdf, k: int = 8, iters: int = 3, vec: str = "embedding"):
-    """Deterministic IVF coarse quantizer: centroids seeded from the
-    first k vectors (by id order), refined by `iters` Lloyd steps.
-    Driver-side NumPy over a SAMPLE — at scale the sample is a
-    `.limit(n)` pull, the assignment stays distributed."""
-    emb = np.stack([np.asarray(v, np.float64) for v in vectors_pdf[vec]])
-    cent = emb[:k].copy()
-    for _ in range(iters):
-        d = ((emb[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)
-        for j in range(k):
-            m = assign == j
-            if m.any():
-                cent[j] = emb[m].mean(axis=0)
-    return cent
+    return _fold_topk(v, v, "list", id_col, k)
 
 
 def _argmin_list(emb: np.ndarray, cent: np.ndarray,
@@ -1088,8 +874,7 @@ def kmeans_fit(
     n_lists=2^16), one grouped reduce sums the partials per list,
     and only the k x dim result returns to the driver (k rows). No
     iteration ever pulls vectors driver-side, so the fit scales to
-    any corpus (unlike the `ivf_centroids` sample fit, whose Lloyd
-    steps are driver NumPy over a .limit() pull).
+    any corpus.
 
     Seeds = the first k vectors by id (deterministic). Note: the
     reduce sums float64 in partition order, so centroids can differ
@@ -1165,15 +950,13 @@ def ivf_topk(
     n_lists: int | None = 8,
     id_col: str = "vec_id",
     vec: str = "embedding",
-    sample: int | None = None,
-    fit: str = "distributed",
     refine: str = "kernel",
 ) -> DataFrame:
     """IVF ANN: coarse-quantize every vector to its nearest centroid
-    (one mapInPandas pass with the broadcast codebook), then exact
-    cosine refine INSIDE each list (equi-join on list id). The scale
-    shape: candidate generation is a hash join on `list`, never an
-    all-pairs cross join.
+    (kmeans_fit codebook, one mapInPandas pass with it broadcast),
+    then exact cosine refine INSIDE each list (equi-join on list id).
+    The scale shape: candidate generation is a hash join on `list`,
+    never an all-pairs cross join.
 
     n_lists=None scales the list count with the corpus (~sqrt(N),
     the standard IVF sizing: fit cost k*dim*N and per-list refine
@@ -1181,28 +964,18 @@ def ivf_topk(
     distance tensor so large codebooks stay memory-bounded.
 
     refine='kernel' (default) scores each list with one cogrouped
-    BLAS matmul and emits per-query local top-k (the same production
-    kernel as ann_topk); refine='expr' is the fold-based cross-engine
-    reference — the oracle registry exercises that arithmetic through
-    ivf_topk_fixed (see ann_topk for the near-tie caveat)."""
+    BLAS matmul and emits per-query local top-k (ann_topk's top-k
+    refine, every query row own-list); refine='expr' is the
+    fold-based cross-engine reference — the oracle registry exercises
+    that arithmetic through ivf_topk_fixed (see ann_topk for the
+    near-tie caveat)."""
     import math
 
-    spark = vectors.sparkSession
+    _check_refine(refine)
     if n_lists is None:
         n_lists = max(2, min(1 << 16, int(round(math.sqrt(vectors.count())))))
-    # an explicit sample size implies the sample fit — callers who
-    # tuned `sample` keep their driver-side cost profile rather than
-    # silently switching to full distributed passes
-    if sample is not None:
-        fit = "sample"
-    if fit == "distributed":
-        cent = kmeans_fit(vectors, k=n_lists, id_col=id_col, vec=vec)
-    else:
-        head = (
-            vectors.select(id_col, vec).orderBy(id_col).limit(sample or 512).toPandas()
-        )
-        cent = ivf_centroids(head, k=n_lists, vec=vec)
-    bc = spark.sparkContext.broadcast(cent)
+    cent = kmeans_fit(vectors, k=n_lists, id_col=id_col, vec=vec)
+    bc = vectors.sparkSession.sparkContext.broadcast(cent)
 
     def assign(batches):
         # passes the embedding through (cast to float64) so list
@@ -1221,40 +994,18 @@ def ivf_topk(
                 }
             )
 
+    # id dtype from the input (string image ids or bigint vec ids);
     # checkpoint the assigned frame: both join sides consume it and
     # Python-kernel stages are not exchange-reusable (the 'build the
     # IVF index once' step)
+    id_dtype = dict(vectors.select(id_col).dtypes)[id_col]
     v = vectors.select(id_col, vec).mapInPandas(
-        assign, f"{id_col} long, list long, v array<double>"
+        assign, f"{id_col} {id_dtype}, list long, v array<double>"
     ).localCheckpoint(eager=False)
-    if refine == "kernel":
-        id_dtype = dict(vectors.select(id_col).dtypes)[id_col]
-        kernel, schema = _bucket_topk_kernel(id_col, id_dtype, k)
-        t = v.select(*[F.col(c).alias(c) for c in v.columns])
-        scored = (
-            v.groupBy("list").cogroup(t.groupBy("list")).applyInArrow(kernel, schema)
-        )
-        wk = Window.partitionBy("query_id").orderBy(
-            F.col("score").desc(), F.col(id_col).asc()
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(wk))
-            .filter(F.col("rank") <= k)
-        )
-    if refine != "expr":
-        raise ValueError(f"refine must be 'expr' or 'kernel', got {refine!r}")
-    a, t = v.alias("a"), v.alias("b")
-    dot = F.expr(_dot_expr("a.v", "b.v"))
-    na = F.sqrt(F.expr(_dot_expr("a.v", "a.v")))
-    nb = F.sqrt(F.expr(_dot_expr("b.v", "b.v")))
-    joined = (
-        a.join(t, "list")
-        .filter(F.col(f"a.{id_col}") != F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("query_id"),
-            F.col(f"b.{id_col}").alias(id_col),
-            (dot / (na * nb)).alias("score"),
-        )
+    if refine == "expr":
+        return _fold_topk(v, v, "list", id_col, k)
+    scored = _kernel_refine(
+        v.withColumn("_own", F.lit(True)), v, "list", id_col,
+        ("query_id", id_col), _topk_emit(k), by_id=True,
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col(id_col).asc())
-    return joined.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _ranked(scored, id_col, k)

@@ -65,8 +65,8 @@ def _logged_drops(build, cap: int | None, warn: bool, tag: str,
     """Build the match query as build(drop_observation) and log what
     the armed corpus-side cap will silently drop for the stream's
     whole lifetime. The operator fills the observation EAGERLY at
-    query build (dedup._cap_buckets / embed._bucketed_vectors — the
-    cap's own sizing job over the static corpus; for minhash and
+    query build (dedup._cap_buckets, which embed._bucketed_vectors also
+    calls — the cap's own sizing job over the static corpus; for minhash and
     embeddings it also materializes the corpus checkpoint the stream
     reuses), so the price is known before the first micro-batch
     without a second stats pass over the corpus. warn=False (or no cap) passes no
@@ -279,10 +279,10 @@ def streaming_embed_matches(
     the same build-time drop warning as the other wrappers
     (warn_drops=False skips the one-job check; max_bucket=None opts
     out of the guard)."""
-    from ..operators.embed import TARGET_BUCKET, embedding_neardup_against
+    from ..operators.embed import TARGET_BUCKET, _bucket_cap, embedding_neardup_against
 
     tb = TARGET_BUCKET if target_bucket is None else target_bucket
-    cap = 32 * tb if max_bucket == "auto" else max_bucket
+    cap = _bucket_cap(max_bucket, tb)
     return _logged_drops(
         lambda obs: embedding_neardup_against(
             stream_vecs, corpus, threshold=threshold, id_col=id_col,

@@ -209,30 +209,80 @@ def test_ivf_refine_kernel_matches_expr(spark):
 
 def test_refine_kernel_chunked_parity(spark, monkeypatch):
     """Tiny REFINE_CHUNK_ELEMS forces the multi-chunk score-matrix path
-    in both cogrouped kernels; results must not change."""
+    of the shared cogrouped kernel for every caller; results must not
+    change."""
     import segment_rtree_spark.operators.embed as E
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    ref_topk = sorted(
-        map(tuple, ann_topk(emb, k=3, n_bits=4, refine="kernel")
-            .select("query_id", "vec_id", "rank").collect())
-    )
-    ref_pairs = sorted(
-        map(tuple, embedding_neardup_pairs(emb, threshold=0.35, n_bits=4,
-                                           refine="kernel")
-            .select("id_a", "id_b").collect())
-    )
+    calls = {
+        "ann_topk": lambda: ann_topk(emb, k=3, n_bits=4, refine="kernel")
+        .select("query_id", "vec_id", "rank"),
+        "embedding_neardup_pairs": lambda: embedding_neardup_pairs(
+            emb, threshold=0.35, n_bits=4, refine="kernel"
+        ).select("id_a", "id_b"),
+        "embedding_neardup_against": lambda: E.embedding_neardup_against(
+            emb.filter("vec_id % 2 = 1"), emb.filter("vec_id % 2 = 0"),
+            threshold=0.35, n_bits=4, refine="kernel",
+        ).select("new_id", "corpus_id"),
+        "ivf_topk": lambda: E.ivf_topk(emb, k=3, n_lists=4, refine="kernel")
+        .select("query_id", "vec_id", "rank"),
+    }
+    ref = {op: sorted(map(tuple, call().collect())) for op, call in calls.items()}
     monkeypatch.setattr(E, "REFINE_CHUNK_ELEMS", 64)  # ~1 query row/chunk
-    got_topk = sorted(
-        map(tuple, ann_topk(emb, k=3, n_bits=4, refine="kernel")
-            .select("query_id", "vec_id", "rank").collect())
+    for op, call in calls.items():
+        assert sorted(map(tuple, call().collect())) == ref[op] and ref[op], op
+
+
+def test_ivf_topk_string_ids(spark):
+    """ivf_topk takes its id dtype from the input: string ids return
+    the same (query, neighbour, rank) rows as the long ids they map
+    from (zero-padded, so the k-means seed order and the id tie rule
+    see the same order)."""
+    from pyspark.sql import functions as F
+
+    from segment_rtree_spark.operators.embed import ivf_topk
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    sid = emb.select(
+        F.format_string("v%06d", "vec_id").alias("vec_id"), "embedding"
     )
-    got_pairs = sorted(
-        map(tuple, embedding_neardup_pairs(emb, threshold=0.35, n_bits=4,
-                                           refine="kernel")
-            .select("id_a", "id_b").collect())
+    for refine in ("kernel", "expr"):
+        want = sorted(
+            (f"v{q:06d}", f"v{v:06d}", r)
+            for q, v, r in ivf_topk(emb, k=3, n_lists=4, refine=refine)
+            .select("query_id", "vec_id", "rank").collect()
+        )
+        got = sorted(
+            map(tuple, ivf_topk(sid, k=3, n_lists=4, refine=refine)
+                .select("query_id", "vec_id", "rank").collect())
+        )
+        assert got == want and want, refine
+
+
+def test_refine_validated_before_branching(spark, tmp_path):
+    """An unknown refine raises for every operator, including a
+    streaming embedding_neardup_against (whose stream path refines by
+    expr for either valid value)."""
+    from segment_rtree_spark.operators.embed import (
+        embedding_neardup_against,
+        ivf_topk,
     )
-    assert got_topk == ref_topk and got_pairs == ref_pairs and ref_topk
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    src = str(tmp_path / "vecs")
+    emb.limit(8).write.parquet(src)
+    stream = spark.readStream.schema(
+        "vec_id long, embedding array<double>"
+    ).parquet(src)
+    for call in (
+        lambda: embedding_neardup_against(stream, emb, n_bits=4, refine="bogus"),
+        lambda: embedding_neardup_against(emb, emb, n_bits=4, refine="bogus"),
+        lambda: embedding_neardup_pairs(emb, n_bits=4, refine="bogus"),
+        lambda: ann_topk(emb, n_bits=4, refine="bogus"),
+        lambda: ivf_topk(emb, n_lists=4, refine="bogus"),
+    ):
+        with pytest.raises(ValueError, match="refine must be"):
+            call()
 
 
 def test_ann_bucket_stats_auto_cap(spark):

@@ -242,6 +242,17 @@ def test_cap_buckets_plans_broadcast_anti_join(spark):
     pv = plan_str(_bucketed_vectors(emb, 4, "vec_id", "embedding", 10))
     assert "BroadcastHashJoin" in pv and "LeftAnti" in pv
 
+    # batch against: the new side and the corpus side are both capped
+    from segment_rtree_spark.operators.embed import embedding_neardup_against
+
+    pa = plan_str(embedding_neardup_against(
+        emb.filter(F.col("vec_id") % 2 == 1),
+        emb.filter(F.col("vec_id") % 2 == 0), n_bits=4, max_bucket=10,
+    ), "simple")
+    anti = [l for l in pa.splitlines()
+            if "BroadcastHashJoin" in l and "LeftAnti" in l]
+    assert len(anti) == 2, pa
+
 
 def test_crossmodal_fully_jvm_side(spark):
     """The cross-modal path (caption fingerprint fold + band join +
