@@ -189,6 +189,17 @@ def points_in_polygon(px, py, polygon: PreparedPolygon) -> np.ndarray:
     return rel
 
 
+def _point_segment_dist2(px, py, x0, y0, x1, y1):
+    """Vectorized squared distance from points to segments."""
+    dx, dy = x1 - x0, y1 - y0
+    d2 = dx * dx + dy * dy
+    with np.errstate(divide="ignore", invalid="ignore"):
+        t = ((px - x0) * dx + (py - y0) * dy) / d2
+    t = np.where(d2 == 0.0, 0.0, np.clip(t, 0.0, 1.0))
+    cx, cy = x0 + t * dx, y0 + t * dy
+    return (px - cx) ** 2 + (py - cy) ** 2
+
+
 class RingArena:
     """All rings of a layer packed into ONE node arena.
 
@@ -369,3 +380,61 @@ class RingArena:
             q = q[keep][src]
 
         return np.concatenate(out_q), np.concatenate(out_r), np.concatenate(out_o)
+
+    def dist2_pairs(self, px, py, pair_pt, pair_ring, pair_grp, n_grp):
+        """Squared point-to-boundary distance of candidate (point, ring)
+        entries, minimised per group, all at once: the distance twin of
+        query_pairs (the reference's Flatbush::query_within descent,
+        flatbush_impl.rs:154-157, applied to distance).
+
+        Entry i measures point pair_pt[i] against ring pair_ring[i] and
+        folds into group pair_grp[i] (one group per (point, polygon) pair
+        over its shell and holes). Returns float64[n_grp]; +inf for a
+        group without entries.
+
+        One level-synchronous branch-and-bound over every (entry, node)
+        frontier pair. A node's clamped box distance is a LOWER bound of
+        its segments' distances; its chain-start vertex coords[low] is a
+        real boundary point, so its distance is an UPPER bound of the
+        group's minimum. Upper bounds and leaf distances tighten one
+        bound per group, shared by all rings of the group, before nodes
+        with lower bound > bound drop. Leaves take the exact
+        _point_segment_dist2, and the result is the minimum over leaves
+        only: the dense points x segments fold's value, since the
+        descent only drops segments provably farther than a boundary
+        point.
+        """
+        pt = np.asarray(pair_pt, np.int64)
+        ring = np.asarray(pair_ring, np.int64)
+        grp = np.asarray(pair_grp, np.int64)
+        best = np.full(n_grp, np.inf)
+        bound = np.full(n_grp, np.inf)
+        lvl = self.height[ring]
+        off = np.zeros(len(pt), np.int64)
+
+        while len(pt) > 0:
+            idx = self._node_idx(ring, lvl, off)
+            x, y = px[pt], py[pt]
+            ddx = np.maximum(0.0, np.maximum(self.txmin[idx] - x, x - self.txmax[idx]))
+            ddy = np.maximum(0.0, np.maximum(self.tymin[idx] - y, y - self.tymax[idx]))
+            lb = ddx * ddx + ddy * ddy
+            low = self.degree ** lvl * off
+            real = low < self.size[ring]  # padding nodes hold no segment
+            c = self.coord_off[ring[real]] + low[real]
+            ex, ey = self.cxs[c] - x[real], self.cys[c] - y[real]
+            np.minimum.at(bound, grp[real], ex * ex + ey * ey)
+            # NaN padding envelopes compare False and drop here too
+            keep = lb <= bound[grp]
+            leaf = keep & (lvl == 0)
+            if leaf.any():
+                c = self.coord_off[ring[leaf]] + off[leaf]
+                d2 = _point_segment_dist2(
+                    x[leaf], y[leaf], self.cxs[c], self.cys[c], self.cxs[c + 1], self.cys[c + 1]
+                )
+                np.minimum.at(best, grp[leaf], d2)
+                np.minimum(bound, best, out=bound)
+                keep &= ~leaf
+            src, ring, lvl, off = self._children(ring[keep], lvl[keep], off[keep])
+            pt, grp = pt[keep][src], grp[keep][src]
+
+        return best

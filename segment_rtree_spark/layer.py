@@ -15,10 +15,12 @@ cell-partitioned join path. Both paths produce identical output rows
 
 from __future__ import annotations
 
+import copy
+
 import numpy as np
 
 from .kernels.hilbert import HilbertScaler
-from .kernels.pip import PreparedPolygon
+from .kernels.pip import BOUNDARY, EXTERIOR, INTERIOR, PreparedPolygon, RingArena
 from .kernels.segtree import PackedSegTree
 
 __all__ = ["PolygonLayer"]
@@ -64,22 +66,12 @@ class PolygonLayer:
 
         # ring arena: every ring (shells + holes) in one packed node
         # space so PIP refinement is one batched descent per point batch
-        from .kernels.pip import RingArena
-
-        rings = []
-        self.shell_ring = np.empty(len(self.polygons), np.int64)
-        hole_rings = []
-        hole_off = [0]
-        for i, poly in enumerate(self.polygons):
-            self.shell_ring[i] = len(rings)
-            rings.append(poly.shell)
-            for h in poly.holes:
-                hole_rings.append(len(rings))
-                rings.append(h)
-            hole_off.append(len(hole_rings))
+        # (a polygon's holes follow its shell in the arena)
+        rings = [r for poly in self.polygons for r in (poly.shell, *poly.holes)]
+        n_holes = np.array([len(poly.holes) for poly in self.polygons], dtype=np.int64)
+        self.hole_off = np.concatenate([[0], np.cumsum(n_holes)]).astype(np.int64)
+        self.shell_ring = np.arange(len(self.polygons), dtype=np.int64) + self.hole_off[:-1]
         self.arena = RingArena(rings, degree=degree)
-        self.hole_ring_idx = np.asarray(hole_rings, dtype=np.int64)
-        self.hole_off = np.asarray(hole_off, dtype=np.int64)
 
     # -- construction -------------------------------------------------
 
@@ -105,7 +97,17 @@ class PolygonLayer:
         return cls.from_ring_rows(parse_wkt_file_polygons(path), degree=degree)
 
     def __len__(self):
-        return len(self.polygons)
+        return len(self.ids)
+
+    def _slim(self):
+        """This layer without `polygons` (nor the `by_id` map): what the
+        broadcast kernels read (index, envelopes, ids, ring arena), about
+        half the pickled size, as the per-ring trees of `polygons`
+        duplicate the arena."""
+        slim = copy.copy(self)
+        for name in ("polygons", "_id_pos"):
+            slim.__dict__.pop(name, None)
+        return slim
 
     # -- query --------------------------------------------------------
 
@@ -142,23 +144,35 @@ class PolygonLayer:
         of a valid polygon cannot both claim a point except at a shared
         touch point, where both say Boundary).
         """
-        from .kernels.pip import BOUNDARY, EXTERIOR, INTERIOR
-
         rel = self.arena.query_pairs(px, py, q, self.shell_ring[pos])
 
-        n_holes = self.hole_off[pos + 1] - self.hole_off[pos]
-        need = (rel == INTERIOR) & (n_holes > 0)
+        need = (rel == INTERIOR) & (self.hole_off[pos + 1] > self.hole_off[pos])
         if need.any():
             sel = np.nonzero(need)[0]
-            cnt = n_holes[sel]
-            rep = np.repeat(sel, cnt)
-            # ragged gather of each polygon's hole-ring indices
-            hrings = self.hole_ring_idx[np.repeat(self.hole_off[pos[sel]], cnt) + _ragged_arange(cnt)]
-            hrel = self.arena.query_pairs(px, py, q[rep], hrings)
+            ring, rep = self._pair_rings(pos[sel], holes_only=True)
+            rep = sel[rep]
+            hrel = self.arena.query_pairs(px, py, q[rep], ring)
             hmax = np.zeros(len(q), np.int8)
             np.maximum.at(hmax, rep, hrel)
             rel = np.where(hmax == INTERIOR, EXTERIOR, np.where(hmax == BOUNDARY, BOUNDARY, rel)).astype(np.int8)
         return rel
+
+    def _distances(self, px, py, q, pos):
+        """Boundary distance (all rings) of each (point q, layer position
+        pos) pair: ONE arena descent (RingArena.dist2_pairs) over every
+        shell and hole entry, with one bound per pair."""
+        ring, pair = self._pair_rings(pos)
+        q = np.asarray(q, np.int64)
+        return np.sqrt(self.arena.dist2_pairs(px, py, q[pair], ring, pair, len(q)))
+
+    def _pair_rings(self, pos, holes_only: bool = False):
+        """(arena ring, pair index) of every ring of each pair's polygon,
+        shell first, then its holes (consecutive arena rings): a ragged
+        gather."""
+        first = self.shell_ring[pos] + int(holes_only)
+        cnt = self.hole_off[pos + 1] - self.hole_off[pos] + (0 if holes_only else 1)
+        pair = np.repeat(np.arange(len(pos), dtype=np.int64), cnt)
+        return first[pair] + _ragged_arange(cnt), pair
 
     def cover_cells(self, res: int):
         """(polygon_id, cell) cover rows at resolution res — the equi-join
@@ -193,7 +207,6 @@ class PolygonLayer:
         cell; a pair occurs once (each cell has one ancestor chain).
         """
         from .kernels.geom import clip_segments, rect_intersects
-        from .kernels.pip import EXTERIOR
         from .tiles import cell_bounds, cell_children
 
         a = self.arena
@@ -216,11 +229,8 @@ class PolygonLayer:
             # boundary-crossing pairs: every ring of the pair's polygon
             # (shell, then its holes: consecutive arena rings)
             pair = np.arange(len(pos), dtype=np.int64)
-            n_rings = 1 + self.hole_off[pos + 1] - self.hole_off[pos]
-            ring = np.repeat(self.shell_ring[pos], n_rings) + _ragged_arange(n_rings)
-            k, ring, leaf = a.query_rect_pairs(
-                lngmin, latmin, lngmax, latmax, np.repeat(pair, n_rings), ring
-            )
+            ring, rpair = self._pair_rings(pos)
+            k, ring, leaf = a.query_rect_pairs(lngmin, latmin, lngmax, latmax, rpair, ring)
             c = a.coord_off[ring] + leaf
             hit, *_ = clip_segments(
                 lngmin[k], latmin[k], lngmax[k], latmax[k],

@@ -4,11 +4,16 @@ The reference exposes the primitive (Flatbush::query_within,
 flatbush_impl.rs:154-157 — candidates within distance d); kNN is that
 distance join with a per-probe top-k. Two strategies:
 
-* broadcast ('broadcast'): layer pack broadcast; per Arrow batch the
-  kernel computes exact point-to-polygon-BOUNDARY distances (segment
-  distance via the packed tree's leaves, interior points -> 0) for
-  candidates found by expanding envelope rings, then np.argpartition
-  top-k. Distances are euclidean in coordinate units (documented).
+* broadcast ('broadcast'): the slim layer (PolygonLayer._slim: index,
+  envelopes, ring arena) is broadcast. Per Arrow batch, each radius
+  round of an expanding envelope-box search gathers (point, polygon)
+  candidates from the layer index, drops the ones that cannot rank
+  (envelope lower bound above the point's k-th shell-vertex upper
+  bound), and measures the rest with ONE pair relation (the sign:
+  interior points -> 0) and ONE pair distance descent over the ring
+  arena (RingArena.dist2_pairs: exact point-to-BOUNDARY segment
+  distances, all rings). Top-k is a lexsort per point. Distances are
+  euclidean in coordinate units.
 
 * sql ('centroid'): distances to polygon envelope centers only — a
   pure DataFrame cross-join + Window row_number path that Catalyst
@@ -24,6 +29,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..kernels.pip import INTERIOR, RingArena
 from ..layer import PolygonLayer
 
 __all__ = ["knn_join_broadcast", "knn_join_centroid", "haversine_col", "EARTH_RADIUS_KM"]
@@ -46,106 +52,24 @@ def haversine_col(lat1, lng1, lat2, lng2, r: float = EARTH_RADIUS_KM):
     return F.lit(2.0 * r) * F.asin(F.sqrt(F.least(F.lit(1.0), hav)))
 
 
-def _point_segment_dist2(px, py, x0, y0, x1, y1):
-    """Vectorized squared distance from points to segments."""
-    dx, dy = x1 - x0, y1 - y0
-    d2 = dx * dx + dy * dy
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = ((px - x0) * dx + (py - y0) * dy) / d2
-    t = np.where(d2 == 0.0, 0.0, np.clip(t, 0.0, 1.0))
-    cx, cy = x0 + t * dx, y0 + t * dy
-    return (px - cx) ** 2 + (py - cy) ** 2
+def _rank_in_group(g):
+    """0-based position of each element within its run of equal values
+    of the sorted group key g."""
+    idx = np.arange(len(g))
+    start = np.r_[True, g[1:] != g[:-1]][: len(g)]
+    return idx - np.maximum.accumulate(np.where(start, idx, -1))
 
 
-def _ring_boundary_dist2(px, py, ring, best):
-    """In-place: best[i] = min(best[i], squared distance from point i to
-    ring's boundary) via level-synchronous branch-and-bound over the
-    ring's packed segment tree (reference Flatbush::query_within
-    pattern, flatbush_impl.rs:154-157, applied to distance).
-
-    Per level every live (point, node) pair gets an envelope LOWER
-    bound (clamped box distance) and a chain-endpoint UPPER bound
-    (coords[low] is a real boundary vertex — its distance bounds the
-    node's chain from above). Upper bounds tighten `best` immediately
-    (np.minimum.at), then nodes with lb > best prune BEFORE expanding,
-    so a 10^4-segment coastline costs ~10^2 envelope tests per point
-    instead of 10^4 exact segment distances. All masks/expansions are
-    whole-array ops — no per-point Python."""
-    t = ring.tree
-    if t.is_empty:
-        return
-    xs, ys = ring.xs, ring.ys
-    level = t.height
-    pid = np.arange(len(px), dtype=np.int64)
-    offs = np.zeros(len(px), dtype=np.int64)
-    d = t.degree
-    while True:
-        idx = t.level_indices[level] + offs
-        ddx = np.maximum(0.0, np.maximum(t.xmin[idx] - px[pid], px[pid] - t.xmax[idx]))
-        ddy = np.maximum(0.0, np.maximum(t.ymin[idx] - py[pid], py[pid] - t.ymax[idx]))
-        lb = ddx * ddx + ddy * ddy
-        if level == 0:
-            keep = lb < best[pid]
-            p, o = pid[keep], offs[keep]
-            if len(p):
-                d2 = _point_segment_dist2(
-                    px[p], py[p], xs[o], ys[o], xs[o + 1], ys[o + 1]
-                )
-                np.minimum.at(best, p, d2)
-            return
-        low, _ = t.get_low_high(level, offs)
-        real = low < t.size  # padding nodes at ragged levels hold no segments
-        if real.any():
-            rl, rp = low[real], pid[real]
-            ex, ey = xs[rl] - px[rp], ys[rl] - py[rp]
-            np.minimum.at(best, rp, ex * ex + ey * ey)
-        # NaN envelopes (padding) compare False and prune here too
-        keep = lb <= best[pid]
-        pid, offs = pid[keep], offs[keep]
-        if len(pid) == 0:
-            return
-        level -= 1
-        n_child = int(t.level_indices[level + 1] - t.level_indices[level])
-        pid = np.repeat(pid, d)
-        offs = (offs[:, None] * d + np.arange(d, dtype=np.int64)).ravel()
-        valid = offs < n_child
-        pid, offs = pid[valid], offs[valid]
-
-
-def boundary_distance(px, py, polygon, chunk: int = 1 << 22,
-                      tree_min_segments: int = 192):
-    """Exact distance from each point to a polygon's boundary (all rings).
-
-    Large rings (>= tree_min_segments segments) go through the packed-
-    tree branch-and-bound (_ring_boundary_dist2): pruning beats the
-    dense matrix as soon as the ring is big enough to have locality —
-    measured ~8x on the africa coastlines at 60k points. Small rings
-    keep the dense vectorized points x segments path (the frontier
-    bookkeeping costs more than brute force there), with the point
-    axis CHUNKED so the intermediate never exceeds ~`chunk` elements —
-    a 10^5 point batch against a 10^4-segment ring peaks at ~32 MB
-    instead of materializing an 8 GB matrix. Both paths compute the
-    identical exact minimum (the tree only PRUNES provably-farther
-    segments), asserted equal in tests."""
+def boundary_distance(px, py, polygon):
+    """Exact distance from each point to a polygon's boundary (all
+    rings): the pair distance descent (RingArena.dist2_pairs) over a
+    one-polygon arena, the minimum of the dense points x segments fold."""
     px = np.asarray(px, np.float64)
     py = np.asarray(py, np.float64)
-    n = px.shape[0]
-    best = np.full(n, np.inf)
-    for ring in [polygon.shell] + list(polygon.holes):
-        nseg = max(1, len(ring.xs) - 1)
-        if nseg >= tree_min_segments:
-            _ring_boundary_dist2(px, py, ring, best)
-            continue
-        step = max(1, chunk // nseg)
-        for s in range(0, n, step):
-            e = min(n, s + step)
-            d2 = _point_segment_dist2(
-                px[s:e, None], py[s:e, None],
-                ring.xs[None, :-1], ring.ys[None, :-1],
-                ring.xs[None, 1:], ring.ys[None, 1:],
-            )
-            best[s:e] = np.minimum(best[s:e], d2.min(axis=1))
-    return np.sqrt(best)
+    arena = RingArena([polygon.shell, *polygon.holes], degree=polygon.shell.tree.degree)
+    pt = np.repeat(np.arange(len(px)), len(arena))
+    ring = np.tile(np.arange(len(arena)), len(px))
+    return np.sqrt(arena.dist2_pairs(px, py, pt, ring, pt, len(px)))
 
 
 def knn_join_broadcast(
@@ -165,13 +89,12 @@ def knn_join_broadcast(
         [f"{c} {by_name[c]}" for c in keep] + ["polygon_id long", "dist double", "rank int"]
     )
     spark = points.sparkSession
-    blayer = spark.sparkContext.broadcast(layer)
+    blayer = spark.sparkContext.broadcast(layer._slim())
     kk = int(k)
 
     def kernel(batches):
-        from ..kernels.pip import points_in_polygon, INTERIOR
-
         lyr = blayer.value
+        a = lyr.arena
         m = len(lyr)
         kc = min(kk, m)
         if m:
@@ -181,22 +104,48 @@ def knn_join_broadcast(
             h = float(np.nanmax(lyr.ymax) - np.nanmin(lyr.ymin))
             r0 = max((w + h) / (2.0 * max(1.0, np.sqrt(m / max(1, kc)))), 1e-9)
 
+        # 8 vertices evenly spaced along each shell: can_rank's
+        # upper-bound probes, shape (8, m)
+        nseg = a.coord_off[lyr.shell_ring + 1] - a.coord_off[lyr.shell_ring] - 1
+        probe = a.coord_off[lyr.shell_ring] + np.arange(8)[:, None] * nseg // 8
+        vx, vy = a.cxs[probe], a.cys[probe]
+
+        def can_rank(px, py, apt, apos):
+            """Candidate pairs that can rank among their point's kc
+            nearest; the rest need no exact pass.
+
+            Per pair, the clamped distance to the polygon envelope is a
+            LOWER bound of its (signed) distance d, and the distance to
+            any shell vertex an UPPER bound (ub: the nearest of the
+            shell's 8 probe vertices). Let tau be a point's kc-th
+            smallest ub: kc of its pairs have d <= tau, so a pair with
+            lower bound > tau is outranked by kc pairs, strictly, and
+            can neither rank nor tie. The comparison carries a relative
+            slack of 1e-9 of the magnitudes involved (tau, |x|, |y|):
+            the exact kernel's rounding may put a pair's computed d a
+            few ulps of those magnitudes off its bounds. tau only falls
+            as the search box grows (the candidate set grows), so a
+            pair dropped here stays dropped in later rounds.
+            """
+            ppx, ppy = px[apt], py[apt]
+            dx = np.maximum(0.0, np.maximum(lyr.xmin[apos] - ppx, ppx - lyr.xmax[apos]))
+            dy = np.maximum(0.0, np.maximum(lyr.ymin[apos] - ppy, ppy - lyr.ymax[apos]))
+            ub2 = np.full(len(apt), np.inf)
+            for j in range(len(vx)):
+                np.minimum(ub2, (vx[j][apos] - ppx) ** 2 + (vy[j][apos] - ppy) ** 2, out=ub2)
+            o = np.lexsort((ub2, apt))
+            kth = o[_rank_in_group(apt[o]) == kc - 1]
+            tau = np.full(len(px), np.inf)
+            tau[apt[kth]] = np.sqrt(ub2[kth])
+            t = tau[apt]
+            return np.sqrt(dx * dx + dy * dy) <= t + 1e-9 * (t + np.abs(ppx) + np.abs(ppy))
+
         def exact_dists(px, py, apt, apos):
-            """Exact signed boundary distance for candidate pairs,
-            grouped by polygon so each polygon's kernel runs once."""
-            d = np.empty(len(apt))
-            order = np.argsort(apos, kind="stable")
-            srt_pos = apos[order]
-            starts = np.flatnonzero(np.concatenate([[True], srt_pos[1:] != srt_pos[:-1]]))
-            for si, s in enumerate(starts):
-                e = starts[si + 1] if si + 1 < len(starts) else len(srt_pos)
-                sel = order[s:e]
-                poly = lyr.polygons[int(srt_pos[s])]
-                spx, spy = px[apt[sel]], py[apt[sel]]
-                dd = boundary_distance(spx, spy, poly)
-                if signed:
-                    dd = np.where(points_in_polygon(spx, spy, poly) == INTERIOR, 0.0, dd)
-                d[sel] = dd
+            """Exact (signed) boundary distance of candidate pairs: one
+            pair relation for the sign, one distance descent."""
+            d = np.zeros(len(apt))
+            out = lyr._relations(px, py, apt, apos) != INTERIOR if signed else slice(None)
+            d[out] = lyr._distances(px, py, apt[out], apos[out])
             return d
 
         for pdf in batches:
@@ -216,14 +165,14 @@ def knn_join_broadcast(
             out_pt, out_id, out_d = [], [], []
             active = np.arange(n, dtype=np.int64)
             radius = np.full(n, r0)
-            # cross-round memo of computed (point, polygon) distances:
-            # the radius box only grows, so a still-active point's
-            # candidate set each round is a SUPERSET of its last
-            # round's — without the memo every non-final round re-runs
-            # exact_dists for pairs it already measured. Keyed by
-            # point*m+polygon; per-point distances are elementwise in
-            # the kernel, so a memoized value is bit-identical to a
-            # recompute.
+            # cross-round memo of computed (point, polygon) distances
+            # (+inf for pairs can_rank dropped): the radius box only
+            # grows, so a still-active point's candidate set each round
+            # is a SUPERSET of its last round's — without the memo every
+            # non-final round re-runs exact_dists for pairs it already
+            # measured. Keyed by point*m+polygon; per-pair distances are
+            # elementwise in the kernel, so a memoized value is
+            # bit-identical to a recompute.
             seen_keys = np.empty(0, np.int64)
             seen_d = np.empty(0)
             for _ in range(64):
@@ -235,59 +184,42 @@ def knn_join_broadcast(
                 )
                 apt = active[q]
                 apos = lyr.order[pos]
-                if len(apt):
-                    key = apt * np.int64(m) + apos
-                    d = np.empty(len(key))
-                    if len(seen_keys):
-                        loc = np.minimum(
-                            np.searchsorted(seen_keys, key), len(seen_keys) - 1
-                        )
-                        known = seen_keys[loc] == key
-                        d[known] = seen_d[loc[known]]
-                    else:
-                        known = np.zeros(len(key), bool)
-                    new = ~known
-                    if new.any():
-                        d[new] = exact_dists(px, py, apt[new], apos[new])
+                key = apt * np.int64(m) + apos
+                d = np.full(len(key), np.inf)
+                if len(seen_keys):
+                    loc = np.minimum(np.searchsorted(seen_keys, key), len(seen_keys) - 1)
+                    known = seen_keys[loc] == key
+                    d[known] = seen_d[loc[known]]
                 else:
-                    key = np.empty(0, np.int64)
-                    d = np.empty(0)
+                    known = np.zeros(len(key), bool)
+                if not known.all():
+                    need = ~known & can_rank(px, py, apt, apos)
+                    d[need] = exact_dists(px, py, apt[need], apos[need])
 
-                # candidate count per active point; points whose box
-                # already sees every polygon finalize unconditionally
-                cand = np.zeros(n, np.int64)
-                np.add.at(cand, apt, 1)
-                hits = np.zeros(n, np.int64)
-                if len(apt):
-                    np.add.at(hits, apt, (d <= radius[apt]).astype(np.int64))
+                # candidate count per active point (every candidate, the
+                # dropped ones too); points whose box already sees every
+                # polygon finalize unconditionally
+                cand = np.bincount(apt, minlength=n)
+                hits = np.bincount(apt, weights=d <= radius[apt], minlength=n)
                 fin = np.zeros(n, bool)
                 fin[active] = (hits[active] >= kc) | (cand[active] >= m)
 
-                if fin.any() and len(apt):
-                    sel = fin[apt]
+                sel = fin[apt]
+                if sel.any():
                     fpt, fpos, fd = apt[sel], apos[sel], d[sel]
                     fids = lyr.ids[fpos]
                     o = np.lexsort((fids, fd, fpt))
-                    fpt, fids, fd = fpt[o], fids[o], fd[o]
                     # rank within point, keep first kc
-                    grp_start = np.concatenate([[True], fpt[1:] != fpt[:-1]])
-                    idx = np.arange(len(fpt))
-                    rank = idx - np.maximum.accumulate(np.where(grp_start, idx, -1))
-                    keep_m = rank < kc
-                    out_pt.append(fpt[keep_m])
-                    out_id.append(fids[keep_m])
-                    out_d.append(fd[keep_m])
+                    o = o[_rank_in_group(fpt[o]) < kc]
+                    out_pt.append(fpt[o])
+                    out_id.append(fids[o])
+                    out_d.append(fd[o])
 
                 # memo only pairs whose point stays active; this
                 # round's pair set already supersets the old memo's
                 # active entries, so replacing (not merging) is exact
-                if len(apt):
-                    still = ~fin[apt]
-                    sk, sd = key[still], d[still]
-                    o_m = np.argsort(sk)
-                    seen_keys, seen_d = sk[o_m], sd[o_m]
-                else:
-                    seen_keys, seen_d = np.empty(0, np.int64), np.empty(0)
+                o = np.argsort(key[~sel])
+                seen_keys, seen_d = key[~sel][o], d[~sel][o]
 
                 radius[active] *= 2.0
                 active = active[~fin[active]]
@@ -297,14 +229,11 @@ def knn_join_broadcast(
             rd = np.concatenate(out_d) if out_d else np.empty(0)
             o = np.lexsort((rid, rd, rpt))
             rpt, rid, rd = rpt[o], rid[o], rd[o]
-            grp_start = np.concatenate([[True], rpt[1:] != rpt[:-1]]) if len(rpt) else np.empty(0, bool)
-            idx = np.arange(len(rpt))
-            rank = (idx - np.maximum.accumulate(np.where(grp_start, idx, -1))).astype(np.int32) + 1 if len(rpt) else np.empty(0, np.int32)
 
             out = pdf.iloc[rpt][keep].reset_index(drop=True)
             out["polygon_id"] = rid
             out["dist"] = rd
-            out["rank"] = rank
+            out["rank"] = (_rank_in_group(rpt) + 1).astype(np.int32)
             yield out
 
     return points.mapInPandas(kernel, schema)

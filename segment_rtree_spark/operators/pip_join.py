@@ -2,8 +2,9 @@
 
 Two physical strategies, identical output rows (tested):
 
-* broadcast ('broadcast'): the whole PolygonLayer pack (NumPy arrays)
-  ships to executors via sc.broadcast; the probe side streams through
+* broadcast ('broadcast'): the slim PolygonLayer pack (NumPy arrays:
+  envelope index, ids, ring arena; PolygonLayer._slim) ships to
+  executors via sc.broadcast; the probe side streams through
   mapInPandas, each Arrow batch probed against the layer's envelope
   index then refined by the batched winding kernel. Zero shuffle of
   the (big) point side — the 10^12-row path when the layer fits in
@@ -66,7 +67,7 @@ def pip_join_broadcast(
     keep = list(keep) if keep is not None else [c for c in points.columns]
     schema = _result_schema(points, keep)
     spark = points.sparkSession
-    blayer = spark.sparkContext.broadcast(layer)
+    blayer = spark.sparkContext.broadcast(layer._slim())
     # column-prune BEFORE the UDF: the kernel ships every input column
     # through Arrow, so an unpruned image table would drag its pixel
     # blobs through the kernel for an id-only join output
@@ -127,7 +128,7 @@ def pip_count_broadcast(
     by_name = {f.name: f.dataType.simpleString() for f in points.schema.fields}
     schema = ", ".join([f"{c} {by_name[c]}" for c in keep] + ["n_regions long"])
     spark = points.sparkSession
-    blayer = spark.sparkContext.broadcast(layer)
+    blayer = spark.sparkContext.broadcast(layer._slim())
     points = points.select(*dict.fromkeys([*keep, x, y]))
 
     # Arrow-native: the survivor gather is one RecordBatch.take over

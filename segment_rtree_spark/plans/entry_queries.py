@@ -827,33 +827,31 @@ def q_distance_join(spark, sf_dir):
     import pandas as pd
     import numpy as np
 
-    from ..operators.knn_join import boundary_distance
-
     pts = _points(spark, sf_dir)
-    layer = entry_layer()
-    blayer = spark.sparkContext.broadcast(layer)
+    blayer = spark.sparkContext.broadcast(entry_layer()._slim())
 
     def kernel(batches):
         lyr = blayer.value
         for pdf in batches:
             px = pdf["lng"].to_numpy(np.float64)
             py = pdf["lat"].to_numpy(np.float64)
-            outs = []
-            for pid, poly in zip(lyr.ids, lyr.polygons):
-                d = boundary_distance(px, py, poly)
-                m = d <= DIST_LIMIT
-                if m.any():
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "point_id": pdf["point_id"].to_numpy()[m],
-                                "polygon_id": int(pid),
-                                "dist": d[m],
-                            }
-                        )
-                    )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            # a boundary within DIST_LIMIT puts the polygon envelope in
+            # the point's closed DIST_LIMIT box (widened by 1e-9 of the
+            # magnitudes against the box's rounding): index candidates,
+            # then one pair distance descent
+            r = DIST_LIMIT + 1e-9 * (DIST_LIMIT + np.abs(px) + np.abs(py))
+            q, pos = lyr.index.query_rect(px - r, py - r, px + r, py + r)
+            pos = lyr.order[pos]
+            d = lyr._distances(px, py, q, pos)
+            m = d <= DIST_LIMIT
+            if m.any():
+                yield pd.DataFrame(
+                    {
+                        "point_id": pdf["point_id"].to_numpy()[q[m]],
+                        "polygon_id": lyr.ids[pos[m]],
+                        "dist": d[m],
+                    }
+                )
 
     return pts.mapInPandas(kernel, "point_id long, polygon_id long, dist double")
 

@@ -7,6 +7,7 @@ import pandas as pd
 import pytest
 
 from segment_rtree_spark.frame import SpatialFrame
+from segment_rtree_spark.kernels.pip import _point_segment_dist2
 from segment_rtree_spark.layer import PolygonLayer
 from segment_rtree_spark.operators.knn_join import boundary_distance, knn_join_broadcast
 
@@ -17,6 +18,61 @@ LAYER = PolygonLayer.from_ring_rows(
         (3, 0, [40.0, 40.0, 50.0, 50.0, 40.0], [0.0, 10.0, 10.0, 0.0, 0.0]),
     ]
 )
+
+
+def dense_boundary_distance(px, py, poly, chunk=256):
+    """Boundary distance by the dense points x segments fold: every
+    segment of every ring, no tree."""
+    best = np.full(len(px), np.inf)
+    for ring in [poly.shell, *poly.holes]:
+        xs, ys = ring.xs, ring.ys
+        for s in range(0, len(px), chunk):
+            d2 = _point_segment_dist2(
+                px[s:s + chunk, None], py[s:s + chunk, None],
+                xs[None, :-1], ys[None, :-1], xs[None, 1:], ys[None, 1:],
+            )
+            best[s:s + chunk] = np.minimum(best[s:s + chunk], d2.min(axis=1))
+    return np.sqrt(best)
+
+
+def dense_knn(px, py, layer, k, signed=True):
+    """(ids, dists) of each point's k nearest polygons from the dense
+    points x polygons distance matrix, ties by lower id."""
+    from segment_rtree_spark.kernels.pip import INTERIOR, points_in_polygon
+
+    dmat = np.empty((len(px), len(layer)))
+    for j, poly in enumerate(layer.polygons):
+        d = dense_boundary_distance(px, py, poly)
+        if signed:
+            d = np.where(points_in_polygon(px, py, poly) == INTERIOR, 0.0, d)
+        dmat[:, j] = d
+    order = np.lexsort((np.broadcast_to(layer.ids, dmat.shape), dmat), axis=1)[:, :k]
+    return layer.ids[order], np.take_along_axis(dmat, order, axis=1)
+
+
+def assert_knn_matches_dense(out, px, py, layer, k, signed=True):
+    """Every point gets min(k, len(layer)) rows, equal in ids, ranks and
+    bit-exact dists to dense_knn."""
+    kc = min(k, len(layer))
+    want_ids, want_d = dense_knn(px, py, layer, kc, signed)
+    out = out.sort_values(["pid", "rank"]).reset_index(drop=True)
+    assert len(out) == kc * len(px)
+    for i in range(len(px)):
+        got = out[out.pid == i]
+        assert list(got["rank"]) == list(range(1, kc + 1)), i
+        assert list(got["polygon_id"]) == list(want_ids[i]), i
+        assert np.array_equal(got["dist"].to_numpy(), want_d[i]), i
+
+
+def wkt_layer(*names):
+    """A layer over several corpus files, polygon ids offset per file."""
+    from segment_rtree_spark.sources.wkt import parse_wkt_file_polygons
+
+    rows = []
+    for k, name in enumerate(names):
+        path = os.path.join(os.path.dirname(__file__), "..", "data", "wkt", name + ".wkt")
+        rows += [(1000 * k + pid, part, xs, ys) for pid, part, xs, ys in parse_wkt_file_polygons(path)]
+    return PolygonLayer.from_ring_rows(rows)
 
 
 @pytest.fixture(scope="module")
@@ -57,36 +113,70 @@ def test_knn_pruned_matches_dense_on_corpus(spark):
     """The expanding-radius index-pruned kNN must equal the dense
     all-polygons scan (which the reference's query_within would also
     refine to) on real geometry — africa + uk, 300 scattered points."""
-    from segment_rtree_spark.kernels.pip import points_in_polygon, INTERIOR
-    from segment_rtree_spark.sources.wkt import parse_wkt_file_polygons
-
-    rows = list(parse_wkt_file_polygons("data/wkt/africa.wkt"))
-    off = max(r[0] for r in rows) + 1
-    rows += [(pid + off, part, xs, ys)
-             for pid, part, xs, ys in parse_wkt_file_polygons("data/wkt/uk.wkt")]
-    layer = PolygonLayer.from_ring_rows(rows)
-
+    layer = wkt_layer("africa", "uk")
     rng = np.random.default_rng(11)
     px = rng.uniform(-25.0, 60.0, 300)
     py = rng.uniform(-40.0, 62.0, 300)
     pdf = pd.DataFrame({"pid": np.arange(300), "lng": px, "lat": py})
     out = knn_join_broadcast(spark.createDataFrame(pdf), layer, k=3, keep=["pid"]).toPandas()
-    out = out.sort_values(["pid", "rank"]).reset_index(drop=True)
+    assert_knn_matches_dense(out, px, py, layer, 3)
 
-    # dense local oracle
-    dmat = np.empty((300, len(layer)))
-    for j, poly in enumerate(layer.polygons):
-        d = boundary_distance(px, py, poly)
-        inside = points_in_polygon(px, py, poly) == INTERIOR
-        dmat[:, j] = np.where(inside, 0.0, d)
-    order = np.lexsort((np.broadcast_to(layer.ids, dmat.shape), dmat), axis=1)[:, :3]
-    assert len(out) == 900
-    for i in range(300):
-        got = out[out.pid == i]
-        want_ids = layer.ids[order[i]]
-        want_d = dmat[i, order[i]]
-        assert list(got["polygon_id"]) == list(want_ids), i
-        assert np.array_equal(got["dist"].to_numpy(), want_d), i
+
+def test_knn_unsigned_matches_dense(spark):
+    """signed=False: interior points keep their boundary distance (no 0
+    for the containing polygon); equal to the dense unsigned fold on
+    africa + uk + usa-lower48, 400 points spread over the three."""
+    layer = wkt_layer("africa", "uk", "usa-lower48")
+    rng = np.random.default_rng(12)
+    boxes = [(-25.0, 60.0, -40.0, 45.0), (1190.0, 1390.0, 1180.0, 1400.0), (-130.0, -60.0, 20.0, 55.0)]
+    which = rng.integers(0, 3, 400)
+    lo_x, hi_x, lo_y, hi_y = (np.array([b[i] for b in boxes])[which] for i in range(4))
+    px, py = rng.uniform(lo_x, hi_x), rng.uniform(lo_y, hi_y)
+    pdf = pd.DataFrame({"pid": np.arange(400), "lng": px, "lat": py})
+    out = knn_join_broadcast(
+        spark.createDataFrame(pdf), layer, k=3, keep=["pid"], signed=False
+    ).toPandas()
+    assert_knn_matches_dense(out, px, py, layer, 3, signed=False)
+    assert (out["dist"] > 0).all()
+
+
+def test_knn_k_exceeds_layer(spark):
+    """k > len(layer): every point gets every polygon, ranked. The far
+    point's search box first covers all envelopes in the last of the 64
+    radius doublings, while its distances still exceed the radius: only
+    the rule that a point whose box sees every polygon is final keeps
+    it in the output."""
+    px = np.array([5.0, 15.0, 33.0, 100.0, 2e20])
+    py = np.array([5.0, 5.0, 5.0, 5.0, 2e20])
+    pdf = pd.DataFrame({"pid": np.arange(5), "lng": px, "lat": py})
+    out = knn_join_broadcast(spark.createDataFrame(pdf), LAYER, k=5, keep=["pid"]).toPandas()
+    assert_knn_matches_dense(out, px, py, LAYER, 5)
+
+
+def test_knn_prune_slack_near_tie(spark):
+    """The candidate prune keeps a pair whose envelope lower bound is a
+    rounding error above the point's kc-th vertex upper bound: polygon
+    2's exact distance (a segment fold at coordinates ~1e3, rounding
+    ~1e-13) comes out 5e-14 ABOVE its own nearest-vertex distance, and
+    polygon 1's corner lies between the two, so polygon 1 is the
+    nearest. A prune without slack drops polygon 1 and ranks polygon 2
+    first."""
+    vx, vy, wx, wy, zx, zy = (
+        928.5156915545539, 1001.7307148719407, 929.120487999507,
+        1000.9343347741406, 7.153889700231559, 2.9017183733847953,
+    )
+    px, py, ux = 928.5206091478861, 1001.7344494491506, 928.526784080365
+    layer = PolygonLayer.from_ring_rows([
+        (1, 0, [ux, ux + 1.0, ux, ux], [py, py, py + 1.0, py]),
+        (2, 0, [vx, wx, zx, vx], [vy, wy, zy, vy]),
+    ])
+    pdf = pd.DataFrame({"pid": [0], "lng": [px], "lat": [py]})
+    for k in (1, 2):
+        out = knn_join_broadcast(
+            spark.createDataFrame(pdf), layer, k=k, keep=["pid"], signed=False
+        ).toPandas()
+        assert_knn_matches_dense(out, np.array([px]), np.array([py]), layer, k, signed=False)
+        assert out.loc[out["rank"] == 1, "polygon_id"].tolist() == [1]
 
 
 def test_spatialframe_chain(spark, pts):
@@ -235,24 +325,16 @@ def test_frame_neardup_against(spark):
 
 
 def test_boundary_distance_tree_pruning_exact():
-    """The packed-tree branch-and-bound distance path returns the
+    """The packed-tree branch-and-bound distance descent returns the
     BIT-IDENTICAL minimum to the dense points x segments fold on every
     africa polygon (the tree only prunes provably-farther segments;
-    both paths reduce the same _point_segment_dist2 values)."""
-    import numpy as np
-
-    from segment_rtree_spark.layer import PolygonLayer
-
-    layer = PolygonLayer.from_wkt_file(
-        os.path.join(os.path.dirname(__file__), "..", "data", "wkt", "africa.wkt")
-    )
+    both reduce the same _point_segment_dist2 values)."""
+    layer = wkt_layer("africa")
     rng = np.random.default_rng(11)
     px = rng.uniform(-20, 55, 2000)
     py = rng.uniform(-35, 40, 2000)
     for poly in layer.polygons:
-        brute = boundary_distance(px, py, poly, tree_min_segments=10**9)
-        tree = boundary_distance(px, py, poly, tree_min_segments=1)
-        assert np.array_equal(brute, tree)
+        assert np.array_equal(boundary_distance(px, py, poly), dense_boundary_distance(px, py, poly))
 
 
 def test_frame_crossmodal_against(spark):

@@ -160,3 +160,26 @@ def test_relation_values(spark, layer, points):
     probe = spark.createDataFrame(pdf)
     pairs = _collect_pairs(pip_join_broadcast(probe, layer, keep=["image_id"]))
     assert pairs == [("probe", 5, "interior")]
+
+
+def test_broadcast_layer_is_slim():
+    """The broadcast kernels ship PolygonLayer._slim(): no `polygons`
+    (whose per-ring trees duplicate the ring arena), well under the
+    full layer's pickled size, the same length and the same PIP."""
+    import os
+    import pickle
+
+    from segment_rtree_spark.sources.wkt import parse_wkt_file_polygons
+
+    africa = os.path.join(os.path.dirname(__file__), "..", "data", "wkt", "africa.wkt")
+    full = PolygonLayer.from_ring_rows(
+        LAYER_ROWS + [(100 + pid, *rest) for pid, *rest in parse_wkt_file_polygons(africa)]
+    )
+    slim = full._slim()
+    assert not hasattr(slim, "polygons") and hasattr(full, "polygons")
+    assert len(slim) == len(full) == len(full.polygons)
+    assert len(pickle.dumps(slim)) < 0.6 * len(pickle.dumps(full))
+    rng = np.random.default_rng(3)
+    px, py = rng.uniform(-20, 55, 2000), rng.uniform(-35, 50, 2000)
+    for a, b in zip(pickle.loads(pickle.dumps(slim)).pip(px, py), full.pip(px, py)):
+        assert np.array_equal(a, b)

@@ -273,3 +273,53 @@ def test_layer_cover_matches_brute_force(seed, res, degree):
         for c in polyfill(poly, res, "contained")
     }
     assert contained == brute_cover(rows, res, "contained")
+
+
+def dense_boundary_dist(px, py, rings):
+    """Point-to-boundary distance by the dense points x segments fold
+    over every segment of every ring."""
+    from segment_rtree_spark.kernels.pip import _point_segment_dist2
+
+    best = np.full(len(px), np.inf)
+    for xs, ys in rings:
+        d2 = _point_segment_dist2(
+            px[:, None], py[:, None], xs[None, :-1], ys[None, :-1], xs[None, 1:], ys[None, 1:]
+        )
+        best = np.minimum(best, d2.min(axis=1))
+    return np.sqrt(best)
+
+
+@settings(max_examples=30, deadline=None)
+@given(seed=st.integers(0, 10_000), degree=st.sampled_from([2, 4, 16]))
+def test_arena_distance_matches_dense_fold(seed, degree):
+    """The pair distance descent (PolygonLayer._distances over
+    RingArena.dist2_pairs, and boundary_distance on one polygon) is
+    bit-equal to the dense points x segments fold, on seeded layers of
+    star polygons with 0-2 holes, for points on every vertex, on edges
+    and spread over (and around) the layer."""
+    from segment_rtree_spark.layer import PolygonLayer
+    from segment_rtree_spark.operators.knn_join import boundary_distance
+
+    rng = np.random.default_rng(seed)
+    rows = [r for pid in range(int(rng.integers(1, 5))) for r in star_polygon_rows(rng, pid)]
+    layer = PolygonLayer.from_ring_rows(rows, degree=degree)
+    xs = np.concatenate([r[2] for r in rows])
+    ys = np.concatenate([r[3] for r in rows])
+    t = rng.uniform(0.0, 1.0, len(xs) - 1)
+    x0, x1 = np.nanmin(layer.xmin) - 5, np.nanmax(layer.xmax) + 5
+    y0, y1 = np.nanmin(layer.ymin) - 5, np.nanmax(layer.ymax) + 5
+    px = np.concatenate([xs, xs[:-1] + t * (xs[1:] - xs[:-1]), rng.uniform(x0, x1, 200)])
+    py = np.concatenate([ys, ys[:-1] + t * (ys[1:] - ys[:-1]), rng.uniform(y0, y1, 200)])
+
+    rings: dict = {}
+    for pid, _, rx, ry in rows:
+        rings.setdefault(pid, []).append((rx, ry))
+    want = np.stack([dense_boundary_dist(px, py, rings[int(pid)]) for pid in layer.ids])
+    assert (want[:, : len(xs)] == 0.0).any(axis=0).all()  # every vertex is on a boundary
+
+    n, m = len(px), len(layer)
+    q, pos = np.repeat(np.arange(n), m), np.tile(np.arange(m), n)
+    got = layer._distances(px, py, q, pos).reshape(n, m).T
+    assert np.array_equal(got, want)
+    for j, poly in enumerate(layer.polygons):
+        assert np.array_equal(boundary_distance(px, py, poly), want[j])
