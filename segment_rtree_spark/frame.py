@@ -14,7 +14,6 @@ dropping back to raw Spark.
 
 from __future__ import annotations
 
-import pickle
 from typing import Sequence
 
 from pyspark.sql import DataFrame
@@ -22,10 +21,6 @@ from pyspark.sql import DataFrame
 from .layer import PolygonLayer
 
 __all__ = ["SpatialFrame"]
-
-# layers whose pickled pack exceeds this broadcast via the cover-table
-# path instead (conservative fraction of a typical executor heap)
-BROADCAST_LIMIT_BYTES = 256 << 20
 
 
 class SpatialFrame:
@@ -65,16 +60,11 @@ class SpatialFrame:
 
     def pip_join(self, layer: PolygonLayer, how: str = "auto",
                  keep: Sequence[str] | None = None, **kw) -> "SpatialFrame":
-        """Point-in-polygon join. how='auto' broadcasts when the layer
-        pack is small enough, else takes the cell-partitioned path."""
+        """Point-in-polygon join. how='auto' broadcasts when the slim
+        layer pack is small enough, else takes the cell-partitioned path
+        (operators.pip_join._resolve_how)."""
         from .operators.pip_join import pip_join
 
-        if how == "auto":
-            how = (
-                "broadcast"
-                if len(pickle.dumps(layer)) <= BROADCAST_LIMIT_BYTES
-                else "partitioned"
-            )
         return self._wrap(
             pip_join(self.df, layer, how=how, x=self.x, y=self.y, keep=keep, **kw)
         )

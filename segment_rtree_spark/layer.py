@@ -116,11 +116,11 @@ class PolygonLayer:
         q, s = self.index.query_point(px, py)
         return q, self.order[s]
 
-    def pip(self, px, py, emit_exterior: bool = False):
+    def pip(self, px, py):
         """Full PIP of a point batch against the whole layer.
 
         Returns (point_idx, polygon_id, relation int8) arrays for pairs
-        with relation != exterior (unless emit_exterior). Candidate
+        with relation != exterior. Candidate
         pruning via the envelope index, then the pair relation
         (`_relations`) — kernel cost scales with pair count, not
         polygon count.
@@ -131,7 +131,7 @@ class PolygonLayer:
         if len(q) == 0:
             return (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.int8))
         rel = self._relations(px, py, q, pos)
-        keep = slice(None) if emit_exterior else rel != 0
+        keep = rel != 0
         return q[keep], self.ids[pos[keep]], rel[keep]
 
     def _relations(self, px, py, q, pos):

@@ -182,19 +182,12 @@ def _refine_packed_pairs(pairs: DataFrame) -> DataFrame:
     _memo: dict = {}
 
     def kernel(batches):
-        import pickle
-
-        from ..kernels.pip import PreparedPolygon, PreparedRing
+        from .pip_join import _unpack_polygon
 
         def unpack(key, blob):
-            poly = _memo.get(key)
-            if poly is None:
-                rings = pickle.loads(blob)
-                poly = PreparedPolygon(
-                    PreparedRing(*rings[0]), [PreparedRing(*r) for r in rings[1:]]
-                )
-                _memo[key] = poly
-            return poly
+            if key not in _memo:
+                _memo[key] = _unpack_polygon(blob)
+            return _memo[key]
 
         for pdf in batches:
             out = {"a_id": [], "b_id": [], "relation": []}

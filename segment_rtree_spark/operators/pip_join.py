@@ -5,7 +5,7 @@ Two physical strategies, identical output rows (tested):
 * broadcast ('broadcast'): the slim PolygonLayer pack (NumPy arrays:
   envelope index, ids, ring arena; PolygonLayer._slim) ships to
   executors via sc.broadcast; the probe side streams through
-  mapInPandas, each Arrow batch probed against the layer's envelope
+  mapInArrow, each Arrow batch probed against the layer's envelope
   index then refined by the batched winding kernel. Zero shuffle of
   the (big) point side — the 10^12-row path when the layer fits in
   executor memory. This is the Spark analog of the reference lifecycle
@@ -15,16 +15,20 @@ Two physical strategies, identical output rows (tested):
 * cell-partitioned ('partitioned'): points get a quadtree cell id via
   a pure Catalyst expression (no UDF); polygons polyfill to a
   (polygon_id, cell) cover table; the bbox theta-join becomes a cell
-  EQUI-join Catalyst can hash-partition, then the winding kernel
-  refines per matched pair group. Optional hot-cell salting: cells
-  whose point-count exceeds a threshold are split into n_salt
-  sub-keys (points pick a salt by id hash, cover rows explode all
-  salts) so one hot city doesn't pin a single reducer — the skew
-  answer the north rule requires on top of AQE.
+  EQUI-join Catalyst can hash-partition, then each matched group's
+  cover polygons form a small PolygonLayer whose `pip` refines the
+  group's points: the same pair relation the broadcast kernels run.
+  Optional hot-cell salting: cells whose point-count exceeds a
+  threshold are split into n_salt sub-keys (points pick a salt by id
+  hash, cover rows explode all salts) so one hot city doesn't pin a
+  single reducer — the skew answer the north rule requires on top of
+  AQE.
 
 Semantics: emits (point passthrough cols..., polygon_id, relation) for
-relation in {'interior','boundary'}; exterior pairs are dropped (use
-emit_exterior for the 3-valued relation of every candidate pair).
+relation in {'interior','boundary'}; exterior pairs are dropped.
+
+how='auto' (pip_join) broadcasts when the pickled slim layer fits
+BROADCAST_LIMIT_BYTES, else takes the partitioned path.
 """
 
 from __future__ import annotations
@@ -39,6 +43,11 @@ from ..kernels.pip import RELATION_NAMES
 from ..layer import PolygonLayer
 from ..tiles import cell_of_sql
 
+# layers whose pickled slim pack (what the broadcast kernels ship)
+# exceeds this take the cell-partitioned path instead (conservative
+# fraction of a typical executor heap)
+BROADCAST_LIMIT_BYTES = 256 << 20
+
 __all__ = [
     "pip_join_broadcast",
     "pip_count_broadcast",
@@ -49,10 +58,43 @@ __all__ = [
 ]
 
 
-def _result_schema(points: DataFrame, keep: Sequence[str]) -> str:
+def _result_schema(points: DataFrame, keep: Sequence[str],
+                   tail: str = "polygon_id long, relation string") -> str:
     by_name = {f.name: f.dataType.simpleString() for f in points.schema.fields}
-    fields = [f"{c} {by_name[c]}" for c in keep]
-    return ", ".join(fields + ["polygon_id long", "relation string"])
+    return ", ".join([f"{c} {by_name[c]}" for c in keep] + [tail])
+
+
+def _xy(tab, x: str, y: str):
+    """float64 (x, y) coordinate arrays of an Arrow batch or table."""
+    return [np.asarray(tab.column(c).to_numpy(zero_copy_only=False), np.float64)
+            for c in (x, y)]
+
+
+def _pip_hits(batches, blayer, x: str, y: str):
+    """(batch, point_idx, polygon_id, relation) for every Arrow batch
+    with >= 1 hit against the broadcast layer: the batch loop of both
+    broadcast kernels."""
+    lyr = blayer.value
+    for batch in batches:
+        qi, pid, rel = lyr.pip(*_xy(batch, x, y))
+        if len(qi):
+            yield batch, qi, pid, rel
+
+
+def _emit_hits(tab, keep: Sequence[str], qi, pid, rel):
+    """(keep..., polygon_id, relation) rows of PolygonLayer.pip hits
+    over an Arrow batch or table. The hit fan-out is one take over the
+    payload columns (one buffer gather, no pandas row materialization:
+    the pdf.iloc form re-boxed every carried cell per hit, a per-row
+    interpreter loop at payload-carrying call sites like the curation
+    pipelines); zero hits keep the schema."""
+    import pyarrow as pa
+
+    return (
+        tab.select(keep).take(qi)
+        .append_column("polygon_id", pa.array(pid.astype(np.int64)))
+        .append_column("relation", pa.array(RELATION_NAMES[rel], pa.string()))
+    )
 
 
 def pip_join_broadcast(
@@ -61,7 +103,6 @@ def pip_join_broadcast(
     x: str = "lng",
     y: str = "lat",
     keep: Sequence[str] | None = None,
-    emit_exterior: bool = False,
 ) -> DataFrame:
     """Broadcast PIP join; see module docstring."""
     keep = list(keep) if keep is not None else [c for c in points.columns]
@@ -73,34 +114,9 @@ def pip_join_broadcast(
     # blobs through the kernel for an id-only join output
     points = points.select(*dict.fromkeys([*keep, x, y]))
 
-    # Arrow-native kernel: the hit fan-out is a RecordBatch.take over
-    # the payload columns (one buffer gather, no pandas row
-    # materialization — the pdf.iloc form re-boxed every carried cell
-    # per hit, which at payload-carrying call sites like the curation
-    # pipelines was a per-row interpreter loop both ways)
     def kernel(batches):
-        import pyarrow as pa
-
-        lyr = blayer.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            names = batch.schema.names
-            px = batch.column(names.index(x)).to_numpy(zero_copy_only=False)
-            py = batch.column(names.index(y)).to_numpy(zero_copy_only=False)
-            qi, pid, rel = lyr.pip(
-                np.asarray(px, np.float64), np.asarray(py, np.float64),
-                emit_exterior=emit_exterior,
-            )
-            if len(qi) == 0:
-                continue
-            out = batch.select(keep).take(qi)
-            yield pa.RecordBatch.from_arrays(
-                [*out.columns,
-                 pa.array(pid.astype(np.int64)),
-                 pa.array(RELATION_NAMES[rel])],
-                [*keep, "polygon_id", "relation"],
-            )
+        for batch, *hits in _pip_hits(batches, blayer, x, y):
+            yield _emit_hits(batch, keep, *hits)
 
     return points.mapInArrow(kernel, schema)
 
@@ -125,35 +141,19 @@ def pip_count_broadcast(
     through the kernel once instead of through a corpus-wide exchange
     — at 10^12 rows this deletes the survivor stage's only shuffle."""
     keep = list(keep) if keep is not None else list(points.columns)
-    by_name = {f.name: f.dataType.simpleString() for f in points.schema.fields}
-    schema = ", ".join([f"{c} {by_name[c]}" for c in keep] + ["n_regions long"])
+    schema = _result_schema(points, keep, "n_regions long")
     spark = points.sparkSession
     blayer = spark.sparkContext.broadcast(layer._slim())
     points = points.select(*dict.fromkeys([*keep, x, y]))
 
-    # Arrow-native: the survivor gather is one RecordBatch.take over
-    # the payload columns (see pip_join_broadcast)
     def kernel(batches):
         import pyarrow as pa
 
-        lyr = blayer.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            names = batch.schema.names
-            px = batch.column(names.index(x)).to_numpy(zero_copy_only=False)
-            py = batch.column(names.index(y)).to_numpy(zero_copy_only=False)
-            qi, _pid, _rel = lyr.pip(
-                np.asarray(px, np.float64), np.asarray(py, np.float64)
-            )
-            if len(qi) == 0:
-                continue
+        for batch, qi, _pid, _rel in _pip_hits(batches, blayer, x, y):
             counts = np.bincount(qi, minlength=batch.num_rows)
             sel = np.flatnonzero(counts)
-            out = batch.select(keep).take(sel)
-            yield pa.RecordBatch.from_arrays(
-                [*out.columns, pa.array(counts[sel].astype(np.int64))],
-                [*keep, "n_regions"],
+            yield batch.select(keep).take(sel).append_column(
+                "n_regions", pa.array(counts[sel].astype(np.int64))
             )
 
     return points.mapInArrow(kernel, schema)
@@ -168,13 +168,21 @@ def _pack_polygon(poly) -> bytes:
     return pickle.dumps(rings, protocol=4)
 
 
+def _unpack_polygon(blob: bytes):
+    """The PreparedPolygon of a _pack_polygon blob (trees rebuilt)."""
+    import pickle
+
+    from ..kernels.pip import PreparedPolygon
+
+    return PreparedPolygon.from_arrays(pickle.loads(blob))
+
+
 def pip_join_partitioned(
     points: DataFrame,
     layer: PolygonLayer,
     x: str = "lng",
     y: str = "lat",
     keep: Sequence[str] | None = None,
-    emit_exterior: bool = False,
     res: int | None = None,
     salt_threshold: int | None = None,
     n_salt: int = 8,
@@ -186,14 +194,16 @@ def pip_join_partitioned(
     res=None picks the coarsest resolution whose cover averages >= ~8
     cells per polygon — measured sweet spot between few huge cogroups
     (res too coarse: one task drags) and per-group overhead (res too
-    fine: thousands of tiny pandas groups).
+    fine: thousands of tiny Arrow groups).
 
     Scale design: the layer is NEVER broadcast. Each polygon's packed
     ring coordinates ride in the (cell, polygon_id, pack) cover table;
     points and cover co-shuffle on the cell key and meet in a cogrouped
-    applyInPandas, so a pack crosses the wire once per covering CELL
+    applyInArrow, so a pack crosses the wire once per covering CELL
     (not once per point, and not once per executor as a broadcast
-    would). Executors memoize unpacked polygons by id across groups.
+    would). Executors memoize unpacked polygons by id across groups;
+    each group's polygons refine its points in one PolygonLayer.pip
+    call.
     `res` trades cover-table size against candidate selectivity.
 
     Plan-shape choices (all measured):
@@ -251,7 +261,7 @@ def pip_join_partitioned(
         else None
     )
     return _pip_cogroup(
-        points, cover, res, keep, schema, x, y, emit_exterior,
+        points, cover, res, keep, schema, x, y,
         salt_threshold, n_salt, num_partitions, cellset,
     )
 
@@ -283,7 +293,6 @@ def _pip_cogroup(
     schema: str,
     x: str,
     y: str,
-    emit_exterior: bool,
     salt_threshold: int | None,
     n_salt: int,
     num_partitions: int | None,
@@ -291,9 +300,10 @@ def _pip_cogroup(
 ) -> DataFrame:
     """Shared back half of the partitioned PIP join: cell assignment,
     optional semi prefilter, hot-cell salting, pinned co-shuffle,
-    cogrouped winding refine. `cover` is any (polygon_id, cell, pack)
-    DataFrame — driver-built for broadcastable layers, executor-built
-    (cover_from_rings) when the layer itself is a table."""
+    cogrouped PolygonLayer.pip refine. `cover` is any (polygon_id,
+    cell, pack) DataFrame — driver-built for broadcastable layers,
+    executor-built (cover_from_rings) when the layer itself is a
+    table."""
     spark = points.sparkSession
     pts = points.withColumn("cell", F.expr(cell_of_sql(y, x, res)))
 
@@ -305,45 +315,33 @@ def _pip_cogroup(
         salt_col = (keep[:1] or [x])[0]
         hot_pdf = _hot_cells(pts, salt_col, salt_threshold)
         if len(hot_pdf):
-            salt_expr = F.pmod(F.xxhash64(F.col(salt_col)), F.lit(n_salt))
-            salt_seq = F.sequence(F.lit(0), F.lit(n_salt - 1))
             if len(hot_pdf) <= 64:
                 # a handful of hot cells: a literal isin beats two
-                # broadcast joins + generators in plan and wall time
+                # broadcast joins in plan and wall time
                 is_hot = F.col("cell").isin([int(c) for c in hot_pdf["cell"]])
-                pts = pts.withColumn(
-                    "salt",
-                    F.when(is_hot, salt_expr).otherwise(F.lit(0)).cast("long"),
-                )
-                cover = cover.withColumn(
-                    "salt",
-                    F.explode(F.when(is_hot, salt_seq).otherwise(F.array(F.lit(0)))),
-                ).withColumn("salt", F.col("salt").cast("long"))
+
+                def flag(df):
+                    return df
             else:
                 # thousands of hot cells: join a broadcast frame, never
                 # a literal plan array (round-1 plan-bloat lesson)
                 hot_df = spark.createDataFrame(hot_pdf).withColumn("is_hot", F.lit(True))
-                pts = (
-                    pts.join(F.broadcast(hot_df), "cell", "left")
-                    .withColumn(
-                        "salt",
-                        F.when(F.col("is_hot").isNotNull(), salt_expr)
-                        .otherwise(F.lit(0)).cast("long"),
-                    )
-                    .drop("is_hot")
-                )
-                cover = (
-                    cover.join(F.broadcast(hot_df), "cell", "left")
-                    .withColumn(
-                        "salt",
-                        F.explode(
-                            F.when(F.col("is_hot").isNotNull(), salt_seq)
-                            .otherwise(F.array(F.lit(0)))
-                        ),
-                    )
-                    .withColumn("salt", F.col("salt").cast("long"))
-                    .drop("is_hot")
-                )
+                is_hot = F.col("is_hot").isNotNull()
+
+                def flag(df):
+                    return df.join(F.broadcast(hot_df), "cell", "left")
+
+            salt = F.pmod(F.xxhash64(F.col(salt_col)), F.lit(n_salt))
+            salts = F.sequence(F.lit(0), F.lit(n_salt - 1))
+            pts = flag(pts).withColumn(
+                "salt", F.when(is_hot, salt).otherwise(F.lit(0)).cast("long")
+            ).drop("is_hot")
+            cover = (
+                flag(cover)
+                .withColumn("salt", F.explode(F.when(is_hot, salts).otherwise(F.array(F.lit(0)))))
+                .withColumn("salt", F.col("salt").cast("long"))
+                .drop("is_hot")
+            )
             group_keys = ["cell", "salt"]
 
     num_partitions = num_partitions or spark.sparkContext.defaultParallelism
@@ -352,77 +350,23 @@ def _pip_cogroup(
 
     _poly_cache: dict = {}
 
-    # Arrow-native cogroup refine: per matched polygon the hit gather
-    # is RecordBatch/Table.take over the point side's payload columns
-    # (one buffer gather) instead of a pandas iloc row materialization
-    # per polygon — the same §4.2 move as the broadcast kernels, on
-    # the partitioned path's per-cell groups
+    # one group (cell, or cell + salt) is one PolygonLayer.pip call over
+    # a small layer of the group's cover polygons, the pair relation
+    # the broadcast kernels run; a polygon unpacks once per task (memo
+    # by id across groups). An empty side is an empty pip result.
     def refine(pts_tab, cov_tab):
-        import pickle
-
-        import pyarrow as pa
-
-        from ..kernels.pip import PreparedPolygon, PreparedRing, points_in_polygon
-
-        empty = pa.table(
-            {
-                **{c: pts_tab.column(c).slice(0, 0) for c in keep},
-                "polygon_id": pa.array([], type=pa.int64()),
-                "relation": pa.array([], type=pa.string()),
-            }
-        ) if pts_tab.num_rows else None
-        if pts_tab.num_rows == 0 or cov_tab.num_rows == 0:
-            if empty is not None:
-                return empty
-            # no point rows: emit the declared schema, zero rows
-            return pa.table(
-                {
-                    **{c: pa.array([], type=pts_tab.schema.field(c).type)
-                       for c in keep},
-                    "polygon_id": pa.array([], type=pa.int64()),
-                    "relation": pa.array([], type=pa.string()),
-                }
-            )
-        px = np.asarray(
-            pts_tab.column(x).to_numpy(zero_copy_only=False), np.float64
+        pids, first = np.unique(
+            cov_tab.column("polygon_id").to_numpy(zero_copy_only=False), return_index=True
         )
-        py = np.asarray(
-            pts_tab.column(y).to_numpy(zero_copy_only=False), np.float64
-        )
-        payload = pts_tab.select(keep)
-        outs = []
-        pids = cov_tab.column("polygon_id").to_numpy(zero_copy_only=False)
         packs = cov_tab.column("pack").to_numpy(zero_copy_only=False)
-        for pid, pack in zip(pids, packs):
-            pid = int(pid)
-            poly = _poly_cache.get(pid)
-            if poly is None:
-                rings = pickle.loads(pack)
-                poly = PreparedPolygon(
-                    PreparedRing(*rings[0]), [PreparedRing(*r) for r in rings[1:]]
-                )
-                _poly_cache[pid] = poly
-            rel = points_in_polygon(px, py, poly)
-            m = np.ones(len(rel), bool) if emit_exterior else rel != 0
-            if not m.any():
-                continue
-            sel = np.flatnonzero(m)
-            out = payload.take(sel)
-            outs.append(
-                pa.table(
-                    {
-                        **{c: out.column(c) for c in keep},
-                        "polygon_id": pa.array(
-                            np.full(len(sel), pid, np.int64)
-                        ),
-                        "relation": pa.array(RELATION_NAMES[rel[m]]),
-                    }
-                )
-            )
-        return pa.concat_tables(outs) if outs else empty
+        for pid, i in zip(pids.tolist(), first):
+            if pid not in _poly_cache:
+                _poly_cache[pid] = _unpack_polygon(packs[i])
+        lyr = PolygonLayer(pids, [_poly_cache[p] for p in pids.tolist()], hilbert_sort=False)
+        return _emit_hits(pts_tab, keep, *lyr.pip(*_xy(pts_tab, x, y)))
 
     return pts.groupBy(*group_keys).cogroup(cover.groupBy(*group_keys)).applyInArrow(
-        lambda l, r: refine(l, r), schema
+        refine, schema
     )
 
 
@@ -438,24 +382,17 @@ def cover_from_rings(rings: DataFrame, res: int) -> DataFrame:
     from ..tiles import polyfill as _polyfill
 
     def gen(pdf: pd.DataFrame) -> pd.DataFrame:
-        import pickle
-
         from ..kernels.pip import PreparedPolygon
 
         pdf = pdf.sort_values("part_id")
-        arrs = [
-            (np.asarray(xs, np.float64), np.asarray(ys, np.float64))
-            for xs, ys in zip(pdf["xs"], pdf["ys"])
-        ]
-        poly = PreparedPolygon.from_arrays(arrs)
+        poly = PreparedPolygon.from_arrays(zip(pdf["xs"], pdf["ys"]))
         cells = _polyfill(poly, res)
-        pack = pickle.dumps(arrs, protocol=4)
         pid = int(pdf["polygon_id"].iloc[0])
         return pd.DataFrame(
             {
                 "polygon_id": np.full(len(cells), pid, np.int64),
                 "cell": cells,
-                "pack": [pack] * len(cells),
+                "pack": [_pack_polygon(poly)] * len(cells),
             }
         )
 
@@ -469,7 +406,6 @@ def pip_join_partitioned_rings(
     x: str = "lng",
     y: str = "lat",
     keep: Sequence[str] | None = None,
-    emit_exterior: bool = False,
     salt_threshold: int | None = None,
     n_salt: int = 8,
     num_partitions: int | None = None,
@@ -495,9 +431,22 @@ def pip_join_partitioned_rings(
     cover = cover.persist(StorageLevel.MEMORY_AND_DISK)
     cellset = cover.select("cell").distinct() if prefilter else None
     return _pip_cogroup(
-        points, cover, res, keep, schema, x, y, emit_exterior,
+        points, cover, res, keep, schema, x, y,
         salt_threshold, n_salt, num_partitions, cellset,
     )
+
+
+def _resolve_how(how: str, layer: PolygonLayer) -> str:
+    """The PIP strategy for `how`: 'auto' picks 'broadcast' when the
+    pickled slim layer (what the broadcast kernels ship) fits
+    BROADCAST_LIMIT_BYTES, else 'partitioned'; any other value passes
+    through."""
+    if how != "auto":
+        return how
+    import pickle
+
+    fits = len(pickle.dumps(layer._slim())) <= BROADCAST_LIMIT_BYTES
+    return "broadcast" if fits else "partitioned"
 
 
 def pip_join(
@@ -506,6 +455,9 @@ def pip_join(
     how: str = "broadcast",
     **kw,
 ) -> DataFrame:
+    """PIP join by strategy: 'broadcast', 'partitioned' or 'auto'
+    (see _resolve_how)."""
+    how = _resolve_how(how, layer)
     if how == "broadcast":
         kw.pop("res", None)
         kw.pop("salt_threshold", None)
@@ -513,4 +465,4 @@ def pip_join(
         return pip_join_broadcast(points, layer, **kw)
     if how == "partitioned":
         return pip_join_partitioned(points, layer, **kw)
-    raise ValueError(f"how must be 'broadcast' or 'partitioned', got {how!r}")
+    raise ValueError(f"how must be 'broadcast', 'partitioned' or 'auto', got {how!r}")

@@ -19,7 +19,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, functions as F
 
 from .layer import PolygonLayer
-from .operators.pip_join import pip_count_broadcast
+from .operators.pip_join import _resolve_how, pip_count_broadcast, pip_join
 
 __all__ = [
     "curate_images",
@@ -74,7 +74,6 @@ def curate_images(images: DataFrame, layer: PolygonLayer,
     # few dozen bytes/row instead of the full payload (at the scan,
     # parquet column pruning makes this free).
     narrow = images.select(id_col, caption, phash, y, x)
-    how = _resolve_how(how, layer)
     # caption+phash ride THROUGH the PIP kernel (keep=), and on the
     # broadcast path the containment count is computed in-kernel
     # (pip_count_broadcast), so the survivor stage shuffles NOTHING —
@@ -95,23 +94,6 @@ def curate_images(images: DataFrame, layer: PolygonLayer,
     return _collapse_by_phash(
         ok, id_col, caption, phash, max_hamming, n_bands,
         hot_threshold, max_bucket, drop_observation,
-    )
-
-
-def _resolve_how(how: str, layer: PolygonLayer) -> str:
-    """The PIP strategy for `how`: 'auto' picks 'broadcast' when the
-    pickled layer fits BROADCAST_LIMIT_BYTES, else 'partitioned'; any
-    other value passes through."""
-    if how != "auto":
-        return how
-    import pickle
-
-    from .frame import BROADCAST_LIMIT_BYTES
-
-    return (
-        "broadcast"
-        if len(pickle.dumps(layer)) <= BROADCAST_LIMIT_BYTES
-        else "partitioned"
     )
 
 
@@ -400,12 +382,12 @@ def _survivors_multimodal(narrow: DataFrame, layer: PolygonLayer,
     so the survivor stage has ZERO shuffle; image ids are unique per
     row (the curation contract), so this equals the groupBy-on-hits
     form exactly. Partitioned path: the hits fan out across cell
-    tasks, so the per-image aggregate still needs its one groupBy."""
+    tasks, so the per-image aggregate still needs its one groupBy.
+    `how` may be 'auto' (operators.pip_join._resolve_how)."""
+    how = _resolve_how(how, layer)
     if how == "broadcast":
         surv = pip_count_broadcast(narrow, layer, x=x, y=y, keep=keep)
     else:
-        from .operators.pip_join import pip_join
-
         hits = pip_join(narrow, layer, how=how, x=x, y=y, keep=keep)
         aggs = [
             F.first(c).alias(c) for c in keep if c != id_col
@@ -480,7 +462,6 @@ def curate_multimodal(images: DataFrame, layer: PolygonLayer,
     narrow, keep = _multimodal_narrow(
         images, embedding, id_col, caption, phash, content, x, y
     )
-    how = _resolve_how(how, layer)
     ok = _survivors_multimodal(
         narrow, layer, min_caption_tokens, how, keep, id_col, caption, x, y
     )
@@ -594,7 +575,6 @@ def curate_images_against(new_images: DataFrame, corpus: DataFrame,
     contract)."""
     narrow = new_images.select(id_col, caption, phash, y, x)
     keep = [id_col, caption, phash]
-    how = _resolve_how(how, layer)
     ok = _survivors_multimodal(
         narrow, layer, min_caption_tokens, how, keep, id_col, caption, x, y
     )

@@ -76,6 +76,30 @@ def test_partitioned_salted_matches(spark, layer, points):
     )
     assert base == salted
 
+    # > 64 hot cells: the hot set joins back as a broadcast frame (not a
+    # literal isin). 30k points on a 1/1000-degree grid over polygon 2's
+    # box (hole and polygon 5 included) at res 7.
+    from pyspark.sql import functions as F
+
+    from segment_rtree_spark.operators.pip_join import _hot_cells
+    from segment_rtree_spark.tiles import cell_of_sql
+
+    dense = spark.range(30_000).select(
+        F.col("id").alias("image_id"),
+        (F.pmod(F.xxhash64("id"), 20_000) / 1000.0 - 10.0).alias("lng"),
+        (F.pmod(F.xxhash64("id", F.lit(1)), 20_000) / 1000.0 - 10.0).alias("lat"),
+    )
+    hot = _hot_cells(dense.withColumn("cell", F.expr(cell_of_sql("lat", "lng", 7))), "image_id", 50)
+    assert len(hot) > 64
+    b = _collect_pairs(pip_join_broadcast(dense, layer, keep=["image_id"]))
+    p = _collect_pairs(
+        pip_join_partitioned(
+            dense, layer, keep=["image_id"], res=7, salt_threshold=50, n_salt=4
+        )
+    )
+    assert b == p
+    assert len(b) > 20_000
+
 
 def test_hot_cells_independent_of_partitioning(spark, points):
     """The salting probe picks rows by hash of the salted column, so the
@@ -162,19 +186,24 @@ def test_relation_values(spark, layer, points):
     assert pairs == [("probe", 5, "interior")]
 
 
-def test_broadcast_layer_is_slim():
-    """The broadcast kernels ship PolygonLayer._slim(): no `polygons`
-    (whose per-ring trees duplicate the ring arena), well under the
-    full layer's pickled size, the same length and the same PIP."""
+def _layer_with_africa():
     import os
-    import pickle
 
     from segment_rtree_spark.sources.wkt import parse_wkt_file_polygons
 
     africa = os.path.join(os.path.dirname(__file__), "..", "data", "wkt", "africa.wkt")
-    full = PolygonLayer.from_ring_rows(
+    return PolygonLayer.from_ring_rows(
         LAYER_ROWS + [(100 + pid, *rest) for pid, *rest in parse_wkt_file_polygons(africa)]
     )
+
+
+def test_broadcast_layer_is_slim():
+    """The broadcast kernels ship PolygonLayer._slim(): no `polygons`
+    (whose per-ring trees duplicate the ring arena), well under the
+    full layer's pickled size, the same length and the same PIP."""
+    import pickle
+
+    full = _layer_with_africa()
     slim = full._slim()
     assert not hasattr(slim, "polygons") and hasattr(full, "polygons")
     assert len(slim) == len(full) == len(full.polygons)
@@ -183,3 +212,29 @@ def test_broadcast_layer_is_slim():
     px, py = rng.uniform(-20, 55, 2000), rng.uniform(-35, 50, 2000)
     for a, b in zip(pickle.loads(pickle.dumps(slim)).pip(px, py), full.pip(px, py)):
         assert np.array_equal(a, b)
+
+
+def test_auto_measures_slim_layer(monkeypatch):
+    """how='auto' sizes the pack the broadcast kernels ship (the slim
+    layer), not the full layer: with BROADCAST_LIMIT_BYTES between the
+    two pickled sizes it broadcasts, below the slim size it partitions.
+    SpatialFrame.pip_join and the curation pipelines resolve 'auto'
+    through the same rule."""
+    import pickle
+
+    from segment_rtree_spark.frame import SpatialFrame
+    from segment_rtree_spark.operators import pip_join as pj
+
+    full = _layer_with_africa()
+    slim_n, full_n = len(pickle.dumps(full._slim())), len(pickle.dumps(full))
+    assert slim_n < full_n
+    monkeypatch.setattr(pj, "pip_join_broadcast", lambda points, layer, **kw: "broadcast")
+    monkeypatch.setattr(pj, "pip_join_partitioned", lambda points, layer, **kw: "partitioned")
+
+    monkeypatch.setattr(pj, "BROADCAST_LIMIT_BYTES", (slim_n + full_n) // 2)
+    assert pj.pip_join(None, full, how="auto", res=6) == "broadcast"
+    assert SpatialFrame(None).pip_join(full).df == "broadcast"
+
+    monkeypatch.setattr(pj, "BROADCAST_LIMIT_BYTES", slim_n - 1)
+    assert pj.pip_join(None, full, how="auto", res=6) == "partitioned"
+    assert SpatialFrame(None).pip_join(full).df == "partitioned"

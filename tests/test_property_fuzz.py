@@ -69,20 +69,66 @@ def brute_relation(px, py, xs, ys):
     return rel
 
 
+def star_holes(rng, xs, ys, k: int):
+    """k (0-2) star holes inside the star ring (xs, ys), as (xs, ys)
+    rings. When the ring holds its centre, the disc of radius d (the
+    centre's distance to the ring) lies inside it; hole j sits at
+    +-0.45d on the x axis with radius <= 0.4d, so the holes are
+    disjoint, inside, and clear of the centre. No holes when the
+    centre is not interior (no such disc)."""
+    from segment_rtree_spark.kernels.pip import _point_segment_dist2
+
+    if brute_relation(np.zeros(1), np.zeros(1), xs, ys)[0] != INTERIOR:
+        return []
+    d = np.sqrt(_point_segment_dist2(0.0, 0.0, xs[:-1], ys[:-1], xs[1:], ys[1:]).min())
+    holes = []
+    for j in range(k):
+        m = int(rng.integers(3, 12))
+        ang = 2 * np.pi * (np.arange(m) + rng.uniform(-0.3, 0.3, m)) / m
+        r = rng.uniform(0.1, 0.4, m) * d
+        hx = np.round(((-1) ** j * 0.45 * d + r * np.cos(ang)) * 2**20) / 2**20
+        hy = np.round(r * np.sin(ang) * 2**20) / 2**20
+        holes.append((np.append(hx, hx[0]), np.append(hy, hy[0])))
+    return holes
+
+
 @settings(max_examples=40, deadline=None)
-@given(seed=st.integers(0, 10_000), n=st.integers(4, 120))
-def test_pip_matches_brute_winding(seed, n):
+@given(seed=st.integers(0, 10_000), n=st.integers(4, 120), n_holes=st.integers(0, 2))
+def test_pip_matches_brute_winding(seed, n, n_holes):
+    """points_in_ring on a star ring, and PolygonLayer.pip (the arena
+    pair relation every PIP join runs) on that ring with 0-2 star
+    holes at tree degrees 2 and 16, equal the brute-force winding
+    relation."""
+    from segment_rtree_spark.layer import PolygonLayer
+
     xs, ys = star_ring(seed, n)
     rng = np.random.default_rng(seed + 1)
+    holes = star_holes(rng, xs, ys, n_holes)
     px = rng.uniform(-12, 12, 200)
     py = rng.uniform(-12, 12, 200)
-    # include exact vertices (boundary hits) and the center (interior)
-    px = np.concatenate([px, xs[:3], [0.0]])
-    py = np.concatenate([py, ys[:3], [0.0]])
+    # include exact vertices (boundary hits), the center (interior), and
+    # per hole its first vertices (boundary) and centre (exterior)
+    px = np.concatenate([px, xs[:3], [0.0], *(h[0][:3] for h in holes),
+                         [h[0][:-1].mean() for h in holes]])
+    py = np.concatenate([py, ys[:3], [0.0], *(h[1][:3] for h in holes),
+                         [h[1][:-1].mean() for h in holes]])
     ring = PreparedRing(xs, ys)
     got = points_in_ring(px, py, ring)
     want = brute_relation(px, py, xs, ys)
     assert np.array_equal(got, want)
+
+    if holes:
+        hmax = np.max([brute_relation(px, py, hx, hy) for hx, hy in holes], axis=0)
+        inside = want == INTERIOR
+        want = np.where(inside & (hmax == INTERIOR), EXTERIOR,
+                        np.where(inside & (hmax == BOUNDARY), BOUNDARY, want))
+    rows = [(7, part, rx, ry) for part, (rx, ry) in enumerate([(xs, ys), *holes])]
+    for degree in (2, 16):
+        qi, pid, rel = PolygonLayer.from_ring_rows(rows, degree=degree).pip(px, py)
+        got = np.zeros(len(px), np.int8)
+        got[qi] = rel
+        assert np.array_equal(got, want)
+        assert (pid == 7).all() and len(np.unique(qi)) == len(qi)
 
 
 @settings(max_examples=40, deadline=None)
