@@ -8,12 +8,13 @@ string ('wav' container rows, 'pcm' headerless interleaved LE int16
 — the analog of fmt='raw').
 
 Design carried over from operators/images.py:
-* `validate_audio` is two-tier — every metadata-decidable verdict
-  (NULLs, format whitelist, positive metadata, pcm length equation,
-  RIFF signature) is a pure Catalyst column expression; only
-  structurally-plausible WAV rows enter the Arrow kernel, and a
-  clean pcm corpus pays ZERO Python. Errors are DATA (same taxonomy
-  codes as the image validator; reference errors.rs:5-47).
+* `validate_audio` runs the same two-tier payload validator as
+  `validate_images` (operators/validate.py): every metadata-decidable
+  verdict (NULLs, positive metadata, format whitelist, pcm length
+  equation, RIFF/WAVE signature) is a pure Catalyst column
+  expression; only structurally-plausible WAV rows enter the Arrow
+  kernel, and a clean pcm corpus pays ZERO Python. Errors are DATA
+  (the image validator's codes; reference errors.rs:5-47).
 * `audio_features` returns EXACT integer features (duration_ms,
   peak, energy = sum of squares, zcross, afp fingerprint), so the
   Spark/DuckDB oracle hash compare is bit-stable — no float
@@ -26,172 +27,71 @@ Design carried over from operators/images.py:
   rows (the audio analog of sample_video_frames: byte/array slicing
   only, decode of the sampled subset happens downstream).
 
-Row-conservation contract (learned the hard way from the webp route
-gap): the kernel route list is exactly the non-pcm formats the
-UnknownFormat prefilter admits, and the pytest suite pins output
-ids == input ids across all formats and error classes.
+Row conservation (learned from the webp route gap): the whitelist,
+the signature checks and the kernel route are all read from one
+format table, and the pytest suite pins output ids == input ids
+across all formats and error classes.
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..codec_errors import DimensionMismatchError
-from .images import (
-    IMG_ERR_BAD_SIGNATURE,
-    IMG_ERR_CODEC_UNAVAILABLE,
-    IMG_ERR_CORRUPT_STREAM,
+from .validate import (
     IMG_ERR_DIMENSION_MISMATCH,
-    IMG_ERR_INTERNAL,
     IMG_ERR_NULL_METADATA,
-    IMG_ERR_NULL_PAYLOAD,
-    IMG_ERR_TRUNCATED,
-    IMG_ERR_UNKNOWN_FORMAT,
+    _payload_verdicts,
 )
-
-_AUDIO_FMTS = ("wav", "pcm")
-_DECLINED_FMTS = ("mp3", "aac", "opus", "flac", "ogg")
 
 
 def validate_audio(audio: DataFrame) -> DataFrame:
     """(audio_id, ok, err_code, err_detail) — one verdict per input
-    row, errors as data. See the module docstring for the tier
-    split; the taxonomy codes are shared with validate_images so a
-    mixed-modality curation job filters one vocabulary."""
-    from struct import error as struct_error
-
+    row, errors as data. One run of the two-tier payload validator
+    (validate._payload_verdicts): pcm is the headerless lane (length
+    n_samples * channels * 2), wav names its RIFF/WAVE signature, and
+    the entropy-coded formats are declined (CodecUnavailable). The
+    codes are shared with validate_images so a mixed-modality
+    curation job filters one vocabulary."""
     from ..audioio import decode_audio
 
-    schema = "audio_id string, ok boolean, err_code string, err_detail string"
-
-    def _pre(code: str, detail) -> "F.Column":
-        return F.struct(F.lit(code).alias("c"), detail.alias("d"))
-
-    pcm_want = (
-        F.col("n_samples").cast("long") * F.col("channels").cast("long") * 2
-    )
-    pre = (
-        F.when(F.col("bytes").isNull(),
-               _pre(IMG_ERR_NULL_PAYLOAD, F.lit("bytes is NULL")))
-        .when(
-            F.col("fmt").isNull() | F.col("sr").isNull()
-            | F.col("n_samples").isNull() | F.col("channels").isNull(),
-            _pre(
-                IMG_ERR_NULL_METADATA,
-                F.format_string(
-                    "fmt=%s sr=%s n=%s ch=%s",
-                    F.coalesce(F.col("fmt"), F.lit("None")),
-                    F.coalesce(F.col("sr").cast("string"), F.lit("None")),
-                    F.coalesce(F.col("n_samples").cast("string"), F.lit("None")),
-                    F.coalesce(F.col("channels").cast("string"), F.lit("None")),
-                ),
+    fmt, sr, n, ch = (F.col(c) for c in ("fmt", "sr", "n_samples", "channels"))
+    rules = [
+        (
+            fmt.isNull() | sr.isNull() | n.isNull() | ch.isNull(),
+            IMG_ERR_NULL_METADATA,
+            F.format_string(
+                "fmt=%s sr=%s n=%s ch=%s",
+                F.coalesce(fmt, F.lit("None")),
+                F.coalesce(sr.cast("string"), F.lit("None")),
+                F.coalesce(n.cast("string"), F.lit("None")),
+                F.coalesce(ch.cast("string"), F.lit("None")),
             ),
-        )
-        .when(
-            (F.col("sr") <= 0) | (F.col("n_samples") <= 0)
-            | (F.col("channels") <= 0),
-            _pre(
-                IMG_ERR_DIMENSION_MISMATCH,
-                F.format_string(
-                    "sr=%d n_samples=%d channels=%d must be positive",
-                    F.col("sr"), F.col("n_samples"), F.col("channels"),
-                ),
+        ),
+        (
+            (sr <= 0) | (n <= 0) | (ch <= 0),
+            IMG_ERR_DIMENSION_MISMATCH,
+            F.format_string(
+                "sr=%d n_samples=%d channels=%d must be positive", sr, n, ch
             ),
-        )
-        .when(
-            # entropy-coded audio: VALID formats this engine has no
-            # decoder for (the audio analog of mp4/h264 on the image
-            # side) — CodecUnavailable, never UnknownFormat
-            F.col("fmt").isin(*_DECLINED_FMTS),
-            _pre(IMG_ERR_CODEC_UNAVAILABLE,
-                 F.concat(F.lit("fmt="), F.col("fmt"))),
-        )
-        .when(
-            ~F.col("fmt").isin(*_AUDIO_FMTS),
-            _pre(IMG_ERR_UNKNOWN_FORMAT,
-                 F.concat(F.lit("fmt="), F.col("fmt"))),
-        )
-        .when(
-            (F.col("fmt") == "pcm") & (F.length("bytes") != pcm_want),
-            _pre(
-                IMG_ERR_TRUNCATED,
-                F.format_string(
-                    "%d bytes, want %d", F.length("bytes"), pcm_want
-                ),
-            ),
-        )
-        .when(
-            (F.col("fmt") == "wav")
-            & (
-                (F.expr("substring(bytes, 1, 4)") != F.lit(b"RIFF"))
-                | (F.expr("substring(bytes, 9, 4)") != F.lit(b"WAVE"))
-            ),
-            _pre(IMG_ERR_BAD_SIGNATURE, F.lit("missing RIFF/WAVE signature")),
-        )
+        ),
+    ]
+    riff = (F.expr("substring(bytes, 1, 4)") != F.lit(b"RIFF")) | (
+        F.expr("substring(bytes, 9, 4)") != F.lit(b"WAVE")
     )
+    formats = {"wav": (riff, "missing RIFF/WAVE signature"), "pcm": None}
 
-    def kernel(batches):
-        for pdf in batches:
-            n = len(pdf)
-            ok = np.empty(n, bool)
-            codes, details = [], []
-            for r in range(n):
-                try:
-                    decode_audio(
-                        bytes(pdf["bytes"].iloc[r]),
-                        str(pdf["fmt"].iloc[r]),
-                        int(pdf["sr"].iloc[r]),
-                        int(pdf["n_samples"].iloc[r]),
-                        int(pdf["channels"].iloc[r]),
-                    )
-                    code, detail = None, None
-                except NotImplementedError as e:
-                    code, detail = IMG_ERR_CODEC_UNAVAILABLE, str(e)[:80]
-                except DimensionMismatchError as e:
-                    code, detail = IMG_ERR_DIMENSION_MISMATCH, str(e)[:80]
-                except (ValueError, IndexError, struct_error) as e:
-                    code, detail = IMG_ERR_CORRUPT_STREAM, str(e)[:80]
-                except Exception as e:  # contract: errors are DATA
-                    code, detail = IMG_ERR_INTERNAL, str(e)[:80]
-                ok[r] = code is None
-                codes.append(code)
-                details.append(detail)
-            yield pd.DataFrame(
-                {
-                    "audio_id": pdf["audio_id"].astype(str),
-                    "ok": ok,
-                    "err_code": pd.Series(codes, dtype="object"),
-                    "err_detail": pd.Series(details, dtype="object"),
-                }
-            )
+    def check(buf, fmt, sr, n, ch):
+        decode_audio(bytes(buf), str(fmt), int(sr), int(n), int(ch))
+        return None, None
 
-    src = audio.select(
-        "audio_id", "bytes", "fmt", "sr", "n_samples", "channels"
-    ).withColumn("pre", pre)
-    decided_err = src.filter(F.col("pre").isNotNull()).select(
-        F.col("audio_id").cast("string").alias("audio_id"),
-        F.lit(False).alias("ok"),
-        F.col("pre.c").alias("err_code"),
-        F.col("pre.d").alias("err_detail"),
+    # entropy-coded audio: valid formats with no decoder here
+    declined = ("mp3", "aac", "opus", "flac", "ogg")
+    return _payload_verdicts(
+        audio.select("audio_id", "bytes", "fmt", "sr", "n_samples", "channels"),
+        "audio_id", rules, declined, formats,
+        n.cast("long") * ch.cast("long") * 2, False, check,
     )
-    # pcm rows with the right length are fully valid (frombuffer +
-    # reshape cannot fail): pure Catalyst verdict. Only wav rows that
-    # passed the RIFF prefilter need the container walk + decode —
-    # the route list is exactly the prefilter whitelist minus pcm
-    decided_ok = src.filter(
-        F.col("pre").isNull() & (F.col("fmt") == "pcm")
-    ).select(
-        F.col("audio_id").cast("string").alias("audio_id"),
-        F.lit(True).alias("ok"),
-        F.lit(None).cast("string").alias("err_code"),
-        F.lit(None).cast("string").alias("err_detail"),
-    )
-    needs_kernel = F.col("pre").isNull() & (F.col("fmt") == "wav")
-    return decided_err.unionByName(
-        src.filter(needs_kernel).drop("pre").mapInPandas(kernel, schema)
-    ).unionByName(decided_ok)
 
 
 def audio_features(audio: DataFrame, n_windows: int = 64) -> DataFrame:

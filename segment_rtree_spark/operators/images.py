@@ -13,6 +13,12 @@ remaining external codecs (inter-frame video like mp4/h264, lossy
 VP8) raise NotImplementedError inside the same batch body: the
 distributed plumbing (schema, batching, partitioning) is identical
 and tested, only the codec call changes when the library exists.
+
+`validate_images` is the image run of the one two-tier payload
+validator (operators/validate.py): a format table (raw is the
+headerless lane, every other format names its signature) drives the
+Catalyst checks and the decode kernel's route; decoder exceptions map
+to the shared error codes, which stay importable from here.
 """
 
 from __future__ import annotations
@@ -22,6 +28,19 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..imageio import decode_image, encode_png, encode_raw, phash64
+from .validate import (  # noqa: F401  the codes are imported from here too
+    IMG_ERR_BAD_SIGNATURE,
+    IMG_ERR_CODEC_UNAVAILABLE,
+    IMG_ERR_CORRUPT_STREAM,
+    IMG_ERR_DIMENSION_MISMATCH,
+    IMG_ERR_INTERNAL,
+    IMG_ERR_NULL_METADATA,
+    IMG_ERR_NULL_PAYLOAD,
+    IMG_ERR_PHASH_MISMATCH,
+    IMG_ERR_TRUNCATED,
+    IMG_ERR_UNKNOWN_FORMAT,
+    _payload_verdicts,
+)
 
 __all__ = [
     "with_pixel_stats",
@@ -422,21 +441,6 @@ def psnr_refine_pairs(pairs: DataFrame, images: DataFrame,
     )
 
 
-# Error codes for validate_images, in check order (first failing check
-# wins — same error-precedence discipline as the geometry validator,
-# reference src/errors.rs / kernels/validity.py)
-IMG_ERR_CODEC_UNAVAILABLE = "CodecUnavailable"
-IMG_ERR_UNKNOWN_FORMAT = "UnknownFormat"
-IMG_ERR_TRUNCATED = "TruncatedPayload"
-IMG_ERR_BAD_SIGNATURE = "BadSignature"
-IMG_ERR_CORRUPT_STREAM = "CorruptStream"
-IMG_ERR_DIMENSION_MISMATCH = "DimensionMismatch"
-IMG_ERR_PHASH_MISMATCH = "PhashMismatch"
-IMG_ERR_NULL_PAYLOAD = "NullPayload"
-IMG_ERR_NULL_METADATA = "NullMetadata"
-IMG_ERR_INTERNAL = "InternalError"
-
-
 def validate_images(images: DataFrame, check_phash: bool = False) -> DataFrame:
     """Payload validity for the image table — errors as DATA, not
     exceptions, mirroring the geometry validator's contract
@@ -445,282 +449,91 @@ def validate_images(images: DataFrame, check_phash: bool = False) -> DataFrame:
     ingest job).
 
     Output: (image_id, ok, err_code, err_detail). Checks in order
-    (first failure wins): NULL payload/metadata, known format, payload
-    length / container signature, stream decode, decoded dimensions,
-    and optionally the stored phash against a recompute
-    (check_phash=True; uses the engine's standard phash64).
+    (first failure wins): NULL payload/metadata, positive dims, known
+    format, raw payload length / container signature, stream decode,
+    decoded dimensions, and optionally the stored phash against a
+    recompute (check_phash=True; uses the engine's standard phash64).
 
-    Two-tier plan: every metadata-decidable check (NULLs, format
-    whitelist, raw payload length, PNG signature) runs as pure
-    Catalyst column expressions at scan speed; only rows that NEED a
-    stream decode (structurally-valid PNGs, plus raw rows when
-    check_phash re-hashes pixels) enter the Arrow kernel. On a
-    mostly-clean raw corpus without phash checking, NO row pays the
-    Python round trip.
+    One run of the two-tier payload validator
+    (validate._payload_verdicts) over a format table: raw is the
+    headerless lane, every other format names its signature. The
+    metadata and signature checks are Catalyst expressions; only
+    rows that NEED a stream decode (the structurally-valid compressed
+    rows, plus raw rows when check_phash re-hashes pixels) enter the
+    Arrow kernel. On a mostly-clean raw corpus without phash checking,
+    NO row pays the Python round trip.
     """
-    import zlib
-    from struct import error as struct_error
-
     from pyspark.sql import functions as F
 
-    from ..codec_errors import DimensionMismatchError
-    from ..imageio import _PNG_SIG as PNG_SIG, phash64
+    from ..imageio import _PNG_SIG
 
-    schema = "image_id string, ok boolean, err_code string, err_detail string"
+    fmt, w, h = F.col("fmt"), F.col("w"), F.col("h")
 
-    def _pre(code: str, detail) -> "F.Column":
-        return F.struct(F.lit(code).alias("c"), detail.alias("d"))
+    def head(n: int, at: int = 1):
+        return F.expr(f"substring(bytes, {at}, {n})")
 
-    want_len = (F.col("w").cast("long") * F.col("h").cast("long") * 3)
-    pre = (
-        F.when(F.col("bytes").isNull(), _pre(IMG_ERR_NULL_PAYLOAD, F.lit("bytes is NULL")))
-        .when(
-            F.col("fmt").isNull() | F.col("w").isNull() | F.col("h").isNull(),
-            _pre(
-                IMG_ERR_NULL_METADATA,
-                F.format_string(
-                    "fmt=%s w=%s h=%s",
-                    F.coalesce(F.concat(F.lit("'"), F.col("fmt"), F.lit("'")), F.lit("None")),
-                    F.coalesce(F.col("w").cast("string"), F.lit("None")),
-                    F.coalesce(F.col("h").cast("string"), F.lit("None")),
-                ),
+    rules = [
+        (
+            fmt.isNull() | w.isNull() | h.isNull(),
+            IMG_ERR_NULL_METADATA,
+            F.format_string(
+                "fmt=%s w=%s h=%s",
+                F.coalesce(F.concat(F.lit("'"), fmt, F.lit("'")), F.lit("None")),
+                F.coalesce(w.cast("string"), F.lit("None")),
+                F.coalesce(h.cast("string"), F.lit("None")),
             ),
-        )
-        .when(
-            # non-positive dims before any length equation: w=-1,h=-1
-            # with 3 payload bytes satisfies length==w*h*3, but the
-            # decode contract (reshape to (h,w,3)) can never hold —
-            # the Catalyst tier must agree with the kernel tier on
-            # pathological metadata, not just clean rows
-            (F.col("w") <= 0) | (F.col("h") <= 0),
-            _pre(
-                IMG_ERR_DIMENSION_MISMATCH,
-                F.format_string(
-                    "w=%d h=%d must be positive", F.col("w"), F.col("h")
-                ),
-            ),
-        )
-        .when(
-            # inter-frame video codecs: VALID formats this engine has
-            # no still-frame decoder for (webp graduated to a real
-            # codec in round 6, as tiff did in r5 and jpeg in r4)
-            F.col("fmt").isin("mp4", "h264", "webm"),
-            _pre(IMG_ERR_CODEC_UNAVAILABLE, F.concat(F.lit("fmt="), F.col("fmt"))),
-        )
-        .when(
-            ~F.col("fmt").isin("raw", "png", "jpeg", "bmp", "gif", "tiff", "webp"),
-            _pre(IMG_ERR_UNKNOWN_FORMAT, F.concat(F.lit("fmt="), F.col("fmt"))),
-        )
-        .when(
-            (F.col("fmt") == "raw") & (F.length("bytes") != want_len),
-            _pre(
-                IMG_ERR_TRUNCATED,
-                F.format_string("%d bytes, want %d", F.length("bytes"), want_len),
-            ),
-        )
-        .when(
-            (F.col("fmt") == "png")
-            & (F.expr("substring(bytes, 1, 8)") != F.lit(PNG_SIG)),
-            _pre(IMG_ERR_BAD_SIGNATURE, F.lit("missing PNG signature")),
-        )
-        .when(
-            (F.col("fmt") == "jpeg")
-            & (F.expr("substring(bytes, 1, 2)") != F.lit(b"\xff\xd8")),
-            _pre(IMG_ERR_BAD_SIGNATURE, F.lit("missing JPEG SOI")),
-        )
-        .when(
-            (F.col("fmt") == "bmp")
-            & (F.expr("substring(bytes, 1, 2)") != F.lit(b"BM")),
-            _pre(IMG_ERR_BAD_SIGNATURE, F.lit("missing BMP signature")),
-        )
-        .when(
-            (F.col("fmt") == "gif")
-            & (F.expr("substring(bytes, 1, 4)") != F.lit(b"GIF8")),
-            _pre(IMG_ERR_BAD_SIGNATURE, F.lit("missing GIF signature")),
-        )
-        .when(
-            (F.col("fmt") == "tiff")
-            & (F.expr("substring(bytes, 1, 4)") != F.lit(b"II\x2a\x00"))
-            & (F.expr("substring(bytes, 1, 4)") != F.lit(b"MM\x00\x2a")),
-            _pre(IMG_ERR_BAD_SIGNATURE, F.lit("missing TIFF signature")),
-        )
-        .when(
-            (F.col("fmt") == "webp")
-            & (
-                (F.expr("substring(bytes, 1, 4)") != F.lit(b"RIFF"))
-                | (F.expr("substring(bytes, 9, 4)") != F.lit(b"WEBP"))
-            ),
-            _pre(IMG_ERR_BAD_SIGNATURE, F.lit("missing WEBP signature")),
-        )
-    )
+        ),
+        # non-positive dims before any length equation: w=-1, h=-1
+        # with 3 payload bytes satisfies length == w*h*3, but the
+        # decode contract (reshape to (h, w, 3)) can never hold
+        (
+            (w <= 0) | (h <= 0),
+            IMG_ERR_DIMENSION_MISMATCH,
+            F.format_string("w=%d h=%d must be positive", w, h),
+        ),
+    ]
+    formats = {
+        "raw": None,
+        "png": (head(8) != F.lit(_PNG_SIG), "missing PNG signature"),
+        "jpeg": (head(2) != F.lit(b"\xff\xd8"), "missing JPEG SOI"),
+        "bmp": (head(2) != F.lit(b"BM"), "missing BMP signature"),
+        "gif": (head(4) != F.lit(b"GIF8"), "missing GIF signature"),
+        "tiff": (
+            (head(4) != F.lit(b"II\x2a\x00")) & (head(4) != F.lit(b"MM\x00\x2a")),
+            "missing TIFF signature",
+        ),
+        "webp": (
+            (head(4) != F.lit(b"RIFF")) | (head(4, 9) != F.lit(b"WEBP")),
+            "missing WEBP signature",
+        ),
+    }
 
-    def classify(buf, fmt, w, h, stored_phash):
-        if w <= 0 or h <= 0:  # mirrors the Catalyst prefilter exactly
-            return IMG_ERR_DIMENSION_MISMATCH, f"w={w} h={h} must be positive"
-        if fmt in ("mp4", "h264", "webm"):
-            return IMG_ERR_CODEC_UNAVAILABLE, f"fmt={fmt}"
-        if fmt not in ("raw", "png", "jpeg", "bmp", "gif", "tiff", "webp"):
-            return IMG_ERR_UNKNOWN_FORMAT, f"fmt={fmt}"
-        if fmt == "jpeg":
-            from ..jpegio import JPEG_SOI, JpegError, decode_jpeg
-
-            if buf[:2] != JPEG_SOI:
-                return IMG_ERR_BAD_SIGNATURE, "missing JPEG SOI"
-            try:
-                # expect pins SOF dims to the metadata BEFORE plane
-                # allocation — corrupt 16-bit dim fields would
-                # otherwise demand multi-GB buffers (executor OOM,
-                # not an errors-as-data row)
-                px = decode_jpeg(buf, expect=(w, h))
-            except NotImplementedError as e:
-                # a VALID T.81 family member this codec declines
-                # (arithmetic, lossless/hierarchical, 12-bit) is a
-                # codec gap, not corruption — same split as the
-                # png/bmp/gif/tiff branch below; progressive (SOF2)
-                # now DECODES and never lands here
-                return IMG_ERR_CODEC_UNAVAILABLE, str(e)[:80]
-            except DimensionMismatchError as e:
-                # SOF dims disagree with metadata: a metadata defect
-                # in a decodable file, checked pre-allocation (the
-                # subclass must be caught before its ValueError base)
-                return IMG_ERR_DIMENSION_MISMATCH, str(e)[:80]
-            except (JpegError, ValueError, IndexError, struct_error) as e:
-                # decode_jpeg raises JpegError for every corruption it
-                # can name; belt-and-braces for slice/unpack shapes a
-                # fuzzer finds first — still CorruptStream, never
-                # InternalError (the taxonomy contract)
-                return IMG_ERR_CORRUPT_STREAM, str(e)[:80]
-        elif fmt == "raw":
-            want = w * h * 3
-            if len(buf) != want:
-                return IMG_ERR_TRUNCATED, f"{len(buf)} bytes, want {want}"
-            px = np.frombuffer(buf, np.uint8).reshape(h, w, 3)
-        else:  # png / bmp / gif / tiff / webp
-            sig_ok = {
-                "png": buf[:8] == PNG_SIG,
-                "bmp": buf[:2] == b"BM",
-                "gif": buf[:4] == b"GIF8",
-                "tiff": buf[:4] in (b"II\x2a\x00", b"MM\x00\x2a"),
-                "webp": buf[:4] == b"RIFF" and buf[8:12] == b"WEBP",
-            }[fmt]
-            if not sig_ok:
-                return IMG_ERR_BAD_SIGNATURE, f"missing {fmt.upper()} signature"
-            try:
-                px = decode_image(buf, fmt, w, h)
-            except NotImplementedError as e:
-                # a VALID file this engine's decoder doesn't cover
-                # (lossy VP8 webp, planar/16-bit TIFF) is a codec gap, not
-                # corruption — the taxonomy keeps the two apart so a
-                # curation job can route them differently
-                return IMG_ERR_CODEC_UNAVAILABLE, str(e)[:80]
-            except DimensionMismatchError as e:
-                # header dims disagree with metadata (pre-allocation
-                # check in every decoder): metadata defect, not
-                # stream corruption
-                return IMG_ERR_DIMENSION_MISMATCH, str(e)[:80]
-            except (zlib.error, ValueError, IndexError, struct_error) as e:
-                return IMG_ERR_CORRUPT_STREAM, str(e)[:80]
+    def check(buf, fmt, w, h, phash=0, phash_null=True):
+        w, h = int(w), int(h)
+        # every decoder pins its header dims to (w, h) before plane
+        # allocation (DimensionMismatchError): corrupt 16-bit dim
+        # fields would otherwise demand multi-GB buffers
+        px = decode_image(bytes(buf), str(fmt), w, h)
         if px.shape != (h, w, 3):
             return IMG_ERR_DIMENSION_MISMATCH, f"{px.shape} != ({h}, {w}, 3)"
-        if check_phash and stored_phash is not None:
+        if not phash_null:
             got = phash64(px)
-            if int(got) != int(stored_phash):
-                return IMG_ERR_PHASH_MISMATCH, f"stored {stored_phash}, decoded {got}"
+            if int(got) != int(phash):
+                return IMG_ERR_PHASH_MISMATCH, f"stored {int(phash)}, decoded {got}"
         return None, None
-
-    def kernel(batches):
-        for pdf in batches:
-            n = len(pdf)
-            ok = np.empty(n, bool)
-            codes, details = [], []
-            has_ph = "phash" in pdf.columns
-            # column-wise extraction once per batch (per-row .iloc is
-            # one pandas positional lookup per field per row)
-            bufs = pdf["bytes"].to_numpy()
-            fmts = pdf["fmt"].to_numpy()
-            ws = pdf["w"].to_numpy()
-            hs = pdf["h"].to_numpy()
-            if has_ph:
-                ph_null = pdf["_phash_null"].to_numpy()
-                phs = pdf["phash"].to_numpy()
-            for r in range(n):
-                buf = bufs[r]
-                fmt = fmts[r]
-                wv, hv = ws[r], hs[r]
-                # phash arrives as (coalesced long, null flag), never a
-                # raw nullable long: Arrow->pandas widens a long column
-                # WITH nulls to float64, silently rounding any stored
-                # hash beyond 2^53 — a partially-phashed corpus would
-                # flag spurious PhashMismatch on every large hash
-                sp = None if not has_ph or ph_null[r] else int(phs[r])
-                if buf is None:
-                    code, detail = IMG_ERR_NULL_PAYLOAD, "bytes is NULL"
-                elif fmt is None or pd.isna(wv) or pd.isna(hv):
-                    code, detail = IMG_ERR_NULL_METADATA, (
-                        f"fmt={fmt!r} w={wv!r} h={hv!r}"
-                    )
-                else:
-                    try:
-                        code, detail = classify(
-                            bytes(buf), str(fmt), int(wv), int(hv), sp,
-                        )
-                    except Exception as e:  # contract: errors are DATA
-                        code, detail = IMG_ERR_INTERNAL, str(e)[:80]
-                ok[r] = code is None
-                codes.append(code)
-                details.append(detail)
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf["image_id"].astype(str),
-                    "ok": ok,
-                    "err_code": pd.Series(codes, dtype="object"),
-                    "err_detail": pd.Series(details, dtype="object"),
-                }
-            )
 
     cols = [F.col(c) for c in ("image_id", "bytes", "fmt", "w", "h")]
     if check_phash:
-        # split nullable long -> (coalesced long, flag) BEFORE the
-        # kernel boundary: see the Arrow float64-widening note there
+        # phash crosses as (coalesced long, null flag), never a raw
+        # nullable long: Arrow->pandas widens a long column WITH nulls
+        # to float64, silently rounding any stored hash beyond 2^53
         cols += [
             F.coalesce(F.col("phash"), F.lit(0)).alias("phash"),
             F.col("phash").isNull().alias("_phash_null"),
         ]
-    src = images.select(*cols).withColumn("pre", pre)
-    decided_err = src.filter(F.col("pre").isNotNull()).select(
-        F.col("image_id").cast("string").alias("image_id"),
-        F.lit(False).alias("ok"),
-        F.col("pre.c").alias("err_code"),
-        F.col("pre.d").alias("err_detail"),
+    # inter-frame video: valid formats with no still-frame decoder here
+    declined = ("mp4", "h264", "webm")
+    return _payload_verdicts(
+        images.select(*cols), "image_id", rules, declined, formats,
+        w.cast("long") * h.cast("long") * 3, check_phash, check,
     )
-    if check_phash:
-        # every structurally-valid row still decodes (phash recompute)
-        needs_kernel = F.col("pre").isNull()
-        decided_ok = None
-    else:
-        # raw rows with the right length are fully valid — reshape
-        # cannot fail and nothing else is checked: pure Catalyst verdict.
-        # compressed-format rows that passed the signature prefilter
-        # still need a stream decode to rule on CorruptStream / dims.
-        # This list must be exactly the non-raw formats the UnknownFormat
-        # prefilter admits: a format admitted there but missing here is
-        # silently DROPPED from the output (clean webp rows vanished
-        # between rounds 6 and 7 exactly this way — caught by the
-        # row-conservation test, now asserted for every format)
-        needs_kernel = F.col("pre").isNull() & F.col("fmt").isin(
-            "png", "jpeg", "bmp", "gif", "tiff", "webp"
-        )
-        decided_ok = src.filter(
-            F.col("pre").isNull() & (F.col("fmt") == "raw")
-        ).select(
-            F.col("image_id").cast("string").alias("image_id"),
-            F.lit(True).alias("ok"),
-            F.lit(None).cast("string").alias("err_code"),
-            F.lit(None).cast("string").alias("err_detail"),
-        )
-    out = decided_err.unionByName(
-        src.filter(needs_kernel).drop("pre").mapInPandas(kernel, schema)
-    )
-    if decided_ok is not None:
-        out = out.unionByName(decided_ok)
-    return out

@@ -436,6 +436,11 @@ def pip_join_partitioned_rings(
     )
 
 
+# pip_join_partitioned's options that pip_join_broadcast does not take:
+# pip_join drops them when the strategy resolves to broadcast
+_PARTITIONED_ONLY = ("res", "salt_threshold", "n_salt", "num_partitions", "prefilter")
+
+
 def _resolve_how(how: str, layer: PolygonLayer) -> str:
     """The PIP strategy for `how`: 'auto' picks 'broadcast' when the
     pickled slim layer (what the broadcast kernels ship) fits
@@ -459,9 +464,7 @@ def pip_join(
     (see _resolve_how)."""
     how = _resolve_how(how, layer)
     if how == "broadcast":
-        kw.pop("res", None)
-        kw.pop("salt_threshold", None)
-        kw.pop("n_salt", None)
+        kw = {k: v for k, v in kw.items() if k not in _PARTITIONED_ONLY}
         return pip_join_broadcast(points, layer, **kw)
     if how == "partitioned":
         return pip_join_partitioned(points, layer, **kw)

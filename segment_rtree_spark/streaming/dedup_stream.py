@@ -28,18 +28,50 @@ from pyspark.sql.types import (
 
 __all__ = ["streaming_first_seen", "streaming_first_seen_images"]
 
-OUT_SCHEMA = StructType(
-    [
-        StructField("text_hash", StringType()),
-        StructField("canonical_id", LongType()),
+
+def _first_seen(keyed: DataFrame, key: StructField, id_type) -> DataFrame:
+    """The first-seen state machine over `keyed` rows (key, _id): one
+    row per (key, micro-batch-with-arrivals) with the canonical id (the
+    smallest id of the earliest batch holding the key), the running
+    count and whether this batch introduced the key."""
+    to_key = int if isinstance(key.dataType, LongType) else str
+    to_id = int if isinstance(id_type, LongType) else str
+    out_schema = StructType([
+        key,
+        StructField("canonical_id", id_type),
         StructField("n_seen", LongType()),
         StructField("is_new", BooleanType()),
-    ]
-)
+    ])
+    state_schema = StructType(
+        [StructField("canonical_id", id_type), StructField("n_seen", LongType())]
+    )
 
-STATE_SCHEMA = StructType(
-    [StructField("canonical_id", LongType()), StructField("n_seen", LongType())]
-)
+    def fn(k, pdfs, state: GroupState):
+        import pandas as pd
+
+        mins, batch_n = [], 0
+        for pdf in pdfs:
+            if len(pdf):
+                mins.append(to_id(pdf["_id"].min()))
+                batch_n += len(pdf)
+        if batch_n == 0:
+            return
+        is_new = not state.exists
+        canonical, n_seen = (min(mins), 0) if is_new else state.get
+        n_seen += batch_n
+        state.update((to_id(canonical), int(n_seen)))
+        yield pd.DataFrame(
+            {
+                key.name: [to_key(k[0])],
+                "canonical_id": [to_id(canonical)],
+                "n_seen": [int(n_seen)],
+                "is_new": [is_new],
+            }
+        )
+
+    return keyed.groupBy(key.name).applyInPandasWithState(
+        fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+    )
 
 
 def streaming_first_seen(
@@ -50,59 +82,13 @@ def streaming_first_seen(
     Emits one row per (hash, micro-batch-with-arrivals): the canonical
     (first-seen) id, the running duplicate count, and whether this
     batch introduced the hash. Filter `is_new` for the pass-through
-    stream; the full feed is the dup-pressure metric stream.
+    stream; the full feed is the dup-pressure metric stream. Output:
+    (text_hash string, canonical_id long, n_seen long, is_new boolean).
     """
     hashed = docs.select(
         F.md5(F.col(text)).alias("text_hash"), F.col(id_col).alias("_id")
     )
-
-    def fn(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        batch_min = None
-        batch_n = 0
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            m = int(pdf["_id"].min())
-            batch_min = m if batch_min is None else min(batch_min, m)
-            batch_n += len(pdf)
-        if batch_n == 0:
-            return
-        if state.exists:
-            canonical, n_seen = state.get
-            is_new = False
-        else:
-            canonical, n_seen = batch_min, 0
-            is_new = True
-        n_seen += batch_n
-        state.update((int(canonical), int(n_seen)))
-        yield pd.DataFrame(
-            {
-                "text_hash": [key[0]],
-                "canonical_id": [int(canonical)],
-                "n_seen": [int(n_seen)],
-                "is_new": [is_new],
-            }
-        )
-
-    return hashed.groupBy("text_hash").applyInPandasWithState(
-        fn, OUT_SCHEMA, STATE_SCHEMA, "update", GroupStateTimeout.NoTimeout
-    )
-
-
-IMG_OUT_SCHEMA = StructType(
-    [
-        StructField("phash", LongType()),
-        StructField("canonical_id", StringType()),
-        StructField("n_seen", LongType()),
-        StructField("is_new", BooleanType()),
-    ]
-)
-
-IMG_STATE_SCHEMA = StructType(
-    [StructField("canonical_id", StringType()), StructField("n_seen", LongType())]
-)
+    return _first_seen(hashed, StructField("text_hash", StringType()), LongType())
 
 
 def streaming_first_seen_images(
@@ -110,7 +96,8 @@ def streaming_first_seen_images(
 ) -> DataFrame:
     """Streaming exact-phash image dedup: first arrival of each 64-bit
     perceptual hash wins; later byte-identical (or hash-identical)
-    images count as duplicates.
+    images count as duplicates. Output: (phash long, canonical_id
+    string, n_seen long, is_new boolean).
 
     Same state machine as streaming_first_seen, keyed directly on the
     already-stored phash column — no decode in the stream path, so
@@ -121,37 +108,4 @@ def streaming_first_seen_images(
     split online/offline dedup work.
     """
     keyed = images.select(F.col(phash).alias("phash"), F.col(id_col).alias("_id"))
-
-    def fn(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        batch_min = None
-        batch_n = 0
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            m = str(pdf["_id"].min())
-            batch_min = m if batch_min is None else min(batch_min, m)
-            batch_n += len(pdf)
-        if batch_n == 0:
-            return
-        if state.exists:
-            canonical, n_seen = state.get
-            is_new = False
-        else:
-            canonical, n_seen = batch_min, 0
-            is_new = True
-        n_seen += batch_n
-        state.update((str(canonical), int(n_seen)))
-        yield pd.DataFrame(
-            {
-                "phash": [int(key[0])],
-                "canonical_id": [str(canonical)],
-                "n_seen": [int(n_seen)],
-                "is_new": [is_new],
-            }
-        )
-
-    return keyed.groupBy("phash").applyInPandasWithState(
-        fn, IMG_OUT_SCHEMA, IMG_STATE_SCHEMA, "update", GroupStateTimeout.NoTimeout
-    )
+    return _first_seen(keyed, StructField("phash", LongType()), StringType())

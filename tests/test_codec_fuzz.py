@@ -39,9 +39,10 @@ from segment_rtree_spark.imageio import (
     encode_tiff,
     encode_webp,
 )
-from segment_rtree_spark.jpegio import encode_jpeg
+from segment_rtree_spark.jpegio import JpegError, encode_jpeg
 
-# the validator's named catch set (operators/images.py classify):
+# the payload validators' named catch set (operators/validate.py
+# _decode_error_code):
 # JpegError and DimensionMismatchError are ValueError subclasses
 ALLOWED = (NotImplementedError, ValueError, IndexError, struct.error,
            zlib.error)
@@ -150,6 +151,39 @@ def test_jpeg_dim_mismatch_classifies_dimension_mismatch(spark):
     got = validate_images(df).collect()[0]
     assert (got["ok"], got["err_code"]) == (False, "DimensionMismatch")
     assert "SOF" in got["err_detail"]
+
+
+def _raised(fn):
+    try:
+        fn()
+    except Exception as e:  # the exception a real decoder call raises
+        return e
+    raise AssertionError("no exception")
+
+
+@pytest.mark.parametrize(
+    "exc, code",
+    [
+        (NotImplementedError("lossy VP8"), "CodecUnavailable"),
+        (DimensionMismatchError("IHDR 9x9 != metadata 8x8"), "DimensionMismatch"),
+        (JpegError("bad marker"), "CorruptStream"),
+        (ValueError("truncated"), "CorruptStream"),
+        (_raised(lambda: b""[3]), "CorruptStream"),
+        (_raised(lambda: struct.unpack_from("<I", b"\x00")), "CorruptStream"),
+        (_raised(lambda: zlib.decompress(b"not deflate")), "CorruptStream"),
+        (KeyError("tag"), "InternalError"),
+    ],
+    ids=["NotImplementedError", "DimensionMismatchError", "JpegError", "ValueError",
+         "IndexError", "struct.error", "zlib.error", "KeyError"],
+)
+def test_decode_error_code_taxonomy(exc, code):
+    """The one exception-to-code map both payload validators apply
+    (no Spark): a declined codec, a header/metadata disagreement (a
+    ValueError subclass, so it must win over CorruptStream), malformed
+    bytes, and anything else as InternalError."""
+    from segment_rtree_spark.operators.validate import _decode_error_code
+
+    assert _decode_error_code(exc) == code
 
 
 def test_png_idat_bomb_rejected_at_cap():

@@ -238,3 +238,18 @@ def test_auto_measures_slim_layer(monkeypatch):
     monkeypatch.setattr(pj, "BROADCAST_LIMIT_BYTES", slim_n - 1)
     assert pj.pip_join(None, full, how="auto", res=6) == "partitioned"
     assert SpatialFrame(None).pip_join(full).df == "partitioned"
+
+
+def test_auto_broadcast_drops_partitioned_options(spark, layer, points):
+    """A layer that resolves to broadcast ignores the partitioned-only
+    options (they used to reach pip_join_broadcast as unexpected
+    keywords), through pip_join and SpatialFrame.pip_join alike."""
+    from segment_rtree_spark.frame import SpatialFrame
+    from segment_rtree_spark.operators.pip_join import pip_join
+
+    want = _collect_pairs(pip_join_broadcast(points, layer, keep=["image_id"]))
+    opts = dict(res=6, salt_threshold=10, n_salt=4, num_partitions=8, prefilter=True)
+    got = pip_join(points, layer, how="auto", keep=["image_id"], **opts)
+    assert _collect_pairs(got) == want
+    sf = SpatialFrame(points).pip_join(layer, keep=["image_id"], num_partitions=8)
+    assert _collect_pairs(sf.df) == want
