@@ -176,5 +176,6 @@ def clip_path(xmin, ymin, xmax, ymax, xs, ys, tree: PackedSegTree | None = None,
 
 
 def clip_ring_to_rect(ring, xmin, ymin, xmax, ymax):
-    """Clip a PreparedRing (kernels.pip) using its prebuilt tree."""
+    """Clip a ring view (kernels.pip.Ring, from RingArena.ring) using
+    its arena tree."""
     return clip_path(xmin, ymin, xmax, ymax, ring.xs, ring.ys, tree=ring.tree)

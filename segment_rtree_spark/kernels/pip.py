@@ -1,9 +1,9 @@
 """Batched winding-number point-in-polygon over packed segment R-trees.
 
-The flagship kernel: classifies a whole ARRAY of points against one
-ring / polygon per call with a level-synchronous frontier descent —
-no per-point Python. Behavioral parity with the reference
-(jagill/segment-rtree):
+The flagship kernel: every ring of a layer lives in ONE node arena
+(RingArena), and a whole array of (point, ring) pairs is classified in
+one level-synchronous frontier descent — no per-point or per-ring
+Python. Behavioral parity with the reference (jagill/segment-rtree):
 
   * 3-valued result (exterior / boundary / interior):
       src/algorithms/point_in_polygon.rs:5-10
@@ -15,13 +15,15 @@ no per-point Python. Behavioral parity with the reference
     proof in reference segment_rtree.md:56-83
   * leaf winding with Boundary early-exit:    point_in_polygon.rs:52-58
   * hole logic (in-hole -> Exterior, on-hole -> Boundary):
-      point_in_polygon.rs:12-24
+      point_in_polygon.rs:12-24, in PolygonLayer._relations
 
 Relation encoding: int8 0=exterior, 1=boundary, 2=interior
 (RELATION_NAMES maps to the string column used at table level).
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 
@@ -33,9 +35,8 @@ __all__ = [
     "BOUNDARY",
     "INTERIOR",
     "RELATION_NAMES",
-    "PreparedRing",
-    "PreparedPolygon",
-    "points_in_ring",
+    "Ring",
+    "RingArena",
     "points_in_polygon",
 ]
 
@@ -45,148 +46,25 @@ INTERIOR = np.int8(2)
 RELATION_NAMES = np.array(["exterior", "boundary", "interior"])
 
 
-class PreparedRing:
-    """A closed ring with its packed segment tree (Prepared/Validated state).
+class Ring(NamedTuple):
+    """One closed ring of an arena: its coordinates and its packed
+    segment tree (the reference's LinearRing<Prepared>,
+    src/line_string.rs:34-44), all zero-copy slices of the arena."""
 
-    Mirrors LinearRing<Prepared> (reference src/linear_ring.rs,
-    src/line_string.rs:34-44): coords + degree-16 SegRTree built over
-    the ring's segments in chain order.
-    """
-
-    __slots__ = ("xs", "ys", "tree")
-
-    def __init__(self, xs, ys, degree: int = 16):
-        self.xs = np.ascontiguousarray(xs, dtype=np.float64)
-        self.ys = np.ascontiguousarray(ys, dtype=np.float64)
-        if len(self.xs) < 3 or self.xs[0] != self.xs[-1] or self.ys[0] != self.ys[-1]:
-            raise ValueError("ring must be closed with >= 3 distinct coordinates")
-        self.tree = PackedSegTree.from_coords(self.xs, self.ys, degree=degree)
-
-    def envelope(self):
-        return self.tree.envelope()
+    xs: np.ndarray
+    ys: np.ndarray
+    tree: PackedSegTree
 
 
-class PreparedPolygon:
-    """Shell + holes, each a PreparedRing (reference src/polygon.rs:7-26)."""
-
-    __slots__ = ("shell", "holes")
-
-    def __init__(self, shell: PreparedRing, holes=()):
-        self.shell = shell
-        self.holes = list(holes)
-
-    @classmethod
-    def from_arrays(cls, rings, degree: int = 16):
-        """rings: iterable of (xs, ys); first is the shell."""
-        rings = [PreparedRing(xs, ys, degree=degree) for xs, ys in rings]
-        return cls(rings[0], rings[1:])
-
-    def envelope(self):
-        return self.shell.envelope()
-
-
-def points_in_ring(px, py, ring: PreparedRing) -> np.ndarray:
-    """Batched point_in_loop (parity: point_in_polygon.rs:26-74).
-
-    Returns int8[len(px)] relations. Level-synchronous frontier:
-    each iteration classifies every live (point, node) pair at once —
-    right-of-point shortcut / leaf winding / child expansion are all
-    vectorized masks; winding sums accumulate via np.add.at.
-    """
+def points_in_polygon(px, py, polygon) -> np.ndarray:
+    """Batched point_in_polygon (parity: point_in_polygon.rs:12-24) of
+    every point against one polygon of a layer (a PolygonLayer polygon
+    view): the layer's pair relation on its own arena. Returns
+    int8[len(px)] relations."""
     px = np.asarray(px, dtype=np.float64)
     py = np.asarray(py, dtype=np.float64)
-    n = len(px)
-    out = np.full(n, EXTERIOR, dtype=np.int8)
-    if n == 0 or ring.tree.is_empty:
-        return out
-
-    xmin, ymin, xmax, ymax = ring.envelope()
-    live = (xmin <= px) & (px <= xmax) & (ymin <= py) & (py <= ymax)
-    if not live.any():
-        return out
-
-    t = ring.tree
-    xs, ys = ring.xs, ring.ys
-    wn = np.zeros(n, dtype=np.int64)
-    boundary = np.zeros(n, dtype=bool)
-
-    # frontier: (point id, node offset) at the current level
-    pid = np.nonzero(live)[0].astype(np.int64)
-    level = t.height
-    # root check_point_rect: x <= xmax && ymin <= y <= ymax
-    ridx = int(t.level_indices[level])
-    keep = (
-        (px[pid] <= t.xmax[ridx]) & (py[pid] >= t.ymin[ridx]) & (py[pid] <= t.ymax[ridx])
-    )
-    pid = pid[keep]
-    off = np.zeros(len(pid), np.int64)
-    d = t.degree
-
-    while len(pid) > 0:
-        idx = t.level_indices[level] + off
-        # Claim-1 shortcut: node strictly right of the point -> winding
-        # of virtual segment coords[low] -> coords[high]
-        right = t.xmin[idx] > px[pid]
-        if right.any():
-            rp = pid[right]
-            low, high = t.get_low_high(level, off[right])
-            w = winding_position(px[rp], py[rp], xs[low], ys[low], xs[high], ys[high])
-            np.add.at(wn, rp[w == WN_LEFT], 1)
-            np.add.at(wn, rp[w == WN_RIGHT], -1)
-            # WN_ON is unreachable here (point strictly left of node)
-            pid, off = pid[~right], off[~right]
-            if len(pid) == 0:
-                break
-
-        if level == 0:
-            w = winding_position(px[pid], py[pid], xs[off], ys[off], xs[off + 1], ys[off + 1])
-            boundary[pid[w == WN_ON]] = True
-            np.add.at(wn, pid[w == WN_LEFT], 1)
-            np.add.at(wn, pid[w == WN_RIGHT], -1)
-            break
-
-        # expand children passing check_point_rect
-        child_level = level - 1
-        cp = np.repeat(pid, d)
-        co = (off[:, None] * d + np.arange(d, dtype=np.int64)).ravel()
-        cap = int(t.level_indices[child_level + 1]) - int(t.level_indices[child_level])
-        valid = co < cap
-        cp, co = cp[valid], co[valid]
-        cidx = t.level_indices[child_level] + co
-        keep = (
-            (px[cp] <= t.xmax[cidx]) & (py[cp] >= t.ymin[cidx]) & (py[cp] <= t.ymax[cidx])
-        )
-        # drop points already known to be on the boundary
-        keep &= ~boundary[cp]
-        pid, off = cp[keep], co[keep]
-        level = child_level
-
-    out[(wn != 0) & ~boundary] = INTERIOR
-    out[boundary] = BOUNDARY
-    return out
-
-
-def points_in_polygon(px, py, polygon: PreparedPolygon) -> np.ndarray:
-    """Batched point_in_polygon (parity: point_in_polygon.rs:12-24).
-
-    Shell relation first; only shell-Interior points consult holes:
-    hole-Interior flips to Exterior, hole-Boundary to Boundary.
-    """
-    px = np.asarray(px, dtype=np.float64)
-    py = np.asarray(py, dtype=np.float64)
-    rel = points_in_ring(px, py, polygon.shell)
-    interior = rel == INTERIOR
-    if interior.any() and polygon.holes:
-        sel = np.nonzero(interior)[0]
-        for hole in polygon.holes:
-            if len(sel) == 0:
-                break
-            hrel = points_in_ring(px[sel], py[sel], hole)
-            rel[sel[hrel == INTERIOR]] = EXTERIOR
-            rel[sel[hrel == BOUNDARY]] = BOUNDARY
-            # points still Interior w.r.t. the polygon keep checking holes
-            sel = sel[hrel == EXTERIOR]
-    return rel
+    q = np.arange(len(px), dtype=np.int64)
+    return polygon.layer._relations(px, py, q, np.full(len(px), polygon.pos, np.int64))
 
 
 def _point_segment_dist2(px, py, x0, y0, x1, y1):
@@ -218,15 +96,18 @@ class RingArena:
     )
 
     def __init__(self, rings, degree: int = 16):
+        """Pack `rings`, (xs, ys) coordinate pairs: each closed (first
+        coordinate equals the last) with >= 3 coordinates."""
         self.degree = int(degree)
-        trees = [
-            r.tree if isinstance(r, PreparedRing) and r.tree.degree == degree
-            else PackedSegTree.from_coords(r.xs, r.ys, degree=degree)
-            for r in rings
-        ]
-        self.cxs = np.concatenate([r.xs for r in rings]) if rings else np.empty(0)
-        self.cys = np.concatenate([r.ys for r in rings]) if rings else np.empty(0)
-        self.coord_off = np.cumsum([0] + [len(r.xs) for r in rings]).astype(np.int64)
+        xs = [np.ascontiguousarray(r[0], dtype=np.float64) for r in rings]
+        ys = [np.ascontiguousarray(r[1], dtype=np.float64) for r in rings]
+        for x, y in zip(xs, ys):
+            if len(x) < 3 or x[0] != x[-1] or y[0] != y[-1]:
+                raise ValueError("ring must be closed with >= 3 coordinates")
+        trees = [PackedSegTree.from_coords(x, y, degree=degree) for x, y in zip(xs, ys)]
+        self.cxs = np.concatenate(xs) if xs else np.empty(0)
+        self.cys = np.concatenate(ys) if ys else np.empty(0)
+        self.coord_off = np.cumsum([0] + [len(x) for x in xs]).astype(np.int64)
         self.txmin = np.concatenate([t.xmin for t in trees]) if trees else np.empty(0)
         self.tymin = np.concatenate([t.ymin for t in trees]) if trees else np.empty(0)
         self.txmax = np.concatenate([t.xmax for t in trees]) if trees else np.empty(0)
@@ -238,6 +119,39 @@ class RingArena:
         self.li_off = np.cumsum([0] + [len(t.level_indices) for t in trees]).astype(np.int64)
         self.height = np.array([t.height for t in trees], dtype=np.int64)
         self.size = np.array([t.size for t in trees], dtype=np.int64)
+
+    @classmethod
+    def concat(cls, arenas):
+        """One arena of the rings of `arenas` (of one tree degree), in
+        order: their coordinate and node arrays concatenated and their
+        offsets shifted, no tree rebuilt (an arena is never modified,
+        so one arena is its own concatenation)."""
+        if len(arenas) < 2:
+            return arenas[0] if arenas else cls([])
+        out = cls.__new__(cls)
+        out.degree = arenas[0].degree
+        for name in ("cxs", "cys", "txmin", "tymin", "txmax", "tymax", "li_flat", "height", "size"):
+            setattr(out, name, np.concatenate([getattr(a, name) for a in arenas]))
+        for name in ("coord_off", "tree_off", "li_off"):
+            parts, shift = [np.zeros(1, np.int64)], 0
+            for a in arenas:
+                off = getattr(a, name)
+                parts.append(off[1:] + shift)
+                shift += int(off[-1])
+            setattr(out, name, np.concatenate(parts))
+        return out
+
+    def ring(self, r: int) -> Ring:
+        """Ring r as zero-copy slices of the arena: its coordinates and a
+        PackedSegTree over its node slice (equal to a tree built afresh
+        from those coordinates)."""
+        c0, c1 = self.coord_off[r], self.coord_off[r + 1]
+        t0, t1 = self.tree_off[r], self.tree_off[r + 1]
+        tree = PackedSegTree(
+            self.degree, self.size[r], self.li_flat[self.li_off[r]:self.li_off[r + 1]],
+            self.txmin[t0:t1], self.tymin[t0:t1], self.txmax[t0:t1], self.tymax[t0:t1],
+        )
+        return Ring(self.cxs[c0:c1], self.cys[c0:c1], tree)
 
     def __len__(self):
         return len(self.height)
@@ -260,8 +174,8 @@ class RingArena:
         """3-valued PIP for candidate pairs, all at once.
 
         px, py: point coords; pair_pt/pair_ring: int64 pair arrays.
-        Returns int8[len(pairs)] relations (same semantics as
-        points_in_ring, incl. Claim-1 shortcut and Boundary early drop).
+        Returns int8[len(pairs)] relations of point vs ring, with the
+        Claim-1 shortcut and the Boundary early drop.
         """
         px = np.asarray(px, np.float64)
         py = np.asarray(py, np.float64)

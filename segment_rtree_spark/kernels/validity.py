@@ -225,16 +225,25 @@ def _find_nonequal_point(ring, needle):
 
 def validate_polygon(polygon) -> Optional[ValidationIssue]:
     """Polygon-level validity, assuming each ring already validated
-    (polygon_validation.rs:12-63). polygon: kernels.pip.PreparedPolygon."""
-    from .pip import points_in_ring, EXTERIOR, INTERIOR
+    (polygon_validation.rs:12-63). polygon: a PolygonLayer polygon
+    view; its rings are arena ring views, and a probe point's relation
+    to one ring is a one-pair arena descent (RingArena.query_pairs)."""
+    from .pip import EXTERIOR, INTERIOR
 
-    shell = polygon.shell
-    holes = polygon.holes
-    sxmin, symin, sxmax, symax = shell.envelope()
+    arena = polygon.layer.arena
+    ring_ids = polygon.ring_ids
+    shell, *holes = (arena.ring(r) for r in ring_ids)
+
+    def relation(x, y, k):
+        """Relation of point (x, y) to the polygon's ring k (0 = shell)."""
+        one = np.zeros(1, np.int64)
+        return arena.query_pairs(np.array([x]), np.array([y]), one, one + ring_ids[k])[0]
+
+    sxmin, symin, sxmax, symax = shell.tree.envelope()
     intersections: set[tuple[int, int]] = set()
 
     for i, hole in enumerate(holes):
-        hxmin, hymin, hxmax, hymax = hole.envelope()
+        hxmin, hymin, hxmax, hymax = hole.tree.envelope()
         same_env = (sxmin == hxmin and symin == hymin and sxmax == hxmax and symax == hymax)
         contained = (sxmin <= hxmin and sxmax >= hxmax and symin <= hymin and symax >= hymax)
         if same_env or not contained:
@@ -247,12 +256,12 @@ def validate_polygon(polygon) -> Optional[ValidationIssue]:
             intersections.add((0, i + 1))
 
         px, py = _find_nonequal_point(hole, isxn)
-        if points_in_ring(np.array([px]), np.array([py]), shell)[0] == EXTERIOR:
+        if relation(px, py, 0) == EXTERIOR:
             return ValidationIssue("HoleNotValid")
 
         for j in range(i):
             other = holes[j]
-            oxmin, oymin, oxmax, oymax = other.envelope()
+            oxmin, oymin, oxmax, oymax = other.tree.envelope()
             if not (hxmin <= oxmax and hxmax >= oxmin and hymin <= oymax and hymax >= oymin):
                 continue
             isxn2, err = _find_intersecting_point(hole, other)
@@ -261,10 +270,10 @@ def validate_polygon(polygon) -> Optional[ValidationIssue]:
             if isxn2 is not None:
                 intersections.add((i + 1, j + 1))
             px, py = _find_nonequal_point(hole, isxn2)
-            if points_in_ring(np.array([px]), np.array([py]), other)[0] == INTERIOR:
+            if relation(px, py, j + 1) == INTERIOR:
                 return ValidationIssue("HoleNotValid")
             px, py = _find_nonequal_point(other, isxn2)
-            if points_in_ring(np.array([px]), np.array([py]), hole)[0] == INTERIOR:
+            if relation(px, py, i + 1) == INTERIOR:
                 return ValidationIssue("HoleNotValid")
 
     if has_cycle(intersections):

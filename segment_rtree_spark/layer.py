@@ -1,29 +1,34 @@
-"""PolygonLayer: the prepared/broadcastable polygon side of every join.
+"""PolygonLayer: the polygon side of every join, stored as ONE ring arena.
 
 Mirrors the reference's Raw -> Prepared -> Validated typestate pipeline
 (src/geometry_state.rs, src/line_string.rs:34-44) at TABLE altitude:
-a layer is a list of polygons whose rings carry packed segment trees,
-plus a layer-level envelope index (the reference's Flatbush,
+every ring of the layer (each polygon's shell, then its holes) is
+packed once into one RingArena, coordinates and segment-tree nodes
+alike, beside a layer-level envelope index (the reference's Flatbush,
 src/flatbush/flatbush_impl.rs:40-63: Hilbert-sort by envelope center,
-then bottom-up pack — here reusing PackedSegTree for the packing).
+then bottom-up pack — here reusing PackedSegTree for the packing). No
+per-polygon object is stored: a polygon is its layer position, and
+`polygons` / `by_id` build (layer, position) views on demand whose
+rings are zero-copy arena slices.
 
-Small layers broadcast whole (sc.broadcast of the NumPy packs); large
-layers ship as the exploded (polygon_id, cell) cover table for the
-cell-partitioned join path. Both paths produce identical output rows
-(asserted in tests — the broadcast==partitioned equality gate).
+Small layers broadcast whole (sc.broadcast of the layer: its NumPy
+arrays); large layers ship as the exploded (polygon_id, cell) cover
+table for the cell-partitioned join path. Both paths produce identical
+output rows (asserted in tests — the broadcast==partitioned equality
+gate).
 """
 
 from __future__ import annotations
 
-import copy
+from typing import NamedTuple
 
 import numpy as np
 
 from .kernels.hilbert import HilbertScaler
-from .kernels.pip import BOUNDARY, EXTERIOR, INTERIOR, PreparedPolygon, RingArena
+from .kernels.pip import BOUNDARY, EXTERIOR, INTERIOR, RingArena
 from .kernels.segtree import PackedSegTree
 
-__all__ = ["PolygonLayer"]
+__all__ = ["PolygonLayer", "Polygon"]
 
 
 def _ragged_arange(cnt):
@@ -33,61 +38,82 @@ def _ragged_arange(cnt):
     return np.arange(int(cnt.sum()), dtype=np.int64) - np.repeat(starts, cnt)
 
 
-class PolygonLayer:
-    """Prepared polygon collection + envelope index.
+class Polygon(NamedTuple):
+    """Polygon `pos` of `layer`: a view that holds no geometry of its
+    own (reference src/polygon.rs:7-26 at layer altitude)."""
 
-    polygons: list[PreparedPolygon]; ids: int64 array of polygon ids.
-    The envelope index keeps Hilbert-sorted order with a permutation
-    back to layer positions (the reference Flatbush's node_indices,
-    flatbush_impl.rs:15-21).
+    layer: "PolygonLayer"
+    pos: int
+
+    @property
+    def ring_ids(self) -> range:
+        """The polygon's arena rings: its shell, then its holes."""
+        off = self.layer.hole_off
+        return range(self.pos + int(off[self.pos]), self.pos + 1 + int(off[self.pos + 1]))
+
+    @property
+    def rings(self) -> list:
+        """The polygon's rings as RingArena.ring views, shell first."""
+        return [self.layer.arena.ring(r) for r in self.ring_ids]
+
+
+class PolygonLayer:
+    """Polygon collection: ids, one ring arena, hole offsets, envelope
+    index.
+
+    ids: sorted, unique int64 polygon ids, one per layer position.
+    arena: every ring, polygon by polygon, each shell followed by its
+    holes; polygon k has hole_off[k+1] - hole_off[k] holes and its
+    shell is arena ring shell_ring[k] = k + hole_off[k].
+    xmin/ymin/xmax/ymax: polygon envelopes, read from each shell tree's
+    root node. The envelope index keeps Hilbert-sorted order with a
+    permutation back to layer positions (the reference Flatbush's
+    node_indices, flatbush_impl.rs:15-21).
     """
 
-    def __init__(self, ids, polygons, hilbert_sort: bool = True, degree: int = 16):
+    def __init__(self, ids, arena: RingArena, n_holes, hilbert_sort: bool = True):
+        """ids: sorted unique polygon ids; arena: their rings, shell
+        then holes per polygon; n_holes: each polygon's hole count."""
         self.ids = np.asarray(ids, dtype=np.int64)
-        self.polygons = list(polygons)
-        envs = np.array([p.envelope() for p in self.polygons], dtype=np.float64)
-        if len(envs) == 0:
-            envs = np.empty((0, 4))
-        self.xmin, self.ymin, self.xmax, self.ymax = (envs.T if len(envs) else (np.empty(0),) * 4)
+        if (self.ids[1:] <= self.ids[:-1]).any():
+            raise ValueError("polygon ids must be sorted and unique")
+        self.arena = arena
+        n = len(self.ids)
+        self.hole_off = np.zeros(n + 1, np.int64)
+        np.cumsum(np.asarray(n_holes, np.int64), out=self.hole_off[1:])
+        self.shell_ring = np.arange(n, dtype=np.int64) + self.hole_off[:-1]
+        root = arena._node_idx(self.shell_ring, arena.height[self.shell_ring], 0)
+        self.xmin, self.ymin, self.xmax, self.ymax = (
+            v[root] for v in (arena.txmin, arena.tymin, arena.txmax, arena.tymax)
+        )
 
-        if hilbert_sort and len(self.polygons) > 1:
+        if hilbert_sort and n > 1:
             exmin, eymin = self.xmin.min(), self.ymin.min()
             exmax, eymax = self.xmax.max(), self.ymax.max()
             scaler = HilbertScaler(exmin, eymin, exmax, eymax)
             keys = scaler.hilbert((self.xmin + self.xmax) / 2, (self.ymin + self.ymax) / 2)
             self.order = np.argsort(keys, kind="stable").astype(np.int64)
         else:
-            self.order = np.arange(len(self.polygons), dtype=np.int64)
+            self.order = np.arange(n, dtype=np.int64)
 
         self.index = PackedSegTree.build(
             self.xmin[self.order], self.ymin[self.order],
-            self.xmax[self.order], self.ymax[self.order], degree=degree,
+            self.xmax[self.order], self.ymax[self.order], degree=arena.degree,
         )
-
-        # ring arena: every ring (shells + holes) in one packed node
-        # space so PIP refinement is one batched descent per point batch
-        # (a polygon's holes follow its shell in the arena)
-        rings = [r for poly in self.polygons for r in (poly.shell, *poly.holes)]
-        n_holes = np.array([len(poly.holes) for poly in self.polygons], dtype=np.int64)
-        self.hole_off = np.concatenate([[0], np.cumsum(n_holes)]).astype(np.int64)
-        self.shell_ring = np.arange(len(self.polygons), dtype=np.int64) + self.hole_off[:-1]
-        self.arena = RingArena(rings, degree=degree)
 
     # -- construction -------------------------------------------------
 
     @classmethod
     def from_ring_rows(cls, rows, degree: int = 16, hilbert_sort: bool = True):
-        """rows: iterable of (polygon_id, part_id, xs, ys); part 0 = shell."""
+        """rows: iterable of (polygon_id, part_id, xs, ys); part 0 = shell.
+        Every ring must be closed with >= 3 coordinates (ValueError)."""
         grouped: dict[int, list] = {}
         for pid, part, xs, ys in rows:
             grouped.setdefault(int(pid), []).append((int(part), xs, ys))
-        ids, polys = [], []
-        for pid in sorted(grouped):
-            parts = sorted(grouped[pid], key=lambda t: t[0])
-            rings = [(np.asarray(xs, np.float64), np.asarray(ys, np.float64)) for _, xs, ys in parts]
-            ids.append(pid)
-            polys.append(PreparedPolygon.from_arrays(rings, degree=degree))
-        return cls(ids, polys, hilbert_sort=hilbert_sort, degree=degree)
+        ids = sorted(grouped)
+        polys = [sorted(grouped[pid], key=lambda t: t[0]) for pid in ids]
+        arena = RingArena([(xs, ys) for p in polys for _, xs, ys in p], degree=degree)
+        return cls(ids, arena, [len(p) - 1 for p in polys], hilbert_sort=hilbert_sort)
 
     @classmethod
     def from_wkt_file(cls, path: str, degree: int = 16):
@@ -99,15 +125,17 @@ class PolygonLayer:
     def __len__(self):
         return len(self.ids)
 
-    def _slim(self):
-        """This layer without `polygons` (nor the `by_id` map): what the
-        broadcast kernels read (index, envelopes, ids, ring arena), about
-        half the pickled size, as the per-ring trees of `polygons`
-        duplicate the arena."""
-        slim = copy.copy(self)
-        for name in ("polygons", "_id_pos"):
-            slim.__dict__.pop(name, None)
-        return slim
+    @property
+    def polygons(self) -> list:
+        """Every polygon as a view, in layer position order."""
+        return [Polygon(self, k) for k in range(len(self))]
+
+    def by_id(self, pid: int) -> Polygon:
+        """The view of polygon `pid` (KeyError if the layer has none)."""
+        k = int(np.searchsorted(self.ids, pid))
+        if k == len(self.ids) or self.ids[k] != pid:
+            raise KeyError(pid)
+        return Polygon(self, k)
 
     # -- query --------------------------------------------------------
 
@@ -179,11 +207,12 @@ class PolygonLayer:
         side of the partitioned PIP path. Every polygon's cells come
         from the one layer-wide BFS (`_cover`), sorted by layer
         position, then cell."""
-        pos, cells = self._cover(res)
+        pos, cells = self._cover(res, "intersect", np.arange(len(self), dtype=np.int64))
         return self.ids[pos], cells
 
-    def _cover(self, res: int, mode: str = "intersect"):
-        """(layer position, cell) pairs of the polyfill cover at res.
+    def _cover(self, res: int, mode: str, pos):
+        """(layer position, cell) pairs of the polyfill cover at res of
+        the polygons at layer positions `pos`.
 
         ONE level-synchronous BFS from the res-0 world cell over every
         (polygon, cell) frontier pair of the layer at once, the quadtree
@@ -205,13 +234,18 @@ class PolygonLayer:
 
         Returns int64 (position, cell) arrays sorted by position, then
         cell; a pair occurs once (each cell has one ancestor chain).
+        ValueError for res outside [0, MAX_RES] or another mode.
         """
         from .kernels.geom import clip_segments, rect_intersects
-        from .tiles import cell_bounds, cell_children
+        from .tiles import MAX_RES, cell_bounds, cell_children
 
+        if not 0 <= res <= MAX_RES:
+            raise ValueError(f"res must be in [0, {MAX_RES}]")
+        if mode not in ("intersect", "contained"):
+            raise ValueError(f"mode must be 'intersect' or 'contained', got {mode!r}")
         a = self.arena
-        pos = np.arange(len(self), dtype=np.int64)
-        cell = np.zeros(len(self), np.int64)  # the res-0 world cell
+        pos = np.asarray(pos, dtype=np.int64)
+        cell = np.zeros(len(pos), np.int64)  # the res-0 world cell
         out_pos, out_cell = [pos[:0]], [cell[:0]]
 
         for r in range(res + 1):
@@ -264,12 +298,3 @@ class PolygonLayer:
         pos, cell = np.concatenate(out_pos), np.concatenate(out_cell)
         order = np.lexsort((cell, pos))
         return pos[order], cell[order]
-
-    def by_id(self, pid: int) -> PreparedPolygon:
-        # lazy id->position map: per-pair lookups (overlap join, cover
-        # build) would otherwise linear-scan the id array per call
-        m = getattr(self, "_id_pos", None)
-        if m is None:
-            m = {int(i): k for k, i in enumerate(self.ids)}
-            self._id_pos = m
-        return self.polygons[m[int(pid)]]

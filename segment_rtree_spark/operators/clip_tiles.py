@@ -50,9 +50,7 @@ def clip_to_tiles(spark, layer: PolygonLayer, res: int,
             lngmin, latmin, lngmax, latmax = cell_bounds(cellv)
             for r in range(len(pdf)):
                 pid = int(pdf["polygon_id"].iloc[r])
-                poly = lyr.by_id(pid)
-                rings = [poly.shell] + list(poly.holes)
-                for part_id, ring in enumerate(rings):
+                for part_id, ring in enumerate(lyr.by_id(pid).rings):
                     paths = clip_ring_to_rect(
                         ring, lngmin[r], latmin[r], lngmax[r], latmax[r]
                     )

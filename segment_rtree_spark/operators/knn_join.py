@@ -4,15 +4,15 @@ The reference exposes the primitive (Flatbush::query_within,
 flatbush_impl.rs:154-157 — candidates within distance d); kNN is that
 distance join with a per-probe top-k. Two strategies:
 
-* broadcast ('broadcast'): the slim layer (PolygonLayer._slim: index,
-  envelopes, ring arena) is broadcast. Per Arrow batch, each radius
-  round of an expanding envelope-box search gathers (point, polygon)
-  candidates from the layer index, drops the ones that cannot rank
-  (envelope lower bound above the point's k-th shell-vertex upper
-  bound), and measures the rest with ONE pair relation (the sign:
-  interior points -> 0) and ONE pair distance descent over the ring
-  arena (RingArena.dist2_pairs: exact point-to-BOUNDARY segment
-  distances, all rings). Top-k is a lexsort per point. Distances are
+* broadcast ('broadcast'): the layer (index, envelopes, ring arena:
+  PolygonLayer stores nothing else) is broadcast. Per Arrow batch,
+  each radius round of an expanding envelope-box search gathers
+  (point, polygon) candidates from the layer index, drops the ones
+  that cannot rank (envelope lower bound above the point's k-th
+  shell-vertex upper bound), and measures the rest with ONE pair
+  relation (the sign: interior points -> 0) and ONE pair distance
+  descent over the ring arena (RingArena.dist2_pairs: exact
+  point-to-BOUNDARY segment distances, all rings). Top-k is a lexsort per point. Distances are
   euclidean in coordinate units.
 
 * sql ('centroid'): distances to polygon envelope centers only — a
@@ -29,7 +29,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..kernels.pip import INTERIOR, RingArena
+from ..kernels.pip import INTERIOR
 from ..layer import PolygonLayer
 
 __all__ = ["knn_join_broadcast", "knn_join_centroid", "haversine_col", "EARTH_RADIUS_KM"]
@@ -61,15 +61,14 @@ def _rank_in_group(g):
 
 
 def boundary_distance(px, py, polygon):
-    """Exact distance from each point to a polygon's boundary (all
-    rings): the pair distance descent (RingArena.dist2_pairs) over a
-    one-polygon arena, the minimum of the dense points x segments fold."""
+    """Exact distance from each point to the boundary (all rings) of a
+    polygon of a layer (a PolygonLayer polygon view): the layer's pair
+    distance descent (PolygonLayer._distances) on its own arena, the
+    minimum of the dense points x segments fold."""
     px = np.asarray(px, np.float64)
     py = np.asarray(py, np.float64)
-    arena = RingArena([polygon.shell, *polygon.holes], degree=polygon.shell.tree.degree)
-    pt = np.repeat(np.arange(len(px)), len(arena))
-    ring = np.tile(np.arange(len(arena)), len(px))
-    return np.sqrt(arena.dist2_pairs(px, py, pt, ring, pt, len(px)))
+    q = np.arange(len(px), dtype=np.int64)
+    return polygon.layer._distances(px, py, q, np.full(len(px), polygon.pos, np.int64))
 
 
 def knn_join_broadcast(
@@ -89,7 +88,7 @@ def knn_join_broadcast(
         [f"{c} {by_name[c]}" for c in keep] + ["polygon_id long", "dist double", "rank int"]
     )
     spark = points.sparkSession
-    blayer = spark.sparkContext.broadcast(layer._slim())
+    blayer = spark.sparkContext.broadcast(layer)
     kk = int(k)
 
     def kernel(batches):

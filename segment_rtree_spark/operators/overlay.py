@@ -36,13 +36,9 @@ __all__ = [
 ]
 
 
-def _rings(poly):
-    return [poly.shell] + list(poly.holes)
-
-
-def _boundaries_intersect(pa, pb) -> bool:
-    for ra in _rings(pa):
-        for rb in _rings(pb):
+def _boundaries_intersect(rings_a, rings_b) -> bool:
+    for ra in rings_a:
+        for rb in rings_b:
             ia, ib = ra.tree.query_other_intersections(rb.tree)
             if len(ia) == 0:
                 continue
@@ -94,11 +90,15 @@ def polygon_overlap_join(
 
 
 def _classify(pa_, pb_) -> str | None:
-    if _boundaries_intersect(pa_, pb_):
+    """Relation of two polygon views: 'boundary' (dual-tree descent over
+    their arena ring views + exact segment intersection), else 'a_in_b'
+    / 'b_in_a' by one shell vertex's relation to the other polygon."""
+    ra, rb = pa_.rings, pb_.rings
+    if _boundaries_intersect(ra, rb):
         return "boundary"
-    if points_in_polygon(pa_.shell.xs[:1], pa_.shell.ys[:1], pb_)[0] == INTERIOR:
+    if points_in_polygon(ra[0].xs[:1], ra[0].ys[:1], pb_)[0] == INTERIOR:
         return "a_in_b"
-    if points_in_polygon(pb_.shell.xs[:1], pb_.shell.ys[:1], pa_)[0] == INTERIOR:
+    if points_in_polygon(rb[0].xs[:1], rb[0].ys[:1], pa_)[0] == INTERIOR:
         return "b_in_a"
     return None
 
@@ -114,9 +114,10 @@ def polygon_overlap_join_packed(
     Each polygon's packed ring coordinates ride its own cover table;
     the cell equi-join carries both packs to the candidate pair, a
     first()-aggregate dedups pairs that share several cells (one pack
-    copy survives per pair), and the refine kernel rebuilds prepared
-    polygons executor-side with a per-process memo. Identical output
-    to polygon_overlap_join (tested); this is the 10^6 x 10^6 shape —
+    copy survives per pair), and the refine kernel unpacks each polygon
+    into a one-polygon layer executor-side with a per-process memo.
+    Identical output to polygon_overlap_join (tested); this is the
+    10^6 x 10^6 shape —
     wire cost is packs-per-candidate-pair, never a broadcast."""
     from .pip_join import _pack_polygon
 

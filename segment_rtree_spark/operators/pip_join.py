@@ -2,9 +2,9 @@
 
 Two physical strategies, identical output rows (tested):
 
-* broadcast ('broadcast'): the slim PolygonLayer pack (NumPy arrays:
-  envelope index, ids, ring arena; PolygonLayer._slim) ships to
-  executors via sc.broadcast; the probe side streams through
+* broadcast ('broadcast'): the PolygonLayer (its NumPy arrays:
+  envelope index, ids, ring arena) ships to executors via
+  sc.broadcast; the probe side streams through
   mapInArrow, each Arrow batch probed against the layer's envelope
   index then refined by the batched winding kernel. Zero shuffle of
   the (big) point side — the 10^12-row path when the layer fits in
@@ -27,7 +27,7 @@ Two physical strategies, identical output rows (tested):
 Semantics: emits (point passthrough cols..., polygon_id, relation) for
 relation in {'interior','boundary'}; exterior pairs are dropped.
 
-how='auto' (pip_join) broadcasts when the pickled slim layer fits
+how='auto' (pip_join) broadcasts when the pickled layer fits
 BROADCAST_LIMIT_BYTES, else takes the partitioned path.
 """
 
@@ -39,12 +39,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..kernels.pip import RELATION_NAMES
+from ..kernels.pip import RELATION_NAMES, RingArena
 from ..layer import PolygonLayer
 from ..tiles import cell_of_sql
 
-# layers whose pickled slim pack (what the broadcast kernels ship)
-# exceeds this take the cell-partitioned path instead (conservative
+# layers whose pickled size (what the broadcast kernels ship) exceeds
+# this take the cell-partitioned path instead (conservative
 # fraction of a typical executor heap)
 BROADCAST_LIMIT_BYTES = 256 << 20
 
@@ -108,7 +108,7 @@ def pip_join_broadcast(
     keep = list(keep) if keep is not None else [c for c in points.columns]
     schema = _result_schema(points, keep)
     spark = points.sparkSession
-    blayer = spark.sparkContext.broadcast(layer._slim())
+    blayer = spark.sparkContext.broadcast(layer)
     # column-prune BEFORE the UDF: the kernel ships every input column
     # through Arrow, so an unpruned image table would drag its pixel
     # blobs through the kernel for an id-only join output
@@ -143,7 +143,7 @@ def pip_count_broadcast(
     keep = list(keep) if keep is not None else list(points.columns)
     schema = _result_schema(points, keep, "n_regions long")
     spark = points.sparkSession
-    blayer = spark.sparkContext.broadcast(layer._slim())
+    blayer = spark.sparkContext.broadcast(layer)
     points = points.select(*dict.fromkeys([*keep, x, y]))
 
     def kernel(batches):
@@ -160,21 +160,22 @@ def pip_count_broadcast(
 
 
 def _pack_polygon(poly) -> bytes:
-    """Serialize a polygon's ring coordinate arrays (trees are rebuilt
-    executor-side and cached — coords are ~8x smaller than coords+tree)."""
+    """Serialize a polygon's ring coordinate arrays, shell first, with
+    no tree: coords are ~8x smaller than coords+tree, and executors
+    build each polygon's trees once per task (_unpack_polygon, memoized
+    by the refine kernels)."""
     import pickle
 
-    rings = [(r.xs, r.ys) for r in [poly.shell] + list(poly.holes)]
-    return pickle.dumps(rings, protocol=4)
+    return pickle.dumps([(r.xs, r.ys) for r in poly.rings], protocol=4)
 
 
 def _unpack_polygon(blob: bytes):
-    """The PreparedPolygon of a _pack_polygon blob (trees rebuilt)."""
+    """The polygon of a _pack_polygon blob: the one polygon of a layer
+    whose arena builds the ring trees."""
     import pickle
 
-    from ..kernels.pip import PreparedPolygon
-
-    return PreparedPolygon.from_arrays(pickle.loads(blob))
+    arena = RingArena(pickle.loads(blob))
+    return PolygonLayer([0], arena, [len(arena) - 1]).polygons[0]
 
 
 def pip_join_partitioned(
@@ -348,21 +349,26 @@ def _pip_cogroup(
     pts = pts.repartition(num_partitions, *group_keys)
     cover = cover.repartition(num_partitions, *group_keys)
 
-    _poly_cache: dict = {}
+    _arena_cache: dict = {}
 
     # one group (cell, or cell + salt) is one PolygonLayer.pip call over
     # a small layer of the group's cover polygons, the pair relation
-    # the broadcast kernels run; a polygon unpacks once per task (memo
-    # by id across groups). An empty side is an empty pip result.
+    # the broadcast kernels run; a polygon's ring trees are built once
+    # per task (memo of its one-polygon arena by id across groups) and
+    # a group's arena concatenates them. An empty side is an empty pip
+    # result.
     def refine(pts_tab, cov_tab):
         pids, first = np.unique(
             cov_tab.column("polygon_id").to_numpy(zero_copy_only=False), return_index=True
         )
         packs = cov_tab.column("pack").to_numpy(zero_copy_only=False)
         for pid, i in zip(pids.tolist(), first):
-            if pid not in _poly_cache:
-                _poly_cache[pid] = _unpack_polygon(packs[i])
-        lyr = PolygonLayer(pids, [_poly_cache[p] for p in pids.tolist()], hilbert_sort=False)
+            if pid not in _arena_cache:
+                _arena_cache[pid] = _unpack_polygon(packs[i]).layer.arena
+        arenas = [_arena_cache[p] for p in pids.tolist()]
+        lyr = PolygonLayer(
+            pids, RingArena.concat(arenas), [len(a) - 1 for a in arenas], hilbert_sort=False
+        )
         return _emit_hits(pts_tab, keep, *lyr.pip(*_xy(pts_tab, x, y)))
 
     return pts.groupBy(*group_keys).cogroup(cover.groupBy(*group_keys)).applyInArrow(
@@ -375,24 +381,20 @@ COVER_SCHEMA = "polygon_id long, cell long, pack binary"
 
 def cover_from_rings(rings: DataFrame, res: int) -> DataFrame:
     """DISTRIBUTED polyfill: (polygon_id, part_id, xs, ys) ring rows ->
-    (polygon_id, cell, pack) cover rows, BFS-refined per polygon inside
-    applyInPandas. No PolygonLayer ever exists on the driver, so the
+    (polygon_id, cell, pack) cover rows, the cover BFS of a one-polygon
+    layer per polygon inside applyInPandas. No PolygonLayer ever exists on the driver, so the
     partitioned PIP path works for layers of any cardinality — the
     10^6-polygon case a driver-side PolygonLayer can't serve."""
-    from ..tiles import polyfill as _polyfill
-
     def gen(pdf: pd.DataFrame) -> pd.DataFrame:
-        from ..kernels.pip import PreparedPolygon
-
-        pdf = pdf.sort_values("part_id")
-        poly = PreparedPolygon.from_arrays(zip(pdf["xs"], pdf["ys"]))
-        cells = _polyfill(poly, res)
-        pid = int(pdf["polygon_id"].iloc[0])
+        lyr = PolygonLayer.from_ring_rows(
+            zip(pdf["polygon_id"], pdf["part_id"], pdf["xs"], pdf["ys"])
+        )
+        pids, cells = lyr.cover_cells(res)
         return pd.DataFrame(
             {
-                "polygon_id": np.full(len(cells), pid, np.int64),
+                "polygon_id": pids,
                 "cell": cells,
-                "pack": [_pack_polygon(poly)] * len(cells),
+                "pack": [_pack_polygon(lyr.polygons[0])] * len(cells),
             }
         )
 
@@ -443,14 +445,14 @@ _PARTITIONED_ONLY = ("res", "salt_threshold", "n_salt", "num_partitions", "prefi
 
 def _resolve_how(how: str, layer: PolygonLayer) -> str:
     """The PIP strategy for `how`: 'auto' picks 'broadcast' when the
-    pickled slim layer (what the broadcast kernels ship) fits
+    pickled layer (what the broadcast kernels ship) fits
     BROADCAST_LIMIT_BYTES, else 'partitioned'; any other value passes
     through."""
     if how != "auto":
         return how
     import pickle
 
-    fits = len(pickle.dumps(layer._slim())) <= BROADCAST_LIMIT_BYTES
+    fits = len(pickle.dumps(layer)) <= BROADCAST_LIMIT_BYTES
     return "broadcast" if fits else "partitioned"
 
 

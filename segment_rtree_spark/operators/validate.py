@@ -39,22 +39,20 @@ def validate_polygons(rings: DataFrame) -> DataFrame:
     connectivity (validity.validate_polygon). Output: one row per
     polygon with the error struct (null = valid).
     """
-    from ..kernels.pip import PreparedPolygon
     from ..kernels.validity import validate_polygon, validate_ring
+    from ..layer import PolygonLayer
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         pid = int(pdf["polygon_id"].iloc[0])
         pdf = pdf.sort_values("part_id")
+        rows = list(zip(pdf["polygon_id"], pdf["part_id"], pdf["xs"], pdf["ys"]))
         issue = None
-        rings = []
-        for xs, ys in zip(pdf["xs"], pdf["ys"]):
+        for *_, xs, ys in rows:
             issue = validate_ring(np.asarray(xs), np.asarray(ys))
             if issue is not None:
                 break
-            rings.append((np.asarray(xs, np.float64), np.asarray(ys, np.float64)))
         if issue is None:
-            poly = PreparedPolygon.from_arrays(rings)
-            issue = validate_polygon(poly)
+            issue = validate_polygon(PolygonLayer.from_ring_rows(rows).polygons[0])
         e = issue
         return pd.DataFrame(
             {

@@ -828,7 +828,7 @@ def q_distance_join(spark, sf_dir):
     import numpy as np
 
     pts = _points(spark, sf_dir)
-    blayer = spark.sparkContext.broadcast(entry_layer()._slim())
+    blayer = spark.sparkContext.broadcast(entry_layer())
 
     def kernel(batches):
         lyr = blayer.value

@@ -157,18 +157,17 @@ def cell_prefix(cell, prefix_bits: int = 12):
 def polyfill(polygon, res: int, mode: str = "intersect") -> np.ndarray:
     """Cells at `res` that intersect (or are contained in) a polygon.
 
-    `polygon` is a kernels.pip.PreparedPolygon. mode='intersect' emits
-    every cell touching the polygon; mode='contained' only cells fully
-    inside. Runs the one layer-wide cover BFS (PolygonLayer._cover:
-    envelope prune, boundary-crossed cells split, cells with an interior
-    center and no crossing emit their whole subtree) on a one-polygon
-    layer, so every cover in the engine comes from the same code.
-    Returns sorted unique int64 cell ids.
+    `polygon` is a polygon of a layer (a PolygonLayer polygon view).
+    mode='intersect' emits every cell touching the polygon;
+    mode='contained' only cells fully inside. Runs the one cover BFS
+    (PolygonLayer._cover: envelope prune, boundary-crossed cells split,
+    cells with an interior center and no crossing emit their whole
+    subtree) on the layer's own arena, limited to the polygon's
+    position, so every cover in the engine comes from the same code.
+    Returns sorted unique int64 cell ids; ValueError for res outside
+    [0, MAX_RES] or another mode.
     """
-    from .layer import PolygonLayer
-
-    layer = PolygonLayer([0], [polygon], hilbert_sort=False, degree=polygon.shell.tree.degree)
-    return layer._cover(res, mode)[1]
+    return polygon.layer._cover(res, mode, [polygon.pos])[1]
 
 
 # ----------------------------------------------------------------------

@@ -36,7 +36,7 @@ def test_clip_to_tiles_matches_local(spark, layer):
         cells = polyfill(poly, res)
         for c in cells:
             lngmin, latmin, lngmax, latmax = (v.item() for v in cell_bounds(np.array([c])))
-            for part_id, ring in enumerate([poly.shell] + list(poly.holes)):
+            for part_id, ring in enumerate(poly.rings):
                 paths = clip_ring_to_rect(ring, lngmin, latmin, lngmax, latmax)
                 key = (int(c), int(pid), part_id)
                 if paths:

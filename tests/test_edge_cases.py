@@ -4,12 +4,14 @@ batches — the shapes a driver or production pipeline will hit."""
 import numpy as np
 import pandas as pd
 
-from segment_rtree_spark.kernels.pip import PreparedPolygon, RingArena, points_in_polygon
+import pytest
+
+from segment_rtree_spark.kernels.pip import RingArena, points_in_polygon
 from segment_rtree_spark.layer import PolygonLayer
 
 
 def test_empty_layer_pip():
-    layer = PolygonLayer([], [])
+    layer = PolygonLayer.from_ring_rows([])
     q, pid, rel = layer.pip(np.array([1.0, 2.0]), np.array([1.0, 2.0]))
     assert len(q) == 0 and len(pid) == 0
 
@@ -36,10 +38,22 @@ def test_empty_arena():
     assert len(rel) == 0
 
 
+def test_ring_input_check():
+    """Every ring entering a layer (hence its arena) is closed with >= 3
+    coordinates."""
+    with pytest.raises(ValueError, match="closed"):
+        PolygonLayer.from_ring_rows([(1, 0, [0.0, 0.0, 1.0, 1.0], [0.0, 1.0, 1.0, 0.0])])
+    with pytest.raises(ValueError, match="closed"):
+        PolygonLayer.from_ring_rows([(1, 0, [0.0, 0.0], [0.0, 0.0])])
+    shell = ([0.0, 0.0, 9.0, 9.0, 0.0], [0.0, 9.0, 9.0, 0.0, 0.0])
+    with pytest.raises(ValueError, match="closed"):
+        PolygonLayer.from_ring_rows([(1, 0, *shell), (1, 1, [1.0, 2.0, 2.0], [1.0, 2.0, 1.0])])
+
+
 def test_polygon_no_holes_pip():
-    poly = PreparedPolygon.from_arrays(
-        [(np.array([0.0, 0.0, 2.0, 2.0, 0.0]), np.array([0.0, 2.0, 2.0, 0.0, 0.0]))]
-    )
+    poly = PolygonLayer.from_ring_rows(
+        [(0, 0, np.array([0.0, 0.0, 2.0, 2.0, 0.0]), np.array([0.0, 2.0, 2.0, 0.0, 0.0]))]
+    ).polygons[0]
     rel = points_in_polygon(np.array([1.0]), np.array([1.0]), poly)
     assert rel[0] == 2
 

@@ -7,25 +7,49 @@ import pandas as pd
 import pytest
 
 from segment_rtree_spark.frame import SpatialFrame
-from segment_rtree_spark.kernels.pip import _point_segment_dist2
+from segment_rtree_spark.kernels.pip import BOUNDARY, EXTERIOR, INTERIOR, _point_segment_dist2
 from segment_rtree_spark.layer import PolygonLayer
 from segment_rtree_spark.operators.knn_join import boundary_distance, knn_join_broadcast
+from tests.test_property_fuzz import brute_relation
 
-LAYER = PolygonLayer.from_ring_rows(
-    [
-        (1, 0, [0.0, 0.0, 10.0, 10.0, 0.0], [0.0, 10.0, 10.0, 0.0, 0.0]),
-        (2, 0, [20.0, 20.0, 30.0, 30.0, 20.0], [0.0, 10.0, 10.0, 0.0, 0.0]),
-        (3, 0, [40.0, 40.0, 50.0, 50.0, 40.0], [0.0, 10.0, 10.0, 0.0, 0.0]),
-    ]
-)
+LAYER_ROWS = [
+    (1, 0, [0.0, 0.0, 10.0, 10.0, 0.0], [0.0, 10.0, 10.0, 0.0, 0.0]),
+    (2, 0, [20.0, 20.0, 30.0, 30.0, 20.0], [0.0, 10.0, 10.0, 0.0, 0.0]),
+    (3, 0, [40.0, 40.0, 50.0, 50.0, 40.0], [0.0, 10.0, 10.0, 0.0, 0.0]),
+]
+LAYER = PolygonLayer.from_ring_rows(LAYER_ROWS)
 
 
-def dense_boundary_distance(px, py, poly, chunk=256):
+def polygon_rings(rows):
+    """(sorted ids, each id's rings as (xs, ys), shell first) of ring
+    rows: the reference's own copy of the geometry, not the layer's."""
+    grouped: dict = {}
+    for pid, part, xs, ys in rows:
+        grouped.setdefault(int(pid), []).append(
+            (part, np.asarray(xs, float), np.asarray(ys, float))
+        )
+    ids = sorted(grouped)
+    return np.array(ids), [[r[1:] for r in sorted(grouped[i], key=lambda t: t[0])] for i in ids]
+
+
+def brute_polygon_relation(px, py, rings):
+    """Point-in-polygon by brute winding, no tree (brute_relation's
+    closed forms per ring): the shell's relation, then any hole Interior
+    -> Exterior, else any hole Boundary -> Boundary."""
+    rel = brute_relation(px, py, *rings[0])
+    if len(rings) > 1:
+        hmax = np.max([brute_relation(px, py, *h) for h in rings[1:]], axis=0)
+        inside = rel == INTERIOR
+        rel = np.where(inside & (hmax == INTERIOR), EXTERIOR,
+                       np.where(inside & (hmax == BOUNDARY), BOUNDARY, rel))
+    return rel
+
+
+def dense_boundary_distance(px, py, rings, chunk=256):
     """Boundary distance by the dense points x segments fold: every
-    segment of every ring, no tree."""
+    segment of every ring ((xs, ys) pairs), no tree."""
     best = np.full(len(px), np.inf)
-    for ring in [poly.shell, *poly.holes]:
-        xs, ys = ring.xs, ring.ys
+    for xs, ys in rings:
         for s in range(0, len(px), chunk):
             d2 = _point_segment_dist2(
                 px[s:s + chunk, None], py[s:s + chunk, None],
@@ -35,26 +59,26 @@ def dense_boundary_distance(px, py, poly, chunk=256):
     return np.sqrt(best)
 
 
-def dense_knn(px, py, layer, k, signed=True):
-    """(ids, dists) of each point's k nearest polygons from the dense
-    points x polygons distance matrix, ties by lower id."""
-    from segment_rtree_spark.kernels.pip import INTERIOR, points_in_polygon
-
-    dmat = np.empty((len(px), len(layer)))
-    for j, poly in enumerate(layer.polygons):
-        d = dense_boundary_distance(px, py, poly)
+def dense_knn(px, py, rows, k, signed=True):
+    """(ids, dists) of each point's k nearest polygons of ring rows from
+    the dense points x polygons distance matrix (sign by brute winding),
+    ties by lower id."""
+    ids, polys = polygon_rings(rows)
+    dmat = np.empty((len(px), len(ids)))
+    for j, rings in enumerate(polys):
+        d = dense_boundary_distance(px, py, rings)
         if signed:
-            d = np.where(points_in_polygon(px, py, poly) == INTERIOR, 0.0, d)
+            d = np.where(brute_polygon_relation(px, py, rings) == INTERIOR, 0.0, d)
         dmat[:, j] = d
-    order = np.lexsort((np.broadcast_to(layer.ids, dmat.shape), dmat), axis=1)[:, :k]
-    return layer.ids[order], np.take_along_axis(dmat, order, axis=1)
+    order = np.lexsort((np.broadcast_to(ids, dmat.shape), dmat), axis=1)[:, :k]
+    return ids[order], np.take_along_axis(dmat, order, axis=1)
 
 
-def assert_knn_matches_dense(out, px, py, layer, k, signed=True):
-    """Every point gets min(k, len(layer)) rows, equal in ids, ranks and
-    bit-exact dists to dense_knn."""
-    kc = min(k, len(layer))
-    want_ids, want_d = dense_knn(px, py, layer, kc, signed)
+def assert_knn_matches_dense(out, px, py, rows, k, signed=True):
+    """Every point gets min(k, polygon count) rows, equal in ids, ranks
+    and bit-exact dists to dense_knn over the layer's ring rows."""
+    kc = min(k, len({r[0] for r in rows}))
+    want_ids, want_d = dense_knn(px, py, rows, kc, signed)
     out = out.sort_values(["pid", "rank"]).reset_index(drop=True)
     assert len(out) == kc * len(px)
     for i in range(len(px)):
@@ -64,15 +88,15 @@ def assert_knn_matches_dense(out, px, py, layer, k, signed=True):
         assert np.array_equal(got["dist"].to_numpy(), want_d[i]), i
 
 
-def wkt_layer(*names):
-    """A layer over several corpus files, polygon ids offset per file."""
+def wkt_rows(*names):
+    """Ring rows of several corpus files, polygon ids offset per file."""
     from segment_rtree_spark.sources.wkt import parse_wkt_file_polygons
 
     rows = []
     for k, name in enumerate(names):
         path = os.path.join(os.path.dirname(__file__), "..", "data", "wkt", name + ".wkt")
         rows += [(1000 * k + pid, part, xs, ys) for pid, part, xs, ys in parse_wkt_file_polygons(path)]
-    return PolygonLayer.from_ring_rows(rows)
+    return rows
 
 
 @pytest.fixture(scope="module")
@@ -113,20 +137,22 @@ def test_knn_pruned_matches_dense_on_corpus(spark):
     """The expanding-radius index-pruned kNN must equal the dense
     all-polygons scan (which the reference's query_within would also
     refine to) on real geometry — africa + uk, 300 scattered points."""
-    layer = wkt_layer("africa", "uk")
+    rows = wkt_rows("africa", "uk")
+    layer = PolygonLayer.from_ring_rows(rows)
     rng = np.random.default_rng(11)
     px = rng.uniform(-25.0, 60.0, 300)
     py = rng.uniform(-40.0, 62.0, 300)
     pdf = pd.DataFrame({"pid": np.arange(300), "lng": px, "lat": py})
     out = knn_join_broadcast(spark.createDataFrame(pdf), layer, k=3, keep=["pid"]).toPandas()
-    assert_knn_matches_dense(out, px, py, layer, 3)
+    assert_knn_matches_dense(out, px, py, rows, 3)
 
 
 def test_knn_unsigned_matches_dense(spark):
     """signed=False: interior points keep their boundary distance (no 0
     for the containing polygon); equal to the dense unsigned fold on
     africa + uk + usa-lower48, 400 points spread over the three."""
-    layer = wkt_layer("africa", "uk", "usa-lower48")
+    rows = wkt_rows("africa", "uk", "usa-lower48")
+    layer = PolygonLayer.from_ring_rows(rows)
     rng = np.random.default_rng(12)
     boxes = [(-25.0, 60.0, -40.0, 45.0), (1190.0, 1390.0, 1180.0, 1400.0), (-130.0, -60.0, 20.0, 55.0)]
     which = rng.integers(0, 3, 400)
@@ -136,7 +162,7 @@ def test_knn_unsigned_matches_dense(spark):
     out = knn_join_broadcast(
         spark.createDataFrame(pdf), layer, k=3, keep=["pid"], signed=False
     ).toPandas()
-    assert_knn_matches_dense(out, px, py, layer, 3, signed=False)
+    assert_knn_matches_dense(out, px, py, rows, 3, signed=False)
     assert (out["dist"] > 0).all()
 
 
@@ -150,7 +176,7 @@ def test_knn_k_exceeds_layer(spark):
     py = np.array([5.0, 5.0, 5.0, 5.0, 2e20])
     pdf = pd.DataFrame({"pid": np.arange(5), "lng": px, "lat": py})
     out = knn_join_broadcast(spark.createDataFrame(pdf), LAYER, k=5, keep=["pid"]).toPandas()
-    assert_knn_matches_dense(out, px, py, LAYER, 5)
+    assert_knn_matches_dense(out, px, py, LAYER_ROWS, 5)
 
 
 def test_knn_prune_slack_near_tie(spark):
@@ -166,16 +192,17 @@ def test_knn_prune_slack_near_tie(spark):
         1000.9343347741406, 7.153889700231559, 2.9017183733847953,
     )
     px, py, ux = 928.5206091478861, 1001.7344494491506, 928.526784080365
-    layer = PolygonLayer.from_ring_rows([
+    rows = [
         (1, 0, [ux, ux + 1.0, ux, ux], [py, py, py + 1.0, py]),
         (2, 0, [vx, wx, zx, vx], [vy, wy, zy, vy]),
-    ])
+    ]
+    layer = PolygonLayer.from_ring_rows(rows)
     pdf = pd.DataFrame({"pid": [0], "lng": [px], "lat": [py]})
     for k in (1, 2):
         out = knn_join_broadcast(
             spark.createDataFrame(pdf), layer, k=k, keep=["pid"], signed=False
         ).toPandas()
-        assert_knn_matches_dense(out, np.array([px]), np.array([py]), layer, k, signed=False)
+        assert_knn_matches_dense(out, np.array([px]), np.array([py]), rows, k, signed=False)
         assert out.loc[out["rank"] == 1, "polygon_id"].tolist() == [1]
 
 
@@ -329,12 +356,16 @@ def test_boundary_distance_tree_pruning_exact():
     BIT-IDENTICAL minimum to the dense points x segments fold on every
     africa polygon (the tree only prunes provably-farther segments;
     both reduce the same _point_segment_dist2 values)."""
-    layer = wkt_layer("africa")
+    rows = wkt_rows("africa")
+    layer = PolygonLayer.from_ring_rows(rows)
     rng = np.random.default_rng(11)
     px = rng.uniform(-20, 55, 2000)
     py = rng.uniform(-35, 40, 2000)
-    for poly in layer.polygons:
-        assert np.array_equal(boundary_distance(px, py, poly), dense_boundary_distance(px, py, poly))
+    ids, polys = polygon_rings(rows)
+    assert np.array_equal(ids, layer.ids)
+    for poly, rings in zip(layer.polygons, polys):
+        want = dense_boundary_distance(px, py, rings)
+        assert np.array_equal(boundary_distance(px, py, poly), want)
 
 
 def test_frame_crossmodal_against(spark):

@@ -3,6 +3,8 @@
 Goldens from reference src/algorithms/point_in_polygon.rs:86-145
 (FIXTURES.md F3); the oracle is a straight O(N*V) winding-number loop
 (no tree) that must agree with the Claim-1 shortcut kernel exactly.
+A ring's relation is points_in_polygon on a one-ring layer: the arena
+pair descent every PIP join runs.
 """
 
 import numpy as np
@@ -12,11 +14,9 @@ from segment_rtree_spark.kernels.pip import (
     BOUNDARY,
     EXTERIOR,
     INTERIOR,
-    PreparedPolygon,
-    PreparedRing,
     points_in_polygon,
-    points_in_ring,
 )
+from segment_rtree_spark.layer import PolygonLayer
 
 UNIT_SQUARE = ([0.0, 0.0, 1.0, 1.0, 0.0], [0.0, 1.0, 1.0, 0.0, 0.0])
 
@@ -25,18 +25,28 @@ P1_HOLE_A = ([1.0, 1.0, 3.0, 3.0, 1.0], [1.0, 8.0, 8.0, 1.0, 1.0])
 P1_HOLE_B = ([6.0, 6.0, 9.0, 9.0, 6.0], [6.0, 9.0, 10.0, 6.0, 6.0])
 
 
+def polygon(rings, degree=16):
+    """The polygon of a one-polygon layer over `rings`, shell first."""
+    rows = [(0, part, xs, ys) for part, (xs, ys) in enumerate(rings)]
+    return PolygonLayer.from_ring_rows(rows, degree=degree).polygons[0]
+
+
+def ring_relation(px, py, xs, ys, degree=16):
+    """points_in_polygon of a one-ring layer: the arena pair relation."""
+    return points_in_polygon(px, py, polygon([(xs, ys)], degree))
+
+
 def test_containment_loop_goldens():
     # reference point_in_polygon.rs:86-110
-    ring = PreparedRing(*UNIT_SQUARE)
     px = np.array([0.5, 0.0, 0.5, 0.0, 1.1])
     py = np.array([0.5, 0.0, 0.0, 0.5, 0.0])
-    rel = points_in_ring(px, py, ring)
+    rel = ring_relation(px, py, *UNIT_SQUARE)
     assert rel.tolist() == [INTERIOR, BOUNDARY, BOUNDARY, BOUNDARY, EXTERIOR]
 
 
 def test_containment_polygon_goldens():
     # reference point_in_polygon.rs:111-145
-    poly = PreparedPolygon.from_arrays([P1_SHELL, P1_HOLE_A, P1_HOLE_B])
+    poly = polygon([P1_SHELL, P1_HOLE_A, P1_HOLE_B])
     px = np.array([0.5, 0.0, 1.0, 1.5, 9.0, 10.1])
     py = np.array([0.5, 0.0, 1.0, 1.5, 10.0, 0.0])
     rel = points_in_polygon(px, py, poly)
@@ -96,13 +106,12 @@ def test_kernel_matches_brute_force_random():
     rng = np.random.default_rng(1234)
     for trial in range(5):
         xs, ys = _random_star_ring(rng, 60 + trial * 37)
-        ring = PreparedRing(xs, ys, degree=4)
         px = rng.uniform(-6, 6, 400)
         py = rng.uniform(-6, 6, 400)
         # mix in exact vertices and edge midpoints (boundary cases)
         px = np.concatenate([px, xs[:10], (xs[:10] + xs[1:11]) / 2])
         py = np.concatenate([py, ys[:10], (ys[:10] + ys[1:11]) / 2])
-        got = points_in_ring(px, py, ring)
+        got = ring_relation(px, py, xs, ys, degree=4)
         want = brute_force_ring(px, py, xs, ys)
         # brute force boundary-detection via envelope check may diverge
         # from the reference semantics only where it claims boundary off
@@ -112,8 +121,7 @@ def test_kernel_matches_brute_force_random():
 
 
 def test_envelope_prereject():
-    ring = PreparedRing(*UNIT_SQUARE)
-    rel = points_in_ring(np.array([5.0, -5.0]), np.array([5.0, 0.5]), ring)
+    rel = ring_relation(np.array([5.0, -5.0]), np.array([5.0, 0.5]), *UNIT_SQUARE)
     assert rel.tolist() == [EXTERIOR, EXTERIOR]
 
 
@@ -123,8 +131,7 @@ def test_claim1_shortcut_on_large_ring():
     xs = np.cos(theta)
     ys = np.sin(theta)
     xs[-1], ys[-1] = xs[0], ys[0]
-    ring = PreparedRing(xs, ys, degree=2)
     px = np.array([0.0, 0.99, -0.99, 2.0, 0.0])
     py = np.array([0.0, 0.0, 0.0, 0.0, 0.999])
-    rel = points_in_ring(px, py, ring)
+    rel = ring_relation(px, py, xs, ys, degree=2)
     assert rel.tolist() == [INTERIOR, INTERIOR, INTERIOR, EXTERIOR, INTERIOR]

@@ -3,13 +3,13 @@ polygon_validation.rs:148-178 + semantics (F11), linear_ring.rs:13-21."""
 
 import numpy as np
 
-from segment_rtree_spark.kernels.pip import PreparedPolygon, PreparedRing
 from segment_rtree_spark.kernels.validity import (
     has_cycle,
     validate_linestring,
     validate_polygon,
     validate_ring,
 )
+from tests.test_kernels_pip import polygon as P
 
 
 def V(coords):
@@ -103,12 +103,6 @@ class TestCycle:
         for extra in [(0, 3), (1, 3)]:
             edges.append(extra)
             assert has_cycle(edges)
-
-
-def P(rings):
-    return PreparedPolygon.from_arrays(
-        [(np.array(xs, float), np.array(ys, float)) for xs, ys in rings]
-    )
 
 
 SHELL = ([0.0, 0.0, 10.0, 10.0, 0.0], [0.0, 10.0, 10.0, 0.0, 0.0])

@@ -197,47 +197,49 @@ def _layer_with_africa():
     )
 
 
-def test_broadcast_layer_is_slim():
-    """The broadcast kernels ship PolygonLayer._slim(): no `polygons`
-    (whose per-ring trees duplicate the ring arena), well under the
-    full layer's pickled size, the same length and the same PIP."""
+def test_pickled_layer_stores_geometry_once():
+    """A layer is its ring arena: pickled (what every broadcast ships)
+    it holds each ring coordinate and tree node once, plus per-ring and
+    per-polygon bookkeeping; polygon views store nothing on the layer;
+    the unpickled layer runs the same PIP."""
     import pickle
 
-    full = _layer_with_africa()
-    slim = full._slim()
-    assert not hasattr(slim, "polygons") and hasattr(full, "polygons")
-    assert len(slim) == len(full) == len(full.polygons)
-    assert len(pickle.dumps(slim)) < 0.6 * len(pickle.dumps(full))
+    layer = _layer_with_africa()
+    a = layer.arena
+    geometry = sum(v.nbytes for v in (a.cxs, a.cys, a.txmin, a.tymin, a.txmax, a.tymax))
+    size = len(pickle.dumps(layer))
+    assert geometry < size < 1.05 * geometry
+    assert [p.pos for p in layer.polygons] == list(range(len(layer)))
+    assert layer.by_id(int(layer.ids[-1])).pos == len(layer) - 1
+    assert len(pickle.dumps(layer)) == size
     rng = np.random.default_rng(3)
     px, py = rng.uniform(-20, 55, 2000), rng.uniform(-35, 50, 2000)
-    for a, b in zip(pickle.loads(pickle.dumps(slim)).pip(px, py), full.pip(px, py)):
-        assert np.array_equal(a, b)
+    for got, want in zip(pickle.loads(pickle.dumps(layer)).pip(px, py), layer.pip(px, py)):
+        assert np.array_equal(got, want)
 
 
-def test_auto_measures_slim_layer(monkeypatch):
-    """how='auto' sizes the pack the broadcast kernels ship (the slim
-    layer), not the full layer: with BROADCAST_LIMIT_BYTES between the
-    two pickled sizes it broadcasts, below the slim size it partitions.
-    SpatialFrame.pip_join and the curation pipelines resolve 'auto'
-    through the same rule."""
+def test_auto_measures_pickled_layer(monkeypatch):
+    """how='auto' sizes the pickled layer, the pack the broadcast
+    kernels ship: at BROADCAST_LIMIT_BYTES equal to that size it
+    broadcasts, one byte below it partitions. SpatialFrame.pip_join and
+    the curation pipelines resolve 'auto' through the same rule."""
     import pickle
 
     from segment_rtree_spark.frame import SpatialFrame
     from segment_rtree_spark.operators import pip_join as pj
 
-    full = _layer_with_africa()
-    slim_n, full_n = len(pickle.dumps(full._slim())), len(pickle.dumps(full))
-    assert slim_n < full_n
+    layer = _layer_with_africa()
+    size = len(pickle.dumps(layer))
     monkeypatch.setattr(pj, "pip_join_broadcast", lambda points, layer, **kw: "broadcast")
     monkeypatch.setattr(pj, "pip_join_partitioned", lambda points, layer, **kw: "partitioned")
 
-    monkeypatch.setattr(pj, "BROADCAST_LIMIT_BYTES", (slim_n + full_n) // 2)
-    assert pj.pip_join(None, full, how="auto", res=6) == "broadcast"
-    assert SpatialFrame(None).pip_join(full).df == "broadcast"
+    monkeypatch.setattr(pj, "BROADCAST_LIMIT_BYTES", size)
+    assert pj.pip_join(None, layer, how="auto", res=6) == "broadcast"
+    assert SpatialFrame(None).pip_join(layer).df == "broadcast"
 
-    monkeypatch.setattr(pj, "BROADCAST_LIMIT_BYTES", slim_n - 1)
-    assert pj.pip_join(None, full, how="auto", res=6) == "partitioned"
-    assert SpatialFrame(None).pip_join(full).df == "partitioned"
+    monkeypatch.setattr(pj, "BROADCAST_LIMIT_BYTES", size - 1)
+    assert pj.pip_join(None, layer, how="auto", res=6) == "partitioned"
+    assert SpatialFrame(None).pip_join(layer).df == "partitioned"
 
 
 def test_auto_broadcast_drops_partitioned_options(spark, layer, points):

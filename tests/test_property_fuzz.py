@@ -11,15 +11,11 @@ import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from segment_rtree_spark.kernels.clip import clip_path
-from segment_rtree_spark.kernels.pip import (
-    BOUNDARY,
-    EXTERIOR,
-    INTERIOR,
-    PreparedRing,
-    points_in_ring,
-)
+from segment_rtree_spark.kernels.pip import BOUNDARY, EXTERIOR, INTERIOR
 from segment_rtree_spark.kernels.segtree import PackedSegTree
 from segment_rtree_spark.kernels.validity import validate_ring
+from segment_rtree_spark.layer import PolygonLayer
+from tests.test_kernels_pip import ring_relation
 
 
 def star_ring(seed: int, n: int):
@@ -95,12 +91,10 @@ def star_holes(rng, xs, ys, k: int):
 @settings(max_examples=40, deadline=None)
 @given(seed=st.integers(0, 10_000), n=st.integers(4, 120), n_holes=st.integers(0, 2))
 def test_pip_matches_brute_winding(seed, n, n_holes):
-    """points_in_ring on a star ring, and PolygonLayer.pip (the arena
-    pair relation every PIP join runs) on that ring with 0-2 star
+    """points_in_polygon on a star ring, and PolygonLayer.pip (the
+    arena pair relation every PIP join runs) on that ring with 0-2 star
     holes at tree degrees 2 and 16, equal the brute-force winding
     relation."""
-    from segment_rtree_spark.layer import PolygonLayer
-
     xs, ys = star_ring(seed, n)
     rng = np.random.default_rng(seed + 1)
     holes = star_holes(rng, xs, ys, n_holes)
@@ -112,8 +106,7 @@ def test_pip_matches_brute_winding(seed, n, n_holes):
                          [h[0][:-1].mean() for h in holes]])
     py = np.concatenate([py, ys[:3], [0.0], *(h[1][:3] for h in holes),
                          [h[1][:-1].mean() for h in holes]])
-    ring = PreparedRing(xs, ys)
-    got = points_in_ring(px, py, ring)
+    got = ring_relation(px, py, xs, ys)
     want = brute_relation(px, py, xs, ys)
     assert np.array_equal(got, want)
 
@@ -138,8 +131,8 @@ def test_pip_degree_invariance(seed, n):
     rng = np.random.default_rng(seed + 2)
     px = rng.uniform(-12, 12, 300)
     py = rng.uniform(-12, 12, 300)
-    a = points_in_ring(px, py, PreparedRing(xs, ys, degree=2))
-    b = points_in_ring(px, py, PreparedRing(xs, ys, degree=16))
+    a = ring_relation(px, py, xs, ys, degree=2)
+    b = ring_relation(px, py, xs, ys, degree=16)
     assert np.array_equal(a, b)
 
 
@@ -302,7 +295,6 @@ def test_layer_cover_matches_brute_force(seed, res, degree):
     """The one layer-wide cover BFS (cover_cells, polyfill) equals the
     brute-force definition of the cover, in both modes, on seeded
     multi-polygon layers of star polygons with holes."""
-    from segment_rtree_spark.layer import PolygonLayer
     from segment_rtree_spark.tiles import polyfill
 
     rng = np.random.default_rng(seed)
@@ -343,7 +335,6 @@ def test_arena_distance_matches_dense_fold(seed, degree):
     bit-equal to the dense points x segments fold, on seeded layers of
     star polygons with 0-2 holes, for points on every vertex, on edges
     and spread over (and around) the layer."""
-    from segment_rtree_spark.layer import PolygonLayer
     from segment_rtree_spark.operators.knn_join import boundary_distance
 
     rng = np.random.default_rng(seed)
@@ -369,3 +360,42 @@ def test_arena_distance_matches_dense_fold(seed, degree):
     assert np.array_equal(got, want)
     for j, poly in enumerate(layer.polygons):
         assert np.array_equal(boundary_distance(px, py, poly), want[j])
+
+
+@settings(max_examples=30, deadline=None)
+@given(seed=st.integers(0, 10_000), degree=st.sampled_from([2, 4, 16]))
+def test_arena_ring_views_equal_fresh_trees(seed, degree):
+    """Every arena ring view (RingArena.ring: zero-copy slices) equals a
+    PackedSegTree built afresh from its coordinates, NaN padding
+    included, and the dual-tree query between two views equals the same
+    query between fresh trees, on seeded layers of star polygons with
+    0-2 holes. RingArena.concat of per-polygon arenas (the partitioned
+    refine's group arena) equals the arena built in one go."""
+    from segment_rtree_spark.kernels.pip import RingArena
+
+    rng = np.random.default_rng(seed)
+    rows = [r for pid in range(int(rng.integers(1, 5))) for r in star_polygon_rows(rng, pid)]
+    layer = PolygonLayer.from_ring_rows(rows, degree=degree)
+    a = layer.arena
+    assert len(a) == len(rows)
+    parts = [RingArena([r[2:] for r in rows if r[0] == pid], degree) for pid in layer.ids]
+    joined = RingArena.concat(parts)
+    for name in RingArena.__slots__:
+        assert np.array_equal(getattr(joined, name), getattr(a, name), equal_nan=True), name
+    fresh = []
+    for r, (_, _, xs, ys) in enumerate(rows):  # rows are in arena order
+        view = a.ring(r)
+        assert np.array_equal(view.xs, xs) and np.array_equal(view.ys, ys)
+        t = PackedSegTree.from_coords(xs, ys, degree=degree)
+        assert view.tree.degree == t.degree and view.tree.size == t.size
+        assert view.tree.height == t.height
+        assert np.array_equal(view.tree.level_indices, t.level_indices)
+        for name in ("xmin", "ymin", "xmax", "ymax"):
+            assert np.array_equal(getattr(view.tree, name), getattr(t, name), equal_nan=True)
+        fresh.append(t)
+    for i in range(len(rows)):
+        for j in (i, int(rng.integers(len(rows)))):
+            got = a.ring(i).tree.query_other_intersections(a.ring(j).tree)
+            want = fresh[i].query_other_intersections(fresh[j])
+            assert len(want[0]) or i != j
+            assert all(np.array_equal(g, w) for g, w in zip(got, want))

@@ -4,7 +4,6 @@ import duckdb
 import numpy as np
 import pytest
 
-from segment_rtree_spark.kernels.pip import PreparedPolygon
 from segment_rtree_spark.tiles import (
     MAX_RES,
     cell_bounds,
@@ -18,6 +17,7 @@ from segment_rtree_spark.tiles import (
     cell_res,
     polyfill,
 )
+from tests.test_kernels_pip import polygon
 
 
 def rand_latlng(rng, n):
@@ -87,9 +87,7 @@ def test_sql_matches_numpy():
     np.testing.assert_array_equal(got, cell_prefix(cell_of(lat, lng, 15), 12))
 
 
-SQUARE = PreparedPolygon.from_arrays(
-    [([10.0, 10.0, 30.0, 30.0, 10.0], [10.0, 30.0, 30.0, 10.0, 10.0])]
-)
+SQUARE = polygon([([10.0, 10.0, 30.0, 30.0, 10.0], [10.0, 30.0, 30.0, 10.0, 10.0])])
 
 
 def test_polyfill_against_brute_force():
@@ -118,7 +116,7 @@ def test_polyfill_contained_subset():
 
 
 def test_polyfill_respects_holes():
-    poly = PreparedPolygon.from_arrays(
+    poly = polygon(
         [
             ([0.0, 0.0, 40.0, 40.0, 0.0], [0.0, 40.0, 40.0, 0.0, 0.0]),
             ([10.0, 10.0, 30.0, 30.0, 10.0], [10.0, 30.0, 30.0, 10.0, 10.0]),
@@ -129,3 +127,20 @@ def test_polyfill_respects_holes():
     # no contained cell may lie strictly inside the hole
     inside_hole = (lngmin > 10) & (lngmax < 30) & (latmin > 10) & (latmax < 30)
     assert not inside_hole.any()
+
+
+def test_cover_rejects_bad_res_and_mode():
+    """The cover BFS (cover_cells, polyfill) raises on a resolution
+    outside [0, MAX_RES], as cell_of does, and on a mode other than
+    'intersect'/'contained', instead of returning an empty or an
+    intersect cover."""
+    layer = SQUARE.layer
+    for res in (-1, -5):
+        with pytest.raises(ValueError, match="res"):
+            layer.cover_cells(res)
+        with pytest.raises(ValueError, match="res"):
+            polyfill(SQUARE, res)
+    for mode in ("contain", "Intersect", ""):
+        with pytest.raises(ValueError, match="mode"):
+            polyfill(SQUARE, 5, mode)
+    assert polyfill(SQUARE, 0).tolist() == [0]  # the res-0 world cell
