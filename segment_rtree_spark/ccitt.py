@@ -30,6 +30,8 @@ import struct
 
 import numpy as np
 
+from .prefix import table
+
 # --- ITU-T T.4 run-length code tables ------------------------------
 # (code_bits_string, run_length). Terminating codes 0..63, then
 # makeup codes 64..1728 per color, then the shared extended makeups
@@ -111,40 +113,23 @@ _EXT_CODES = [
 
 _PEEK = 13  # longest run code is 13 bits (black makeups)
 
-
-def _build_lut(codes):
-    """code list -> uint32[2^13] LUT: peek 13 bits MSB-first, entry
-    packs (run << 5) | nbits; 0 = invalid prefix."""
-    lut = np.zeros(1 << _PEEK, np.uint32)
-    for bits, run in codes:
-        n = len(bits)
-        base = int(bits, 2) << (_PEEK - n)
-        span = 1 << (_PEEK - n)
-        if np.any(lut[base : base + span]):
-            raise AssertionError(f"code table collision at {bits}")
-        lut[base : base + span] = (run << 5) | n
-    return lut
-
-
-_WHITE_LUT = _build_lut(_WHITE_CODES + _EXT_CODES)
-_BLACK_LUT = _build_lut(_BLACK_CODES + _EXT_CODES)
-
-# 2D coding modes (T.4 §4.2.1.3.7 / T.6): peek 7 bits. Entries pack
-# (mode << 4) | nbits; modes: 1..7 = vertical a1 = b1 + (mode - 4)
-# (V_L3..V_R3), 8 = horizontal, 9 = pass.
+# 2D coding modes (T.4 §4.2.1.3.7 / T.6), peeked 7 bits wide; modes:
+# 1..7 = vertical a1 = b1 + (mode - 4) (V_L3..V_R3), 8 = horizontal,
+# 9 = pass.
 _MODE_CODES = [
     ("1", 4), ("011", 5), ("010", 3), ("000011", 6), ("000010", 2),
     ("0000011", 7), ("0000010", 1), ("001", 8), ("0001", 9),
 ]
-_MODE_LUT = np.zeros(1 << 7, np.uint8)
-for _bits, _mode in _MODE_CODES:
-    _n = len(_bits)
-    _base = int(_bits, 2) << (7 - _n)
-    _MODE_LUT[_base : _base + (1 << (7 - _n))] = (_mode << 4) | _n
 
-_REV8 = np.array(
-    [int(f"{i:08b}"[::-1], 2) for i in range(256)], np.uint8
-)  # FillOrder 2: bits within each byte are LSB-first
+
+def _table(codes, peek):
+    """(bit string, value) list -> MSB-first prefix.table, `peek` wide."""
+    return table([(v, int(b, 2), len(b)) for b, v in codes], peek, False)
+
+
+_WHITE_LUT = _table(_WHITE_CODES + _EXT_CODES, _PEEK)
+_BLACK_LUT = _table(_BLACK_CODES + _EXT_CODES, _PEEK)
+_MODE_LUT = _table(_MODE_CODES, 7)
 
 
 class _Bits:
@@ -152,10 +137,9 @@ class _Bits:
     13-bit windows so every Huffman peek is one array load."""
 
     def __init__(self, data: bytes, fill_order: int = 1):
-        arr = np.frombuffer(data, np.uint8)
-        if fill_order == 2:
-            arr = _REV8[arr]
-        bits = np.unpackbits(arr)
+        # FillOrder 2: bits within each byte are LSB-first
+        bits = np.unpackbits(np.frombuffer(data, np.uint8),
+                             bitorder="little" if fill_order == 2 else "big")
         self.n = bits.size
         padded = np.concatenate([bits, np.zeros(_PEEK, np.uint8)])
         win = padded[: self.n + _PEEK - 1].astype(np.uint16)
@@ -176,7 +160,7 @@ class _Bits:
     def run(self, black: bool) -> int:
         """One run-length code word (terminating, or makeup +
         continuation handled by the caller)."""
-        e = int((_BLACK_LUT if black else _WHITE_LUT)[self.peek13()])
+        e = (_BLACK_LUT if black else _WHITE_LUT)[self.peek13()]
         if e == 0:
             raise ValueError("invalid CCITT run code")
         self.pos += e & 31
@@ -197,11 +181,11 @@ class _Bits:
     def mode(self) -> int:
         if self.pos >= self.n:
             raise ValueError("CCITT stream exhausted")
-        e = int(_MODE_LUT[self.win[self.pos] >> (_PEEK - 7)])
+        e = _MODE_LUT[self.win[self.pos] >> (_PEEK - 7)]
         if e == 0:
             raise ValueError("invalid CCITT 2D mode code")
-        self.pos += e & 15
-        return e >> 4
+        self.pos += e & 31
+        return e >> 5
 
     def expect_eol(self) -> None:
         """Consume fill zeros + one EOL (000000000001)."""

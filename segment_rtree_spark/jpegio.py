@@ -51,6 +51,7 @@ import struct
 import numpy as np
 
 from .codec_errors import DimensionMismatchError
+from .prefix import canonical, table
 
 __all__ = ["encode_jpeg", "decode_jpeg", "JpegError", "JPEG_SOI"]
 
@@ -169,17 +170,13 @@ def _scaled_qt(base: np.ndarray, quality: int) -> np.ndarray:
     return np.clip((base * scale + 50) // 100, 1, 255).astype(np.int64)
 
 
-def _canonical_codes(bits, vals):
-    """symbol -> (code, length) for a (BITS, HUFFVAL) table pair."""
-    codes = {}
-    code, k = 0, 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            codes[vals[k]] = (code, length)
-            code += 1
-            k += 1
-        code <<= 1
-    return codes
+def _codes(bits, vals):
+    """(BITS, HUFFVAL) -> canonical (symbol, code, length) list. HUFFVAL
+    lists symbols in code order (T.81 C.2), so the k-th symbol takes
+    the code canonical() assigns to position k. T.81 codes need not be
+    complete; oversubscribed BITS counts raise ValueError."""
+    lens = [l for l in range(1, 17) for _ in range(bits[l - 1])]
+    return [(vals[k], c, l) for k, c, l in canonical(lens, complete=False)]
 
 
 # -- bit IO ------------------------------------------------------------
@@ -189,13 +186,14 @@ def _canonical_codes(bits, vals):
 
 class _BitReader:
     """Entropy-segment reader, table-driven: ONE destuffing pass over
-    the whole segment up front (vectorized FF scan, stuffed zeros and
-    restart markers removed, boundaries recorded), then per-symbol
-    decode is a 16-bit peek into a canonical-code LUT — no per-bit
-    dict walk. This is the codec's decode floor: the symbol stream is
-    inherently sequential (each boundary depends on the previous
-    symbol), so the win comes from making each step O(1) on a flat
-    buffer, not from parallelism."""
+    the whole segment up front (bytes.find hops between FF bytes;
+    stuffed zeros and restart markers removed, boundaries recorded),
+    then per-symbol decode is a 16-bit MSB-first peek into the shared
+    prefix table (prefix.table at root 16: every code length fits, so
+    no entry links). This is the codec's decode floor: the symbol
+    stream is inherently sequential (each boundary depends on the
+    previous symbol), so the win comes from making each step O(1) on a
+    flat buffer, not from parallelism."""
 
     def __init__(self, buf: bytes, pos: int):
         n = len(buf)
@@ -246,13 +244,12 @@ class _BitReader:
         written back once per block (and before every raise, so error
         paths observe a consistent reader).
 
-        Symbol decode is a 16-bit peek into the canonical-code LUT;
+        Symbol decode is a 16-bit peek into the prefix table;
         when fewer than 16 real bits remain the window is virtually
         1-padded (the encoder's flush fill) WITHOUT consuming, so a
         final short symbol still decodes while consuming past the end
         raises."""
-        dsym, dlen = dct
-        asym, alen, afb, afr, afv = act
+        atab, afb, afr, afv = act
         acc, nb, i = self.acc, self.n, self.i
         data, lim = self.data, self.limit
         zz = [0] * 64
@@ -291,12 +288,9 @@ class _BitReader:
                     if k > 63:
                         break
                     continue
-            if k == 0:  # DC
-                length = dlen[idx]
-                sym = dsym[idx]
-            else:  # AC slow path (long code + wide value, or stream tail)
-                length = alen[idx]
-                sym = asym[idx]
+            # DC, or the AC slow path (long code + wide value, or tail)
+            e = atab[idx] if k else dct[idx]
+            length = e & 31
             if length == 0:
                 self.acc, self.n, self.i = acc, nb, i
                 raise JpegError("invalid Huffman code")
@@ -306,7 +300,7 @@ class _BitReader:
             nb -= length
             acc &= (1 << nb) - 1
             if k == 0:
-                s = sym
+                s = e >> 5
                 if s:
                     while nb < s:
                         if i >= lim:
@@ -322,7 +316,7 @@ class _BitReader:
                 zz[0] = pred
                 k = 1
                 continue
-            r, s = sym >> 4, sym & 0xF
+            r, s = e >> 9, (e >> 5) & 0xF
             if s == 0:
                 if r == 15:  # ZRL
                     k += 16
@@ -397,8 +391,8 @@ class _BitReader:
         self.acc, self.n, self.i = acc & ((1 << nb) - 1), nb, i
         return v
 
-    def decode_sym(self, sym, ln) -> int:
-        """One Huffman symbol via the 16-bit-peek canonical LUT pair
+    def decode_sym(self, tab) -> int:
+        """One Huffman symbol via a 16-bit peek into the prefix table
         (same virtual 1-padding tail rule as decode_block)."""
         acc, nb, i = self.acc, self.n, self.i
         data, lim = self.data, self.limit
@@ -411,7 +405,8 @@ class _BitReader:
         else:
             pad = 16 - nb
             idx = ((acc << pad) | ((1 << pad) - 1)) & 0xFFFF
-        length = ln[idx]
+        e = tab[idx]
+        length = e & 31
         if length == 0:
             self.acc, self.n, self.i = acc, nb, i
             raise JpegError("invalid Huffman code")
@@ -420,17 +415,16 @@ class _BitReader:
             self._starved()
         nb -= length
         self.acc, self.n, self.i = acc & ((1 << nb) - 1), nb, i
-        return sym[idx]
+        return e >> 5
 
 
 _LUT_CACHE: dict = {}
 
 
 def _decode_tables(bits, vals, ac: bool = False):
-    """(BITS, HUFFVAL) -> flat lookup tables keyed on a 16-bit peek
-    window. Always: (sym, len) — entry w holds the symbol whose
-    canonical code prefixes w and that code's bit length (0 = invalid
-    prefix). For AC tables additionally (fast_bits, fast_run,
+    """(BITS, HUFFVAL) -> the prefix table over a 16-bit MSB-first peek
+    (prefix.table; entry (symbol << 5) | length, 0 = invalid prefix).
+    For AC tables, built on top of it: (fast_bits, fast_run,
     fast_val): when the run/size code AND its s value bits both fit
     in the window, one peek yields the fully-extended coefficient
     (fast_bits = total bits to consume; run -1 = EOB, -2 = ZRL;
@@ -451,42 +445,22 @@ def _decode_tables(bits, vals, ac: bool = False):
         # (fuzzer-found). Reject at table build, covering baseline
         # and progressive decode alike.
         raise JpegError("invalid DC category in DHT (> 15)")
-    sym = [0] * (1 << 16)
-    ln = [0] * (1 << 16)
-    fbits = np.zeros(1 << 16, np.int64)
-    frun = np.zeros(1 << 16, np.int64)
-    fval = np.zeros(1 << 16, np.int64)
-    code, k = 0, 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            rs = vals[k]
-            base = code << (16 - length)
-            span = 1 << (16 - length)
-            sym[base : base + span] = [rs] * span
-            ln[base : base + span] = [length] * span
-            if ac:
-                r, s = rs >> 4, rs & 0xF
-                idxs = np.arange(base, base + span)
-                if s == 0:
-                    fbits[idxs] = length
-                    frun[idxs] = -2 if r == 15 else -1
-                elif length + s <= 16:
-                    rem = idxs & (span - 1)
-                    v = rem >> (16 - length - s)
-                    fbits[idxs] = length + s
-                    frun[idxs] = r
-                    fval[idxs] = np.where(
-                        v < (1 << (s - 1)), v - (1 << s) + 1, v
-                    )
-            code += 1
-            k += 1
-        code <<= 1
+    try:
+        tab = table(_codes(bits, vals), 16, lsb_first=False)
+    except ValueError as e:  # oversubscribed BITS counts
+        raise JpegError(f"invalid DHT: {e}") from None
+    out = tab
+    if ac:
+        t = np.array(tab, np.int64)
+        ln, r, s = t & 31, t >> 9, (t >> 5) & 0xF
+        fits = (ln > 0) & (ln + s <= 16)
+        v = (np.arange(1 << 16) >> np.maximum(16 - ln - s, 0)) & ((1 << s) - 1)
+        fbits = np.where(fits, ln + s, 0)
+        frun = np.where(fits, np.where(s > 0, r, np.where(r == 15, -2, -1)), 0)
+        fval = np.where(fits & (v < (1 << s) >> 1), v - (1 << s) + 1, v)
+        out = (tab, fbits.tolist(), frun.tolist(), np.where(fits, fval, 0).tolist())
     if len(_LUT_CACHE) >= 16:  # bound worker-lifetime memory
         _LUT_CACHE.clear()
-    out = (
-        (sym, ln, fbits.tolist(), frun.tolist(), fval.tolist())
-        if ac else (sym, ln)
-    )
     _LUT_CACHE[key] = out
     return out
 
@@ -699,11 +673,6 @@ def encode_jpeg(pixels: np.ndarray, quality: int = 90,
     padded = np.pad(px, ((0, ph), (0, pw), (0, 0)), mode="edge")
     ycc = _rgb_to_ycbcr(padded)
 
-    dc_codes = [_canonical_codes(_DC_LUMA_BITS, _DC_LUMA_VALS),
-                _canonical_codes(_DC_CHROMA_BITS, _DC_CHROMA_VALS)]
-    ac_codes = [_canonical_codes(_AC_LUMA_BITS, _AC_LUMA_VALS),
-                _canonical_codes(_AC_CHROMA_BITS, _AC_CHROMA_VALS)]
-
     # per component: (rows, cols, 64) zigzag block grid — FDCT +
     # quantize vectorized over all blocks, subsampled chroma planes
     # box-mean reduced first
@@ -730,8 +699,10 @@ def encode_jpeg(pixels: np.ndarray, quality: int = 90,
     # whole grid (a per-block nonzero() call measured ~15% of encode),
     # and bits accumulate in a local (acc, nb) pair flushed with byte
     # stuffing per block
-    dcl = [[tab.get(s) for s in range(16)] for tab in dc_codes]
-    acl = [[tab.get(k) for k in range(256)] for tab in ac_codes]
+    dcl = [{s: (c, l) for s, c, l in _codes(*t)} for t in (
+        (_DC_LUMA_BITS, _DC_LUMA_VALS), (_DC_CHROMA_BITS, _DC_CHROMA_VALS))]
+    acl = [{s: (c, l) for s, c, l in _codes(*t)} for t in (
+        (_AC_LUMA_BITS, _AC_LUMA_VALS), (_AC_CHROMA_BITS, _AC_CHROMA_VALS))]
     glists = []
     nzlists = []
     for c in range(n_comp):
@@ -1219,7 +1190,7 @@ def _progressive_scan(buf, pos, sof, grids, scan, ss, se, ah, al,
                         br.align_restart()
                         preds = [0] * len(scan)
                     for ci, b in unit:
-                        s = br.decode_sym(*tabs[ci])
+                        s = br.decode_sym(tabs[ci])
                         if s > 11:
                             raise JpegError("bad DC symbol")
                         if s:
@@ -1239,7 +1210,7 @@ def _progressive_scan(buf, pos, sof, grids, scan, ss, se, ah, al,
             t = ac_tabs.get(scan[0][2])
             if t is None:
                 raise JpegError("missing Huffman table")
-            sym, ln = t[0], t[1]
+            tab = t[0]
             eobrun = 0
             if ah == 0:  # AC first
                 for bi, unit in enumerate(units):
@@ -1252,7 +1223,7 @@ def _progressive_scan(buf, pos, sof, grids, scan, ss, se, ah, al,
                     b = unit[0][1]
                     k = ss
                     while k <= se:
-                        rs = br.decode_sym(sym, ln)
+                        rs = br.decode_sym(tab)
                         r, s = rs >> 4, rs & 0xF
                         if s == 0:
                             if r == 15:  # ZRL
@@ -1280,7 +1251,7 @@ def _progressive_scan(buf, pos, sof, grids, scan, ss, se, ah, al,
                     k = ss
                     if eobrun == 0:
                         while k <= se:
-                            rs = br.decode_sym(sym, ln)
+                            rs = br.decode_sym(tab)
                             r, s = rs >> 4, rs & 0xF
                             newval = 0
                             if s == 0:

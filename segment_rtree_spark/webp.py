@@ -28,10 +28,12 @@ Spark like the jpeg path (jpegio.py documents the same floor).
 from __future__ import annotations
 
 import struct
+from array import array
 
 import numpy as np
 
 from .codec_errors import DimensionMismatchError
+from .prefix import canonical, table
 
 __all__ = ["decode_webp", "encode_webp"]
 
@@ -86,91 +88,67 @@ class _Bits:
         self.pos = pos
         return v
 
-
-class _Prefix:
-    """Canonical prefix code: DEFLATE-style code assignment, bits read
-    MSB-of-code-first. Degenerate single-symbol codes consume 0 bits."""
-
-    __slots__ = ("single", "table", "max_len")
-
-    def __init__(self, lengths):
-        nz = [(s, l) for s, l in enumerate(lengths) if l]
-        if not nz:
-            raise ValueError("VP8L prefix code with no symbols")
-        if len(nz) == 1:
-            self.single = nz[0][0]
-            self.table = None
-            self.max_len = 0
-            return
-        self.single = None
-        max_len = max(l for _, l in nz)
-        bl_count = [0] * (max_len + 1)
-        for _, l in nz:
-            bl_count[l] += 1
-        # Kraft equality: the code must be exactly complete
-        total = sum(bl_count[l] << (max_len - l) for l in range(1, max_len + 1))
-        if total != 1 << max_len:
-            raise ValueError("incomplete or oversubscribed VP8L prefix code")
-        next_code = [0] * (max_len + 2)
-        code = 0
-        for l in range(1, max_len + 1):
-            code = (code + bl_count[l - 1]) << 1
-            next_code[l] = code
-        table = {}
-        for s, l in nz:
-            table[(l, next_code[l])] = s
-            next_code[l] += 1
-        self.table = table
-        self.max_len = max_len
-
-    def read(self, br: _Bits) -> int:
-        if self.single is not None:
-            return self.single
-        code = 0
-        l = 0
-        table = self.table
-        get = table.get
-        while True:
-            code = (code << 1) | br.read(1)
-            l += 1
-            sym = get((l, code))
-            if sym is not None:
-                return sym
-            if l >= self.max_len:
-                raise ValueError("corrupt VP8L prefix code stream")
-
-    def codes(self):
-        """symbol -> (code, length), for the encoder side."""
-        if self.single is not None:
-            return {self.single: (0, 0)}
-        return {s: (c, l) for (l, c), s in self.table.items()}
+    def sym(self, code) -> int:
+        """One prefix-coded symbol through a (table, root) pair from
+        _prefix. At the stream tail the peek is zero-padded, and only a
+        code that runs past the end raises. VP8L codes are complete, so
+        no table entry is invalid."""
+        tab, root = code
+        acc, nb, pos, data = self.acc, self.nb, self.pos, self.data
+        while nb < 15 and pos < len(data):  # 15: the longest VP8L code
+            acc |= data[pos] << nb
+            pos += 1
+            nb += 8
+        e = tab[acc & ((1 << root) - 1)]
+        n = e & 31
+        if n > root:  # link: the next bits index a second-level table
+            e = tab[(e >> 5) + ((acc >> root) & ((1 << (n - root)) - 1))]
+            n = e & 31
+        if n > nb:
+            raise ValueError("truncated VP8L stream")
+        self.acc, self.nb, self.pos = acc >> n, nb - n, pos
+        return e >> 5
 
 
-def _read_prefix_code(br: _Bits, alphabet_size: int) -> _Prefix:
+def _codes(lengths) -> list:
+    """VP8L lengths -> canonical code list. A one-symbol code reads
+    and writes 0 bits whatever its length, as in libwebp."""
+    codes = canonical(lengths)
+    return [(codes[0][0], 0, 0)] if len(codes) == 1 else codes
+
+
+def _prefix(lengths):
+    """VP8L lengths -> (table, root) for _Bits.sym. The root is 8 bits,
+    narrowed to the longest code; a longer code links to one
+    second-level table per 8-bit prefix. A stream may declare 65,536
+    groups of five codes, so tables stay small: no 2^15-entry table
+    per code, and uint32 entries at half the bytes of a list."""
+    codes = _codes(lengths)
+    root = min(8, codes[-1][2])
+    return array("I", table(codes, root, lsb_first=True)), root
+
+
+def _read_prefix_code(br: _Bits, alphabet_size: int):
     """One prefix code from the stream: simple (1-2 explicit symbols)
     or normal (code-length-coded lengths, RFC 9649 §4.6.2.2)."""
-    if br.read(1):  # simple
-        num_symbols = br.read(1) + 1
-        if br.read(1):
-            first = br.read(8)
-        else:
-            first = br.read(1)
-        lengths = [0] * alphabet_size
-        if first >= alphabet_size:
+    if br.read(1):  # simple: 1 or 2 symbols, the first 1 or 8 bits wide
+        two = br.read(1)
+        syms = [br.read(8 if br.read(1) else 1)]
+        # a second symbol equal to the first leaves a one-symbol code,
+        # as libwebp reads it
+        if two:
+            syms.append(br.read(8))
+        if max(syms) >= alphabet_size:
             raise ValueError("VP8L simple-code symbol out of alphabet")
-        if num_symbols == 2:
-            second = br.read(8)
-            if second >= alphabet_size or second == first:
-                raise ValueError("VP8L simple-code symbol invalid")
-            lengths[first] = lengths[second] = 1
-        else:
-            lengths[first] = 1  # single-symbol: 0-bit reads via _Prefix
-        return _Prefix(lengths)
+        lengths = [0] * alphabet_size
+        for s in syms:
+            lengths[s] = 1
+        return _prefix(lengths)
     num_cl = 4 + br.read(4)
     cl_lengths = [0] * 19
     for i in range(num_cl):
         cl_lengths[_CL_ORDER[i]] = br.read(3)
-    cl_code = _Prefix(cl_lengths)
+    cl_code = _prefix(cl_lengths)
     if br.read(1):  # limited number of coded symbols
         length_nbits = 2 + 2 * br.read(3)
         max_symbol = 2 + br.read(length_nbits)
@@ -183,7 +161,7 @@ def _read_prefix_code(br: _Bits, alphabet_size: int) -> _Prefix:
         if max_symbol == 0:
             break
         max_symbol -= 1
-        cl = cl_code.read(br)
+        cl = br.sym(cl_code)
         if cl < 16:
             lengths[symbol] = cl
             symbol += 1
@@ -201,7 +179,7 @@ def _read_prefix_code(br: _Bits, alphabet_size: int) -> _Prefix:
             for _ in range(repeat):
                 lengths[symbol] = fill
                 symbol += 1
-    return _Prefix(lengths)
+    return _prefix(lengths)
 
 
 def _lz77_val(br: _Bits, sym: int) -> int:
@@ -253,6 +231,7 @@ def _decode_image_stream(br: _Bits, xsize: int, ysize: int,
     out = [0] * n
     pos = 0
     g0 = groups[0]
+    sym = br.sym
     while pos < n:
         if meta_idx is None:
             g = g0
@@ -260,11 +239,11 @@ def _decode_image_stream(br: _Bits, xsize: int, ysize: int,
             x = pos % xsize
             y = pos // xsize
             g = groups[meta_idx[(y >> sb) * meta_w + (x >> sb)]]
-        s = g[0].read(br)
+        s = sym(g[0])
         if s < 256:  # literal: green first, then red, blue, alpha
-            r = g[1].read(br)
-            b = g[2].read(br)
-            a = g[3].read(br)
+            r = sym(g[1])
+            b = sym(g[2])
+            a = sym(g[3])
             px = (a << 24) | (r << 16) | (s << 8) | b
             out[pos] = px
             pos += 1
@@ -272,7 +251,7 @@ def _decode_image_stream(br: _Bits, xsize: int, ysize: int,
                 cache[((0x1E35A7BD * px) & 0xFFFFFFFF) >> cache_shift] = px
         elif s < 280:  # LZ77 backref
             length = _lz77_val(br, s - 256)
-            dcode = _lz77_val(br, g[4].read(br))
+            dcode = _lz77_val(br, sym(g[4]))
             if dcode > 120:
                 dist = dcode - 120
             else:
@@ -791,11 +770,12 @@ def _huff_lengths(counts: dict[int, int], max_len: int) -> dict[int, int]:
 
 
 def _write_prefix_code(bw: _BitWriter, lengths_by_sym: dict[int, int],
-                       alphabet_size: int) -> _Prefix:
+                       alphabet_size: int) -> list:
     """Emit one prefix code (simple when <=2 symbols and they fit 8
     bits, else normal with literal-only code-length coding) and return
-    the _Prefix for symbol emission."""
+    its code list for symbol emission."""
     syms = sorted(lengths_by_sym)
+    lengths = [0] * alphabet_size
     if len(syms) <= 2 and all(s < 256 for s in syms):
         bw.write(1, 1)                      # simple
         bw.write(len(syms) - 1, 1)
@@ -808,14 +788,10 @@ def _write_prefix_code(bw: _BitWriter, lengths_by_sym: dict[int, int],
             bw.write(first, 1)
         if len(syms) == 2:
             bw.write(syms[1], 8)
-        lengths = [0] * alphabet_size
-        if len(syms) == 1:
-            lengths[syms[0]] = 1
-        else:
-            lengths[syms[0]] = lengths[syms[1]] = 1
-        return _Prefix(lengths)
+        for s in syms:
+            lengths[s] = 1
+        return _codes(lengths)
     bw.write(0, 1)                          # normal
-    lengths = [0] * alphabet_size
     for s in syms:
         lengths[s] = lengths_by_sym[s]
     cl_hist: dict[int, int] = {}
@@ -838,11 +814,11 @@ def _write_prefix_code(bw: _BitWriter, lengths_by_sym: dict[int, int],
     for i in range(num_cl):
         bw.write(cl_arr[_CL_ORDER[i]], 3)
     bw.write(0, 1)                          # no max_symbol shortcut
-    cl_code = _Prefix(cl_arr).codes()
+    cl_code = {s: (c, l) for s, c, l in _codes(cl_arr)}
     for l in lengths:
         c, cl = cl_code[l]
         bw.code(c, cl)
-    return _Prefix(lengths)
+    return _codes(lengths)
 
 
 def encode_webp(pixels: np.ndarray) -> bytes:
@@ -883,36 +859,22 @@ def encode_webp(pixels: np.ndarray) -> bytes:
     del alpha  # single-symbol codes emit no bits per pixel
 
     # Vectorized literal emission (the hot path — everything above is
-    # O(alphabet), this is O(pixels)). bw.code(c, l) writes the code
-    # MSB-first into the LSB-first stream, which equals an LSB-first
-    # write of the bit-REVERSED code; so per channel build (reversed
-    # code, length) LUTs, lay every symbol's start offset out with one
-    # cumsum, and scatter bit-plane j of all codes at once (<= 15
-    # passes). Replaces a per-pixel Python loop (~30x on 256x256).
-    def _luts(codes_dict, size):
-        code = np.zeros(size, np.uint32)
-        ln = np.zeros(size, np.uint8)
-        for s, (c, l) in codes_dict.items():
-            r = 0
-            for i in range(l):
-                r = (r << 1) | ((c >> i) & 1)
-            code[s] = r
-            ln[s] = l
-        return code, ln
-
-    g_code, g_len = _luts(green.codes(), 256 + 24)
-    r_code, r_len = _luts(red.codes(), 256)
-    b_code, b_len = _luts(blue.codes(), 256)
+    # O(alphabet), this is O(pixels)). Per channel a (code, length) LUT
+    # from the code list, codes left-aligned to 15 bits; every symbol's
+    # start offset comes from one cumsum, and the j-th sent bit of all
+    # codes (bit 14-j: bw.code sends codes MSB first) is scattered at
+    # once (<= 15 passes). Replaces a per-pixel Python loop (~30x on
+    # 256x256).
     flat = px.reshape(-1, 3).astype(np.int64)
     n = flat.shape[0]
     # symbol order per pixel: G, R, B (alpha: single-symbol, zero bits)
     scode = np.empty(3 * n, np.uint32)
     slen = np.empty(3 * n, np.int64)
-    for k, (ch, cl, cc) in enumerate(
-        ((1, g_len, g_code), (0, r_len, r_code), (2, b_len, b_code))
-    ):
-        scode[k::3] = cc[flat[:, ch]]
-        slen[k::3] = cl[flat[:, ch]]
+    for k, (ch, codes) in enumerate(((1, green), (0, red), (2, blue))):
+        s, c, l = np.array(codes, np.int64).T
+        lut = np.zeros((2, 256 + 24), np.int64)
+        lut[:, s] = c << (15 - l), l
+        scode[k::3], slen[k::3] = lut[:, flat[:, ch]]
     offs = np.cumsum(slen) - slen
     head = np.unpackbits(
         np.frombuffer(bytes(bw.out), np.uint8), bitorder="little"
@@ -925,7 +887,7 @@ def encode_webp(pixels: np.ndarray) -> bytes:
     base = len(head)
     for j in range(int(slen.max(initial=0))):
         m = slen > j
-        bits[base + offs[m] + j] = (scode[m] >> j) & 1
+        bits[base + offs[m] + j] = (scode[m] >> (14 - j)) & 1
     # np.packbits zero-pads the final partial byte, same as bw.done()
     payload = b"\x2f" + np.packbits(bits, bitorder="little").tobytes()
     chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload

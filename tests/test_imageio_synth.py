@@ -951,3 +951,67 @@ def test_bmp_16bit_and_bitfields():
     fx = _build_16bit_bmp(px)
     with pytest.raises(ValueError, match="truncated BMP pixel data"):
         decode_image(fx[:-40], "bmp", w, h)
+
+
+def _codec_pixels(seed, i):
+    """A smooth row of the benchmark's validate corpus
+    (perfbench.workloads.codec_pixels, non-palette formats)."""
+    rng = np.random.default_rng([seed, i])
+    w, h = (int(v) for v in rng.integers(96, 161, 2))
+    a, b = rng.uniform(0.4, 1.0, 2)
+    off = rng.integers(0, 64, 3)
+    yy, xx = np.mgrid[0:h, 0:w]
+    return np.stack([off[0] + a * 191 * yy / (h - 1),
+                     off[1] + b * 191 * xx / (w - 1),
+                     off[2] + 191 * (yy + xx) / (h + w - 2)],
+                    axis=-1).astype(np.uint8)
+
+
+# sha256 of each encoder's output on _codec_pixels(7, 0..2), taken from
+# the encoders as they stood before the shared prefix-code module
+# (numpy with OpenBLAS on x86-64: the JPEG DCT runs through BLAS).
+ENCODER_SHA256 = {
+    "webp": (
+        "2039989b8e67c379e66ef02594fdc7fe72588600016fa0ab27ebe56dfd577512",
+        "d3e02954645f8750636c73a691792f71f1a78ed2fae759738864e1f0f22b5d5b",
+        "b3d8cedf7ab647bfd77df492d13dc98eda35330168e0fedeedbf69ae4636013e",
+    ),
+    "jpeg": (
+        "63e056c7385f60d80e0f1bc2a545df32acd8371b15a1ffb2c00a5709381d94be",
+        "820775356762e48c1b534433fe1259dc7c2cd5b065d0aa5986e5b932b3d88694",
+        "7aadad817005485554b60d8d3568480f39ed4d7d60534cff9d2b0f2ed667789f",
+    ),
+    "jpeg_prog": (
+        "20266f1826b8a5ad535dc55ea3ebfdcc55541650854572baae24a96787c484ed",
+        "7206838ede261cc1c918e69bf147e2830a5a8acf432d1ccef74460a85190ad20",
+        "a8148c955a8918055ee53c73a1ca61d173001d75580db2a191f5542aeb9cc4d8",
+    ),
+    "tiff_g4": (
+        "2d983a2129d6888b8496514b4ed9527badeef7617a5d8da4564ff5a0c8136c29",
+        "c608c23fefdf400276234df4351f52680d16ab700fa1cac470741b7674151093",
+        "f1001a81a91af1d880b483e9c72f725044d8b19f3532cc20a8578faeda6c638d",
+    ),
+}
+
+
+def test_encoder_bytes_pinned():
+    """The prefix-coded encoders' output, byte for byte: the ingest
+    corpus and the payload oracles are built from these bytes, and
+    the encoders read their codes from the shared prefix module."""
+    import hashlib
+
+    from segment_rtree_spark.ccitt import encode_tiff_g4
+    from segment_rtree_spark.jpegio import encode_jpeg
+    from segment_rtree_spark.webp import encode_webp
+
+    encoders = {
+        "webp": encode_webp,
+        "jpeg": lambda p: encode_jpeg(p, 90),
+        "jpeg_prog": lambda p: encode_jpeg(p, 90, progressive=True),
+        "tiff_g4": lambda p: encode_tiff_g4(  # bilevel, as codec_pixels
+            np.repeat(((p[:, :, :1] >= 128) * 255).astype(np.uint8), 3, axis=2)),
+    }
+    for fmt, enc in encoders.items():
+        got = tuple(hashlib.sha256(enc(_codec_pixels(7, i))).hexdigest()
+                    for i in range(3))
+        assert got == ENCODER_SHA256[fmt], fmt

@@ -4,10 +4,13 @@ Generators build geometry the cheap-to-verify way (star polygons are
 simple by construction), then check the packed-tree kernels against
 segment-by-segment brute force and against themselves at different
 tree degrees — the tree/descent logic is what these catch; the scalar
-math is pinned by the golden fixtures.
+math is pinned by the golden fixtures. The codecs' prefix-code module
+is fuzzed the same way: canonical codes against RFC 1951's assignment,
+peek tables against a brute bit walk.
 """
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from segment_rtree_spark.kernels.clip import clip_path
@@ -15,6 +18,7 @@ from segment_rtree_spark.kernels.pip import BOUNDARY, EXTERIOR, INTERIOR
 from segment_rtree_spark.kernels.segtree import PackedSegTree
 from segment_rtree_spark.kernels.validity import validate_ring
 from segment_rtree_spark.layer import PolygonLayer
+from segment_rtree_spark.prefix import canonical, table
 from tests.test_kernels_pip import ring_relation
 
 
@@ -399,3 +403,145 @@ def test_arena_ring_views_equal_fresh_trees(seed, degree):
             want = fresh[i].query_other_intersections(fresh[j])
             assert len(want[0]) or i != j
             assert all(np.array_equal(g, w) for g, w in zip(got, want))
+
+
+def random_code_lengths(rng, alphabet: int, max_len: int):
+    """A complete code-length vector (Kraft sum exactly 1) over
+    `alphabet` symbols with no length above max_len: split leaves of a
+    one-leaf code tree, often the newest one so that long codes occur,
+    then scatter the leaf depths over random symbols. A one-leaf draw
+    is the one-symbol code, at a random length."""
+    n = int(rng.integers(1, min(alphabet, 1 << max_len) + 1))
+    depths = [int(rng.integers(1, max_len + 1))] if n == 1 else [0]
+    while len(depths) < n:
+        i = len(depths) - 1 if rng.random() < 0.5 else int(rng.integers(len(depths)))
+        if depths[i] < max_len:
+            depths[i] += 1
+            depths.append(depths[i])
+    lengths = [0] * alphabet
+    for s, d in zip(rng.choice(alphabet, n, replace=False), depths):
+        lengths[int(s)] = d
+    return lengths
+
+
+def rfc1951_codes(lengths):
+    """symbol -> (code, length) by RFC 1951 §3.2.2 (bl_count, next_code)."""
+    bl_count = [0] * 17
+    for l in lengths:
+        bl_count[l] += 1
+    bl_count[0] = 0
+    next_code, code = [0] * 17, 0
+    for l in range(1, 17):
+        code = (code + bl_count[l - 1]) << 1
+        next_code[l] = code
+    out = {}
+    for s, l in enumerate(lengths):
+        if l:
+            out[s] = (next_code[l], l)
+            next_code[l] += 1
+    return out
+
+
+def table_decode(tab, root, lsb_first, bits, count):
+    """Read `count` symbols from a 0/1 bit list through a prefix.table,
+    one root peek and at most one link per symbol."""
+    padded = bits + [0] * 32
+
+    def peek(at, width):
+        chunk = padded[at:at + width]
+        if lsb_first:
+            return sum(b << i for i, b in enumerate(chunk))
+        return sum(b << (width - 1 - i) for i, b in enumerate(chunk))
+
+    out, pos = [], 0
+    for _ in range(count):
+        e = tab[peek(pos, root)]
+        n = e & 31
+        if n > root:
+            e = tab[(e >> 5) + peek(pos + root, n - root)]
+            n = e & 31
+        assert n, "invalid prefix"
+        out.append(e >> 5)
+        pos += n
+    assert pos == len(bits)
+    return out
+
+
+@settings(max_examples=40, deadline=None)
+@given(seed=st.integers(0, 10_000), alphabet=st.integers(1, 2328),
+       max_len=st.integers(1, 16))
+def test_prefix_table_decodes_canonical_codes(seed, alphabet, max_len):
+    """prefix.canonical on a random complete length vector equals the
+    RFC 1951 assignment; a random symbol sequence encoded with its code
+    list decodes back through prefix.table (built from the list in
+    random order) at roots 7, 8, 13 and 16 in both bit orders, and
+    through a brute bit walk."""
+    rng = np.random.default_rng(seed)
+    lengths = random_code_lengths(rng, alphabet, max_len)
+    codes = canonical(lengths)
+    want = rfc1951_codes(lengths)
+    assert {s: (c, l) for s, c, l in codes} == want
+    assert [l for _, _, l in codes] == sorted(l for l in lengths if l)
+    msg = [int(s) for s in rng.choice([s for s, _, _ in codes], 200)]
+    bits = [(want[s][0] >> (want[s][1] - 1 - i)) & 1
+            for s in msg for i in range(want[s][1])]
+    by_code = {v: s for s, v in want.items()}
+    walked, code, l = [], 0, 0
+    for b in bits:  # brute bit walk
+        code, l = (code << 1) | b, l + 1
+        if (code, l) in by_code:
+            walked.append(by_code[(code, l)])
+            code = l = 0
+    assert walked == msg and l == 0
+    shuffled = [codes[i] for i in rng.permutation(len(codes))]  # any order
+    for root in (7, 8, 13, 16):
+        for lsb_first in (False, True):
+            tab = table(shuffled, root, lsb_first)
+            assert table_decode(tab, root, lsb_first, bits, len(msg)) == msg
+
+
+@settings(max_examples=40, deadline=None)
+@given(seed=st.integers(0, 10_000), alphabet=st.integers(3, 2328),
+       max_len=st.integers(2, 15))
+def test_prefix_canonical_rejects_bad_lengths(seed, alphabet, max_len):
+    """A complete vector with one length raised is incomplete; with one
+    length lowered, or one symbol added, it is oversubscribed.
+    canonical raises ValueError for both, and with complete=False (the
+    T.81 rule) for the second only, as for an empty code. Overlapping
+    explicit codes make prefix.table raise."""
+    rng = np.random.default_rng(seed)
+    lengths = random_code_lengths(rng, alphabet, max_len)
+    used = [s for s, l in enumerate(lengths) if l]
+    if len(used) < 2:  # a one-symbol code is always accepted
+        lengths = [0] * alphabet
+        used = [int(s) for s in rng.choice(alphabet, 2, replace=False)]
+        for s in used:
+            lengths[s] = 1
+    s = int(rng.choice(used))
+    longer = [l + (i == s) for i, l in enumerate(lengths)]
+    deep = [i for i in used if lengths[i] > 1]
+    if deep:
+        t = int(rng.choice(deep))
+        shorter = [l - (i == t) for i, l in enumerate(lengths)]
+    else:  # two 1-bit codes: add a third
+        shorter = list(lengths)
+        shorter[next(i for i, l in enumerate(lengths) if not l)] = 1
+    for bad, oversubscribed in ((longer, False), (shorter, True)):
+        with pytest.raises(ValueError):
+            canonical(bad)
+        if oversubscribed:
+            with pytest.raises(ValueError, match="oversubscribed"):
+                canonical(bad, complete=False)
+        else:
+            canonical(bad, complete=False)
+    free = [i for i, l in enumerate(lengths) if not l]
+    if free:
+        extra = list(lengths)
+        extra[free[0]] = max_len
+        with pytest.raises(ValueError, match="oversubscribed"):
+            canonical(extra, complete=False)
+    with pytest.raises(ValueError):
+        canonical([0] * alphabet)
+    assert canonical([0] * alphabet, complete=False) == []
+    with pytest.raises(ValueError, match="overlap"):
+        table([(0, 0b0, 1), (1, 0b01, 2)], 8, lsb_first=bool(seed & 1))

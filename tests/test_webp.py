@@ -107,6 +107,86 @@ def test_libwebp_encodes_decode_in_engine():
     assert (decode_webp(_lw_encode(lib, tex)) == tex).all(), "texture"
 
 
+def _vp8l_riff(bw):
+    payload = b"\x2f" + bw.done()
+    chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
+    if len(payload) & 1:
+        chunk += b"\x00"
+    return b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk
+
+
+def _vp8l_header(bw, w, h):
+    bw.write(w - 1, 14)
+    bw.write(h - 1, 14)
+    bw.write(0, 1)  # alpha hint
+    bw.write(0, 3)  # version
+    bw.write(0, 1)  # no transforms
+    bw.write(0, 1)  # no color cache
+
+
+def test_simple_code_with_equal_symbols_matches_libwebp():
+    """A simple prefix code may name the same symbol twice; libwebp
+    reads it as a one-symbol, 0-bit code. Green {7, 7} (8-bit first
+    symbol) and {1, 1} (1-bit first symbol), every other channel a
+    one-symbol code: the 4x3 image needs no pixel bits at all."""
+    lib = _libwebp()
+    from segment_rtree_spark.webp import _BitWriter, _write_prefix_code
+
+    for g in (7, 1):
+        bw = _BitWriter()
+        _vp8l_header(bw, 4, 3)
+        bw.write(0, 1)  # no meta prefix codes
+        bw.write(1, 1)  # green: simple code
+        bw.write(1, 1)  # ... of two symbols
+        bw.write(int(g > 1), 1)  # first symbol 8 bits wide, or 1
+        bw.write(g, 8 if g > 1 else 1)
+        bw.write(g, 8)  # second symbol = first
+        for sym, size in ((9, 256), (11, 256), (255, 256), (0, 40)):
+            _write_prefix_code(bw, {sym: 1}, size)  # red, blue, alpha, dist
+        buf = _vp8l_riff(bw)
+        want = np.broadcast_to(np.array([9, g, 11], np.uint8), (3, 4, 3))
+        assert (_lw_decode(lib, buf) == want).all(), g
+        assert (decode_webp(buf) == want).all(), g
+
+
+def test_many_group_stream_memory_is_bounded():
+    """A hostile VP8L stream (110 KB) whose meta prefix image declares
+    512 groups, each of five 16-symbol codes with lengths 1..15, and
+    no pixel data. Decoding raises ValueError, and the peak traced
+    allocation while it builds 2,560 tables stays within 2x of the
+    4,747,454 bytes the per-bit dict-walk decoder peaked at on this
+    stream (CPython 3.11). One flat 2^15-entry table per code would
+    take hundreds of MB here."""
+    import tracemalloc
+
+    from segment_rtree_spark.webp import _BitWriter, _write_prefix_code
+
+    n_groups = 512
+    bw = _BitWriter()
+    _vp8l_header(bw, 4, 4)
+    bw.write(1, 1)  # meta prefix codes, 4x4 blocks: a 1x1 entropy image
+    bw.write(0, 3)
+    # the entropy image: no color cache, one group of one-symbol codes
+    # whose single pixel holds the largest group index
+    bw.write(0, 1)
+    g = n_groups - 1
+    for sym, size in ((g & 0xFF, 280), (g >> 8, 256), (0, 256), (0, 256), (0, 40)):
+        _write_prefix_code(bw, {sym: 1}, size)
+    lengths = {s: min(s + 1, 15) for s in range(16)}
+    for _ in range(n_groups):
+        for size in (280, 256, 256, 256, 40):
+            _write_prefix_code(bw, lengths, size)
+    buf = _vp8l_riff(bw)
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="truncated"):
+            decode_webp(buf)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak <= 2 * 4_747_454, peak
+
+
 def _craft_backref_stream(dist_code, w=17, h=10, n_lit=160, n_ref=10):
     """Hand-build a VP8L stream: n_lit literals whose RED channel
     encodes their position, then n_ref length-1 backrefs at the given
@@ -128,19 +208,14 @@ def _craft_backref_stream(dist_code, w=17, h=10, n_lit=160, n_ref=10):
 
     dsym, dval, dbits = sym_extra(dist_code)
     bw = _BitWriter()
-    bw.write(w - 1, 14)
-    bw.write(h - 1, 14)
-    bw.write(0, 1)
-    bw.write(0, 3)
-    bw.write(0, 1)  # no transforms
-    bw.write(0, 1)  # no cache
+    _vp8l_header(bw, w, h)
     bw.write(0, 1)  # no meta
     green = _write_prefix_code(bw, {0: 1, 256: 1}, 280)
     red = _write_prefix_code(bw, {s: 8 for s in range(256)}, 256)
     _write_prefix_code(bw, {0: 1}, 256)    # blue: single, 0 bits
     _write_prefix_code(bw, {255: 1}, 256)  # alpha
     _write_prefix_code(bw, {dsym: 1}, 40)  # distance: single symbol
-    gc, rc = green.codes(), red.codes()
+    gc, rc = ({s: (c, l) for s, c, l in codes} for codes in (green, red))
     for pos in range(n_lit):
         c, l = gc[0]
         bw.code(c, l)
@@ -150,11 +225,7 @@ def _craft_backref_stream(dist_code, w=17, h=10, n_lit=160, n_ref=10):
         c, l = gc[256]  # length symbol 0 -> length 1, no extra bits
         bw.code(c, l)
         bw.write(dval, dbits)  # distance extra bits
-    payload = b"\x2f" + bw.done()
-    chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
-    if len(payload) & 1:
-        chunk += b"\x00"
-    return b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk
+    return _vp8l_riff(bw)
 
 
 def test_distance_map_matches_libwebp():
