@@ -216,21 +216,28 @@ def _decode_image_stream(br: _Bits, xsize: int, ysize: int,
         meta_idx = [(p >> 8) & 0xFFFF for p in meta]  # (red<<8)|green
         n_groups = max(meta_idx) + 1
 
+    # Every group's five codes are read and checked, but only the
+    # groups the meta image references keep their tables; the others
+    # are built into one scratch slot and dropped, as in libwebp, so a
+    # meta image naming group 65,535 does not hold 327,680 tables.
     green_size = 256 + 24 + ((1 << cache_bits) if cache_bits else 0)
-    groups = []
-    for _ in range(n_groups):
-        groups.append((
+    used = set(meta_idx) if meta_idx is not None else {0}
+    groups = {}
+    for gi in range(n_groups):
+        codes = (
             _read_prefix_code(br, green_size),
             _read_prefix_code(br, 256),   # red
             _read_prefix_code(br, 256),   # blue
             _read_prefix_code(br, 256),   # alpha
             _read_prefix_code(br, 40),    # distance
-        ))
+        )
+        if gi in used:
+            groups[gi] = codes
 
     n = xsize * ysize
     out = [0] * n
     pos = 0
-    g0 = groups[0]
+    g0 = groups.get(0)
     sym = br.sym
     while pos < n:
         if meta_idx is None:

@@ -149,16 +149,10 @@ def test_simple_code_with_equal_symbols_matches_libwebp():
         assert (decode_webp(buf) == want).all(), g
 
 
-def test_many_group_stream_memory_is_bounded():
-    """A hostile VP8L stream (110 KB) whose meta prefix image declares
-    512 groups, each of five 16-symbol codes with lengths 1..15, and
-    no pixel data. Decoding raises ValueError, and the peak traced
-    allocation while it builds 2,560 tables stays within 2x of the
-    4,747,454 bytes the per-bit dict-walk decoder peaked at on this
-    stream (CPython 3.11). One flat 2^15-entry table per code would
-    take hundreds of MB here."""
-    import tracemalloc
-
+def _many_group_stream():
+    """A hostile VP8L stream (110 KB) whose 1x1 meta prefix image names
+    only the last of 512 groups, each of five 16-symbol codes with
+    lengths 1..15, and no pixel data."""
     from segment_rtree_spark.webp import _BitWriter, _write_prefix_code
 
     n_groups = 512
@@ -176,15 +170,100 @@ def test_many_group_stream_memory_is_bounded():
     for _ in range(n_groups):
         for size in (280, 256, 256, 256, 40):
             _write_prefix_code(bw, lengths, size)
-    buf = _vp8l_riff(bw)
+    return _vp8l_riff(bw)
+
+
+def _traced_peak_of_failed_decode(buf):
+    import tracemalloc
+
     tracemalloc.start()
     try:
         with pytest.raises(ValueError, match="truncated"):
             decode_webp(buf)
-        peak = tracemalloc.get_traced_memory()[1]
+        return tracemalloc.get_traced_memory()[1]
     finally:
         tracemalloc.stop()
+
+
+def test_many_group_stream_memory_is_bounded():
+    """The 512-group stream raises ValueError, and the peak traced
+    allocation while it reads 2,560 codes stays within 2x of the
+    4,747,454 bytes the per-bit dict-walk decoder peaked at on this
+    stream (CPython 3.11). One flat 2^15-entry table per code would
+    take hundreds of MB here."""
+    peak = _traced_peak_of_failed_decode(_many_group_stream())
     assert peak <= 2 * 4_747_454, peak
+
+
+def test_unreferenced_groups_keep_no_tables():
+    """Only the one group the meta image names keeps its tables; the
+    other 511 are read, checked and dropped. The decoder that kept a
+    table for every group from 0 to the largest index peaked at
+    4,288,960 traced bytes on this stream (CPython 3.11.7); keeping one
+    group peaks at 131,960, mostly copies of the 110 KB stream. The
+    bound is an eighth of the former."""
+    peak = _traced_peak_of_failed_decode(_many_group_stream())
+    assert peak < 4_288_960 // 8, peak
+
+
+def _unused_group_stream():
+    """An 8x4 VP8L image in two 4x4 entropy blocks that use groups 3
+    and 1 of four. Groups 0 and 2 hold valid codes no pixel reads (one
+    of them a normal code with lengths 1..15). Returns the RIFF bytes
+    and the RGB pixels written."""
+    from segment_rtree_spark.webp import _BitWriter, _write_prefix_code
+
+    rng = np.random.default_rng(5)
+    want = np.zeros((4, 8, 3), np.uint8)
+    want[:, :, 0] = rng.integers(0, 4, size=(4, 8)) * 60  # red
+    want[:, :, 1] = rng.integers(0, 16, size=(4, 8))      # green
+    want[:, :, 2] = np.where(rng.random((4, 8)) < 0.5, 17, 200)  # blue
+    block_group = (3, 1)
+    bw = _BitWriter()
+    _vp8l_header(bw, 8, 4)
+    bw.write(1, 1)  # meta prefix codes, 4x4 blocks: a 2x1 entropy image
+    bw.write(0, 3)
+    bw.write(0, 1)  # the entropy image: no color cache
+    meta = _write_prefix_code(bw, {3: 1, 1: 1}, 280)  # green = index
+    for size in (256, 256, 256, 40):
+        _write_prefix_code(bw, {0: 1}, size)
+    meta_code = {s: (c, l) for s, c, l in meta}
+    for g in block_group:
+        bw.code(*meta_code[g])
+    used = {}
+    for g in range(4):
+        if g in block_group:
+            green = _write_prefix_code(bw, {s: 4 for s in range(16)}, 280)
+            red = _write_prefix_code(bw, {0: 2, 60: 2, 120: 2, 180: 2}, 256)
+            blue = _write_prefix_code(bw, {17: 1, 200: 1}, 256)
+            _write_prefix_code(bw, {255: 1}, 256)  # alpha
+            _write_prefix_code(bw, {0: 1}, 40)
+            used[g] = [{s: (c, l) for s, c, l in code}
+                       for code in (green, red, blue)]
+        else:
+            for size in (280, 256, 256, 256, 40):
+                _write_prefix_code(
+                    bw, {s: min(s + 1, 15) for s in range(16)} if g == 2
+                    else {7: 1}, size)
+    for y in range(4):
+        for x in range(8):
+            green, red, blue = used[block_group[x // 4]]
+            r, gr, b = (int(v) for v in want[y, x])
+            bw.code(*green[gr])
+            bw.code(*red[r])
+            bw.code(*blue[b])
+    return _vp8l_riff(bw), want
+
+
+def test_stream_with_unused_groups_decodes_exactly():
+    buf, want = _unused_group_stream()
+    assert (decode_webp(buf) == want).all()
+
+
+def test_stream_with_unused_groups_matches_libwebp():
+    lib = _libwebp()
+    buf, want = _unused_group_stream()
+    assert (_lw_decode(lib, buf) == want).all()
 
 
 def _craft_backref_stream(dist_code, w=17, h=10, n_lit=160, n_ref=10):

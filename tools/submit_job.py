@@ -5,6 +5,7 @@ Cluster usage (the north-rule deployment shape):
     zip -r segment_rtree_spark.zip segment_rtree_spark
     spark-submit --master <cluster> \
         --py-files segment_rtree_spark.zip \
+        --conf spark.python.daemon.module=segment_rtree_spark.worker_daemon \
         tools/submit_job.py \
         --input  <images parquet/iceberg path> \
         --layer  data/wkt/africa.wkt \
@@ -14,7 +15,10 @@ Cluster usage (the north-rule deployment shape):
 
 The job is resumable: work is keyed by the spatial cell prefix; killed
 runs resume at the first incomplete prefix (see
-segment_rtree_spark/checkpoint.py). Local smoke:
+segment_rtree_spark/checkpoint.py). The daemon setting is the one
+`session.get_spark` applies: Python workers fork from the engine's
+daemon, which skips two fixed per-task costs. Local smoke, through
+`get_spark`:
 
     python tools/submit_job.py --demo
 """
@@ -47,10 +51,14 @@ def main(argv=None):
     from segment_rtree_spark.layer import PolygonLayer
     from segment_rtree_spark.operators.pip_join import pip_join_broadcast
     from segment_rtree_spark.operators.tile_ops import assign_tiles, with_cell_prefix
+    from segment_rtree_spark.session import get_spark
 
     # under spark-submit the session comes preconfigured by the cluster;
-    # standalone invocation builds a local one
-    spark = SparkSession.builder.appName("srs-pip-job").getOrCreate()
+    # the local demo builds the engine's own
+    if args.demo:
+        spark = get_spark(app="srs-pip-job")
+    else:
+        spark = SparkSession.builder.appName("srs-pip-job").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     import tempfile
