@@ -6,10 +6,11 @@ so ad-hoc queries can call them by name:
     SELECT srs_cell_of(lat, lng, 8), srs_hilbert(gx, gy) FROM pts
 
 Note the performance contract: for HOT paths prefer the pure-SQL
-expression generators (tiles.cell_of_sql, kernels.hilbert.hilbert_sql)
-— those stay in WholeStageCodegen with zero Python. The registered
-pandas UDFs exist for interactive convenience and for functions with
-no closed SQL form; they are Arrow-vectorized (never per-row Python).
+forms (tile_ops.assign_tiles over tiles.cell_stages,
+kernels.hilbert.hilbert_sql) — those stay in WholeStageCodegen with
+zero Python. The registered pandas UDFs exist for interactive
+convenience and for functions with no closed SQL form; they are
+Arrow-vectorized (never per-row Python).
 """
 
 from __future__ import annotations

@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..kernels.pip import RELATION_NAMES, RingArena
 from ..layer import PolygonLayer
-from ..tiles import cell_of_sql
+from .tile_ops import assign_tiles
 
 # layers whose pickled size (what the broadcast kernels ship) exceeds
 # this take the cell-partitioned path instead (conservative
@@ -306,7 +306,7 @@ def _pip_cogroup(
     executor-built (cover_from_rings) when the layer itself is a
     table."""
     spark = points.sparkSession
-    pts = points.withColumn("cell", F.expr(cell_of_sql(y, x, res)))
+    pts = assign_tiles(points, res, y=y, x=x)
 
     if cellset is not None:
         pts = pts.join(F.broadcast(cellset), "cell", "semi")

@@ -1,8 +1,13 @@
 """Tile assignment / aggregation / pyramid rollup — pure Catalyst ops.
 
-Tile assignment is a closed-form bit-arithmetic projection
-(tiles.cell_of_sql), so at 10^12 rows it is a scan-local,
+Tile assignment is a closed-form bit-arithmetic projection chain
+(tiles.cell_stages), so at 10^12 rows it is a scan-local,
 WholeStageCodegen'd column compute: no UDF, no shuffle, no Python.
+assign_tiles applies the chain one projection per stage through
+temporary columns, so the optimizer keeps each grid index a column
+(one FLOOR per axis in the optimized plan, not one per use) and Spark
+parses a few short stage expressions, not the folded cell_of_sql
+string. Every Spark cell assignment in the engine goes through it.
 Aggregations are plain hash-aggregates (partial+final for free);
 the tile pyramid is a sequence of parent-cell rollups, each a
 re-aggregation of the PREVIOUS level's (already tiny) output rather
@@ -13,15 +18,34 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..tiles import cell_of_sql, cell_parent_sql, cell_prefix_sql
+from ..tiles import cell_parent_sql, cell_prefix_sql, cell_stages
 
 __all__ = ["assign_tiles", "tile_agg", "tile_pyramid", "with_cell_prefix"]
 
 
 def assign_tiles(df: DataFrame, res: int, y: str = "lat", x: str = "lng",
                  out: str = "cell") -> DataFrame:
-    """Add the quadtree cell id at `res` as a pure column expression."""
-    return df.withColumn(out, F.expr(cell_of_sql(y, x, res)))
+    """Add the quadtree cell id at `res` as a pure column expression.
+
+    `y` and `x` are column names or SQL expressions. The stages of
+    tiles.cell_stages run as projections over temporary grid-index
+    columns, named apart from every existing column and dropped at the
+    end.
+    """
+    taken = {c.lower() for c in df.columns} | {out.lower()}
+    names = {"cell": out}
+    for v in ("ix", "iy"):
+        name = f"_{v}"
+        while name.lower() in taken:
+            name = "_" + name
+        names[v] = name
+    refs = {"lat": f"({y})", "lng": f"({x})", "ix": f"`{names['ix']}`",
+            "iy": f"`{names['iy']}`"}
+    for stage in cell_stages(res):
+        df = df.withColumns(
+            {names[k]: F.expr(sql.format(**refs)) for k, sql in stage.items()}
+        )
+    return df.drop(names["ix"], names["iy"])
 
 
 def with_cell_prefix(df: DataFrame, cell: str = "cell", prefix_bits: int = 12,
@@ -71,7 +95,7 @@ def tile_pyramid(df: DataFrame, base_res: int, min_res: int = 0,
     free, and the base table really is scanned once.
     """
     measures = measures or {}
-    base = df.withColumn("cell", F.expr(cell_of_sql(y, x, base_res)))
+    base = assign_tiles(df, base_res, y=y, x=x)
     if not measures:
         level = base.groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
         entries = [

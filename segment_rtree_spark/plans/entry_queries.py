@@ -145,6 +145,7 @@ from ..operators import embed as _embed  # noqa: E402
 from ..operators import text as _text  # noqa: E402
 from ..operators.knn_join import knn_join_centroid  # noqa: E402
 from ..operators.pip_join import pip_join_broadcast  # noqa: E402
+from ..operators.tile_ops import assign_tiles  # noqa: E402
 from ..tiles import cell_of_sql, cell_parent_sql  # noqa: E402
 
 
@@ -168,25 +169,18 @@ def q_pip_relation(spark, sf_dir):
     )
 
 
+_ORDER_LAT = "(cast((o_orderkey * 104729) % 18000 as double) / 100.0 - 90.0)"
+_ORDER_LNG = "(cast((o_orderkey * 7919) % 36000 as double) / 100.0 - 180.0)"
+
+
 def q_tile_assign(spark, sf_dir):
-    return _t(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("point_id"),
-        F.expr(
-            cell_of_sql(
-                "(cast((o_orderkey * 104729) % 18000 as double) / 100.0 - 90.0)",
-                "(cast((o_orderkey * 7919) % 36000 as double) / 100.0 - 180.0)",
-                8,
-            )
-        ).alias("cell"),
-    )
+    return assign_tiles(
+        _t(spark, sf_dir, "orders"), 8, y=_ORDER_LAT, x=_ORDER_LNG
+    ).select(F.col("o_orderkey").alias("point_id"), "cell")
 
 
 def _tile_assign_oracle():
-    cell = cell_of_sql(
-        "(cast((o_orderkey * 104729) % 18000 as double) / 100.0 - 90.0)",
-        "(cast((o_orderkey * 7919) % 36000 as double) / 100.0 - 180.0)",
-        8,
-    )
+    cell = cell_of_sql(_ORDER_LAT, _ORDER_LNG, 8)
     return f"select o_orderkey as point_id, {cell} as cell from orders"
 
 
@@ -1087,16 +1081,16 @@ select point_id, polygon_id, dist, cast(rank as int) as rank from r where rank <
 def _cells_cte(res: int) -> str:
     """All 4^res cells with ids and bounds — same closed forms as
     tiles.cell_of/cell_bounds (Morton spread + plate-carree grid)."""
-    from ..tiles import MAX_RES, _RES_BITS, _spread_sql
+    from ..tiles import cell_stages, fold_stages
 
     n = 1 << res
-    shift = 2 * (MAX_RES - res) + _RES_BITS
-    path = f"(({_spread_sql('ix')} << 1) | {_spread_sql('iy')})"
+    # the chain past its grid-index stage, over the ix/iy columns
+    cell = fold_stages(cell_stages(res)[1:], {"ix": "ix", "iy": "iy"})["cell"]
     lngmin = f"cast(ix as double) / {float(n)!r} * 360.0 - 180.0"
     latmin = f"cast(iy as double) / {float(n)!r} * 180.0 - 90.0"
     return f"""
 select ix, iy,
-  ((({path}) << {shift}) | {res}) as cell,
+  {cell} as cell,
   {lngmin} as lngmin, {latmin} as latmin,
   {lngmin} + {360.0 / n!r} as lngmax, {latmin} + {180.0 / n!r} as latmax
 from (select unnest(range(0, {n})) as ix), (select unnest(range(0, {n})) as iy)

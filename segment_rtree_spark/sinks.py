@@ -12,9 +12,9 @@ and `cell_p = <k>` pruning reaches the file listing.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-from .tiles import cell_of_sql, cell_prefix_sql
+from .operators.tile_ops import assign_tiles, with_cell_prefix
 
 __all__ = ["write_images_partitioned", "read_images_partitioned"]
 
@@ -35,9 +35,7 @@ def write_images_partitioned(
     level and the partitioned PIP join co-locates without a shuffle
     when both sides share the layout.
     """
-    out = df.withColumn("cell", F.expr(cell_of_sql(y, x, res))).withColumn(
-        "cell_p", F.expr(cell_prefix_sql("cell", prefix_bits))
-    )
+    out = with_cell_prefix(assign_tiles(df, res, y=y, x=x), prefix_bits=prefix_bits)
     out.write.mode(mode).partitionBy("cell_p").parquet(path)
 
 

@@ -3,8 +3,8 @@
 The reference is batch-only (SURVEY.md §2.10) and the north rule asks
 for checkpointed BATCH resumability (see ../checkpoint.py); this module
 is the streaming-ingest extension: new image rows stream in, get their
-quadtree cell assigned by the same pure-SQL expression the batch path
-uses, and per-cell counts aggregate in event-time windows with a
+quadtree cell assigned by the same pure-SQL projection chain the batch
+path uses, and per-cell counts aggregate in event-time windows with a
 watermark for late data. State lives in the streaming checkpoint dir,
 so the job resumes exactly-once after restart.
 """
@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..tiles import cell_of_sql
+from ..operators.tile_ops import assign_tiles
 
 __all__ = [
     "stream_images",
@@ -36,7 +36,7 @@ def streaming_tile_counts(
     watermark: str = "30 minutes",
 ) -> DataFrame:
     """Tumbling-window per-cell ingest counts with late-data watermark."""
-    tiled = images.withColumn("cell", F.expr(cell_of_sql("lat", "lng", res)))
+    tiled = assign_tiles(images, res)
     return (
         tiled.withWatermark(ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), window).alias("win"), "cell")

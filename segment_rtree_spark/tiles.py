@@ -21,14 +21,24 @@ The SAME spec is emitted three ways so plans stay JVM-side and oracles
 stay honest:
   * NumPy kernels (cell_of / cell_parent / cell_bounds / polyfill) for
     use inside pandas UDFs;
-  * a SQL expression string (cell_of_sql) valid in BOTH Spark SQL and
-    DuckDB (bitwise << >> & | are shared syntax) — tile assignment in
-    Spark is a pure Catalyst expression, fully codegen'd, no Python;
-  * cell_parent_sql for rollups.
+  * cell_stages: the cell id as a short chain of SQL projections (grid
+    index, one stage per Morton spread step that does work, the cell),
+    valid in BOTH Spark SQL and DuckDB (bitwise << >> & | are shared
+    syntax). tile_ops.assign_tiles applies the chain as Spark
+    projections, so tile assignment is a pure Catalyst expression,
+    fully codegen'd, no Python, and every stage reads its inputs as
+    columns: the plan computes each grid index once, and Spark parses a
+    few hundred characters per stage instead of one expression that
+    repeats the grid index 32 times. cell_of_sql folds the same chain
+    into one expression string for DuckDB oracles and SQL text;
+  * cell_parent_sql / cell_prefix_sql for rollups and partition keys.
 
 Morton spreading uses the classic mask-doubling trick (public-domain
 bit twiddling, cf. the interleave in reference
 src/flatbush/hilbert.rs:124-132 which uses the same masks at 16 bits).
+A step whose shift is >= res is the identity (the grid index is below
+2^res and the step's mask clears everything it shifts in), so both the
+NumPy and the SQL forms run only the steps with shift < res.
 """
 
 from __future__ import annotations
@@ -38,6 +48,7 @@ import numpy as np
 MAX_RES = 26
 _RES_BITS = 5
 _RES_MASK = (1 << _RES_BITS) - 1
+_PREFIX_MAX = 2 * MAX_RES + _RES_BITS  # one above the path's MSB (bit 56)
 
 # 64-bit Morton spread masks (26 significant input bits)
 _SPREAD_MASKS = (
@@ -57,6 +68,7 @@ __all__ = [
     "cell_bounds",
     "cell_prefix",
     "polyfill",
+    "cell_stages",
     "cell_of_sql",
     "cell_parent_sql",
     "cell_prefix_sql",
@@ -67,9 +79,14 @@ __all__ = [
 # NumPy kernels
 # ----------------------------------------------------------------------
 
-def _spread(v: np.ndarray) -> np.ndarray:
+def _spread_steps(res: int):
+    """The spread steps that change a grid index below 2^res."""
+    return [(shift, mask) for shift, mask in _SPREAD_MASKS if shift < res]
+
+
+def _spread(v: np.ndarray, res: int) -> np.ndarray:
     v = v.astype(np.int64)
-    for shift, mask in _SPREAD_MASKS:
+    for shift, mask in _spread_steps(res):
         v = (v | (v << shift)) & mask
     return v
 
@@ -95,12 +112,16 @@ def _grid_xy(lat, lng, res: int):
     return ix, iy
 
 
+def _check_range(name: str, value: int, hi: int) -> None:
+    if not 0 <= value <= hi:
+        raise ValueError(f"{name} must be in [0, {hi}]")
+
+
 def cell_of(lat, lng, res: int):
     """Cell id of (lat, lng) at resolution res. Vectorized int64."""
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res must be in [0, {MAX_RES}]")
+    _check_range("res", res, MAX_RES)
     ix, iy = _grid_xy(lat, lng, res)
-    path = (_spread(ix) << 1) | _spread(iy)
+    path = (_spread(ix, res) << 1) | _spread(iy, res)
     return (path << np.int64(2 * (MAX_RES - res) + _RES_BITS)) | np.int64(res)
 
 
@@ -109,7 +130,9 @@ def cell_res(cell):
 
 
 def cell_parent(cell, parent_res: int):
-    """Ancestor cell at a coarser resolution (prefix truncation)."""
+    """Ancestor cell at a coarser resolution (prefix truncation).
+    ValueError for parent_res outside [0, MAX_RES]."""
+    _check_range("parent_res", parent_res, MAX_RES)
     cell = np.asarray(cell, dtype=np.int64)
     shift = np.int64(2 * (MAX_RES - parent_res) + _RES_BITS)
     return ((cell >> shift) << shift) | np.int64(parent_res)
@@ -147,11 +170,11 @@ def cell_prefix(cell, prefix_bits: int = 12):
     """Spatial partition key: top `prefix_bits` path bits, res-independent.
 
     The path's MSB sits at bit 2*MAX_RES + _RES_BITS - 1 = 56, so the
-    top k path bits are `cell >> (57 - k)`.
+    top k path bits are `cell >> (57 - k)`. ValueError for prefix_bits
+    outside [0, 57].
     """
-    return np.asarray(cell, dtype=np.int64) >> np.int64(
-        2 * MAX_RES + _RES_BITS - prefix_bits
-    )
+    _check_range("prefix_bits", prefix_bits, _PREFIX_MAX)
+    return np.asarray(cell, dtype=np.int64) >> np.int64(_PREFIX_MAX - prefix_bits)
 
 
 def polyfill(polygon, res: int, mode: str = "intersect") -> np.ndarray:
@@ -174,33 +197,55 @@ def polyfill(polygon, res: int, mode: str = "intersect") -> np.ndarray:
 # SQL expression generators (valid in Spark SQL AND DuckDB)
 # ----------------------------------------------------------------------
 
-def _spread_sql(v: str) -> str:
-    expr = v
-    for shift, mask in _SPREAD_MASKS:
-        expr = f"((({expr}) | (({expr}) << {shift})) & {mask})"
-    return expr
+def cell_stages(res: int) -> list:
+    """The cell id at `res` as a chain of SQL projection stages.
+
+    Each stage maps output names to SQL templates over the previous
+    stage's names in `{}` fields; the first stage reads the inputs
+    `{lat}` and `{lng}`. The chain computes the clamped grid index
+    (ix, iy), runs one stage per spread step with shift < res
+    (_spread_steps), and ends in one stage naming `cell`. Spark applies
+    each stage as a projection (tile_ops.assign_tiles); cell_of_sql
+    folds them into one expression.
+    """
+    _check_range("res", res, MAX_RES)
+    n = 1 << res
+    stages = [{
+        "ix": f"greatest(0, least(cast(floor(({{lng}} + 180.0) / 360.0 * {n}) as bigint), {n - 1}))",
+        "iy": f"greatest(0, least(cast(floor(({{lat}} + 90.0) / 180.0 * {n}) as bigint), {n - 1}))",
+    }]
+    for shift, mask in _spread_steps(res):
+        stages.append({
+            v: f"(({{{v}}} | ({{{v}}} << {shift})) & {mask})" for v in ("ix", "iy")
+        })
+    shift = 2 * (MAX_RES - res) + _RES_BITS
+    stages.append({"cell": f"(((({{ix}} << 1) | {{iy}}) << {shift}) | {res})"})
+    return stages
+
+
+def fold_stages(stages: list, env: dict) -> dict:
+    """Substitute each stage into the next, starting from `env` (name
+    -> SQL expression); returns the last stage's expressions."""
+    for stage in stages:
+        env = {name: sql.format(**{k: f"({v})" for k, v in env.items()})
+               for name, sql in stage.items()}
+    return env
 
 
 def cell_of_sql(lat: str, lng: str, res: int) -> str:
-    """Pure-SQL cell_of — same closed form both engines, no UDF.
-
-    In Spark this whole expression stays inside WholeStageCodegen; tile
-    assignment of 10^12 rows is a scan-local projection with zero
-    Python involvement.
-    """
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res must be in [0, {MAX_RES}]")
-    n = 1 << res
-    ix = f"greatest(0, least(cast(floor((({lng}) + 180.0) / 360.0 * {n}) as bigint), {n - 1}))"
-    iy = f"greatest(0, least(cast(floor((({lat}) + 90.0) / 180.0 * {n}) as bigint), {n - 1}))"
-    path = f"(({_spread_sql(ix)} << 1) | {_spread_sql(iy)})"
-    return f"((({path}) << {2 * (MAX_RES - res) + _RES_BITS}) | {res})"
+    """Pure-SQL cell_of — same closed form both engines, no UDF: the
+    cell_stages chain folded into one expression (DuckDB oracles, SQL
+    text). Spark queries assign cells with tile_ops.assign_tiles, which
+    keeps the stages apart."""
+    return fold_stages(cell_stages(res), {"lat": lat, "lng": lng})["cell"]
 
 
 def cell_parent_sql(cell: str, parent_res: int) -> str:
+    _check_range("parent_res", parent_res, MAX_RES)
     shift = 2 * (MAX_RES - parent_res) + _RES_BITS
     return f"(((({cell}) >> {shift}) << {shift}) | {parent_res})"
 
 
 def cell_prefix_sql(cell: str, prefix_bits: int = 12) -> str:
-    return f"(({cell}) >> {2 * MAX_RES + _RES_BITS - prefix_bits})"
+    _check_range("prefix_bits", prefix_bits, _PREFIX_MAX)
+    return f"(({cell}) >> {_PREFIX_MAX - prefix_bits})"

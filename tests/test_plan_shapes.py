@@ -32,6 +32,29 @@ def test_tile_assign_no_exchange_whole_stage(spark):
     assert "codegen id" in p  # the projection runs inside WholeStageCodegen
 
 
+def _floors(df) -> int:
+    return str(df._jdf.queryExecution().optimizedPlan().toString()).upper().count("FLOOR(")
+
+
+def test_cell_assignment_keeps_its_stages(spark):
+    """Each cell assignment computes its grid index once per axis: the
+    optimized plan holds exactly 2 FLOORs per assignment, not one per
+    use of the index inside the Morton spread (64 in the folded form)."""
+    from segment_rtree_spark.operators.pip_join import pip_join_partitioned
+    from segment_rtree_spark.operators.tile_ops import assign_tiles, tile_pyramid
+    from segment_rtree_spark.plans.entry_queries import entry_layer
+
+    pts = spark.range(1000).select(
+        F.col("id").alias("point_id"),
+        (F.col("id") % 360 - 180.0).cast("double").alias("lng"),
+        (F.col("id") % 180 - 90.0).cast("double").alias("lat"),
+    )
+    assert _floors(assign_tiles(pts, 26)) == 2
+    assert _floors(assign_tiles(pts, 12).groupBy("cell").count()) == 2
+    assert _floors(tile_pyramid(pts, base_res=10, min_res=4)) == 2
+    assert _floors(pip_join_partitioned(pts, entry_layer(), keep=["point_id"], res=5)) == 2
+
+
 def test_pip_broadcast_no_point_shuffle(spark):
     """The broadcast PIP join never shuffles the (big) point side."""
     from segment_rtree_spark.operators.pip_join import pip_join_broadcast

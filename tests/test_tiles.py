@@ -2,6 +2,7 @@
 
 import duckdb
 import numpy as np
+import pandas as pd
 import pytest
 
 from segment_rtree_spark.tiles import (
@@ -71,8 +72,8 @@ def test_sql_matches_numpy():
     rng = np.random.default_rng(6)
     lat, lng = rand_latlng(rng, 500)
     con = duckdb.connect()
-    con.register("pts", __import__("pandas").DataFrame({"lat": lat, "lng": lng}))
-    for res in (0, 4, 9, 15, MAX_RES):
+    con.register("pts", pd.DataFrame({"lat": lat, "lng": lng}))
+    for res in range(MAX_RES + 1):
         want = cell_of(lat, lng, res)
         got = con.sql(
             f"select {cell_of_sql('lat', 'lng', res)} as c from pts"
@@ -85,6 +86,74 @@ def test_sql_matches_numpy():
     sql = cell_prefix_sql(cell_of_sql("lat", "lng", 15), 12)
     got = con.sql(f"select {sql} as c from pts").fetchnumpy()["c"]
     np.testing.assert_array_equal(got, cell_prefix(cell_of(lat, lng, 15), 12))
+
+
+def test_parent_and_prefix_reject_out_of_range():
+    """cell_parent / cell_parent_sql take a resolution in [0, MAX_RES]
+    and cell_prefix / cell_prefix_sql a bit count in [0, 57] (the path
+    bits above the res field), raising ValueError as cell_of does,
+    instead of ORing a bad res into the id or emitting a negative
+    shift that Java and NumPy read differently."""
+    c = cell_of(np.array([10.0]), np.array([20.0]), 12)
+    for bad in (-1, MAX_RES + 1):
+        with pytest.raises(ValueError, match="parent_res"):
+            cell_parent(c, bad)
+        with pytest.raises(ValueError, match="parent_res"):
+            cell_parent_sql("cell", bad)
+    for bad in (-1, 58, 64):
+        with pytest.raises(ValueError, match="prefix_bits"):
+            cell_prefix(c, bad)
+        with pytest.raises(ValueError, match="prefix_bits"):
+            cell_prefix_sql("cell", bad)
+    # the range ends are valid
+    assert cell_parent(c, 0).tolist() == [0]
+    np.testing.assert_array_equal(cell_parent(c, 12), c)
+    assert cell_prefix(c, 0).tolist() == [0]
+    np.testing.assert_array_equal(cell_prefix(c, 57), c >> 0)
+
+
+def _edge_points(rng, n):
+    """Random points plus the clamp edges: lng +-180, lat +-90."""
+    lat, lng = rand_latlng(rng, n)
+    edge_lat = np.array([90.0, -90.0, 90.0, -90.0, 0.0, 0.0, 90.0, -90.0])
+    edge_lng = np.array([180.0, -180.0, -180.0, 180.0, 180.0, -180.0, 0.0, 0.0])
+    return np.r_[lat, edge_lat], np.r_[lng, edge_lng]
+
+
+def test_assign_tiles_matches_numpy_every_res(spark):
+    """The staged Spark projection equals NumPy cell_of at every res,
+    across the identity-step cutoffs (res 1, 2, 4, 8, 16) and at the
+    clamp edges."""
+    from segment_rtree_spark.operators.tile_ops import assign_tiles
+
+    lat, lng = _edge_points(np.random.default_rng(7), 400)
+    df = spark.createDataFrame(pd.DataFrame({"i": np.arange(len(lat)), "lat": lat, "lng": lng}))
+    for res in range(MAX_RES + 1):
+        df = assign_tiles(df, res, out=f"c{res}")
+    assert df.columns == ["i", "lat", "lng"] + [f"c{r}" for r in range(MAX_RES + 1)]
+    got = df.toPandas().sort_values("i")
+    for res in range(MAX_RES + 1):
+        np.testing.assert_array_equal(
+            got[f"c{res}"].to_numpy(), cell_of(lat, lng, res), err_msg=f"res {res}"
+        )
+
+
+def test_assign_tiles_leaves_clashing_columns_unchanged(spark):
+    """Columns named like assign_tiles' temporary grid-index columns
+    (in any case) keep their values and positions; only `out` is added
+    and no temporary column is left behind."""
+    from segment_rtree_spark.operators.tile_ops import assign_tiles
+
+    lat, lng = _edge_points(np.random.default_rng(8), 50)
+    names = ["_ix", "_iy", "__IX", "__iy", "ix", "iy"]
+    pdf = pd.DataFrame({"lat": lat, "lng": lng})
+    for k, name in enumerate(names):
+        pdf[name] = np.arange(len(lat)) * 10 + k
+    out = assign_tiles(spark.createDataFrame(pdf), 9).toPandas()
+    assert list(out.columns) == ["lat", "lng", *names, "cell"]
+    for name in names:
+        np.testing.assert_array_equal(out[name].to_numpy(), pdf[name].to_numpy())
+    np.testing.assert_array_equal(out["cell"].to_numpy(), cell_of(lat, lng, 9))
 
 
 SQUARE = polygon([([10.0, 10.0, 30.0, 30.0, 10.0], [10.0, 30.0, 30.0, 10.0, 10.0])])
