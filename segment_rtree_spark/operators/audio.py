@@ -15,6 +15,10 @@ Design carried over from operators/images.py:
   expression; only structurally-plausible WAV rows enter the Arrow
   kernel, and a clean pcm corpus pays ZERO Python. Errors are DATA
   (the image validator's codes; reference errors.rs:5-47).
+* `audio_features` and `sample_audio_clips` are row functions of the
+  image operators' per-row payload driver (validate._payload_map):
+  one mapInArrow UDF over the six table columns, values read as
+  exact Python ints (a NULL afp beside 64-bit ones stays exact).
 * `audio_features` returns EXACT integer features (duration_ms,
   peak, energy = sum of squares, zcross, afp fingerprint), so the
   Spark/DuckDB oracle hash compare is bit-stable — no float
@@ -35,14 +39,16 @@ across all formats and error classes.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .validate import (
     IMG_ERR_DIMENSION_MISMATCH,
     IMG_ERR_NULL_METADATA,
+    _payload_map,
     _payload_verdicts,
 )
+
+_COLS = ("audio_id", "bytes", "fmt", "sr", "n_samples", "channels")
 
 
 def validate_audio(audio: DataFrame) -> DataFrame:
@@ -82,13 +88,13 @@ def validate_audio(audio: DataFrame) -> DataFrame:
     formats = {"wav": (riff, "missing RIFF/WAVE signature"), "pcm": None}
 
     def check(buf, fmt, sr, n, ch):
-        decode_audio(bytes(buf), str(fmt), int(sr), int(n), int(ch))
+        decode_audio(buf, fmt, sr, n, ch)
         return None, None
 
     # entropy-coded audio: valid formats with no decoder here
     declined = ("mp3", "aac", "opus", "flac", "ogg")
     return _payload_verdicts(
-        audio.select("audio_id", "bytes", "fmt", "sr", "n_samples", "channels"),
+        audio.select(*_COLS),
         "audio_id", rules, declined, formats,
         n.cast("long") * ch.cast("long") * 2, False, check,
     )
@@ -125,43 +131,14 @@ def audio_features(audio: DataFrame, n_windows: int = 64) -> DataFrame:
     schema = ("audio_id string, sr int, n_samples int, duration_ms long, "
               "peak long, energy long, zcross long, afp long")
 
-    def kernel(batches):
-        for pdf in batches:
-            out = {k: [] for k in ("audio_id", "sr", "n_samples",
-                                   "duration_ms", "peak", "energy",
-                                   "zcross", "afp")}
-            # column-wise extraction once per batch: per-row .iloc is
-            # a pandas positional lookup per FIELD per row (6 per
-            # clip), pure interpreter overhead in the hot loop
-            ids = pdf["audio_id"].to_numpy()
-            bufs = pdf["bytes"].to_numpy()
-            fmts = pdf["fmt"].to_numpy()
-            srs = pdf["sr"].to_numpy()
-            ns = pdf["n_samples"].to_numpy()
-            chs = pdf["channels"].to_numpy()
-            for r in range(len(pdf)):
-                sr = int(srs[r])
-                n = int(ns[r])
-                x = decode_audio_norm16(
-                    bytes(bufs[r]), str(fmts[r]), sr, n, int(chs[r])
-                )
-                st = audio_stats_exact(x)
-                out["audio_id"].append(str(ids[r]))
-                out["sr"].append(sr)
-                out["n_samples"].append(n)
-                out["duration_ms"].append(n * 1000 // sr)
-                out["peak"].append(st["peak"])
-                out["energy"].append(st["energy"])
-                out["zcross"].append(st["zcross"])
-                out["afp"].append(
-                    audio_fingerprint64(x, n_windows)
-                    if n >= n_windows else None
-                )
-            yield pd.DataFrame(out)
+    def row(audio_id, buf, fmt, sr, n, ch):
+        x = decode_audio_norm16(buf, fmt, sr, n, ch)
+        st = audio_stats_exact(x)
+        afp = audio_fingerprint64(x, n_windows) if n >= n_windows else None
+        return [(audio_id, sr, n, n * 1000 // sr, st["peak"], st["energy"],
+                 st["zcross"], afp)]
 
-    return audio.select(
-        "audio_id", "bytes", "fmt", "sr", "n_samples", "channels"
-    ).mapInPandas(kernel, schema)
+    return _payload_map(audio, _COLS, row, schema)
 
 
 def audio_neardup_pairs(
@@ -209,36 +186,15 @@ def sample_audio_clips(
               "bytes binary, sr int, n_samples int, channels int, "
               "fmt string")
 
-    def kernel(batches):
-        for pdf in batches:
-            out = {k: [] for k in ("audio_id", "clip_idx", "t0", "t0_ms",
-                                   "bytes", "sr", "n_samples", "channels",
-                                   "fmt")}
-            for r in range(len(pdf)):
-                sr = int(pdf["sr"].iloc[r])
-                n = int(pdf["n_samples"].iloc[r])
-                ch = int(pdf["channels"].iloc[r])
-                if n < clip_samples:
-                    continue
-                x = decode_audio_norm16(
-                    bytes(pdf["bytes"].iloc[r]), str(pdf["fmt"].iloc[r]),
-                    sr, n, ch,
-                )
-                span = n - clip_samples
-                for k in range(n_clips):
-                    t0 = span * k // max(1, n_clips - 1) if n_clips > 1 else 0
-                    w = x[t0 : t0 + clip_samples]
-                    out["audio_id"].append(str(pdf["audio_id"].iloc[r]))
-                    out["clip_idx"].append(k)
-                    out["t0"].append(t0)
-                    out["t0_ms"].append(t0 * 1000 // sr)
-                    out["bytes"].append(encode_wav(w, sr, "i16"))
-                    out["sr"].append(sr)
-                    out["n_samples"].append(clip_samples)
-                    out["channels"].append(ch)
-                    out["fmt"].append("wav")
-            yield pd.DataFrame(out)
+    def row(audio_id, buf, fmt, sr, n, ch):
+        if n < clip_samples:
+            return []
+        x = decode_audio_norm16(buf, fmt, sr, n, ch)
+        span = n - clip_samples
+        t0s = [span * k // (n_clips - 1) if n_clips > 1 else 0
+               for k in range(n_clips)]
+        return [(audio_id, k, t0, t0 * 1000 // sr,
+                 encode_wav(x[t0 : t0 + clip_samples], sr, "i16"), sr,
+                 clip_samples, ch, "wav") for k, t0 in enumerate(t0s)]
 
-    return audio.select(
-        "audio_id", "bytes", "fmt", "sr", "n_samples", "channels"
-    ).mapInPandas(kernel, schema)
+    return _payload_map(audio, _COLS, row, schema)

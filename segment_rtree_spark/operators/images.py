@@ -1,8 +1,10 @@
 """Multimodal (image) column operators.
 
 Images are opaque `binary` columns + typed metadata (w, h, fmt); all
-pixel work happens in Arrow-batched mapInPandas kernels that decode
-per IMAGE (never per pixel in Python — the inner loops are NumPy).
+pixel work is a row function run by the one per-row payload driver
+(validate._payload_map: one mapInArrow UDF named after its operator,
+reading only the columns it uses), decoding per IMAGE (never per pixel
+in Python — the inner loops are NumPy).
 
 Real implementations for raw/png/bmp/gif/tiff (lossless, equality
 checks exact), webp (lossless VP8L, webp.py — libwebp-conformance
@@ -10,7 +12,7 @@ tested), jpeg (pure-NumPy baseline+progressive codec, jpegio.py —
 lossy, PSNR>=40dB at quality>=90) AND mjpeg video containers
 (frame-sample by structural marker walk, frames decode as jpeg); the
 remaining external codecs (inter-frame video like mp4/h264, lossy
-VP8) raise NotImplementedError inside the same batch body: the
+VP8) raise NotImplementedError inside the same row function: the
 distributed plumbing (schema, batching, partitioning) is identical
 and tested, only the codec call changes when the library exists.
 
@@ -24,7 +26,6 @@ to the shared error codes, which stay importable from here.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..imageio import decode_image, encode_png, encode_raw, phash64
@@ -39,6 +40,7 @@ from .validate import (  # noqa: F401  the codes are imported from here too
     IMG_ERR_PHASH_MISMATCH,
     IMG_ERR_TRUNCATED,
     IMG_ERR_UNKNOWN_FORMAT,
+    _payload_map,
     _payload_verdicts,
 )
 
@@ -60,34 +62,16 @@ def with_pixel_stats(images: DataFrame) -> DataFrame:
         "luma_std double, phash_ok boolean"
     )
 
-    def kernel(batches):
-        for pdf in batches:
-            n = len(pdf)
-            mr = np.empty(n)
-            mg = np.empty(n)
-            mb = np.empty(n)
-            ls = np.empty(n)
-            ok = np.empty(n, bool)
-            for k in range(n):
-                px = decode_image(
-                    pdf["bytes"].iloc[k], pdf["fmt"].iloc[k],
-                    int(pdf["w"].iloc[k]), int(pdf["h"].iloc[k]),
-                )
-                p = px.astype(np.float64)
-                mr[k], mg[k], mb[k] = p[..., 0].mean(), p[..., 1].mean(), p[..., 2].mean()
-                luma = 0.299 * p[..., 0] + 0.587 * p[..., 1] + 0.114 * p[..., 2]
-                ls[k] = luma.std()
-                ok[k] = phash64(px) == int(pdf["phash"].iloc[k])
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf["image_id"],
-                    "mean_r": mr, "mean_g": mg, "mean_b": mb,
-                    "luma_std": ls, "phash_ok": ok,
-                }
-            )
+    def row(image_id, buf, fmt, w, h, phash):
+        px = decode_image(buf, fmt, w, h)
+        p = px.astype(np.float64)
+        luma = 0.299 * p[..., 0] + 0.587 * p[..., 1] + 0.114 * p[..., 2]
+        ok = None if phash is None else phash64(px) == phash
+        return [(image_id, p[..., 0].mean(), p[..., 1].mean(), p[..., 2].mean(),
+                 luma.std(), ok)]
 
-    cols = ["image_id", "bytes", "fmt", "w", "h", "phash"]
-    return images.select(*cols).mapInPandas(kernel, schema)
+    return _payload_map(images, ["image_id", "bytes", "fmt", "w", "h", "phash"],
+                        row, schema)
 
 
 def with_pixel_stats_exact(images: DataFrame) -> DataFrame:
@@ -106,39 +90,17 @@ def with_pixel_stats_exact(images: DataFrame) -> DataFrame:
         "luma_s1 long, luma_s2 long, phash_ok boolean"
     )
 
-    def kernel(batches):
-        for pdf in batches:
-            n = len(pdf)
-            mr = np.empty(n)
-            mg = np.empty(n)
-            mb = np.empty(n)
-            s1 = np.empty(n, np.int64)
-            s2 = np.empty(n, np.int64)
-            ok = np.empty(n, bool)
-            for k in range(n):
-                px = decode_image(
-                    pdf["bytes"].iloc[k], pdf["fmt"].iloc[k],
-                    int(pdf["w"].iloc[k]), int(pdf["h"].iloc[k]),
-                )
-                p = px.astype(np.int64)
-                npx = float(p.shape[0] * p.shape[1])
-                mr[k] = float(p[..., 0].sum()) / npx
-                mg[k] = float(p[..., 1].sum()) / npx
-                mb[k] = float(p[..., 2].sum()) / npx
-                lum = 299 * p[..., 0] + 587 * p[..., 1] + 114 * p[..., 2]
-                s1[k] = lum.sum()
-                s2[k] = (lum * lum).sum()
-                ok[k] = int(phash_arith(px[None, ...])[0]) == int(pdf["phash"].iloc[k])
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf["image_id"],
-                    "mean_r": mr, "mean_g": mg, "mean_b": mb,
-                    "luma_s1": s1, "luma_s2": s2, "phash_ok": ok,
-                }
-            )
+    def row(image_id, buf, fmt, w, h, phash):
+        px = decode_image(buf, fmt, w, h)
+        p = px.astype(np.int64)
+        npx = float(p.shape[0] * p.shape[1])
+        lum = 299 * p[..., 0] + 587 * p[..., 1] + 114 * p[..., 2]
+        ok = None if phash is None else int(phash_arith(px[None, ...])[0]) == phash
+        return [(image_id, float(p[..., 0].sum()) / npx, float(p[..., 1].sum()) / npx,
+                 float(p[..., 2].sum()) / npx, lum.sum(), (lum * lum).sum(), ok)]
 
-    cols = ["image_id", "bytes", "fmt", "w", "h", "phash"]
-    return images.select(*cols).mapInPandas(kernel, schema)
+    return _payload_map(images, ["image_id", "bytes", "fmt", "w", "h", "phash"],
+                        row, schema)
 
 
 def _resize_nn(px: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
@@ -174,27 +136,11 @@ def resize_images(images: DataFrame, out_w: int, out_h: int, fmt: str = "raw") -
     encode = encoders[fmt]
     schema = "image_id string, bytes binary, w int, h int, fmt string"
 
-    def kernel(batches):
-        for pdf in batches:
-            out = []
-            for k in range(len(pdf)):
-                px = decode_image(
-                    pdf["bytes"].iloc[k], pdf["fmt"].iloc[k],
-                    int(pdf["w"].iloc[k]), int(pdf["h"].iloc[k]),
-                )
-                rp = _resize_nn(px, out_w, out_h)
-                out.append(encode(rp))
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf["image_id"],
-                    "bytes": out,
-                    "w": np.full(len(pdf), out_w, np.int32),
-                    "h": np.full(len(pdf), out_h, np.int32),
-                    "fmt": fmt,
-                }
-            )
+    def row(image_id, buf, src_fmt, w, h):
+        px = decode_image(buf, src_fmt, w, h)
+        return [(image_id, encode(_resize_nn(px, out_w, out_h)), out_w, out_h, fmt)]
 
-    return images.select("image_id", "bytes", "fmt", "w", "h").mapInPandas(kernel, schema)
+    return _payload_map(images, ["image_id", "bytes", "fmt", "w", "h"], row, schema)
 
 
 def sample_video_frames(videos: DataFrame, every_n: int = 30) -> DataFrame:
@@ -224,7 +170,7 @@ def sample_video_frames(videos: DataFrame, every_n: int = 30) -> DataFrame:
         placement, alpha-blend vs replace, dispose-to-background);
         lossy VP8 frames decline as CodecUnavailable.
     Compressed inter-frame codecs (mp4/h264/webm) need libraries this
-    container lacks: NotImplementedError, same batch body.
+    container lacks: NotImplementedError, same row function.
 
     Scale note: sampling slices BYTES only — no frame is decoded here;
     decode happens downstream on the sampled subset (with_pixel_stats
@@ -233,24 +179,12 @@ def sample_video_frames(videos: DataFrame, every_n: int = 30) -> DataFrame:
     """
     schema = "video_id string, frame_idx int, bytes binary, w int, h int, fmt string"
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = {k: [] for k in ("video_id", "frame_idx", "bytes", "w", "h", "fmt")}
-            for k in range(len(pdf)):
-                out_fmt, frames = _decode_frames(
-                    pdf["bytes"].iloc[k], pdf["fmt"].iloc[k],
-                    int(pdf["w"].iloc[k]), int(pdf["h"].iloc[k]),
-                )
-                for fi in range(0, len(frames), every_n):
-                    rows["video_id"].append(pdf["video_id"].iloc[k])
-                    rows["frame_idx"].append(fi)
-                    rows["bytes"].append(frames[fi])
-                    rows["w"].append(int(pdf["w"].iloc[k]))
-                    rows["h"].append(int(pdf["h"].iloc[k]))
-                    rows["fmt"].append(out_fmt)
-            yield pd.DataFrame(rows)
+    def row(video_id, buf, fmt, w, h):
+        out_fmt, frames = _decode_frames(buf, fmt, w, h)
+        return [(video_id, fi, frames[fi], w, h, out_fmt)
+                for fi in range(0, len(frames), every_n)]
 
-    return videos.mapInPandas(kernel, schema)
+    return _payload_map(videos, ["video_id", "bytes", "fmt", "w", "h"], row, schema)
 
 
 def _mjpeg_frame_end(buf: bytes, pos: int) -> int:
@@ -379,64 +313,36 @@ def psnr_refine_pairs(pairs: DataFrame, images: DataFrame,
     (decoded-pixel closeness at a dB threshold) as an operator.
 
     Plan shape: two shuffle equi-joins on the id (broadcastable when
-    the candidate list is small), then one Arrow-batched kernel over
+    the candidate list is small), then one payload-driver kernel over
     the joined rows; only candidates are ever decoded, so cost scales
     with the band collision rate, not the corpus.
     """
     from pyspark.sql import functions as F
 
     # psnr_db a multiple of 10 -> 10^(T/10) is an exact integer and the
-    # verdict is pure int64 arithmetic (safe while n_vals * 65025 *
-    # mult < 2^63, i.e. any image under ~10^10 px at 40 dB); other
-    # thresholds fall back to float with the documented rounding caveat
+    # verdict is exact Python-int arithmetic (no int64 bound on
+    # sse * mult); other thresholds fall back to float with the
+    # documented rounding caveat
     if psnr_db % 10.0 == 0.0:
         mult = 10 ** (int(psnr_db) // 10)
     else:
         mult = 10.0 ** (psnr_db / 10.0)
-    a = images.select(
-        F.col(id_col).alias("id_a"), F.col("bytes").alias("bytes_a"),
-        F.col("fmt").alias("fmt_a"), F.col("w").alias("w_a"), F.col("h").alias("h_a"),
-    )
-    b = images.select(
-        F.col(id_col).alias("id_b"), F.col("bytes").alias("bytes_b"),
-        F.col("fmt").alias("fmt_b"), F.col("w").alias("w_b"), F.col("h").alias("h_b"),
-    )
-    joined = pairs.select("id_a", "id_b").join(a, "id_a").join(b, "id_b")
+    cols = ("bytes", "fmt", "w", "h")
 
-    def kernel(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            sse = np.zeros(n, np.int64)
-            nv = np.zeros(n, np.int32)
-            for r in range(n):
-                pa = decode_image(
-                    pdf["bytes_a"].iloc[r], pdf["fmt_a"].iloc[r],
-                    int(pdf["w_a"].iloc[r]), int(pdf["h_a"].iloc[r]),
-                ).astype(np.int64)
-                pb = decode_image(
-                    pdf["bytes_b"].iloc[r], pdf["fmt_b"].iloc[r],
-                    int(pdf["w_b"].iloc[r]), int(pdf["h_b"].iloc[r]),
-                ).astype(np.int64)
-                sse[r] = int(((pa - pb) ** 2).sum())
-                nv[r] = pa.size
-            yield pd.DataFrame(
-                {
-                    "id_a": pdf["id_a"].astype(str),
-                    "id_b": pdf["id_b"].astype(str),
-                    "sse": sse,
-                    "n_vals": nv,
-                    "psnr_ok": (
-                        sse * mult <= 65025 * nv.astype(np.int64)
-                        if isinstance(mult, int)
-                        else sse * mult <= 65025.0 * nv
-                    ),
-                }
-            )
+    def side(s):
+        return images.select(F.col(id_col).alias("id" + s),
+                             *[F.col(c).alias(c + s) for c in cols])
 
-    return joined.mapInPandas(
-        kernel,
+    joined = pairs.select("id_a", "id_b").join(side("_a"), "id_a").join(side("_b"), "id_b")
+
+    def row(id_a, id_b, *payloads):
+        xa = decode_image(*payloads[:4]).astype(np.int64)
+        xb = decode_image(*payloads[4:]).astype(np.int64)
+        sse = int(((xa - xb) ** 2).sum())
+        return [(str(id_a), str(id_b), sse, xa.size, sse * mult <= 65025 * xa.size)]
+
+    return _payload_map(
+        joined, ["id_a", "id_b", *[c + s for s in ("_a", "_b") for c in cols]], row,
         "id_a string, id_b string, sse long, n_vals int, psnr_ok boolean",
     )
 
@@ -508,29 +414,18 @@ def validate_images(images: DataFrame, check_phash: bool = False) -> DataFrame:
         ),
     }
 
-    def check(buf, fmt, w, h, phash=0, phash_null=True):
-        w, h = int(w), int(h)
+    def check(buf, fmt, w, h, phash=None):
         # every decoder pins its header dims to (w, h) before plane
         # allocation (DimensionMismatchError): corrupt 16-bit dim
         # fields would otherwise demand multi-GB buffers
-        px = decode_image(bytes(buf), str(fmt), w, h)
+        px = decode_image(buf, fmt, w, h)
         if px.shape != (h, w, 3):
             return IMG_ERR_DIMENSION_MISMATCH, f"{px.shape} != ({h}, {w}, 3)"
-        if not phash_null:
-            got = phash64(px)
-            if int(got) != int(phash):
-                return IMG_ERR_PHASH_MISMATCH, f"stored {int(phash)}, decoded {got}"
+        if phash is not None and (got := phash64(px)) != phash:
+            return IMG_ERR_PHASH_MISMATCH, f"stored {phash}, decoded {got}"
         return None, None
 
-    cols = [F.col(c) for c in ("image_id", "bytes", "fmt", "w", "h")]
-    if check_phash:
-        # phash crosses as (coalesced long, null flag), never a raw
-        # nullable long: Arrow->pandas widens a long column WITH nulls
-        # to float64, silently rounding any stored hash beyond 2^53
-        cols += [
-            F.coalesce(F.col("phash"), F.lit(0)).alias("phash"),
-            F.col("phash").isNull().alias("_phash_null"),
-        ]
+    cols = ["image_id", "bytes", "fmt", "w", "h"] + (["phash"] if check_phash else [])
     # inter-frame video: valid formats with no still-frame decoder here
     declined = ("mp4", "h264", "webm")
     return _payload_verdicts(

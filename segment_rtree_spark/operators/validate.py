@@ -12,6 +12,10 @@ routed, not thrown:
   decide; one Arrow kernel decodes the rest. Both speak the payload
   error codes below, so a mixed-modality curation job filters one
   vocabulary.
+* `_payload_map`: the one per-row payload driver. That decode kernel
+  and every image and audio operator's kernel (stats, resize, PSNR
+  refine, frame and clip sampling, features) is a row function it
+  runs in one mapInArrow UDF over only the columns the row reads.
 """
 
 from __future__ import annotations
@@ -21,6 +25,7 @@ import zlib
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..codec_errors import DimensionMismatchError
@@ -124,7 +129,7 @@ def _payload_verdicts(
     read it, so they cannot drift apart (a format admitted by the
     whitelist but missing from the route would vanish from the output).
 
-    Tier 2 is one mapInPandas kernel over the rows tier 1 passed that
+    Tier 2 is one _payload_map kernel over the rows tier 1 passed that
     need a decode: every non-lane format, plus the lane when
     `lane_decodes`. `check(*row)` gets the row's columns after the id
     and returns (code, detail), (None, None) when the row is valid; an
@@ -155,24 +160,14 @@ def _payload_verdicts(
             code.alias("err_code"), detail.alias("err_detail"),
         )
 
-    def kernel(batches):
-        for pdf in batches:
-            codes, details = [], []
-            for row in zip(*(pdf[c].to_numpy() for c in pdf.columns[1:])):
-                try:
-                    code, detail = check(*row)
-                except Exception as e:  # contract: errors are DATA
-                    code, detail = _decode_error_code(e), str(e)[:80]
-                codes.append(code)
-                details.append(detail)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].astype(str),
-                    "ok": np.array([c is None for c in codes], bool),
-                    "err_code": pd.Series(codes, dtype="object"),
-                    "err_detail": pd.Series(details, dtype="object"),
-                }
-            )
+    def verdict(id_, *vals):
+        try:
+            code, detail = check(*vals)
+        except Exception as e:  # contract: errors are DATA
+            code, detail = _decode_error_code(e), str(e)[:80]
+        return [(id_, code is None, code, detail)]
+
+    verdict.__qualname__ = check.__qualname__  # the plan names the operator
 
     out = verdicts(
         src.filter(F.col("pre").isNotNull()), False, F.col("pre.c"), F.col("pre.d")
@@ -180,8 +175,11 @@ def _payload_verdicts(
     route = passed if lane_decodes else passed & fmt.isin(
         *[f for f in formats if f != lane]
     )
-    out = out.unionByName(src.filter(route).drop("pre").mapInPandas(
-        kernel, f"{id_col} string, ok boolean, err_code string, err_detail string"
+    cols = [F.col(id_col).cast("string").alias(id_col),
+            *[c for c in src.columns if c not in (id_col, "pre")]]
+    out = out.unionByName(_payload_map(
+        src.filter(route), cols, verdict,
+        f"{id_col} string, ok boolean, err_code string, err_detail string",
     ))
     if not lane_decodes:
         none = F.lit(None).cast("string")
@@ -189,3 +187,36 @@ def _payload_verdicts(
             verdicts(src.filter(passed & (fmt == lane)), True, none, none)
         )
     return out
+
+
+def _payload_map(src: DataFrame, cols, row, schema: str) -> DataFrame:
+    """The one per-row payload driver: `row(*values)` over every row of
+    `src.select(*cols)`, its output tuples under the DDL `schema`.
+
+    One mapInArrow UDF, named after the operator that defines `row` (the
+    plan reads `MapInArrow validate_images(...)`, not `kernel`). Per
+    batch each column is read once with to_pylist(), so a nullable long
+    arrives as an exact int or None (never widened to float64) and
+    binary as bytes. `row` returns zero or more output tuples (frame and
+    clip sampling emit many, a skipped row none); each output column is
+    built once with its Arrow type from `schema`. An exception `row`
+    raises fails the task: an operator that turns errors into data
+    catches them itself.
+    """
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    out = to_arrow_schema(StructType.fromDDL(schema))
+
+    def kernel(batches):
+        for batch in batches:
+            rows = [t for vals in zip(*(c.to_pylist() for c in batch.columns))
+                    for t in row(*vals)]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in
+                 zip(list(zip(*rows)) or [()] * len(out), out)],
+                schema=out,
+            )
+
+    kernel.__name__ = kernel.__qualname__ = row.__qualname__.split(".")[0]
+    return src.select(*cols).mapInArrow(kernel, schema)

@@ -187,7 +187,7 @@ def streaming_audio_matches(
 
     Both sides carry full audio rows (audio_id, bytes, sr, n_samples,
     channels, fmt); the energy fingerprint is computed IN the stream
-    (audio_features' mapInPandas kernel runs per micro-batch — Arrow
+    (audio_features' mapInArrow kernel runs per micro-batch — Arrow
     kernels are stream-safe) and on the static corpus once at build.
     From there it IS streaming_neardup_matches configured on the afp
     column: stateless stream-static band join, corpus-side 'auto'

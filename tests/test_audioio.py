@@ -419,3 +419,26 @@ def test_features_and_clips_survive_full_scale_deep_pcm(spark):
     }
     w0 = decode_audio(bytes(clips[0]["bytes"]), "wav", 8000, 64, 1)
     assert np.array_equal(w0, x16[:64])  # faithful, not saturated
+
+
+def test_full_clip_fingerprints_exact_beside_a_short_clip(spark):
+    """A sub-n_windows clip (afp NULL) in the same Arrow batch as full
+    clips must not round their 64-bit fingerprints: every full clip's
+    afp equals audio_fingerprint64 of its decoded signal, bit for bit
+    (a mixed int/NULL column widened to float64 loses the low bits)."""
+    from segment_rtree_spark.audioio import decode_audio_norm16
+    from segment_rtree_spark.operators.audio import audio_features
+
+    rows = [(f"a{i}", encode_wav(_sig(4000, 1, 40 + i), 8000, "i16"), 8000, 4000)
+            for i in range(5)]
+    rows.append(("short", encode_wav(_sig(20, 1, 49), 8000, "i16"), 8000, 20))
+    df = spark.createDataFrame(
+        [(i, bytearray(b), sr, n, 1, "wav") for i, b, sr, n in rows],
+        "audio_id string, bytes binary, sr int, n_samples int, "
+        "channels int, fmt string",
+    ).coalesce(1)  # one partition: every clip shares one Arrow batch
+    got = {r["audio_id"]: r["afp"] for r in audio_features(df).collect()}
+    assert got.pop("short") is None
+    want = {i: audio_fingerprint64(decode_audio_norm16(b, "wav", sr, n, 1), 64)
+            for i, b, sr, n in rows[:-1]}
+    assert got == want

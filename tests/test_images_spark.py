@@ -194,6 +194,43 @@ def test_validate_images_error_taxonomy(spark):
     assert gn["n1"]["err_code"] == "NullMetadata"
 
 
+def _stored_phash_cases(spark, imgs):
+    """Three rows of `imgs` in one partition: "same" keeps its stored
+    phash, "null" has none, "off" stores its hash ^ 1, a hash beyond
+    2^53 so float64 could not tell the two apart."""
+    base = imgs.orderBy("image_id").limit(8).collect()
+    wide = next(r for r in base if abs(r["phash"]) > 2**54)
+    same, null = [r for r in base if r is not wide][:2]
+    rows = [("same", same, same["phash"]), ("null", null, None),
+            ("off", wide, wide["phash"] ^ 1)]
+    return spark.createDataFrame(
+        [(i, r["bytes"], r["fmt"], r["w"], r["h"], ph) for i, r, ph in rows],
+        "image_id string, bytes binary, fmt string, w int, h int, phash long",
+    ).coalesce(1)
+
+
+def test_null_and_wide_stored_phash(spark):
+    """A NULL stored phash is no verdict (phash_ok NULL, validation ok),
+    never a failed task, and a stored hash beyond 2^53 beside it in one
+    Arrow batch is still compared exactly."""
+    from segment_rtree_spark.operators.images import (
+        validate_images,
+        with_pixel_stats_exact,
+    )
+    from segment_rtree_spark.synth import images_df_arith
+
+    want = {"same": True, "null": None, "off": False}
+    df = _stored_phash_cases(spark, images_df(spark, 8))
+    got = {r["image_id"]: r["phash_ok"] for r in with_pixel_stats(df).collect()}
+    assert got == want
+    arith = _stored_phash_cases(spark, images_df_arith(spark, 8))
+    got = {r["image_id"]: r["phash_ok"] for r in with_pixel_stats_exact(arith).collect()}
+    assert got == want
+    got = {r["image_id"]: r["err_code"]
+           for r in validate_images(df, check_phash=True).collect()}
+    assert got == {"same": None, "null": None, "off": "PhashMismatch"}
+
+
 def test_validate_nonpositive_dims_both_tiers(spark):
     """w=-1,h=-1 with 3 payload bytes satisfies length==w*h*3 but can
     never reshape to (h,w,3): the Catalyst fast path and the kernel

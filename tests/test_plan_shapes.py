@@ -370,7 +370,7 @@ def test_audio_features_single_pass_no_exchange(spark, tmp_path):
     df = audio_features(spark.read.parquet(path))
     p = plan_str(df)
     assert "Exchange" not in p  # no shuffle anywhere in the feature pass
-    assert "MapInPandas" in p or "PythonMapInArrow" in p  # the one kernel
+    assert "MapInArrow" in p  # the one kernel
 
 
 def test_validate_audio_two_tier_shape(spark):
@@ -388,3 +388,42 @@ def test_validate_audio_two_tier_shape(spark):
     for code in ("NullPayload", "CodecUnavailable", "TruncatedPayload",
                  "BadSignature", "UnknownFormat"):
         assert code in p
+
+
+def test_payload_kernels_prune_and_name(spark):
+    """Every per-row payload kernel reads only the columns it uses (a
+    wide column beside the payload never crosses to Python) and its
+    plan node is named after its operator, not `kernel`."""
+    from segment_rtree_spark.operators import audio, images
+    from segment_rtree_spark.plans.entry_queries import _audio_arith_corpus
+    from segment_rtree_spark.synth import images_df_arith
+
+    def wide(df):
+        return df.withColumn("wide", F.expr("repeat('x', 4096)"))
+
+    imgs = wide(images_df_arith(spark, 4))
+    clips = wide(_audio_arith_corpus(spark, 4))
+    videos = wide(spark.createDataFrame(
+        [("v", b"\x00" * 48, "fakevid", 2, 2)],
+        "video_id string, bytes binary, fmt string, w int, h int"))
+    pairs = wide(spark.createDataFrame([("a", "b")], "id_a string, id_b string"))
+    ops = {
+        "with_pixel_stats": images.with_pixel_stats(imgs),
+        "with_pixel_stats_exact": images.with_pixel_stats_exact(imgs),
+        "resize_images": images.resize_images(imgs, 4, 4),
+        "sample_video_frames": images.sample_video_frames(videos),
+        "psnr_refine_pairs": images.psnr_refine_pairs(pairs, imgs),
+        "validate_images": images.validate_images(imgs, check_phash=True),
+        "audio_features": audio.audio_features(clips),
+        "sample_audio_clips": audio.sample_audio_clips(clips, 64),
+        "validate_audio": audio.validate_audio(clips),
+    }
+    for name, df in ops.items():
+        nodes = re.findall(
+            r"\(\d+\) MapInArrow\nInput \[\d+\]: \[([^\]]*)\]\nArguments: (\w+)\(",
+            plan_str(df),
+        )
+        assert len(nodes) == 1, (name, nodes)
+        (cols, udf), = nodes
+        assert udf == name
+        assert "wide" not in cols and "bytes" in cols, (name, cols)
