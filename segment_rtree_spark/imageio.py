@@ -27,8 +27,8 @@ T.4 Group 3 1D+2D / T.6 Group 4 bilevel strips, ccitt.py, with a G4
 encoder — javax-conformance-tested over every run-length code). Only
 inter-frame video (mp4/h264) and lossy VP8 stay
 stubbed behind NotImplementedError: the Spark-side plumbing (binary
-column + typed metadata, mapInPandas batch shape) is identical, only
-the per-batch codec body differs.
+column + typed metadata, one arrow_map.row_map kernel per operator)
+is identical, only the per-image codec body differs.
 
 `phash64` is a 64-bit average-hash: downsample to 8x8 luma by block
 mean, threshold at the mean. Deterministic, pure NumPy.
@@ -1099,7 +1099,7 @@ def decode_batch(bufs, fmts, ws, hs):
 
     The loop is per-IMAGE (not per-pixel) — decode cost is dominated by
     zlib/np.frombuffer on whole buffers, which is the right altitude
-    for a mapInPandas batch body.
+    for an Arrow kernel's batch body.
     """
     return [
         decode_image(b, f, int(w), int(h)) for b, f, w, h in zip(bufs, fmts, ws, hs)

@@ -34,8 +34,8 @@ table-driven: one C-speed destuffing pass, then per-symbol decode is a
 combined run/size+value fast path (measured 3.5-5x the per-bit dict
 walk it replaced, BENCH/jpeg_codec.json) — the symbol stream is
 inherently sequential, so each step is O(1) but the loop remains
-per-coefficient Python: the right altitude for a mapInPandas batch
-body on thumbnail-scale corpora. For production-scale photography,
+per-coefficient Python: the right altitude for a per-image Arrow
+kernel (arrow_map.row_map) on thumbnail-scale corpora. For production-scale photography,
 swap a native codec behind the same decode_image() seam.
 
 Lossy contract: round trip at quality>=90 holds PSNR>=40dB on smooth

@@ -16,7 +16,7 @@ Design carried over from operators/images.py:
   kernel, and a clean pcm corpus pays ZERO Python. Errors are DATA
   (the image validator's codes; reference errors.rs:5-47).
 * `audio_features` and `sample_audio_clips` are row functions of the
-  image operators' per-row payload driver (validate._payload_map):
+  image operators' per-row driver (arrow_map.row_map):
   one mapInArrow UDF over the six table columns, values read as
   exact Python ints (a NULL afp beside 64-bit ones stays exact).
 * `audio_features` returns EXACT integer features (duration_ms,
@@ -41,10 +41,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .arrow_map import row_map
 from .validate import (
     IMG_ERR_DIMENSION_MISMATCH,
     IMG_ERR_NULL_METADATA,
-    _payload_map,
     _payload_verdicts,
 )
 
@@ -138,7 +138,7 @@ def audio_features(audio: DataFrame, n_windows: int = 64) -> DataFrame:
         return [(audio_id, sr, n, n * 1000 // sr, st["peak"], st["energy"],
                  st["zcross"], afp)]
 
-    return _payload_map(audio, _COLS, row, schema)
+    return row_map(audio, _COLS, row, schema)
 
 
 def audio_neardup_pairs(
@@ -197,4 +197,4 @@ def sample_audio_clips(
                  encode_wav(x[t0 : t0 + clip_samples], sr, "i16"), sr,
                  clip_samples, ch, "wav") for k, t0 in enumerate(t0s)]
 
-    return _payload_map(audio, _COLS, row, schema)
+    return row_map(audio, _COLS, row, schema)

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..kernels.clip import clip_ring_to_rect
 from ..layer import PolygonLayer
 from ..tiles import cell_bounds
+from .arrow_map import row_map
 from .tile_ops import assign_tiles, tile_agg
 
 __all__ = ["clip_to_tiles", "raster_vector_agg"]
@@ -42,42 +43,15 @@ def clip_to_tiles(spark, layer: PolygonLayer, res: int,
     ).repartition(num_partitions)
     blayer = spark.sparkContext.broadcast(layer)
 
-    def kernel(batches):
-        lyr = blayer.value
-        for pdf in batches:
-            rows = {k: [] for k in ("cell", "polygon_id", "part_id", "path_idx", "xs", "ys")}
-            cellv = pdf["cell"].to_numpy()
-            lngmin, latmin, lngmax, latmax = cell_bounds(cellv)
-            for r in range(len(pdf)):
-                pid = int(pdf["polygon_id"].iloc[r])
-                for part_id, ring in enumerate(lyr.by_id(pid).rings):
-                    paths = clip_ring_to_rect(
-                        ring, lngmin[r], latmin[r], lngmax[r], latmax[r]
-                    )
-                    for pi, (xs, ys) in enumerate(paths):
-                        rows["cell"].append(int(cellv[r]))
-                        rows["polygon_id"].append(pid)
-                        rows["part_id"].append(part_id)
-                        rows["path_idx"].append(pi)
-                        rows["xs"].append(xs.tolist())
-                        rows["ys"].append(ys.tolist())
-            if not rows["cell"]:
-                # A batch of interior-only cells produces zero clip paths;
-                # an all-default pd.DataFrame would give xs/ys float64 dtype
-                # and Arrow can't convert that to list<double>. Skip it.
-                continue
-            yield pd.DataFrame(
-                {
-                    "cell": pd.Series(rows["cell"], dtype="int64"),
-                    "polygon_id": pd.Series(rows["polygon_id"], dtype="int64"),
-                    "part_id": pd.Series(rows["part_id"], dtype="int32"),
-                    "path_idx": pd.Series(rows["path_idx"], dtype="int32"),
-                    "xs": pd.Series(rows["xs"], dtype="object"),
-                    "ys": pd.Series(rows["ys"], dtype="object"),
-                }
-            )
+    def row(pid, cell):
+        rect = [v[0] for v in cell_bounds(np.array([cell]))]
+        return [
+            (cell, pid, part_id, pi, xs, ys)
+            for part_id, ring in enumerate(blayer.value.by_id(pid).rings)
+            for pi, (xs, ys) in enumerate(clip_ring_to_rect(ring, *rect))
+        ]
 
-    return cover.mapInPandas(kernel, CLIP_SCHEMA)
+    return row_map(cover, ["polygon_id", "cell"], row, CLIP_SCHEMA)
 
 
 def raster_vector_agg(spark, images: DataFrame, layer: PolygonLayer, res: int,

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .arrow_map import batch_map
 from .text import token_hash_expr
 
 __all__ = [
@@ -109,8 +110,9 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id", text: str = "tex
         return toks.groupBy(id_col).agg(*aggs)
     if impl != "kernel":
         raise ValueError(f"unknown impl {impl!r}")
+    from hashlib import md5
+
     import numpy as np
-    import pandas as pd
 
     k = len(MINHASH_PARAMS)
     A = np.array([a for a, _ in MINHASH_PARAMS], dtype=np.int64)[:, None]
@@ -119,42 +121,33 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id", text: str = "tex
     out_schema = ", ".join(
         [f"{id_col} {id_dtype}"] + [f"mh{i} long" for i in range(k)]
     )
+    cache: dict[str, int] = {}
 
-    def kernel(batches):
-        from hashlib import md5
+    def tok_hash(tok: str) -> int:
+        h = cache.get(tok)
+        if h is None:
+            h = int(md5(tok.encode("utf-8")).hexdigest()[:15], 16) % TOKEN_MOD
+            if len(cache) < 4_000_000:  # ~300MB bound on the memo
+                cache[tok] = h
+        return h
 
-        cache: dict[str, int] = {}
+    def kernel(batch):
+        ids, texts = batch.columns
+        keep = texts.is_valid()
+        if not keep.true_count:
+            return None
+        hs = [
+            np.fromiter((tok_hash(t) for t in s.split(" ")), dtype=np.int64)
+            for s in texts.filter(keep).to_pylist()
+        ]
+        counts = np.fromiter((len(h) for h in hs), dtype=np.int64, count=len(hs))
+        offsets = np.zeros(len(hs), dtype=np.int64)
+        np.cumsum(counts[:-1], out=offsets[1:])
+        perms = (np.concatenate(hs)[None, :] * A + B) % MINHASH_P  # [k, T]
+        mins = np.minimum.reduceat(perms, offsets, axis=1)  # [k, n]
+        return [ids.filter(keep), *mins]
 
-        def tok_hash(tok: str) -> int:
-            h = cache.get(tok)
-            if h is None:
-                h = int(md5(tok.encode("utf-8")).hexdigest()[:15], 16) % TOKEN_MOD
-                if len(cache) < 4_000_000:  # ~300MB bound on the memo
-                    cache[tok] = h
-            return h
-
-        for pdf in batches:
-            texts = pdf[text]
-            keep = texts.notna().to_numpy()
-            ids = pdf[id_col].to_numpy()[keep]
-            if len(ids) == 0:
-                continue
-            hs = [
-                np.fromiter(
-                    (tok_hash(t) for t in s.split(" ")), dtype=np.int64
-                )
-                for s in texts[keep]
-            ]
-            counts = np.fromiter((len(h) for h in hs), dtype=np.int64, count=len(hs))
-            offsets = np.zeros(len(hs), dtype=np.int64)
-            np.cumsum(counts[:-1], out=offsets[1:])
-            perms = (np.concatenate(hs)[None, :] * A + B) % MINHASH_P  # [k, T]
-            mins = np.minimum.reduceat(perms, offsets, axis=1)  # [k, n]
-            yield pd.DataFrame(
-                {id_col: ids, **{f"mh{i}": mins[i] for i in range(k)}}
-            )
-
-    return docs.select(id_col, text).mapInPandas(kernel, out_schema)
+    return batch_map(docs, [id_col, text], kernel, out_schema)
 
 
 def _lsh_exploded(docs: DataFrame, id_col: str, text: str, rows_per_band: int,

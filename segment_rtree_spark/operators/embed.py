@@ -28,9 +28,9 @@
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .arrow_map import batch_map, group_map
 from .dedup import _bucket_stats, _cap_buckets
 
 __all__ = [
@@ -212,51 +212,37 @@ def lsh_buckets(
     if keep_vec:
         schema += f", {vec} array<double>"
 
-    # Arrow-native kernel (mapInArrow): the embedding column reads as
-    # ONE contiguous values buffer + offsets (_list_matrix) and, with
-    # keep_vec, passes BACK as the same Arrow list array (cast to
-    # float64) — the pandas form paid one np.asarray per row on the
-    # way in and one list(map(float, row)) per row on the way out,
-    # millions of interpreter ops per 10^5-vector batch that this
-    # kernel spends in two buffer views instead. Bucket arithmetic is
-    # unchanged (bit_exact keeps the sequential fold the SQL oracle
-    # pins).
-    def kernel(batches):
+    # Arrow-native kernel: the embedding column reads as ONE contiguous
+    # values buffer + offsets (_list_matrix) and, with keep_vec, passes
+    # BACK as the same Arrow list array (cast to float64) — no per-row
+    # np.asarray on the way in or list(map(float, row)) on the way
+    # out. Bucket arithmetic is unchanged (bit_exact keeps the
+    # sequential fold the SQL oracle pins).
+    planes: dict = {}
+
+    def kernel(batch):
         import pyarrow as pa
 
-        planes = None
-        vdim = dim
-        for batch in batches:
-            if batch.num_rows == 0:  # zero-row Arrow batches reach kernels
-                continue
-            names = batch.schema.names
-            vc = batch.column(names.index(vec)).cast(pa.list_(pa.float64()))
-            emb = _list_matrix(vc)
-            if planes is None:
-                if vdim is None:
-                    vdim = emb.shape[1]
-                planes = np.stack(
-                    [hyperplane(i, vdim) for i in range(n_bits)]
-                )  # [bits, dim]
-            n = batch.num_rows
-            if bit_exact:
-                bucket = np.zeros(n, dtype=np.int64)
-                for b in range(n_bits):
-                    acc = np.zeros(n)
-                    for d in range(vdim):  # sequential: matches the SQL fold
-                        acc = acc + emb[:, d] * planes[b, d]
-                    bucket |= (acc > 0.0).astype(np.int64) << b
-            else:
-                acc = emb @ planes.T  # [n, bits]
-                bucket = ((acc > 0.0).astype(np.int64) * weights).sum(axis=1)
-            cols = [batch.column(names.index(id_col)), pa.array(bucket)]
-            out_names = [id_col, "bucket"]
-            if keep_vec:
-                cols.append(vc)
-                out_names.append(vec)
-            yield pa.RecordBatch.from_arrays(cols, out_names)
+        vc = batch.column(1).cast(pa.list_(pa.float64()))
+        emb = _list_matrix(vc)
+        vdim = dim or emb.shape[1]
+        if vdim not in planes:
+            planes[vdim] = np.stack([hyperplane(i, vdim) for i in range(n_bits)])
+        pl = planes[vdim]  # [bits, dim]
+        n = batch.num_rows
+        if bit_exact:
+            bucket = np.zeros(n, dtype=np.int64)
+            for b in range(n_bits):
+                acc = np.zeros(n)
+                for d in range(vdim):  # sequential: matches the SQL fold
+                    acc = acc + emb[:, d] * pl[b, d]
+                bucket |= (acc > 0.0).astype(np.int64) << b
+        else:
+            acc = emb @ pl.T  # [n, bits]
+            bucket = ((acc > 0.0).astype(np.int64) * weights).sum(axis=1)
+        return [batch.column(0), bucket, vc][: 3 if keep_vec else 2]
 
-    return vectors.select(id_col, vec).mapInArrow(kernel, schema)
+    return batch_map(vectors, [id_col, vec], kernel, schema)
 
 
 def _bucket_cap(max_bucket: int | str | None, target_bucket: int) -> int | None:
@@ -866,15 +852,14 @@ def kmeans_fit(
 ) -> np.ndarray:
     """Fully distributed Lloyd k-means over an embedding column.
 
-    Per iteration: the k x dim codebook broadcasts out, an Arrow
+    Per iteration: the k x dim codebook broadcasts out, a batch_map
     kernel computes per-BATCH partial sums per list (at most k rows
     out per batch, each carrying one array<double> sum — a map-side
-    combine; the earlier k*dim scalar-row emit built Python lists
-    per centroid and pushed up to 4.2M tiny rows per batch at
-    n_lists=2^16), one grouped reduce sums the partials per list,
-    and only the k x dim result returns to the driver (k rows). No
-    iteration ever pulls vectors driver-side, so the fit scales to
-    any corpus.
+    combine; a k*dim scalar-row emit would push up to 4.2M tiny rows
+    per batch at n_lists=2^16), one group_map reduce sums the
+    partials per list, and only the k x dim result returns to the
+    driver (k rows). No iteration ever pulls vectors driver-side, so
+    the fit scales to any corpus.
 
     Seeds = the first k vectors by id (deterministic). Note: the
     reduce sums float64 in partition order, so centroids can differ
@@ -885,57 +870,37 @@ def kmeans_fit(
     seed = vectors.select(id_col, vec).orderBy(id_col).limit(k).collect()
     cent = np.stack([np.asarray(r[vec], np.float64) for r in seed])
     dim = cent.shape[1]
-    src = vectors.select(vec)
+    schema = "list long, s array<double>, n long"
     for _ in range(iters):
         bc = spark.sparkContext.broadcast(cent)
 
-        def partial(batches):
-            c = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:  # zero-row Arrow batch: np.stack would raise
-                    continue
-                emb = np.stack([np.asarray(v, np.float64) for v in pdf[vec]])
-                a = _argmin_list(emb, c)
-                # group rows by assigned list via one stable argsort;
-                # each present list's sum is one vectorized np.sum over
-                # its slice (rows stay in original order, so the
-                # pairwise summation is bit-identical to a mask-based
-                # per-centroid fold). Emits ONE array row per present
-                # list — k rows per batch, not k*dim scalar rows.
-                order = np.argsort(a, kind="stable")
-                srt = a[order]
-                uniq, starts = np.unique(srt, return_index=True)
-                bounds = np.append(starts, len(srt))
-                sums = [
-                    emb[order[bounds[u]:bounds[u + 1]]].sum(axis=0).tolist()
-                    for u in range(len(uniq))
-                ]
-                yield pd.DataFrame(
-                    {
-                        "list": uniq.astype("int64"),
-                        "s": sums,
-                        "n": np.diff(bounds).astype("int64"),
-                    }
-                )
+        def partial(batch):
+            emb = _list_matrix(batch.column(0))
+            a = _argmin_list(emb, bc.value)
+            # group rows by assigned list via one stable argsort; each
+            # present list's sum is one vectorized np.sum over its
+            # slice (rows stay in original order, so the pairwise
+            # summation is bit-identical to a mask-based per-centroid
+            # fold). Emits ONE array row per present list — k rows per
+            # batch, not k*dim scalar rows.
+            order = np.argsort(a, kind="stable")
+            srt = a[order]
+            uniq, starts = np.unique(srt, return_index=True)
+            bounds = np.append(starts, len(srt))
+            sums = [emb[order[bounds[u]:bounds[u + 1]]].sum(axis=0)
+                    for u in range(len(uniq))]
+            return [uniq, sums, np.diff(bounds)]
 
-        def reduce_list(pdf):
+        def reduce_list(tab):
             s = np.zeros(dim, np.float64)
-            for arr in pdf["s"]:
-                s += np.asarray(arr, np.float64)
-            return pd.DataFrame(
-                {
-                    "list": [int(pdf["list"].iloc[0])],
-                    "s": [s.tolist()],
-                    "n": [int(pdf["n"].sum())],
-                }
-            )
+            for row in _list_matrix(tab.column("s")):  # partials in arrival order
+                s += row
+            return [tab.column("list")[:1], [s], [sum(tab.column("n").to_pylist())]]
 
-        rows = (
-            src.mapInPandas(partial, "list long, s array<double>, n long")
-            .groupBy("list")
-            .applyInPandas(reduce_list, "list long, s array<double>, n long")
-            .collect()
-        )
+        rows = group_map(
+            batch_map(vectors, [vec], partial, schema), ["list", "s", "n"], "list",
+            reduce_list, schema,
+        ).collect()
         new = cent.copy()
         for r in rows:
             new[r["list"]] = np.asarray(r["s"], np.float64) / r["n"]
@@ -953,7 +918,8 @@ def ivf_topk(
     refine: str = "kernel",
 ) -> DataFrame:
     """IVF ANN: coarse-quantize every vector to its nearest centroid
-    (kmeans_fit codebook, one mapInPandas pass with it broadcast),
+    (kmeans_fit codebook, one arrow_map.batch_map pass with it
+    broadcast),
     then exact cosine refine INSIDE each list (equi-join on list id).
     The scale shape: candidate generation is a hash join on `list`,
     never an all-pairs cross join.
@@ -977,30 +943,22 @@ def ivf_topk(
     cent = kmeans_fit(vectors, k=n_lists, id_col=id_col, vec=vec)
     bc = vectors.sparkSession.sparkContext.broadcast(cent)
 
-    def assign(batches):
+    def assign(batch):
         # passes the embedding through (cast to float64) so list
         # assignment is one map-side pass — no shuffle join back to
         # the vector table just to re-attach the embedding column
-        c = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            emb = np.stack([np.asarray(v, np.float64) for v in pdf[vec]])
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "list": _argmin_list(emb, c),
-                    "v": [list(map(float, r)) for r in emb],
-                }
-            )
+        import pyarrow as pa
+
+        ids, vc = batch.column(0), batch.column(1).cast(pa.list_(pa.float64()))
+        return [ids, _argmin_list(_list_matrix(vc), bc.value), vc]
 
     # id dtype from the input (string image ids or bigint vec ids);
     # checkpoint the assigned frame: both join sides consume it and
     # Python-kernel stages are not exchange-reusable (the 'build the
     # IVF index once' step)
     id_dtype = dict(vectors.select(id_col).dtypes)[id_col]
-    v = vectors.select(id_col, vec).mapInPandas(
-        assign, f"{id_col} {id_dtype}, list long, v array<double>"
+    v = batch_map(
+        vectors, [id_col, vec], assign, f"{id_col} {id_dtype}, list long, v array<double>"
     ).localCheckpoint(eager=False)
     if refine == "expr":
         return _fold_topk(v, v, "list", id_col, k)

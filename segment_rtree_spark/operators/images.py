@@ -1,8 +1,8 @@
 """Multimodal (image) column operators.
 
 Images are opaque `binary` columns + typed metadata (w, h, fmt); all
-pixel work is a row function run by the one per-row payload driver
-(validate._payload_map: one mapInArrow UDF named after its operator,
+pixel work is a row function run by the per-row driver
+(arrow_map.row_map: one mapInArrow UDF named after its operator,
 reading only the columns it uses), decoding per IMAGE (never per pixel
 in Python — the inner loops are NumPy).
 
@@ -29,6 +29,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from ..imageio import decode_image, encode_png, encode_raw, phash64
+from .arrow_map import row_map
 from .validate import (  # noqa: F401  the codes are imported from here too
     IMG_ERR_BAD_SIGNATURE,
     IMG_ERR_CODEC_UNAVAILABLE,
@@ -40,7 +41,6 @@ from .validate import (  # noqa: F401  the codes are imported from here too
     IMG_ERR_PHASH_MISMATCH,
     IMG_ERR_TRUNCATED,
     IMG_ERR_UNKNOWN_FORMAT,
-    _payload_map,
     _payload_verdicts,
 )
 
@@ -70,8 +70,7 @@ def with_pixel_stats(images: DataFrame) -> DataFrame:
         return [(image_id, p[..., 0].mean(), p[..., 1].mean(), p[..., 2].mean(),
                  luma.std(), ok)]
 
-    return _payload_map(images, ["image_id", "bytes", "fmt", "w", "h", "phash"],
-                        row, schema)
+    return row_map(images, ["image_id", "bytes", "fmt", "w", "h", "phash"], row, schema)
 
 
 def with_pixel_stats_exact(images: DataFrame) -> DataFrame:
@@ -99,8 +98,7 @@ def with_pixel_stats_exact(images: DataFrame) -> DataFrame:
         return [(image_id, float(p[..., 0].sum()) / npx, float(p[..., 1].sum()) / npx,
                  float(p[..., 2].sum()) / npx, lum.sum(), (lum * lum).sum(), ok)]
 
-    return _payload_map(images, ["image_id", "bytes", "fmt", "w", "h", "phash"],
-                        row, schema)
+    return row_map(images, ["image_id", "bytes", "fmt", "w", "h", "phash"], row, schema)
 
 
 def _resize_nn(px: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
@@ -140,7 +138,7 @@ def resize_images(images: DataFrame, out_w: int, out_h: int, fmt: str = "raw") -
         px = decode_image(buf, src_fmt, w, h)
         return [(image_id, encode(_resize_nn(px, out_w, out_h)), out_w, out_h, fmt)]
 
-    return _payload_map(images, ["image_id", "bytes", "fmt", "w", "h"], row, schema)
+    return row_map(images, ["image_id", "bytes", "fmt", "w", "h"], row, schema)
 
 
 def sample_video_frames(videos: DataFrame, every_n: int = 30) -> DataFrame:
@@ -184,7 +182,7 @@ def sample_video_frames(videos: DataFrame, every_n: int = 30) -> DataFrame:
         return [(video_id, fi, frames[fi], w, h, out_fmt)
                 for fi in range(0, len(frames), every_n)]
 
-    return _payload_map(videos, ["video_id", "bytes", "fmt", "w", "h"], row, schema)
+    return row_map(videos, ["video_id", "bytes", "fmt", "w", "h"], row, schema)
 
 
 def _mjpeg_frame_end(buf: bytes, pos: int) -> int:
@@ -341,7 +339,7 @@ def psnr_refine_pairs(pairs: DataFrame, images: DataFrame,
         sse = int(((xa - xb) ** 2).sum())
         return [(str(id_a), str(id_b), sse, xa.size, sse * mult <= 65025 * xa.size)]
 
-    return _payload_map(
+    return row_map(
         joined, ["id_a", "id_b", *[c + s for s in ("_a", "_b") for c in cols]], row,
         "id_a string, id_b string, sse long, n_vals int, psnr_ok boolean",
     )

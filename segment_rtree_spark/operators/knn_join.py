@@ -26,11 +26,12 @@ from __future__ import annotations
 from typing import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..kernels.pip import INTERIOR
 from ..layer import PolygonLayer
+from .arrow_map import batch_map
+from .pip_join import _xy
 
 __all__ = ["knn_join_broadcast", "knn_join_centroid", "haversine_col", "EARTH_RADIUS_KM"]
 
@@ -91,17 +92,18 @@ def knn_join_broadcast(
     blayer = spark.sparkContext.broadcast(layer)
     kk = int(k)
 
-    def kernel(batches):
+    def kernel(batch):
         lyr = blayer.value
         a = lyr.arena
         m = len(lyr)
+        if m == 0:
+            return None
         kc = min(kk, m)
-        if m:
-            # initial search radius sized so ~kc envelopes land in the
-            # box if polygons were uniform over the layer envelope
-            w = float(np.nanmax(lyr.xmax) - np.nanmin(lyr.xmin))
-            h = float(np.nanmax(lyr.ymax) - np.nanmin(lyr.ymin))
-            r0 = max((w + h) / (2.0 * max(1.0, np.sqrt(m / max(1, kc)))), 1e-9)
+        # initial search radius sized so ~kc envelopes land in the
+        # box if polygons were uniform over the layer envelope
+        w = float(np.nanmax(lyr.xmax) - np.nanmin(lyr.xmin))
+        h = float(np.nanmax(lyr.ymax) - np.nanmin(lyr.ymin))
+        r0 = max((w + h) / (2.0 * max(1.0, np.sqrt(m / max(1, kc)))), 1e-9)
 
         # 8 vertices evenly spaced along each shell: can_rank's
         # upper-bound probes, shape (8, m)
@@ -147,95 +149,88 @@ def knn_join_broadcast(
             d[out] = lyr._distances(px, py, apt[out], apos[out])
             return d
 
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0 or m == 0:
-                continue
-            px = pdf[x].to_numpy(np.float64)
-            py = pdf[y].to_numpy(np.float64)
+        n = batch.num_rows
+        px, py = _xy(batch, x, y)
 
-            # Expanding-radius candidate search on the layer envelope
-            # index (the reference query_within pattern,
-            # flatbush_impl.rs:154-157): a polygon whose envelope
-            # misses the radius-box has boundary distance > r, so a
-            # point with kc exact hits <= r is FINALIZED — its true
-            # top-k cannot include an unseen polygon. Cost scales with
-            # candidates-in-radius, not layer size.
-            out_pt, out_id, out_d = [], [], []
-            active = np.arange(n, dtype=np.int64)
-            radius = np.full(n, r0)
-            # cross-round memo of computed (point, polygon) distances
-            # (+inf for pairs can_rank dropped): the radius box only
-            # grows, so a still-active point's candidate set each round
-            # is a SUPERSET of its last round's — without the memo every
-            # non-final round re-runs exact_dists for pairs it already
-            # measured. Keyed by point*m+polygon; per-pair distances are
-            # elementwise in the kernel, so a memoized value is
-            # bit-identical to a recompute.
-            seen_keys = np.empty(0, np.int64)
-            seen_d = np.empty(0)
-            for _ in range(64):
-                if len(active) == 0:
-                    break
-                r = radius[active]
-                q, pos = lyr.index.query_rect(
-                    px[active] - r, py[active] - r, px[active] + r, py[active] + r
-                )
-                apt = active[q]
-                apos = lyr.order[pos]
-                key = apt * np.int64(m) + apos
-                d = np.full(len(key), np.inf)
-                if len(seen_keys):
-                    loc = np.minimum(np.searchsorted(seen_keys, key), len(seen_keys) - 1)
-                    known = seen_keys[loc] == key
-                    d[known] = seen_d[loc[known]]
-                else:
-                    known = np.zeros(len(key), bool)
-                if not known.all():
-                    need = ~known & can_rank(px, py, apt, apos)
-                    d[need] = exact_dists(px, py, apt[need], apos[need])
+        # Expanding-radius candidate search on the layer envelope
+        # index (the reference query_within pattern,
+        # flatbush_impl.rs:154-157): a polygon whose envelope
+        # misses the radius-box has boundary distance > r, so a
+        # point with kc exact hits <= r is FINALIZED — its true
+        # top-k cannot include an unseen polygon. Cost scales with
+        # candidates-in-radius, not layer size.
+        out_pt, out_id, out_d = [], [], []
+        active = np.arange(n, dtype=np.int64)
+        radius = np.full(n, r0)
+        # cross-round memo of computed (point, polygon) distances
+        # (+inf for pairs can_rank dropped): the radius box only
+        # grows, so a still-active point's candidate set each round
+        # is a SUPERSET of its last round's — without the memo every
+        # non-final round re-runs exact_dists for pairs it already
+        # measured. Keyed by point*m+polygon; per-pair distances are
+        # elementwise in the kernel, so a memoized value is
+        # bit-identical to a recompute.
+        seen_keys = np.empty(0, np.int64)
+        seen_d = np.empty(0)
+        for _ in range(64):
+            if len(active) == 0:
+                break
+            r = radius[active]
+            q, pos = lyr.index.query_rect(
+                px[active] - r, py[active] - r, px[active] + r, py[active] + r
+            )
+            apt = active[q]
+            apos = lyr.order[pos]
+            key = apt * np.int64(m) + apos
+            d = np.full(len(key), np.inf)
+            if len(seen_keys):
+                loc = np.minimum(np.searchsorted(seen_keys, key), len(seen_keys) - 1)
+                known = seen_keys[loc] == key
+                d[known] = seen_d[loc[known]]
+            else:
+                known = np.zeros(len(key), bool)
+            if not known.all():
+                need = ~known & can_rank(px, py, apt, apos)
+                d[need] = exact_dists(px, py, apt[need], apos[need])
 
-                # candidate count per active point (every candidate, the
-                # dropped ones too); points whose box already sees every
-                # polygon finalize unconditionally
-                cand = np.bincount(apt, minlength=n)
-                hits = np.bincount(apt, weights=d <= radius[apt], minlength=n)
-                fin = np.zeros(n, bool)
-                fin[active] = (hits[active] >= kc) | (cand[active] >= m)
+            # candidate count per active point (every candidate, the
+            # dropped ones too); points whose box already sees every
+            # polygon finalize unconditionally
+            cand = np.bincount(apt, minlength=n)
+            hits = np.bincount(apt, weights=d <= radius[apt], minlength=n)
+            fin = np.zeros(n, bool)
+            fin[active] = (hits[active] >= kc) | (cand[active] >= m)
 
-                sel = fin[apt]
-                if sel.any():
-                    fpt, fpos, fd = apt[sel], apos[sel], d[sel]
-                    fids = lyr.ids[fpos]
-                    o = np.lexsort((fids, fd, fpt))
-                    # rank within point, keep first kc
-                    o = o[_rank_in_group(fpt[o]) < kc]
-                    out_pt.append(fpt[o])
-                    out_id.append(fids[o])
-                    out_d.append(fd[o])
+            sel = fin[apt]
+            if sel.any():
+                fpt, fpos, fd = apt[sel], apos[sel], d[sel]
+                fids = lyr.ids[fpos]
+                o = np.lexsort((fids, fd, fpt))
+                # rank within point, keep first kc
+                o = o[_rank_in_group(fpt[o]) < kc]
+                out_pt.append(fpt[o])
+                out_id.append(fids[o])
+                out_d.append(fd[o])
 
-                # memo only pairs whose point stays active; this
-                # round's pair set already supersets the old memo's
-                # active entries, so replacing (not merging) is exact
-                o = np.argsort(key[~sel])
-                seen_keys, seen_d = key[~sel][o], d[~sel][o]
+            # memo only pairs whose point stays active; this
+            # round's pair set already supersets the old memo's
+            # active entries, so replacing (not merging) is exact
+            o = np.argsort(key[~sel])
+            seen_keys, seen_d = key[~sel][o], d[~sel][o]
 
-                radius[active] *= 2.0
-                active = active[~fin[active]]
+            radius[active] *= 2.0
+            active = active[~fin[active]]
 
-            rpt = np.concatenate(out_pt) if out_pt else np.empty(0, np.int64)
-            rid = np.concatenate(out_id) if out_id else np.empty(0, np.int64)
-            rd = np.concatenate(out_d) if out_d else np.empty(0)
-            o = np.lexsort((rid, rd, rpt))
-            rpt, rid, rd = rpt[o], rid[o], rd[o]
+        rpt = np.concatenate(out_pt) if out_pt else np.empty(0, np.int64)
+        rid = np.concatenate(out_id) if out_id else np.empty(0, np.int64)
+        rd = np.concatenate(out_d) if out_d else np.empty(0)
+        o = np.lexsort((rid, rd, rpt))
+        rpt, rid, rd = rpt[o], rid[o], rd[o]
 
-            out = pdf.iloc[rpt][keep].reset_index(drop=True)
-            out["polygon_id"] = rid
-            out["dist"] = rd
-            out["rank"] = (_rank_in_group(rpt) + 1).astype(np.int32)
-            yield out
+        return [*batch.select(keep).take(rpt).columns, rid, rd,
+                (_rank_in_group(rpt) + 1).astype(np.int32)]
 
-    return points.mapInPandas(kernel, schema)
+    return batch_map(points, dict.fromkeys([*keep, x, y]), kernel, schema)
 
 
 def knn_join_centroid(

@@ -21,19 +21,21 @@ shuffle on the cell key; no all-pairs product ever exists.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..kernels.geom import intersect_segments
 from ..kernels.pip import INTERIOR, points_in_polygon
 from ..layer import PolygonLayer
+from .arrow_map import row_map
 
 __all__ = [
     "polygon_overlap_join",
     "polygon_overlap_join_packed",
     "polygon_overlap_join_rings",
 ]
+
+OVERLAP_SCHEMA = "a_id long, b_id long, relation string"
 
 
 def _boundaries_intersect(rings_a, rings_b) -> bool:
@@ -67,40 +69,26 @@ def polygon_overlap_join(
     ba = spark.sparkContext.broadcast(layer_a)
     bb = spark.sparkContext.broadcast(layer_b)
 
-    def kernel(batches):
-        la, lb = ba.value, bb.value
-        for pdf in batches:
-            out = {"a_id": [], "b_id": [], "relation": []}
-            for aid, bid in zip(pdf["a_id"], pdf["b_id"]):
-                rel = _classify(la.by_id(int(aid)), lb.by_id(int(bid)))
-                if rel is None:
-                    continue
-                out["a_id"].append(int(aid))
-                out["b_id"].append(int(bid))
-                out["relation"].append(rel)
-            yield pd.DataFrame(
-                {
-                    "a_id": pd.Series(out["a_id"], dtype="int64"),
-                    "b_id": pd.Series(out["b_id"], dtype="int64"),
-                    "relation": pd.Series(out["relation"], dtype="object"),
-                }
-            )
+    def row(aid, bid):
+        return _pair_rows(aid, bid, ba.value.by_id(aid), bb.value.by_id(bid))
 
-    return pairs.mapInPandas(kernel, "a_id long, b_id long, relation string")
+    return row_map(pairs, ["a_id", "b_id"], row, OVERLAP_SCHEMA)
 
 
-def _classify(pa_, pb_) -> str | None:
-    """Relation of two polygon views: 'boundary' (dual-tree descent over
-    their arena ring views + exact segment intersection), else 'a_in_b'
-    / 'b_in_a' by one shell vertex's relation to the other polygon."""
+def _pair_rows(aid, bid, pa_, pb_) -> list:
+    """The output row of candidate pair (aid, bid) whose polygon views
+    are pa_ and pb_, none when they do not meet: 'boundary' (dual-tree
+    descent over their arena ring views + exact segment intersection),
+    else 'a_in_b' / 'b_in_a' by one shell vertex's relation to the
+    other polygon."""
     ra, rb = pa_.rings, pb_.rings
     if _boundaries_intersect(ra, rb):
-        return "boundary"
+        return [(aid, bid, "boundary")]
     if points_in_polygon(ra[0].xs[:1], ra[0].ys[:1], pb_)[0] == INTERIOR:
-        return "a_in_b"
+        return [(aid, bid, "a_in_b")]
     if points_in_polygon(rb[0].xs[:1], rb[0].ys[:1], pa_)[0] == INTERIOR:
-        return "b_in_a"
-    return None
+        return [(aid, bid, "b_in_a")]
+    return []
 
 
 def polygon_overlap_join_packed(
@@ -180,33 +168,16 @@ def polygon_overlap_join_rings(
 
 
 def _refine_packed_pairs(pairs: DataFrame) -> DataFrame:
+    from .pip_join import _unpack_polygon
+
     _memo: dict = {}
 
-    def kernel(batches):
-        from .pip_join import _unpack_polygon
+    def unpack(key, blob):
+        if key not in _memo:
+            _memo[key] = _unpack_polygon(blob)
+        return _memo[key]
 
-        def unpack(key, blob):
-            if key not in _memo:
-                _memo[key] = _unpack_polygon(blob)
-            return _memo[key]
+    def row(aid, bid, pa_b, pb_b):
+        return _pair_rows(aid, bid, unpack(("a", aid), pa_b), unpack(("b", bid), pb_b))
 
-        for pdf in batches:
-            out = {"a_id": [], "b_id": [], "relation": []}
-            for aid, bid, pa_b, pb_b in zip(
-                pdf["a_id"], pdf["b_id"], pdf["pa"], pdf["pb"]
-            ):
-                rel = _classify(unpack(("a", int(aid)), pa_b), unpack(("b", int(bid)), pb_b))
-                if rel is None:
-                    continue
-                out["a_id"].append(int(aid))
-                out["b_id"].append(int(bid))
-                out["relation"].append(rel)
-            yield pd.DataFrame(
-                {
-                    "a_id": pd.Series(out["a_id"], dtype="int64"),
-                    "b_id": pd.Series(out["b_id"], dtype="int64"),
-                    "relation": pd.Series(out["relation"], dtype="object"),
-                }
-            )
-
-    return pairs.mapInPandas(kernel, "a_id long, b_id long, relation string")
+    return row_map(pairs, ["a_id", "b_id", "pa", "pb"], row, OVERLAP_SCHEMA)

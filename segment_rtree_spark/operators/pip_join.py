@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..kernels.pip import RELATION_NAMES, RingArena
 from ..layer import PolygonLayer
+from .arrow_map import batch_map, group_map
 from .tile_ops import assign_tiles
 
 # layers whose pickled size (what the broadcast kernels ship) exceeds
@@ -70,17 +71,6 @@ def _xy(tab, x: str, y: str):
             for c in (x, y)]
 
 
-def _pip_hits(batches, blayer, x: str, y: str):
-    """(batch, point_idx, polygon_id, relation) for every Arrow batch
-    with >= 1 hit against the broadcast layer: the batch loop of both
-    broadcast kernels."""
-    lyr = blayer.value
-    for batch in batches:
-        qi, pid, rel = lyr.pip(*_xy(batch, x, y))
-        if len(qi):
-            yield batch, qi, pid, rel
-
-
 def _emit_hits(tab, keep: Sequence[str], qi, pid, rel):
     """(keep..., polygon_id, relation) rows of PolygonLayer.pip hits
     over an Arrow batch or table. The hit fan-out is one take over the
@@ -107,18 +97,14 @@ def pip_join_broadcast(
     """Broadcast PIP join; see module docstring."""
     keep = list(keep) if keep is not None else [c for c in points.columns]
     schema = _result_schema(points, keep)
-    spark = points.sparkSession
-    blayer = spark.sparkContext.broadcast(layer)
-    # column-prune BEFORE the UDF: the kernel ships every input column
-    # through Arrow, so an unpruned image table would drag its pixel
-    # blobs through the kernel for an id-only join output
-    points = points.select(*dict.fromkeys([*keep, x, y]))
+    blayer = points.sparkSession.sparkContext.broadcast(layer)
 
-    def kernel(batches):
-        for batch, *hits in _pip_hits(batches, blayer, x, y):
-            yield _emit_hits(batch, keep, *hits)
+    def kernel(batch):
+        return _emit_hits(batch, keep, *blayer.value.pip(*_xy(batch, x, y))).columns
 
-    return points.mapInArrow(kernel, schema)
+    # only keep, x and y cross to Python: an image table's pixel blobs
+    # never ride through the kernel for an id-only join output
+    return batch_map(points, dict.fromkeys([*keep, x, y]), kernel, schema)
 
 
 def pip_count_broadcast(
@@ -142,21 +128,15 @@ def pip_count_broadcast(
     — at 10^12 rows this deletes the survivor stage's only shuffle."""
     keep = list(keep) if keep is not None else list(points.columns)
     schema = _result_schema(points, keep, "n_regions long")
-    spark = points.sparkSession
-    blayer = spark.sparkContext.broadcast(layer)
-    points = points.select(*dict.fromkeys([*keep, x, y]))
+    blayer = points.sparkSession.sparkContext.broadcast(layer)
 
-    def kernel(batches):
-        import pyarrow as pa
+    def kernel(batch):
+        qi, _pid, _rel = blayer.value.pip(*_xy(batch, x, y))
+        counts = np.bincount(qi, minlength=batch.num_rows)
+        sel = np.flatnonzero(counts)
+        return [*batch.select(keep).take(sel).columns, counts[sel]]
 
-        for batch, qi, _pid, _rel in _pip_hits(batches, blayer, x, y):
-            counts = np.bincount(qi, minlength=batch.num_rows)
-            sel = np.flatnonzero(counts)
-            yield batch.select(keep).take(sel).append_column(
-                "n_regions", pa.array(counts[sel].astype(np.int64))
-            )
-
-    return points.mapInArrow(kernel, schema)
+    return batch_map(points, dict.fromkeys([*keep, x, y]), kernel, schema)
 
 
 def _pack_polygon(poly) -> bytes:
@@ -382,23 +362,20 @@ COVER_SCHEMA = "polygon_id long, cell long, pack binary"
 def cover_from_rings(rings: DataFrame, res: int) -> DataFrame:
     """DISTRIBUTED polyfill: (polygon_id, part_id, xs, ys) ring rows ->
     (polygon_id, cell, pack) cover rows, the cover BFS of a one-polygon
-    layer per polygon inside applyInPandas. No PolygonLayer ever exists on the driver, so the
-    partitioned PIP path works for layers of any cardinality — the
-    10^6-polygon case a driver-side PolygonLayer can't serve."""
-    def gen(pdf: pd.DataFrame) -> pd.DataFrame:
+    layer per polygon in one arrow_map.group_map kernel. No
+    PolygonLayer ever exists on the driver, so the partitioned PIP
+    path works for layers of any cardinality — the 10^6-polygon case a
+    driver-side PolygonLayer can't serve."""
+    cols = ["polygon_id", "part_id", "xs", "ys"]
+
+    def cover(tab):
         lyr = PolygonLayer.from_ring_rows(
-            zip(pdf["polygon_id"], pdf["part_id"], pdf["xs"], pdf["ys"])
+            zip(*(tab.column(c).to_numpy(zero_copy_only=False) for c in cols))
         )
         pids, cells = lyr.cover_cells(res)
-        return pd.DataFrame(
-            {
-                "polygon_id": pids,
-                "cell": cells,
-                "pack": [_pack_polygon(lyr.polygons[0])] * len(cells),
-            }
-        )
+        return [pids, cells, [_pack_polygon(lyr.polygons[0])] * len(cells)]
 
-    return rings.groupBy("polygon_id").applyInPandas(gen, COVER_SCHEMA)
+    return group_map(rings, cols, "polygon_id", cover, COVER_SCHEMA)
 
 
 def pip_join_partitioned_rings(

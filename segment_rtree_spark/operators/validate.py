@@ -12,10 +12,8 @@ routed, not thrown:
   decide; one Arrow kernel decodes the rest. Both speak the payload
   error codes below, so a mixed-modality curation job filters one
   vocabulary.
-* `_payload_map`: the one per-row payload driver. That decode kernel
-  and every image and audio operator's kernel (stats, resize, PSNR
-  refine, frame and clip sampling, features) is a row function it
-  runs in one mapInArrow UDF over only the columns the row reads.
+  Its decode kernel is a row function over arrow_map.row_map, the
+  per-row driver every image and audio operator's kernel runs on.
 """
 
 from __future__ import annotations
@@ -23,12 +21,10 @@ from __future__ import annotations
 import struct
 import zlib
 
-import numpy as np
-import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..codec_errors import DimensionMismatchError
+from .arrow_map import group_map, row_map
 
 ERROR_SCHEMA = (
     "error_code string, first_index int, second_index int, "
@@ -39,42 +35,26 @@ ERROR_SCHEMA = (
 def validate_polygons(rings: DataFrame) -> DataFrame:
     """Polygon-level validity over grouped ring rows.
 
-    applyInPandas grouped by polygon_id (one polygon's rings always fit
-    a batch): ring checks first, then cross-ring rules + interior
-    connectivity (validity.validate_polygon). Output: one row per
-    polygon with the error struct (null = valid).
+    One arrow_map.group_map kernel per polygon_id (one polygon's rings
+    always fit a group): ring checks first, then cross-ring rules +
+    interior connectivity (validity.validate_polygon). Output: one row
+    per polygon with the error struct (null = valid).
     """
     from ..kernels.validity import validate_polygon, validate_ring
     from ..layer import PolygonLayer
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pid = int(pdf["polygon_id"].iloc[0])
-        pdf = pdf.sort_values("part_id")
-        rows = list(zip(pdf["polygon_id"], pdf["part_id"], pdf["xs"], pdf["ys"]))
-        issue = None
-        for *_, xs, ys in rows:
-            issue = validate_ring(np.asarray(xs), np.asarray(ys))
-            if issue is not None:
-                break
-        if issue is None:
-            issue = validate_polygon(PolygonLayer.from_ring_rows(rows).polygons[0])
-        e = issue
-        return pd.DataFrame(
-            {
-                "polygon_id": [pid],
-                "error_code": [e.code if e else None],
-                "first_index": pd.array([e.first_index if e else None], dtype="Int32"),
-                "second_index": pd.array([e.second_index if e else None], dtype="Int32"),
-                "err_x": [e.x if e else None],
-                "err_y": [e.y if e else None],
-                "err_x2": [e.x2 if e else None],
-                "err_y2": [e.y2 if e else None],
-            }
-        )
+    cols = ["polygon_id", "part_id", "xs", "ys"]
 
-    return rings.groupBy("polygon_id").applyInPandas(
-        kernel, "polygon_id long, " + ERROR_SCHEMA
-    )
+    def check(tab):
+        tab = tab.sort_by("part_id")
+        rows = list(zip(*(tab.column(c).to_numpy(zero_copy_only=False) for c in cols)))
+        e = next(filter(None, (validate_ring(xs, ys) for *_, xs, ys in rows)), None)
+        if e is None:
+            e = validate_polygon(PolygonLayer.from_ring_rows(rows).polygons[0])
+        # an issue's absent coordinates are NaN: NULL in the output
+        return [[rows[0][0]], *([v if v == v else None] for v in e or [None] * 7)]
+
+    return group_map(rings, cols, "polygon_id", check, "polygon_id long, " + ERROR_SCHEMA)
 
 
 # Payload error codes, in check order (first failing check wins: the
@@ -129,7 +109,7 @@ def _payload_verdicts(
     read it, so they cannot drift apart (a format admitted by the
     whitelist but missing from the route would vanish from the output).
 
-    Tier 2 is one _payload_map kernel over the rows tier 1 passed that
+    Tier 2 is one row_map kernel over the rows tier 1 passed that
     need a decode: every non-lane format, plus the lane when
     `lane_decodes`. `check(*row)` gets the row's columns after the id
     and returns (code, detail), (None, None) when the row is valid; an
@@ -177,7 +157,7 @@ def _payload_verdicts(
     )
     cols = [F.col(id_col).cast("string").alias(id_col),
             *[c for c in src.columns if c not in (id_col, "pre")]]
-    out = out.unionByName(_payload_map(
+    out = out.unionByName(row_map(
         src.filter(route), cols, verdict,
         f"{id_col} string, ok boolean, err_code string, err_detail string",
     ))
@@ -188,35 +168,3 @@ def _payload_verdicts(
         )
     return out
 
-
-def _payload_map(src: DataFrame, cols, row, schema: str) -> DataFrame:
-    """The one per-row payload driver: `row(*values)` over every row of
-    `src.select(*cols)`, its output tuples under the DDL `schema`.
-
-    One mapInArrow UDF, named after the operator that defines `row` (the
-    plan reads `MapInArrow validate_images(...)`, not `kernel`). Per
-    batch each column is read once with to_pylist(), so a nullable long
-    arrives as an exact int or None (never widened to float64) and
-    binary as bytes. `row` returns zero or more output tuples (frame and
-    clip sampling emit many, a skipped row none); each output column is
-    built once with its Arrow type from `schema`. An exception `row`
-    raises fails the task: an operator that turns errors into data
-    catches them itself.
-    """
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
-
-    out = to_arrow_schema(StructType.fromDDL(schema))
-
-    def kernel(batches):
-        for batch in batches:
-            rows = [t for vals in zip(*(c.to_pylist() for c in batch.columns))
-                    for t in row(*vals)]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, f.type) for c, f in
-                 zip(list(zip(*rows)) or [()] * len(out), out)],
-                schema=out,
-            )
-
-    kernel.__name__ = kernel.__qualname__ = row.__qualname__.split(".")[0]
-    return src.select(*cols).mapInArrow(kernel, schema)

@@ -143,6 +143,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from ..operators import dedup as _dedup  # noqa: E402
 from ..operators import embed as _embed  # noqa: E402
 from ..operators import text as _text  # noqa: E402
+from ..operators.arrow_map import batch_map, row_map  # noqa: E402
 from ..operators.knn_join import knn_join_centroid  # noqa: E402
 from ..operators.pip_join import pip_join_broadcast  # noqa: E402
 from ..operators.tile_ops import assign_tiles  # noqa: E402
@@ -285,9 +286,6 @@ SEG_SQL = dict(
 
 def q_clip_segment(spark, sf_dir):
     """Liang-Barsky kernel over lineitem-derived segments."""
-    import numpy as np
-    import pandas as pd
-
     from ..kernels.geom import clip_segments
 
     segs = (
@@ -300,22 +298,13 @@ def q_clip_segment(spark, sf_dir):
     )
     xmin, ymin, xmax, ymax = CLIP_RECT
 
-    def kernel(batches):
-        for pdf in batches:
-            hit, cx0, cy0, cx1, cy1 = clip_segments(
-                xmin, ymin, xmax, ymax,
-                pdf["sx"].to_numpy(), pdf["sy"].to_numpy(),
-                pdf["ex"].to_numpy(), pdf["ey"].to_numpy(),
-            )
-            yield pd.DataFrame(
-                {
-                    "seg_id": pdf["seg_id"].to_numpy()[hit],
-                    "cx0": cx0[hit], "cy0": cy0[hit],
-                    "cx1": cx1[hit], "cy1": cy1[hit],
-                }
-            )
+    def kernel(batch):
+        seg_id, *ends = (np.asarray(c) for c in batch.columns)
+        hit, *clipped = clip_segments(xmin, ymin, xmax, ymax, *ends)
+        return [seg_id[hit], *(c[hit] for c in clipped)]
 
-    return segs.mapInPandas(kernel, "seg_id long, cx0 double, cy0 double, cx1 double, cy1 double")
+    return batch_map(segs, segs.columns, kernel,
+                     "seg_id long, cx0 double, cy0 double, cx1 double, cy1 double")
 
 
 def _clip_segment_oracle():
@@ -777,8 +766,6 @@ HKEY_GY = "(c_custkey * 69621) % 65536"
 
 
 def q_hilbert_key(spark, sf_dir):
-    import pandas as pd
-
     from ..kernels.hilbert import hilbert_normalized
 
     pts = _t(spark, sf_dir, "customer").select(
@@ -787,16 +774,12 @@ def q_hilbert_key(spark, sf_dir):
         F.expr(HKEY_GY).alias("gy"),
     )
 
-    def kernel(batches):
-        import numpy as np
+    def kernel(batch):
+        pid, gx, gy = batch.columns
+        return [pid, hilbert_normalized(np.asarray(gx, np.uint32),
+                                        np.asarray(gy, np.uint32)).astype(np.int64)]
 
-        for pdf in batches:
-            hk = hilbert_normalized(
-                pdf["gx"].to_numpy(np.uint32), pdf["gy"].to_numpy(np.uint32)
-            )
-            yield pd.DataFrame({"point_id": pdf["point_id"], "hkey": hk.astype(np.int64)})
-
-    return pts.mapInPandas(kernel, "point_id long, hkey long")
+    return batch_map(pts, pts.columns, kernel, "point_id long, hkey long")
 
 
 def _hilbert_key_oracle():
@@ -818,36 +801,24 @@ def q_distance_join(spark, sf_dir):
     """Points within DIST_LIMIT of each entry-layer polygon BOUNDARY
     (the reference's Flatbush::query_within shape, flatbush_impl.rs:154-157,
     as a distance join with exact point-segment distances)."""
-    import pandas as pd
-    import numpy as np
-
     pts = _points(spark, sf_dir)
     blayer = spark.sparkContext.broadcast(entry_layer())
 
-    def kernel(batches):
+    def kernel(batch):
         lyr = blayer.value
-        for pdf in batches:
-            px = pdf["lng"].to_numpy(np.float64)
-            py = pdf["lat"].to_numpy(np.float64)
-            # a boundary within DIST_LIMIT puts the polygon envelope in
-            # the point's closed DIST_LIMIT box (widened by 1e-9 of the
-            # magnitudes against the box's rounding): index candidates,
-            # then one pair distance descent
-            r = DIST_LIMIT + 1e-9 * (DIST_LIMIT + np.abs(px) + np.abs(py))
-            q, pos = lyr.index.query_rect(px - r, py - r, px + r, py + r)
-            pos = lyr.order[pos]
-            d = lyr._distances(px, py, q, pos)
-            m = d <= DIST_LIMIT
-            if m.any():
-                yield pd.DataFrame(
-                    {
-                        "point_id": pdf["point_id"].to_numpy()[q[m]],
-                        "polygon_id": lyr.ids[pos[m]],
-                        "dist": d[m],
-                    }
-                )
+        pid, px, py = (np.asarray(c) for c in batch.columns)
+        # a boundary within DIST_LIMIT puts the polygon envelope in
+        # the point's closed DIST_LIMIT box (widened by 1e-9 of the
+        # magnitudes against the box's rounding): index candidates,
+        # then one pair distance descent
+        r = DIST_LIMIT + 1e-9 * (DIST_LIMIT + np.abs(px) + np.abs(py))
+        q, pos = lyr.index.query_rect(px - r, py - r, px + r, py + r)
+        pos = lyr.order[pos]
+        d = lyr._distances(px, py, q, pos)
+        m = d <= DIST_LIMIT
+        return [pid[q[m]], lyr.ids[pos[m]], d[m]]
 
-    return pts.mapInPandas(kernel, "point_id long, polygon_id long, dist double")
+    return batch_map(pts, pts.columns, kernel, "point_id long, polygon_id long, dist double")
 
 
 def _distance_join_oracle():
@@ -2432,33 +2403,19 @@ def q_jpeg_roundtrip(spark, sf_dir):
     SQL-expressible; the float details plus the deeper checks
     (structural errors, taxonomy, javax.imageio interop both
     directions) live in pytest (tests/test_jpegio.py)."""
-    import pandas as pd_
+    from ..imageio import psnr
+    from ..jpegio import decode_jpeg, encode_jpeg
 
-    def kernel(batches):
-        import numpy as np_
+    def row(i):
+        h, w = 8 + i % 24, 8 + (i * 7) % 24
+        yy, xx = np.mgrid[0:h, 0:w]
+        px = np.stack(
+            [yy * 255 // max(1, h - 1), xx * 255 // max(1, w - 1),
+             (yy + xx) * 255 // max(1, h + w - 2)], axis=-1
+        ).astype(np.uint8)
+        return [(i, bool(psnr(px, decode_jpeg(encode_jpeg(px, 90))) >= 40.0))]
 
-        from ..imageio import psnr as _psnr
-        from ..jpegio import decode_jpeg as _dec, encode_jpeg as _enc
-
-        for pdf in batches:
-            ids, ok = [], []
-            for i in pdf["id"]:
-                h, w = 8 + int(i) % 24, 8 + (int(i) * 7) % 24
-                yy, xx = np_.mgrid[0:h, 0:w]
-                px = np_.stack(
-                    [yy * 255 // max(1, h - 1), xx * 255 // max(1, w - 1),
-                     (yy + xx) * 255 // max(1, h + w - 2)], axis=-1
-                ).astype(np_.uint8)
-                p = _psnr(px, _dec(_enc(px, 90)))
-                ids.append(int(i))
-                ok.append(bool(p >= 40.0))
-            yield pd_.DataFrame({"img_i": ids, "psnr_ok": ok})
-
-    return (
-        spark.range(120)
-        .mapInPandas(kernel, "img_i long, psnr_ok boolean")
-        .filter("psnr_ok")
-    )
+    return row_map(spark.range(120), ["id"], row, "img_i long, psnr_ok boolean").filter("psnr_ok")
 
 
 def _jpeg_roundtrip_oracle():
@@ -2489,56 +2446,44 @@ def q_codec_matrix(spark, sf_dir):
     (jpeg_roundtrip). Cites the reference's round-trip test posture
     (from_wkt.rs/to_wkt round-trip tests) applied to the image wire
     formats."""
-    import pandas as pd_
-
-    def kernel(batches):
-        import numpy as np_
-
-        from ..ccitt import encode_tiff_g4 as _eg4
-        from ..imageio import (
-            decode_image as _dec,
-            encode_bmp as _ebmp,
-            encode_gif as _egif,
-            encode_png as _epng,
-            encode_raw as _eraw,
-            encode_tiff as _etif,
-            encode_webp as _ewebp,
-        )
-
-        encoders = {
-            "raw": _eraw, "png": _epng, "bmp": _ebmp, "gif": _egif,
-            "tiff": _etif, "webp": _ewebp, "tiff_g4": _eg4,
-        }
-        for pdf in batches:
-            ids, fmts, oks = [], [], []
-            for i in pdf["id"]:
-                h, w = 5 + int(i) % 13, 5 + (int(i) * 3) % 17
-                yy, xx = np_.mgrid[0:h, 0:w]
-                # 8-color deterministic pattern: gif-safe by design
-                pal = np_.stack(
-                    [np_.arange(8) * 36, (np_.arange(8) * 73) % 256,
-                     255 - np_.arange(8) * 29], axis=-1
-                ).astype(np_.uint8)
-                px = pal[(yy * 3 + xx * 5 + int(i)) % 8]
-                bw = np_.repeat(
-                    ((((yy * 3 + xx * 5 + int(i)) % 8) < 4) * 255)
-                    .astype(np_.uint8)[:, :, None], 3, axis=2,
-                )
-                for fmt, enc in encoders.items():
-                    src = bw if fmt == "tiff_g4" else px
-                    out = _dec(enc(src), "tiff" if fmt == "tiff_g4" else fmt, w, h)
-                    ids.append(int(i))
-                    fmts.append(fmt)
-                    oks.append(bool((out == src).all()))
-            yield pd_.DataFrame(
-                {"img_i": ids, "fmt": fmts, "lossless_ok": oks}
-            )
-
-    return (
-        spark.range(60)
-        .mapInPandas(kernel, "img_i long, fmt string, lossless_ok boolean")
-        .filter("lossless_ok")
+    from ..ccitt import encode_tiff_g4
+    from ..imageio import (
+        decode_image,
+        encode_bmp,
+        encode_gif,
+        encode_png,
+        encode_raw,
+        encode_tiff,
+        encode_webp,
     )
+
+    encoders = {
+        "raw": encode_raw, "png": encode_png, "bmp": encode_bmp, "gif": encode_gif,
+        "tiff": encode_tiff, "webp": encode_webp, "tiff_g4": encode_tiff_g4,
+    }
+
+    def row(i):
+        h, w = 5 + i % 13, 5 + (i * 3) % 17
+        yy, xx = np.mgrid[0:h, 0:w]
+        # 8-color deterministic pattern: gif-safe by design
+        pal = np.stack(
+            [np.arange(8) * 36, (np.arange(8) * 73) % 256,
+             255 - np.arange(8) * 29], axis=-1
+        ).astype(np.uint8)
+        px = pal[(yy * 3 + xx * 5 + i) % 8]
+        bw = np.repeat(
+            ((((yy * 3 + xx * 5 + i) % 8) < 4) * 255).astype(np.uint8)[:, :, None], 3, axis=2,
+        )
+        out = []
+        for fmt, enc in encoders.items():
+            src = bw if fmt == "tiff_g4" else px
+            got = decode_image(enc(src), "tiff" if fmt == "tiff_g4" else fmt, w, h)
+            out.append((i, fmt, bool((got == src).all())))
+        return out
+
+    return row_map(
+        spark.range(60), ["id"], row, "img_i long, fmt string, lossless_ok boolean"
+    ).filter("lossless_ok")
 
 
 def _codec_matrix_oracle():
@@ -2782,53 +2727,36 @@ def _audio_arith_corpus(spark, n):
         as headerless fmt='pcm'; channels = 1 + i%2 (stereo fills
         channel 1 with silence; features are channel-0).
     """
-    import pandas as pd_
+    from ..audioio import encode_wav
 
-    def kernel(batches):
-        import numpy as np_
+    def row(i):
+        g = i % 25
+        hi = (g * 2654435761) % 2147483648
+        lo = ((g + 7) * 97003969) % 2147483648
+        p = ((hi * 2147483648 + lo) | 1) ^ (1 << (1 + (i * 7) % 60))
+        wlen = 32 + i % 29
+        scale = (1, 256, 65536)[i % 3]
+        ahi = (12000 + i % 100) * scale
+        alo = (200 + i % 50) * scale
+        sr = 8000 + (i % 3) * 4100
+        ch = 1 + i % 2
+        amps = np.array(
+            [ahi if (p >> (63 - j)) & 1 else alo for j in range(64)], np.int64,
+        )
+        signs = np.where(np.arange(64) % 2 == 0, 1, -1)
+        x = np.repeat(amps * signs, wlen).astype(np.int32)[:, None]
+        if ch == 2:
+            x = np.concatenate([x, np.zeros_like(x)], axis=1)
+        if i % 15 == 0:  # headerless lane (i%15==0 => i16 scale)
+            fmt, buf = "pcm", x.astype("<i2").tobytes()
+        else:
+            fmt = "wav"
+            buf = encode_wav(x, sr, ("i16", "i24", "i32")[i % 3])
+        return [(f"au{i:04d}", buf, sr, 64 * wlen, ch, fmt)]
 
-        from ..audioio import encode_wav
-
-        for pdf in batches:
-            out = {k: [] for k in ("audio_id", "bytes", "sr", "n_samples",
-                                   "channels", "fmt")}
-            for i in pdf["id"]:
-                i = int(i)
-                g = i % 25
-                hi = (g * 2654435761) % 2147483648
-                lo = ((g + 7) * 97003969) % 2147483648
-                p = ((hi * 2147483648 + lo) | 1) ^ (1 << (1 + (i * 7) % 60))
-                wlen = 32 + i % 29
-                scale = (1, 256, 65536)[i % 3]
-                ahi = (12000 + i % 100) * scale
-                alo = (200 + i % 50) * scale
-                sr = 8000 + (i % 3) * 4100
-                ch = 1 + i % 2
-                amps = np_.array(
-                    [ahi if (p >> (63 - j)) & 1 else alo for j in range(64)],
-                    np_.int64,
-                )
-                signs = np_.where(np_.arange(64) % 2 == 0, 1, -1)
-                x = np_.repeat(amps * signs, wlen).astype(np_.int32)[:, None]
-                if ch == 2:
-                    x = np_.concatenate([x, np_.zeros_like(x)], axis=1)
-                if i % 15 == 0:  # headerless lane (i%15==0 => i16 scale)
-                    fmt, buf = "pcm", x.astype("<i2").tobytes()
-                else:
-                    fmt = "wav"
-                    buf = encode_wav(x, sr, ("i16", "i24", "i32")[i % 3])
-                out["audio_id"].append(f"au{i:04d}")
-                out["bytes"].append(buf)
-                out["sr"].append(sr)
-                out["n_samples"].append(64 * wlen)
-                out["channels"].append(ch)
-                out["fmt"].append(fmt)
-            yield pd_.DataFrame(out)
-
-    return spark.range(n).repartition(8).mapInPandas(
-        kernel,
-        "audio_id string, bytes binary, sr int, n_samples int, "
-        "channels int, fmt string",
+    return row_map(
+        spark.range(n).repartition(8), ["id"], row,
+        "audio_id string, bytes binary, sr int, n_samples int, channels int, fmt string",
     )
 
 

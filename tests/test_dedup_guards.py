@@ -249,6 +249,21 @@ def test_minhash_kernel_expr_parity(spark):
     assert set(ae["doc_id"]) == {1, 2, 4, 5}  # NULL text drops its row
 
 
+def test_minhash_kernel_id_exact_beside_a_null(spark):
+    """A 64-bit doc id stays exact when a NULL id shares its Arrow batch
+    (a pandas round trip widened it to float64 and rounded 2^62+1); the
+    kernel's rows equal the Catalyst twin's."""
+    from segment_rtree_spark.operators.dedup import minhash_signatures
+
+    big = (1 << 62) + 1
+    docs = spark.createDataFrame(
+        [(big, "a b c"), (None, "d e")], "doc_id long, text string"
+    ).coalesce(1)
+    got = {tuple(r) for r in minhash_signatures(docs).collect()}
+    assert {r[0] for r in got} == {big, None}
+    assert got == {tuple(r) for r in minhash_signatures(docs, impl="expr").collect()}
+
+
 def test_incremental_pairs_match_full_self_join(spark):
     """lsh_pairs_against(new, corpus) must equal the cross-side subset
     of lsh_pairs(all docs): incremental ingest finds exactly the

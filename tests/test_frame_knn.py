@@ -206,6 +206,18 @@ def test_knn_prune_slack_near_tie(spark):
         assert out.loc[out["rank"] == 1, "polygon_id"].tolist() == [1]
 
 
+def test_knn_carried_long_exact_beside_a_null(spark):
+    """A carried 64-bit column stays exact when a NULL shares its Arrow
+    batch: a pandas emit widened it to float64 and rounded 2^62+1."""
+    big = (1 << 62) + 1
+    pts = spark.createDataFrame(
+        [("a", big, 5.0, 5.0), ("b", None, 15.0, 5.0)],
+        "image_id string, phash long, lng double, lat double",
+    ).coalesce(1)
+    out = knn_join_broadcast(pts, LAYER, k=1, keep=["image_id", "phash"]).collect()
+    assert {r["image_id"]: r["phash"] for r in out} == {"a": big, "b": None}
+
+
 def test_spatialframe_chain(spark, pts):
     sf = SpatialFrame(pts)
     out = sf.assign_tiles(res=6).with_cell_prefix().pip_join(LAYER, keep=["pid"])

@@ -390,6 +390,19 @@ def test_validate_audio_two_tier_shape(spark):
         assert code in p
 
 
+def _wide(df):
+    return df.withColumn("wide", F.expr("repeat('x', 4096)"))
+
+
+def _python_nodes(df):
+    """(input columns, UDF name) of every Arrow Python node of df's plan."""
+    return re.findall(
+        r"\(\d+\) \w+In(?:Arrow|Pandas)\w*[^\n]*\nInput \[\d+\]: \[([^\]]*)\]\n"
+        r"Arguments: (?:\[[^\]]*\], )?(\w+)\(",
+        plan_str(df),
+    )
+
+
 def test_payload_kernels_prune_and_name(spark):
     """Every per-row payload kernel reads only the columns it uses (a
     wide column beside the payload never crosses to Python) and its
@@ -398,15 +411,13 @@ def test_payload_kernels_prune_and_name(spark):
     from segment_rtree_spark.plans.entry_queries import _audio_arith_corpus
     from segment_rtree_spark.synth import images_df_arith
 
-    def wide(df):
-        return df.withColumn("wide", F.expr("repeat('x', 4096)"))
-
-    imgs = wide(images_df_arith(spark, 4))
-    clips = wide(_audio_arith_corpus(spark, 4))
-    videos = wide(spark.createDataFrame(
+    # materialized, so the fixture generators' own kernels are not in the plans
+    imgs = _wide(images_df_arith(spark, 4).localCheckpoint())
+    clips = _wide(_audio_arith_corpus(spark, 4).localCheckpoint())
+    videos = _wide(spark.createDataFrame(
         [("v", b"\x00" * 48, "fakevid", 2, 2)],
         "video_id string, bytes binary, fmt string, w int, h int"))
-    pairs = wide(spark.createDataFrame([("a", "b")], "id_a string, id_b string"))
+    pairs = _wide(spark.createDataFrame([("a", "b")], "id_a string, id_b string"))
     ops = {
         "with_pixel_stats": images.with_pixel_stats(imgs),
         "with_pixel_stats_exact": images.with_pixel_stats_exact(imgs),
@@ -419,11 +430,73 @@ def test_payload_kernels_prune_and_name(spark):
         "validate_audio": audio.validate_audio(clips),
     }
     for name, df in ops.items():
-        nodes = re.findall(
-            r"\(\d+\) MapInArrow\nInput \[\d+\]: \[([^\]]*)\]\nArguments: (\w+)\(",
-            plan_str(df),
-        )
+        nodes = _python_nodes(df)
         assert len(nodes) == 1, (name, nodes)
         (cols, udf), = nodes
         assert udf == name
         assert "wide" not in cols and "bytes" in cols, (name, cols)
+
+
+def test_batch_and_grouped_kernels_prune_and_name(spark, monkeypatch):
+    """Every batch or grouped operator kernel runs in exactly one Arrow
+    Python node, named after its operator, that reads no column beyond
+    its inputs (a wide column beside them never crosses to Python)."""
+    from segment_rtree_spark.operators import (
+        clip_tiles, dedup, embed, knn_join, overlay, pip_join, validate,
+    )
+    from segment_rtree_spark.plans.entry_queries import (
+        ENTRY_LAYER_ROWS, entry_layer, entry_layer_b,
+    )
+
+    layer = entry_layer()
+    pts = _wide(spark.range(8).select(
+        F.col("id").cast("string").alias("image_id"), F.col("id").alias("phash"),
+        (F.col("id") * 10.0 - 40.0).alias("lng"), (F.col("id") * 5.0).alias("lat")))
+    docs = _wide(spark.createDataFrame([(1, "a b c")], "doc_id long, text string"))
+    rings = _wide(spark.createDataFrame(
+        ENTRY_LAYER_ROWS, "polygon_id long, part_id int, xs array<double>, ys array<double>"))
+    vectors = _wide(spark.range(4).select(
+        F.col("id").alias("vec_id"),
+        F.array(F.col("id").cast("double"), F.lit(1.0)).alias("embedding")))
+    # ivf_topk checkpoints its list assignment; the assignment's own plan
+    # is the one its kernel runs in
+    assigned = []
+    checkpoint = type(vectors).localCheckpoint
+    monkeypatch.setattr(type(vectors), "localCheckpoint",
+                        lambda df, eager=True: assigned.append(df) or checkpoint(df, eager))
+    embed.ivf_topk(vectors, k=2, n_lists=2)
+    ops = {
+        "knn_join_broadcast": knn_join.knn_join_broadcast(pts, layer, k=2, keep=["image_id"]),
+        "minhash_signatures": dedup.minhash_signatures(docs),
+        "polygon_overlap_join": overlay.polygon_overlap_join(spark, layer, entry_layer_b(), 4),
+        "clip_to_tiles": clip_tiles.clip_to_tiles(spark, layer, 4),
+        "ivf_topk": assigned[0],
+        "cover_from_rings": pip_join.cover_from_rings(rings, 4),
+        "validate_polygons": validate.validate_polygons(rings),
+        "pip_join_broadcast": pip_join.pip_join_broadcast(pts, layer, keep=["image_id"]),
+        "pip_count_broadcast": pip_join.pip_count_broadcast(pts, layer, keep=["image_id"]),
+    }
+    for name, df in ops.items():
+        nodes = _python_nodes(df)
+        assert len(nodes) == 1, (name, nodes)
+        (cols, udf), = nodes
+        assert udf == name
+        assert "wide" not in cols, (name, cols)
+
+
+def test_operators_and_plans_have_no_pandas_udf():
+    """No operator or registry query hand-writes a pandas UDF round trip:
+    every kernel crosses to Python through operators/arrow_map."""
+    from pathlib import Path
+
+    import segment_rtree_spark
+
+    root = Path(segment_rtree_spark.__file__).parent
+    hits = [
+        f"{p.relative_to(root)}:{i}"
+        for sub in ("operators", "plans")
+        for p in sorted((root / sub).rglob("*.py"))
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if "mapInPandas" in line or "applyInPandas" in line
+    ]
+    assert not hits, hits
