@@ -1,7 +1,6 @@
-"""The one Python-UDF boundary: every map and grouped-map kernel of the
-operators and the registry queries crosses between Spark and Python
-here, in Arrow, never through pandas (the two cogrouped kernels,
-pip_join._pip_cogroup and embed._kernel_refine, are Arrow too).
+"""The one Python-UDF boundary: every map, grouped and cogrouped kernel
+of the operators and the registry queries crosses between Spark and
+Python here, in Arrow, never through pandas.
 
 * `batch_map`: `fn(batch)` per Arrow RecordBatch of `src.select(*cols)`,
   one mapInArrow UDF.
@@ -9,6 +8,9 @@ pip_join._pip_cogroup and embed._kernel_refine, are Arrow too).
   (the image, audio, codec and geometry kernels whose work is per row).
 * `group_map`: `fn(table)` per group of `src.select(*cols)` grouped by
   `key`, one applyInArrow UDF.
+* `cogroup_map`: `fn(left, right)` per key of two frames cogrouped on
+  `keys`, one cogrouped applyInArrow UDF (the partitioned PIP refine
+  and the embedding refine).
 
 A kernel returns its output columns in the DDL `schema`'s order: an
 Arrow array passes through as it is (a `take` carries payload columns
@@ -18,8 +20,10 @@ lists) is built once with its field's Arrow type. A batch kernel
 returns None to emit nothing; zero-row input batches never reach it.
 The plan node is named after the operator that defines the kernel
 (the head of its __qualname__): `MapInArrow knn_join_broadcast(...)`,
-not `kernel`. An exception the kernel raises fails the task: an
-operator that turns errors into data catches them itself.
+not `kernel`; a helper shared by several operators sets its kernel's
+__qualname__ to the calling operator's name. An exception the kernel
+raises fails the task: an operator that turns errors into data catches
+them itself.
 """
 
 from __future__ import annotations
@@ -27,7 +31,7 @@ from __future__ import annotations
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
-__all__ = ["batch_map", "row_map", "group_map"]
+__all__ = ["batch_map", "row_map", "group_map", "cogroup_map"]
 
 
 def _arrow_schema(schema: str) -> pa.Schema:
@@ -92,3 +96,16 @@ def group_map(src: DataFrame, cols, key: str, fn, schema: str) -> DataFrame:
         return _table(fn(table), out)
 
     return src.select(*cols).groupBy(key).applyInArrow(_named(kernel, fn), schema)
+
+
+def cogroup_map(left: DataFrame, right: DataFrame, keys, fn, schema: str) -> DataFrame:
+    """`fn(left_table, right_table)` over each key of `left` and `right`
+    cogrouped on `keys` (either side's table may have zero rows), its
+    output columns under the DDL `schema`."""
+    out = _arrow_schema(schema)
+
+    def kernel(ltab, rtab):
+        return _table(fn(ltab, rtab), out)
+
+    return left.groupBy(*keys).cogroup(right.groupBy(*keys)).applyInArrow(
+        _named(kernel, fn), schema)

@@ -30,7 +30,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .arrow_map import batch_map, group_map
+from .arrow_map import batch_map, cogroup_map, group_map
 from .dedup import _bucket_stats, _cap_buckets
 
 __all__ = [
@@ -396,23 +396,15 @@ def _probed_self(v: DataFrame, n_bits: int, n_probe: int) -> DataFrame:
     )
 
 
-def _pa_id_type(id_dtype: str):
-    import pyarrow as pa
-
-    return {
-        "string": pa.string(), "bigint": pa.int64(), "int": pa.int32(),
-        "smallint": pa.int16(), "tinyint": pa.int8(),
-    }[id_dtype]
-
-
-def _kernel_refine(q: DataFrame, t: DataFrame, key: str, id_col: str,
+def _kernel_refine(op: str, q: DataFrame, t: DataFrame, key: str, id_col: str,
                    names: tuple[str, str], emit,
                    by_id: bool = False) -> DataFrame:
     """The production refine of every embedding mode: cogroup the probe
     side `q` with the target side `t` on `key` (LSH bucket or IVF list)
-    and score each group with BLAS in one Arrow kernel. The kernel
-    reshapes the vector columns from their contiguous list buffers
-    (_list_matrix, never one np.asarray per row), then scores
+    and score each group with BLAS in one Arrow kernel (its plan node
+    named after the operator `op`). The kernel reshapes the vector
+    columns from their contiguous list buffers (_list_matrix, never
+    one np.asarray per row), then scores
     S = Q @ T.T / norms in query-row chunks of at most
     REFINE_CHUNK_ELEMS float64s (256 MB), so a degenerate mega-bucket
     at the cap boundary never allocates |Q| x |T| in one go.
@@ -424,14 +416,10 @@ def _kernel_refine(q: DataFrame, t: DataFrame, key: str, id_col: str,
     tie rule. Only top-k sorts: a different matrix layout can move a
     score by one ulp (see _probed_self), so each mode keeps the layout
     its outputs are pinned with."""
-    import pyarrow as pa
-
     # fresh exprIds on the target side: a cogroup of two frames
     # sharing a lineage is an ambiguous self-join to the analyzer
     t = t.select(*[F.col(c).alias(c) for c in t.columns])
     id_dtype = dict(t.dtypes)[id_col]
-    idt = _pa_id_type(id_dtype)
-    fields = list(zip((*names, "score"), (idt, idt, pa.float64())))
 
     def kernel(qtab, ttab):
         parts = []
@@ -453,11 +441,11 @@ def _kernel_refine(q: DataFrame, t: DataFrame, key: str, id_col: str,
                  (Q[s:s + step] @ T.T) / (qn[s:s + step, None] * tn))
                 for s in range(0, len(qids), step)
             )))
-        cols = [np.concatenate(c) for c in zip(*parts)] if parts else [[]] * 3
-        return pa.table({n: pa.array(c, type=ty) for (n, ty), c in zip(fields, cols)})
+        return [np.concatenate(c) for c in zip(*parts)] if parts else [[]] * 3
 
+    kernel.__qualname__ = op
     schema = f"{names[0]} {id_dtype}, {names[1]} {id_dtype}, score double"
-    return q.groupBy(key).cogroup(t.groupBy(key)).applyInArrow(kernel, schema)
+    return cogroup_map(q, t, [key], kernel, schema)
 
 
 def _topk_emit(k: int):
@@ -643,7 +631,7 @@ def ann_topk(
     if refine == "expr":
         return _fold_topk(_probed(v, n_bits, n_probe), v, "bucket", id_col, k)
     scored = _kernel_refine(
-        _probed_self(v, n_bits, n_probe), v, "bucket", id_col,
+        "ann_topk", _probed_self(v, n_bits, n_probe), v, "bucket", id_col,
         ("query_id", id_col), _topk_emit(k), by_id=True,
     )
     return _ranked(scored, id_col, k)
@@ -693,7 +681,7 @@ def embedding_neardup_pairs(
     a = _probed_self(v, n_bits, n_probe)
     if refine == "kernel":
         return _kernel_refine(
-            a, v, "bucket", id_col, ("id_a", "id_b"),
+            "embedding_neardup_pairs", a, v, "bucket", id_col, ("id_a", "id_b"),
             _hits_emit(threshold, self_pairs=True),
         ).distinct()
     qa, tb = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
@@ -760,7 +748,7 @@ def embedding_neardup_against(
     )
     if refine == "kernel" and not streaming:
         return _kernel_refine(
-            a, b, "bucket", id_col, ("new_id", "corpus_id"),
+            "embedding_neardup_against", a, b, "bucket", id_col, ("new_id", "corpus_id"),
             _hits_emit(threshold, self_pairs=False),
         ).distinct()
     out = _fold_scores(
@@ -963,7 +951,7 @@ def ivf_topk(
     if refine == "expr":
         return _fold_topk(v, v, "list", id_col, k)
     scored = _kernel_refine(
-        v.withColumn("_own", F.lit(True)), v, "list", id_col,
+        "ivf_topk", v.withColumn("_own", F.lit(True)), v, "list", id_col,
         ("query_id", id_col), _topk_emit(k), by_id=True,
     )
     return _ranked(scored, id_col, k)

@@ -129,7 +129,7 @@ def polygon_overlap_join_packed(
         .groupBy("a_id", "b_id")
         .agg(F.first("pack_a_id").alias("pa"), F.first("pack_b_id").alias("pb"))
     )
-    return _refine_packed_pairs(pairs)
+    return _refine_packed_pairs("polygon_overlap_join_packed", pairs)
 
 
 def polygon_overlap_join_rings(
@@ -164,10 +164,11 @@ def polygon_overlap_join_rings(
         .groupBy("a_id", "b_id")
         .agg(F.first("pa").alias("pa"), F.first("pb").alias("pb"))
     )
-    return _refine_packed_pairs(pairs)
+    return _refine_packed_pairs("polygon_overlap_join_rings", pairs)
 
 
-def _refine_packed_pairs(pairs: DataFrame) -> DataFrame:
+def _refine_packed_pairs(op: str, pairs: DataFrame) -> DataFrame:
+    """The packed overlap joins' refine, one row_map kernel named `op`."""
     from .pip_join import _unpack_polygon
 
     _memo: dict = {}
@@ -180,4 +181,5 @@ def _refine_packed_pairs(pairs: DataFrame) -> DataFrame:
     def row(aid, bid, pa_b, pb_b):
         return _pair_rows(aid, bid, unpack(("a", aid), pa_b), unpack(("b", bid), pb_b))
 
+    row.__qualname__ = op
     return row_map(pairs, ["a_id", "b_id", "pa", "pb"], row, OVERLAP_SCHEMA)

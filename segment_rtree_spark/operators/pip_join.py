@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..kernels.pip import RELATION_NAMES, RingArena
 from ..layer import PolygonLayer
-from .arrow_map import batch_map, group_map
+from .arrow_map import batch_map, cogroup_map, group_map
 from .tile_ops import assign_tiles
 
 # layers whose pickled size (what the broadcast kernels ship) exceeds
@@ -242,7 +242,7 @@ def pip_join_partitioned(
         else None
     )
     return _pip_cogroup(
-        points, cover, res, keep, schema, x, y,
+        "pip_join_partitioned", points, cover, res, keep, schema, x, y,
         salt_threshold, n_salt, num_partitions, cellset,
     )
 
@@ -267,6 +267,7 @@ def _hot_cells(pts: DataFrame, col: str, salt_threshold: int):
 
 
 def _pip_cogroup(
+    op: str,
     points: DataFrame,
     cover: DataFrame,
     res: int,
@@ -281,10 +282,10 @@ def _pip_cogroup(
 ) -> DataFrame:
     """Shared back half of the partitioned PIP join: cell assignment,
     optional semi prefilter, hot-cell salting, pinned co-shuffle,
-    cogrouped PolygonLayer.pip refine. `cover` is any (polygon_id,
-    cell, pack) DataFrame — driver-built for broadcastable layers,
-    executor-built (cover_from_rings) when the layer itself is a
-    table."""
+    cogrouped PolygonLayer.pip refine, its plan node named `op`.
+    `cover` is any (polygon_id, cell, pack) DataFrame — driver-built
+    for broadcastable layers, executor-built (cover_from_rings) when
+    the layer itself is a table."""
     spark = points.sparkSession
     pts = assign_tiles(points, res, y=y, x=x)
 
@@ -349,11 +350,10 @@ def _pip_cogroup(
         lyr = PolygonLayer(
             pids, RingArena.concat(arenas), [len(a) - 1 for a in arenas], hilbert_sort=False
         )
-        return _emit_hits(pts_tab, keep, *lyr.pip(*_xy(pts_tab, x, y)))
+        return _emit_hits(pts_tab, keep, *lyr.pip(*_xy(pts_tab, x, y))).columns
 
-    return pts.groupBy(*group_keys).cogroup(cover.groupBy(*group_keys)).applyInArrow(
-        refine, schema
-    )
+    refine.__qualname__ = op
+    return cogroup_map(pts, cover, group_keys, refine, schema)
 
 
 COVER_SCHEMA = "polygon_id long, cell long, pack binary"
@@ -410,7 +410,7 @@ def pip_join_partitioned_rings(
     cover = cover.persist(StorageLevel.MEMORY_AND_DISK)
     cellset = cover.select("cell").distinct() if prefilter else None
     return _pip_cogroup(
-        points, cover, res, keep, schema, x, y,
+        "pip_join_partitioned_rings", points, cover, res, keep, schema, x, y,
         salt_threshold, n_salt, num_partitions, cellset,
     )
 

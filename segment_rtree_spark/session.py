@@ -6,6 +6,17 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Spark's generated-class cache size (spark.sql.codegen.cache.maxEntries).
+# Working sets measured on local[4]: one perfbench curate_ingest round
+# compiles about 190 distinct classes, both perfbench workloads in one
+# session about 270, the seven curate + spatial calls of
+# tests/test_codegen_reuse.py on a 3,000-image corpus 209, and bench.py's
+# 17 queries at sf0.01 328. At Spark's default of 100 every curate round
+# recompiled about 186 classes (1.4 s of Janino time) and bench.py
+# compiled 1,096 classes over three rounds instead of 358. 1000 keeps
+# the largest working set twice over.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def get_spark(cores: int | None = None, app: str = "segment-rtree-spark",
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -15,7 +26,9 @@ def get_spark(cores: int | None = None, app: str = "segment-rtree-spark",
     sizing follows spark.sql.files.maxPartitionBytes so 100 TB scans
     split into ~128 MB tasks. Python workers fork from the engine's
     daemon (worker_daemon.py), which drops two fixed per-task costs:
-    zip directory re-reads and the full-heap GC.
+    zip directory re-reads and the full-heap GC. Spark's generated-class
+    cache holds the engine's working set (CODEGEN_CACHE_ENTRIES), so a
+    repeated plan runs classes compiled once, not recompiled per call.
     """
     os.environ.setdefault("NUMPY_MADVISE_HUGEPAGE", "0")
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -67,5 +80,9 @@ def get_spark(cores: int | None = None, app: str = "segment-rtree-spark",
         .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "segment_rtree_spark.worker_daemon")
+        # Spark's generated-class cache, keyed by the generated Java
+        # source: it holds compiled classes, never a plan, result or
+        # data. A static conf, so a session must start with it.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .getOrCreate()
     )

@@ -395,10 +395,12 @@ def _wide(df):
 
 
 def _python_nodes(df):
-    """(input columns, UDF name) of every Arrow Python node of df's plan."""
+    """(input columns, UDF name) of every Arrow Python node of df's plan
+    (a cogroup's input is both sides' column lists)."""
     return re.findall(
-        r"\(\d+\) \w+In(?:Arrow|Pandas)\w*[^\n]*\nInput \[\d+\]: \[([^\]]*)\]\n"
-        r"Arguments: (?:\[[^\]]*\], )?(\w+)\(",
+        r"\(\d+\) \w+In(?:Arrow|Pandas)\w*[^\n]*\n"
+        r"((?:(?:Input|Left output|Right output) \[\d+\]: \[[^\]]*\]\n)+)"
+        r"Arguments: (?:\[[^\]]*\], )*(\w+)\(",
         plan_str(df),
     )
 
@@ -475,27 +477,47 @@ def test_batch_and_grouped_kernels_prune_and_name(spark, monkeypatch):
         "validate_polygons": validate.validate_polygons(rings),
         "pip_join_broadcast": pip_join.pip_join_broadcast(pts, layer, keep=["image_id"]),
         "pip_count_broadcast": pip_join.pip_count_broadcast(pts, layer, keep=["image_id"]),
+        # the cogrouped refines and the shared packed-pair refine carry
+        # the name of the operator that calls them
+        "pip_join_partitioned": pip_join.pip_join_partitioned(
+            pts, layer, keep=["image_id"], res=4, salt_threshold=1, n_salt=2),
+        "ann_topk": embed.ann_topk(vectors, k=2),
+        "embedding_neardup_pairs": embed.embedding_neardup_pairs(vectors),
+        "embedding_neardup_against": embed.embedding_neardup_against(vectors, vectors),
+        "polygon_overlap_join_packed": overlay.polygon_overlap_join_packed(
+            spark, layer, entry_layer_b(), 4),
     }
+    ops["ivf_topk refine"] = embed.ivf_topk(vectors, k=2, n_lists=2)
     for name, df in ops.items():
         nodes = _python_nodes(df)
         assert len(nodes) == 1, (name, nodes)
         (cols, udf), = nodes
-        assert udf == name
+        assert udf == name.split()[0]
         assert "wide" not in cols, (name, cols)
+    # the ring-table forms build their covers in cover_from_rings kernels
+    for name, df in {
+        "pip_join_partitioned_rings": pip_join.pip_join_partitioned_rings(
+            pts, rings, 4, keep=["image_id"]),
+        "polygon_overlap_join_rings": overlay.polygon_overlap_join_rings(spark, rings, rings, 4),
+    }.items():
+        nodes = _python_nodes(df)
+        assert [udf for _, udf in nodes if udf != "cover_from_rings"] == [name], nodes
+        assert all("wide" not in cols for cols, _ in nodes), nodes
 
 
 def test_operators_and_plans_have_no_pandas_udf():
-    """No operator or registry query hand-writes a pandas UDF round trip:
-    every kernel crosses to Python through operators/arrow_map."""
+    """No operator, registry query or tool hand-writes a pandas UDF round
+    trip: every kernel crosses to Python through operators/arrow_map."""
     from pathlib import Path
 
     import segment_rtree_spark
 
-    root = Path(segment_rtree_spark.__file__).parent
+    pkg = Path(segment_rtree_spark.__file__).parent
+    root = pkg.parent
     hits = [
         f"{p.relative_to(root)}:{i}"
-        for sub in ("operators", "plans")
-        for p in sorted((root / sub).rglob("*.py"))
+        for d in (pkg / "operators", pkg / "plans", root / "tools")
+        for p in sorted(d.rglob("*.py"))
         for i, line in enumerate(p.read_text().splitlines(), 1)
         if "mapInPandas" in line or "applyInPandas" in line
     ]

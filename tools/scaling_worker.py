@@ -32,6 +32,7 @@ def main():
     cores = int(sys.argv[1])
     path = sys.argv[2]
 
+    from segment_rtree_spark.operators.arrow_map import batch_map
     from segment_rtree_spark.operators.pip_join import pip_join_broadcast
     from segment_rtree_spark.operators.tile_ops import assign_tiles
     from segment_rtree_spark.session import get_spark
@@ -67,23 +68,13 @@ def main():
             ).alias("embedding"),
         )
 
-        def _warm(batches):
-            for pdf in batches:
-                yield pdf
-
-        spark.range(cores * 2).repartition(cores * 2).mapInPandas(
-            _warm, "id long"
-        ).count()
+        warm = spark.range(cores * 2).repartition(cores * 2)
+        batch_map(warm, ["id"], lambda batch: batch.columns, "id long").count()
     else:
         imgs = spark.read.parquet(path)
 
-        def ident(batches):
-            for pdf in batches:
-                yield pdf[["phash"]]
-
-        imgs.select("phash").repartition(cores * 2).mapInPandas(
-            ident, "phash long"
-        ).count()
+        warm = imgs.select("phash").repartition(cores * 2)
+        batch_map(warm, ["phash"], lambda batch: batch.columns, "phash long").count()
         n = imgs.count()
     runs = []
     n_pairs = 0

@@ -6,6 +6,7 @@ Cluster usage (the north-rule deployment shape):
     spark-submit --master <cluster> \
         --py-files segment_rtree_spark.zip \
         --conf spark.python.daemon.module=segment_rtree_spark.worker_daemon \
+        --conf spark.sql.codegen.cache.maxEntries=1000 \
         tools/submit_job.py \
         --input  <images parquet/iceberg path> \
         --layer  data/wkt/africa.wkt \
@@ -15,10 +16,13 @@ Cluster usage (the north-rule deployment shape):
 
 The job is resumable: work is keyed by the spatial cell prefix; killed
 runs resume at the first incomplete prefix (see
-segment_rtree_spark/checkpoint.py). The daemon setting is the one
-`session.get_spark` applies: Python workers fork from the engine's
-daemon, which skips two fixed per-task costs. Local smoke, through
-`get_spark`:
+segment_rtree_spark/checkpoint.py). Both --conf settings are ones
+`session.get_spark` applies, which a preconfigured cluster session
+never calls: Python workers fork from the engine's daemon, which skips
+two fixed per-task costs, and the generated-class cache holds the
+engine's working set (session.CODEGEN_CACHE_ENTRIES), so a repeated
+plan reuses its compiled classes instead of recompiling them. Local
+smoke, through `get_spark`:
 
     python tools/submit_job.py --demo
 """
